@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Reads the Common-Crawl-style pages table (url, warc_ts, html, text, lang)
   * from parquet, runs prepare → score → cluster → entities with per-stage
-  * snapshot commits ([[plans.ResumableLinkage]]), and prints the metrics
-  * table. Resume after failure = re-submit with the same arguments: committed
+  * snapshot commits ([[plans.ResumableLinkage]]; clustering is the
+  * one-shuffle per-block union-find), and prints the metrics table, whose
+  * `partitions` column counts the data files each stage committed. Resume
+  * after failure = re-submit with the same arguments: committed
   * stages are read back, not recomputed. The session is launcher-first
   * ([[Sessions.local]] yields to spark-submit's --master/--conf); in-sandbox
   * runs get the tuned local[k] defaults.

@@ -31,10 +31,23 @@ import graft.sources.Gazetteer
   */
 object GoldEval {
 
-  val DefaultPaths: Seq[String] = Seq(
+  private val BuiltInPaths: Seq[String] = Seq(
     "/root/reference/data/goldset/goldset_1k_yegeb.conll",
     "/root/reference/data/tugce_250.conll",
     "/root/reference/data/baris_250.conll")
+
+  /** Environment variable naming another corpus root: the directory
+    * holding `tugce_250.conll`, `baris_250.conll` and `goldset/`. */
+  val RootEnv = "GRAFT_GOLD_ROOT"
+
+  /** The three gold corpora: the reference checkout's data files, or the
+    * same files under the root named by [[RootEnv]]. */
+  val DefaultPaths: Seq[String] = sys.env.get(RootEnv) match {
+    case None => BuiltInPaths
+    case Some(root) =>
+      val builtInRoot = Paths.get(BuiltInPaths(1)).getParent
+      BuiltInPaths.map(p => Paths.get(root).resolve(builtInRoot.relativize(Paths.get(p))).toString)
+  }
 
   private val KnownTypes: Set[String] = graft.sources.Bio.EntityTypes.toSet
 
@@ -94,6 +107,9 @@ object GoldEval {
     * Blocks are blank-line separated; the header line (any format) has ≠2
     * whitespace fields or a non-tag second field, so it self-filters. */
   def readGold(path: String, fileIdx: Int): Seq[(Long, Array[String], Array[String])] = {
+    if (!Files.isRegularFile(Paths.get(path)))
+      throw new java.io.FileNotFoundException(s"gold corpus file missing: $path " +
+        s"(set $RootEnv to the directory holding the corpora)")
     val content = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
     content.split("\n\\s*\n").toSeq.zipWithIndex.flatMap { case (blk, bi) =>
       val pairs = blk.split("\n").map(_.trim).filter(_.nonEmpty).flatMap { l =>

@@ -15,7 +15,8 @@ import graft.sources.Gazetteer
   *    shuffle, predicate/column pruning reach the scan);
   *  - candidate pairs: one key-partitioned self-join, skew-salted ([[Blocking]]);
   *  - scoring: mapPartitions kernel, linear in pairs ([[Scoring]]);
-  *  - clustering: O(log n) alternating-star rounds ([[ConnectedComponents]]);
+  *  - clustering: one hash exchange on the block key + per-block union-find
+  *    ([[components]], [[ConnectedComponents.runGrouped]]);
   *  - parse enrichment: broadcast-index kernel ([[StaticParser]]), no shuffle.
   */
 object Linkage {
@@ -79,38 +80,38 @@ object Linkage {
 
   /** [[entities]] from pre-materialized stages — callers that already hold
     * the prepared records and scored pairs (the query catalog shares one
-    * persisted pipeline across q_scored_pairs/q_entities/q_linkage_f1;
-    * ResumableLinkage holds committed snapshots) skip recomputing them.
-    *
-    * Clustering default: the match graph is block-partitioned BY CONSTRUCTION
-    * (one block key per record, pairs form only inside a block), so
+    * persisted pipeline across q_scored_pairs/q_entities/q_linkage_f1)
+    * skip recomputing them. */
+  def entitiesFrom(prepared: DataFrame, scoredPairs: DataFrame,
+                   bIdx: Broadcast[Gazetteer.Index]): DataFrame =
+    attachEntities(prepared, components(scoredPairs), bIdx)
+
+  /** Connected components (id, component = minimum member url) of the match
+    * graph. The graph is block-partitioned BY CONSTRUCTION (one block key
+    * per record, pairs form only inside a block), so
     * [[ConnectedComponents.runGrouped]] — one hash exchange + per-block
     * union-find — computes the provably-identical components in one pass
     * (measured 13.6 s → 0.77 s at 960k pages / 959k edges; LinkageSpec
-    * asserts equality). Per-task memory is O(largest block), the same order
-    * the pair join already pays. `groupedCC = false` selects the general
-    * alternating-star iteration ([[ConnectedComponents.runOnStrings]]) —
-    * required for graphs without the partition property and kept as the
-    * equality oracle. */
-  def entitiesFrom(prepared: DataFrame, scoredPairs: DataFrame,
-                   bIdx: Broadcast[Gazetteer.Index],
-                   groupedCC: Boolean = true): DataFrame = {
-    val matched = scoredPairs.filter(col("is_match"))
-    val comps =
-      if (groupedCC)
-        ConnectedComponents.runGrouped(
-          matched.select(col("block_key"), col("url_a").as("src"), col("url_b").as("dst")),
-          "block_key")
-      else
-        ConnectedComponents.runOnStrings(
-          matched.select(col("url_a").as("src"), col("url_b").as("dst")))
+    * asserts equality with [[ConnectedComponents.runOnStrings]], the general
+    * alternating-star iteration). Scored pairs carry the UNSALTED block key,
+    * so a salted hot block still forms one group. Per-task memory is
+    * O(largest block), the same order the pair join already pays. */
+  def components(scoredPairs: DataFrame): DataFrame =
+    ConnectedComponents.runGrouped(
+      scoredPairs.filter(col("is_match"))
+        .select(col("block_key"), col("url_a").as("src"), col("url_b").as("dst")),
+      "block_key")
 
+  /** One row per prepared url with its entity id and parsed admin hierarchy:
+    * `comps` (id, component) names the entity of every matched url, and
+    * unmatched urls become singleton entities (their own url). */
+  def attachEntities(prepared: DataFrame, comps: DataFrame,
+                     bIdx: Broadcast[Gazetteer.Index]): DataFrame = {
     val withEntity = prepared
       .join(comps.withColumnRenamed("id", "url"), Seq("url"), "left")
       .withColumn("entity_id", coalesce(col("component"), col("url")))
       .select("url", "extracted", "entity_id")
-
-    val parsed = StaticParser.parse(withEntity, "extracted", bIdx)
-    parsed.select("url", "entity_id", "province", "district", "neighbourhood")
+    StaticParser.parse(withEntity, "extracted", bIdx)
+      .select("url", "entity_id", "province", "district", "neighbourhood")
   }
 }

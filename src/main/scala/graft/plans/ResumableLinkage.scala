@@ -2,15 +2,18 @@ package graft.plans
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.operators.{ConnectedComponents, Linkage, Scoring, StaticParser}
+import graft.operators.Linkage
 import graft.sources.Gazetteer
 
 /** The linkage pipeline with per-stage snapshot commits: each heavy stage
-  * (prepare, score, cluster, entities) publishes a versioned snapshot and a
-  * metrics row; a rerun with the same input fingerprint resumes from the
-  * last committed stage instead of recomputing (north-rule resumability). */
+  * (prepare, score, cluster, entities) publishes a versioned snapshot plus
+  * its metrics and lineage rows; a rerun with the same input fingerprint
+  * resumes from the last committed stage instead of recomputing
+  * (north-rule resumability). The stages are the same [[Linkage]] steps as
+  * [[Linkage.entities]] — clustering is the one-shuffle per-block union-find
+  * ([[Linkage.components]]) over the committed scored pairs — so the
+  * committed entities equal the in-memory pipeline's row for row. */
 object ResumableLinkage {
 
   /** Input fingerprint: identifies (pages source, config, code version) —
@@ -40,20 +43,10 @@ object ResumableLinkage {
       Linkage.scored(prepared, cfg)
     }
     val comps = Resumable.stage(spark, root, "components", fp) {
-      // cluster on the url strings (collision-free; a 64-bit hash node id
-      // silently merges entities at 10^12 pages) — the iteration itself runs
-      // on dense dictionary longs, see ConnectedComponents.runOnStrings
-      ConnectedComponents.runOnStrings(
-        scored.filter(col("is_match"))
-          .select(col("url_a").as("src"), col("url_b").as("dst")))
+      Linkage.components(scored)
     }
     Resumable.stage(spark, root, "entities", fp) {
-      val withEntity = prepared
-        .join(comps.withColumnRenamed("id", "url"), Seq("url"), "left")
-        .withColumn("entity_id", coalesce(col("component"), col("url")))
-        .select("url", "extracted", "entity_id")
-      StaticParser.parse(withEntity, "extracted", bIdx)
-        .select("url", "entity_id", "province", "district", "neighbourhood")
+      Linkage.attachEntities(prepared, comps, bIdx)
     }
   }
 }

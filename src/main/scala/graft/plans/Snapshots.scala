@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * | commit atomicity       | data written first, manifest PUBLISHED LAST   |
   * |                        | via atomic same-dir rename (tmp → manifest)   |
   * | snapshot lineage       | `parent` + `input_fingerprint` in manifest    |
-  * | metrics table          | `root/_metrics/` parquet (per stage/snapshot) |
+  * | metrics table          | `root/_metrics/` parquet (per stage/snapshot; |
+  * |                        | `partitions` = data files committed)          |
   * | files table (per-partition lineage) | `root/_lineage/` parquet (per data file: rows) |
   * | time travel / resume   | `latest(stage, fingerprint)` → read-or-recompute |
   *
@@ -75,28 +76,56 @@ object Snapshots {
   def dataPath(root: String, stage: String, snap: Int): String =
     new HPath(stageDir(root, stage), s"snap=$snap/data").toString
 
+  /** A committed snapshot: its id and the row count of each data file
+    * holding rows (the files-table entries of [[appendLineage]]). */
+  case class Commit(snap: Int, files: Seq[(String, Long)]) {
+    def rows: Long = files.map(_._2).sum
+  }
+
   /** Write `df` as the next snapshot of `stage`: data dir first, manifest
     * last via atomic rename — a crash between the two leaves an ignorable
     * uncommitted directory, never a half-visible snapshot. Returns snap id. */
-  def commit(df: DataFrame, root: String, stage: String, fingerprint: String): Int = {
+  def commit(df: DataFrame, root: String, stage: String, fingerprint: String): Int =
+    commitFiles(df, root, stage, fingerprint).snap
+
+  /** [[commit]], also returning the per-file row counts. The manifest row
+    * count and the lineage rows come from ONE read-back aggregate over
+    * `input_file_name()` of the written parquet, so what the manifest
+    * declares is what a reader sees. The aggregate is shuffle-free (counts
+    * per task and file, summed after the collect), and the read takes the
+    * written schema instead of inferring it, which would cost a
+    * footer-reading job. */
+  def commitFiles(df: DataFrame, root: String, stage: String, fingerprint: String): Commit = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val snaps = committedSnaps(root, stage)
     val next = snaps.lastOption.getOrElse(-1) + 1
     val snapDir = new HPath(stageDir(root, stage), s"snap=$next").toString
     StateFs.mkdirs(snapDir)
     val dataDir = new HPath(snapDir, "data").toString
     df.write.mode("overwrite").parquet(dataDir)
-    val rows = df.sparkSession.read.parquet(dataDir).count()
+    val files = spark.read.schema(df.schema).parquet(dataDir)
+      .select(input_file_name()).as[String]
+      .mapPartitions { it =>
+        val n = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+        it.foreach(f => n(f) += 1)
+        n.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+    val committed = Commit(next, files)
     val manifest =
       s"""{"stage": "$stage", "snap": $next, "fingerprint": "$fingerprint",
-         | "rows": $rows, "codeVersion": "$CodeVersion",
+         | "rows": ${committed.rows}, "codeVersion": "$CodeVersion",
          | "parent": ${snaps.lastOption.getOrElse(-1)}}""".stripMargin
     StateFs.publish(snapDir, "manifest.json", manifest.getBytes(StandardCharsets.UTF_8))
-    next
+    committed
   }
 
-  /** Append per-stage run metrics (rows in/out, seconds, partition count) to
-    * the metrics table — the Iceberg metrics-table analogue, and the
-    * north-rule "per-partition lineage + metrics" hook. */
+  /** Append per-stage run metrics to the metrics table — the Iceberg
+    * metrics-table analogue, and the north-rule "per-partition lineage +
+    * metrics" hook. `partitions` is the number of data files committed
+    * (files holding rows, as counted by [[commitFiles]]), so it equals the
+    * snapshot's file count in the lineage table. */
   def appendMetrics(spark: SparkSession, root: String, stage: String, snap: Int,
                     rowsOut: Long, seconds: Double, partitions: Int): Unit = {
     import spark.implicits._
@@ -106,15 +135,12 @@ object Snapshots {
   }
 
   /** Per-partition lineage of a committed snapshot: one row per data file
-    * (stage, snap, file, rows) — the Iceberg files-table analogue. Row counts
-    * come from the parquet footers via an aggregation over
-    * `input_file_name()`, so the scan is metadata-cheap. */
-  def appendLineage(spark: SparkSession, root: String, stage: String, snap: Int): Unit = {
-    import org.apache.spark.sql.functions.{count => cnt, _}
-    spark.read.parquet(dataPath(root, stage, snap))
-      .groupBy(input_file_name().as("file"))
-      .agg(cnt(lit(1)).as("rows"))
-      .select(lit(stage).as("stage"), lit(snap).as("snap"), col("file"), col("rows"))
+    * (stage, snap, file, rows) — the Iceberg files-table analogue — written
+    * from the counts [[commitFiles]] already read back. */
+  def appendLineage(spark: SparkSession, root: String, stage: String, c: Commit): Unit = {
+    import spark.implicits._
+    c.files.map { case (file, rows) => (stage, c.snap, file, rows) }
+      .toDF("stage", "snap", "file", "rows")
       .write.mode("append").parquet(new HPath(root, "_lineage").toString)
   }
 
@@ -137,20 +163,17 @@ object Resumable {
     * DataFrame (so downstream stages read committed parquet, giving every
     * stage a clean restart point and a truncated lineage). */
   def stage(spark: SparkSession, root: String, stageName: String,
-            fingerprint: String)(compute: => DataFrame): DataFrame = {
-    val snap = Snapshots.latest(root, stageName, fingerprint) match {
-      case Some(s) => s
+            fingerprint: String)(compute: => DataFrame): DataFrame =
+    Snapshots.latest(root, stageName, fingerprint) match {
+      case Some(s) => spark.read.parquet(Snapshots.dataPath(root, stageName, s))
       case None =>
         val t0 = System.nanoTime()
         val df = compute
-        val s = Snapshots.commit(df, root, stageName, fingerprint)
+        val c = Snapshots.commitFiles(df, root, stageName, fingerprint)
         val sec = (System.nanoTime() - t0) / 1e9
-        val rows = Snapshots.readManifest(root, stageName, s).rows
-        Snapshots.appendMetrics(spark, root, stageName, s, rows, sec,
-          df.rdd.getNumPartitions)
-        Snapshots.appendLineage(spark, root, stageName, s)
-        s
+        Snapshots.appendMetrics(spark, root, stageName, c.snap, c.rows, sec, c.files.size)
+        Snapshots.appendLineage(spark, root, stageName, c)
+        // the schema just written: inferring it would read the footers again
+        spark.read.schema(df.schema).parquet(Snapshots.dataPath(root, stageName, c.snap))
     }
-    spark.read.parquet(Snapshots.dataPath(root, stageName, snap))
-  }
 }

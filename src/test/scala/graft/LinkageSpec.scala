@@ -187,6 +187,35 @@ class LinkageSpec extends AnyFunSuite {
     sc.unpersist()
   }
 
+  test("resumable components stage equals the star iteration when hot blocks are salted") {
+    import graft.plans.{ResumableLinkage, Snapshots}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val small = Pages.synthesize(spark, 600).toDF()
+    val largest = Linkage.prepare(small).groupBy("block_key").count()
+      .agg(max("count")).head().getLong(0)
+    val cfg = Linkage.Config(maxBlock = math.max(1, (largest / 2).toInt))
+    assert(largest > cfg.maxBlock)
+    // shuffle regime: the broadcast regime never salts
+    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val joins = Linkage.candidates(Linkage.prepare(small), cfg)
+        .queryExecution.optimizedPlan.collect { case j: Join => j }
+      assert(joins.exists(_.condition.exists(_.references.map(_.name).toSet("__i"))),
+        "the salted triangle did not run")
+      val root = java.nio.file.Files.createTempDirectory("salted-cc").toString
+      ResumableLinkage.run(spark, small, "salted-600", root,
+        StaticParser.broadcastIndex(spark), cfg).count()
+      def snapshot(stage: String) = spark.read.parquet(Snapshots.dataPath(root, stage, 0))
+      val committed = snapshot("components").as[(String, String)].collect()
+      val star = ConnectedComponents.runOnStrings(snapshot("scored").filter(col("is_match"))
+        .select(col("url_a").as("src"), col("url_b").as("dst")))
+        .as[(String, String)].collect().toMap
+      assert(star.nonEmpty && committed.length == star.size && committed.toMap == star,
+        s"${committed.toSet.diff(star.toSet).take(3)} vs ${star.toSet.diff(committed.toSet).take(3)}")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+  }
+
   test("grouped CC equals star CC on randomized block-partitioned graphs") {
     // the real match graph exercises one shape; random graphs exercise the
     // precondition's full space — chains, cliques, duplicate and reversed

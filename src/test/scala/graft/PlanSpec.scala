@@ -77,6 +77,42 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("RunLinkage components stage: one shuffle Exchange, no localCheckpoint relation") {
+    // the stage's plan is read from its snapshot write: the star iteration
+    // (localCheckpoint per round, several exchanges) must not come back
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = done.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def componentsWrite: Option[(QueryExecution, InsertIntoHadoopFsRelationCommand)] =
+      done.asScala.iterator.flatMap(qe => qe.logical.collectFirst {
+        case w: InsertIntoHadoopFsRelationCommand
+          if w.outputPath.toString.contains("/components/snap=") => (qe, w)
+      }).nextOption()
+    val root = java.nio.file.Files.createTempDirectory("graft_components_plan").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.plans.ResumableLinkage.run(spark, Pages.synthesize(spark, 300).toDF(),
+        "plan-300", root, graft.operators.StaticParser.broadcastIndex(spark)).count()
+      // listener callbacks arrive on the listener bus, after the action returns
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (componentsWrite.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val (qe, write) = componentsWrite.getOrElse(fail("components snapshot write not observed"))
+    val checkpoints = write.query.collect { case r: LogicalRDD => r }
+    assert(checkpoints.isEmpty, s"localCheckpoint relation in the components stage:\n${write.query}")
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"${exchanges.size} shuffle exchanges:\n${qe.executedPlan}")
+  }
+
   test("no quadratic join strategy anywhere in the linkage pair plan") {
     val prep = Linkage.prepare(Pages.synthesize(spark, 300).toDF())
     val p = plan(Blocking.candidatePairs(prep, "block_key", "url", Seq("norm"), 50))

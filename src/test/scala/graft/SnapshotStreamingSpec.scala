@@ -77,6 +77,34 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     assert(Snapshots.committedSnaps(root, "entities") == Seq(0))
   }
 
+  test("resumable linkage equals Linkage.entities row for row; metrics agree with manifest and lineage") {
+    val root = tmpDir("resume-eq")
+    val pages = Pages.synthesize(spark, 600).toDF()
+    val bIdx = StaticParser.broadcastIndex(spark)
+    val committed = ResumableLinkage.run(spark, pages, "p600-eq", root, bIdx)
+      .orderBy("url").collect().toSeq
+    val direct = Linkage.entities(pages, bIdx).orderBy("url").collect().toSeq
+    assert(committed.size == 600)
+    assert(committed == direct,
+      s"first difference: ${committed.zip(direct).find { case (a, b) => a != b }}")
+
+    // every stage's bookkeeping comes from the one read-back at commit:
+    // rows_out = manifest rows = lineage row sum; partitions = lineage files
+    val metrics = Snapshots.metrics(spark, root)
+      .select("stage", "snap", "rows_out", "partitions").collect()
+      .map(r => r.getString(0) -> (r.getInt(1), r.getLong(2), r.getInt(3))).toMap
+    val lineage = Snapshots.lineage(spark, root).groupBy("stage", "snap")
+      .agg(sum("rows"), count(lit(1))).collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    Seq("prepared", "scored", "components", "entities").foreach { st =>
+      val (snap, rowsOut, partitions) = metrics(st)
+      val (linRows, linFiles) = lineage((st, snap))
+      assert(rowsOut == Snapshots.readManifest(root, st, snap).rows, st)
+      assert(rowsOut == linRows, st)
+      assert(partitions > 0 && partitions.toLong == linFiles, s"$st: $partitions vs $linFiles")
+    }
+  }
+
   test("streaming ingest: micro-batch parity with batch prepare") {
     val inDir = tmpDir("stream-in")
     val outDir = tmpDir("stream-out") + "/out"
