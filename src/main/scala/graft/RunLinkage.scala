@@ -13,12 +13,13 @@ import org.apache.spark.sql.SparkSession
   * Reads the Common-Crawl-style pages table (url, warc_ts, html, text, lang)
   * from parquet, runs prepare → score → cluster → entities with per-stage
   * snapshot commits ([[plans.ResumableLinkage]]; clustering is the
-  * one-shuffle per-block union-find), and prints the metrics table, whose
-  * `partitions` column counts the data files each stage committed. Resume
-  * after failure = re-submit with the same arguments: committed
-  * stages are read back, not recomputed. The session is launcher-first
-  * ([[Sessions.local]] yields to spark-submit's --master/--conf); in-sandbox
-  * runs get the tuned local[k] defaults.
+  * one-shuffle per-block union-find), and prints the metrics table. That
+  * table is a view over the stage manifests: each commit runs no Spark job
+  * besides its data write, and `partitions` counts the data files each
+  * stage committed. Resume after failure = re-submit with the same
+  * arguments: committed stages are read back, not recomputed. The session
+  * is launcher-first ([[Sessions.local]] yields to spark-submit's
+  * --master/--conf); in-sandbox runs get the tuned local[k] defaults.
   */
 object RunLinkage {
 

@@ -7,10 +7,10 @@ import graft.operators.Linkage
 import graft.sources.Gazetteer
 
 /** The linkage pipeline with per-stage snapshot commits: each heavy stage
-  * (prepare, score, cluster, entities) publishes a versioned snapshot plus
-  * its metrics and lineage rows; a rerun with the same input fingerprint
-  * resumes from the last committed stage instead of recomputing
-  * (north-rule resumability). The stages are the same [[Linkage]] steps as
+  * (prepare, score, cluster, entities) publishes a versioned snapshot whose
+  * manifest carries its metrics and file lineage; a rerun with the same
+  * input fingerprint resumes from the last committed stage instead of
+  * recomputing (north-rule resumability). The stages are the same [[Linkage]] steps as
   * [[Linkage.entities]] — clustering is the one-shuffle per-block union-find
   * ([[Linkage.components]]) over the committed scored pairs — so the
   * committed entities equal the in-memory pipeline's row for row. */

@@ -1,14 +1,17 @@
 package graft.plans
 
-import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Versioned-snapshot output layer with manifest + metrics tables — the
-  * sandbox substitute for Iceberg commits (no Iceberg jars exist in
-  * /opt/spark/jars; zero-egress), with a 1:1 documented mapping:
+/** Versioned-snapshot output layer whose manifests are the only
+  * bookkeeping — a substitute for Iceberg commits (Iceberg is not on the
+  * classpath), with a 1:1 documented mapping:
   *
   * | Iceberg concept        | here                                          |
   * |------------------------|-----------------------------------------------|
@@ -17,10 +20,17 @@ import org.apache.spark.sql.functions._
   * | commit atomicity       | data written first, manifest PUBLISHED LAST   |
   * |                        | via atomic same-dir rename (tmp → manifest)   |
   * | snapshot lineage       | `parent` + `input_fingerprint` in manifest    |
-  * | metrics table          | `root/_metrics/` parquet (per stage/snapshot; |
-  * |                        | `partitions` = data files committed)          |
-  * | files table (per-partition lineage) | `root/_lineage/` parquet (per data file: rows) |
+  * | table schema           | `schema` in manifest (read without inference) |
+  * | manifest file entries  | `files` in manifest: path + footer row count  |
+  * | metrics table          | [[Snapshots.metrics]]: a view over the        |
+  * |                        | committed manifests that carry `seconds`      |
+  * |                        | (`partitions` = data files committed)         |
+  * | files table (per-partition lineage) | [[Snapshots.lineage]]: a view over the manifests' `files` |
   * | time travel / resume   | `latest(stage, fingerprint)` → read-or-recompute |
+  *
+  * As in Iceberg, the metrics and files tables are metadata tables derived
+  * from the manifests, not tables a commit appends to, so a commit writes
+  * its data and one manifest and nothing else.
   *
   * Resume contract (north rule): a failed run leaves at most an uncommitted
   * `data` directory (no manifest) which the next run ignores and overwrites;
@@ -36,8 +46,16 @@ object Snapshots {
     * reference's `norm_hint`, map.py:88). */
   val CodeVersion = "graft-v1"
 
+  /** A committed snapshot's metadata. `seconds` (stage compute + commit
+    * time), `files` (each data file holding rows, with its row count) and
+    * `schema` are absent from manifests written before they were recorded:
+    * such snapshots still resume, but add no metrics or lineage rows. */
   case class Manifest(stage: String, snap: Int, fingerprint: String,
-                      rows: Long, codeVersion: String, parent: Int)
+                      rows: Long, codeVersion: String, parent: Int,
+                      seconds: Option[Double], files: Seq[(String, Long)],
+                      schema: Option[StructType])
+
+  private val Json = new ObjectMapper()
 
   // All metadata I/O goes through [[StateFs]] (Hadoop FileSystem API) so a
   // state root of hdfs://, s3a://, file://, or a bare local path behaves
@@ -58,28 +76,44 @@ object Snapshots {
   }
 
   def readManifest(root: String, stage: String, snap: Int): Manifest = {
-    val txt = new String(
-      StateFs.readBytes(stageDir(root, stage), s"snap=$snap/manifest.json"),
-      StandardCharsets.UTF_8)
-    def field(k: String): String =
-      (s""""$k"""" + """\s*:\s*("([^"]*)"|[-0-9]+)""").r.findFirstMatchIn(txt)
-        .map(m => Option(m.group(2)).getOrElse(m.group(1))).getOrElse("")
-    Manifest(field("stage"), field("snap").toInt, field("fingerprint"),
-      field("rows").toLong, field("codeVersion"), field("parent").toInt)
+    val j = Json.readTree(
+      StateFs.readBytes(stageDir(root, stage), s"snap=$snap/manifest.json"))
+    Manifest(j.get("stage").asText, j.get("snap").asInt, j.get("fingerprint").asText,
+      j.get("rows").asLong, j.get("codeVersion").asText, j.get("parent").asInt,
+      Option(j.get("seconds")).map(_.asDouble),
+      j.path("files").asScala.toSeq.map(f => f.get("file").asText -> f.get("rows").asLong),
+      Option(j.get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType]))
+  }
+
+  private def manifestJson(m: Manifest): Array[Byte] = {
+    val o = Json.createObjectNode()
+      .put("stage", m.stage).put("snap", m.snap).put("fingerprint", m.fingerprint)
+      .put("rows", m.rows).put("codeVersion", m.codeVersion).put("parent", m.parent)
+    m.seconds.foreach(s => o.put("seconds", s))
+    m.schema.foreach(s => o.set[JsonNode]("schema", Json.readTree(s.json)))
+    val files = o.putArray("files")
+    m.files.foreach { case (f, n) => files.addObject().put("file", f).put("rows", n) }
+    Json.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
   }
 
   /** Latest committed snapshot whose fingerprint matches, if any. */
   def latest(root: String, stage: String, fingerprint: String): Option[Int] =
-    committedSnaps(root, stage).reverse
-      .find(s => readManifest(root, stage, s).fingerprint == fingerprint)
+    latestManifest(root, stage, fingerprint).map(_.snap)
+
+  private[plans] def latestManifest(root: String, stage: String,
+                                    fingerprint: String): Option[Manifest] =
+    committedSnaps(root, stage).reverseIterator
+      .map(readManifest(root, stage, _)).find(_.fingerprint == fingerprint)
 
   def dataPath(root: String, stage: String, snap: Int): String =
     new HPath(stageDir(root, stage), s"snap=$snap/data").toString
 
-  /** A committed snapshot: its id and the row count of each data file
-    * holding rows (the files-table entries of [[appendLineage]]). */
-  case class Commit(snap: Int, files: Seq[(String, Long)]) {
-    def rows: Long = files.map(_._2).sum
+  /** A committed snapshot's data, read with the schema its manifest records:
+    * inferring it would run a footer-reading Spark job. Manifests without a
+    * schema are read by inference. */
+  private[plans] def read(spark: SparkSession, root: String, m: Manifest): DataFrame = {
+    val path = dataPath(root, m.stage, m.snap)
+    m.schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
   /** Write `df` as the next snapshot of `stage`: data dir first, manifest
@@ -88,71 +122,72 @@ object Snapshots {
   def commit(df: DataFrame, root: String, stage: String, fingerprint: String): Int =
     commitFiles(df, root, stage, fingerprint).snap
 
-  /** [[commit]], also returning the per-file row counts. The manifest row
-    * count and the lineage rows come from ONE read-back aggregate over
-    * `input_file_name()` of the written parquet, so what the manifest
-    * declares is what a reader sees. The aggregate is shuffle-free (counts
-    * per task and file, summed after the collect), and the read takes the
-    * written schema instead of inferring it, which would cost a
-    * footer-reading job. */
-  def commitFiles(df: DataFrame, root: String, stage: String, fingerprint: String): Commit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val snaps = committedSnaps(root, stage)
-    val next = snaps.lastOption.getOrElse(-1) + 1
-    val snapDir = new HPath(stageDir(root, stage), s"snap=$next").toString
+  /** [[commit]], returning the published manifest. After the data write the
+    * data directory is listed and each parquet file's row count is read from
+    * its footer on the driver, so the commit runs no Spark job besides the
+    * write, and what the manifest declares is what a reader sees. Files with
+    * no rows are left out. With `startNanos`, the manifest also records the
+    * seconds from that instant to just before the publish. */
+  def commitFiles(df: DataFrame, root: String, stage: String, fingerprint: String,
+                  startNanos: Option[Long] = None): Manifest = {
+    val parent = committedSnaps(root, stage).lastOption.getOrElse(-1)
+    val snapDir = new HPath(stageDir(root, stage), s"snap=${parent + 1}").toString
     StateFs.mkdirs(snapDir)
     val dataDir = new HPath(snapDir, "data").toString
     df.write.mode("overwrite").parquet(dataDir)
-    val files = spark.read.schema(df.schema).parquet(dataDir)
-      .select(input_file_name()).as[String]
-      .mapPartitions { it =>
-        val n = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
-        it.foreach(f => n(f) += 1)
-        n.iterator
+    val files = footerRows(dataDir)
+    val m = Manifest(stage, parent + 1, fingerprint, files.map(_._2).sum, CodeVersion,
+      parent, startNanos.map(t0 => (System.nanoTime() - t0) / 1e9), files, Some(df.schema))
+    StateFs.publish(snapDir, "manifest.json", manifestJson(m))
+    m
+  }
+
+  /** (qualified path, row count) of each parquet file in `dataDir` holding
+    * rows, sorted by path. Names starting with `_` or `.` (`_SUCCESS`,
+    * checksums) are skipped, as Spark's reader skips them. */
+  private def footerRows(dataDir: String): Seq[(String, Long)] = {
+    val dir = new HPath(dataDir)
+    val fs = StateFs.fs(dir)
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+        try st.getPath.toString -> r.getRecordCount finally r.close()
       }
-      .collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
-    val committed = Commit(next, files)
-    val manifest =
-      s"""{"stage": "$stage", "snap": $next, "fingerprint": "$fingerprint",
-         | "rows": ${committed.rows}, "codeVersion": "$CodeVersion",
-         | "parent": ${snaps.lastOption.getOrElse(-1)}}""".stripMargin
-    StateFs.publish(snapDir, "manifest.json", manifest.getBytes(StandardCharsets.UTF_8))
-    committed
+      .filter(_._2 > 0).sortBy(_._1)
   }
 
-  /** Append per-stage run metrics to the metrics table — the Iceberg
-    * metrics-table analogue, and the north-rule "per-partition lineage +
-    * metrics" hook. `partitions` is the number of data files committed
-    * (files holding rows, as counted by [[commitFiles]]), so it equals the
-    * snapshot's file count in the lineage table. */
-  def appendMetrics(spark: SparkSession, root: String, stage: String, snap: Int,
-                    rowsOut: Long, seconds: Double, partitions: Int): Unit = {
-    import spark.implicits._
-    Seq((stage, snap, rowsOut, seconds, partitions))
-      .toDF("stage", "snap", "rows_out", "seconds", "partitions")
-      .write.mode("append").parquet(new HPath(root, "_metrics").toString)
-  }
+  /** Every committed manifest under `root`, stage by stage. */
+  private def manifests(root: String): Seq[Manifest] =
+    StateFs.listNames(root).sorted
+      .flatMap(st => committedSnaps(root, st).map(readManifest(root, st, _)))
 
-  /** Per-partition lineage of a committed snapshot: one row per data file
-    * (stage, snap, file, rows) — the Iceberg files-table analogue — written
-    * from the counts [[commitFiles]] already read back. */
-  def appendLineage(spark: SparkSession, root: String, stage: String, c: Commit): Unit = {
-    import spark.implicits._
-    c.files.map { case (file, rows) => (stage, c.snap, file, rows) }
-      .toDF("stage", "snap", "file", "rows")
-      .write.mode("append").parquet(new HPath(root, "_lineage").toString)
-  }
+  private def view(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    if (rows.isEmpty) spark.emptyDataFrame
+    else spark.createDataFrame(rows.asJava, schema)
 
+  private val MetricsSchema =
+    StructType.fromDDL("stage STRING, snap INT, rows_out BIGINT, seconds DOUBLE, partitions INT")
+  private val LineageSchema =
+    StructType.fromDDL("stage STRING, snap INT, file STRING, rows BIGINT")
+
+  /** The metrics table — the Iceberg metrics-table analogue, and the
+    * north-rule "per-partition lineage + metrics" hook: one row per
+    * committed manifest that records `seconds` (the stages committed by
+    * [[Resumable.stage]]). `partitions` is the number of data files
+    * committed, so it equals the snapshot's file count in [[lineage]]. */
   def metrics(spark: SparkSession, root: String): DataFrame =
-    if (StateFs.exists(root, "_metrics"))
-      spark.read.parquet(new HPath(root, "_metrics").toString)
-    else spark.emptyDataFrame
+    view(spark, MetricsSchema, for {
+      m <- manifests(root); s <- m.seconds
+    } yield Row(m.stage, m.snap, m.rows, s, m.files.size))
 
+  /** Per-partition lineage — the Iceberg files-table analogue: one row per
+    * committed data file holding rows (stage, snap, file, rows). */
   def lineage(spark: SparkSession, root: String): DataFrame =
-    if (StateFs.exists(root, "_lineage"))
-      spark.read.parquet(new HPath(root, "_lineage").toString)
-    else spark.emptyDataFrame
+    view(spark, LineageSchema, for {
+      m <- manifests(root); (file, rows) <- m.files
+    } yield Row(m.stage, m.snap, file, rows))
 }
 
 /** Stage-level resumable execution built on [[Snapshots]]. */
@@ -161,19 +196,15 @@ object Resumable {
   /** Run `compute` for `stage` unless a committed snapshot for the same
     * input fingerprint exists; either way return the snapshot-backed
     * DataFrame (so downstream stages read committed parquet, giving every
-    * stage a clean restart point and a truncated lineage). */
+    * stage a clean restart point and a truncated lineage). A committed
+    * stage submits no Spark job here; a computed one submits only its data
+    * write. */
   def stage(spark: SparkSession, root: String, stageName: String,
-            fingerprint: String)(compute: => DataFrame): DataFrame =
-    Snapshots.latest(root, stageName, fingerprint) match {
-      case Some(s) => spark.read.parquet(Snapshots.dataPath(root, stageName, s))
-      case None =>
-        val t0 = System.nanoTime()
-        val df = compute
-        val c = Snapshots.commitFiles(df, root, stageName, fingerprint)
-        val sec = (System.nanoTime() - t0) / 1e9
-        Snapshots.appendMetrics(spark, root, stageName, c.snap, c.rows, sec, c.files.size)
-        Snapshots.appendLineage(spark, root, stageName, c)
-        // the schema just written: inferring it would read the footers again
-        spark.read.schema(df.schema).parquet(Snapshots.dataPath(root, stageName, c.snap))
+            fingerprint: String)(compute: => DataFrame): DataFrame = {
+    val m = Snapshots.latestManifest(root, stageName, fingerprint).getOrElse {
+      val t0 = System.nanoTime()
+      Snapshots.commitFiles(compute, root, stageName, fingerprint, Some(t0))
     }
+    Snapshots.read(spark, root, m)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -71,6 +72,35 @@ class FsStateSpec extends AnyFunSuite {
     // and the next commit skips past the uncommitted dir id
     val s8 = Snapshots.commit(df, root, "stage1", "fp2")
     assert(s8 == 1 && Snapshots.latest(root, "stage1", "fp2").contains(1))
+  }
+
+  test("snapshots: earlier-format manifests resume; they and crash debris add no metrics or lineage") {
+    val root = fileUri("fs-compat")
+    val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    // a snapshot whose manifest has the earlier format: no files, seconds or schema
+    val snap0 = new HPath(root, "stage1/snap=0").toString
+    df.write.parquet(new HPath(snap0, "data").toString)
+    StateFs.publish(snap0, "manifest.json",
+      """{"stage": "stage1", "snap": 0, "fingerprint": "fp1",
+        | "rows": 2, "codeVersion": "graft-v1",
+        | "parent": -1}""".stripMargin.getBytes(StandardCharsets.UTF_8))
+    assert(Snapshots.latest(root, "stage1", "fp1").contains(0))
+    val m = Snapshots.readManifest(root, "stage1", 0)
+    assert(m == Snapshots.Manifest("stage1", 0, "fp1", 2, "graft-v1", -1, None, Nil, None))
+    val resumed = Resumable.stage(spark, root, "stage1", "fp1")(fail("recomputed"))
+    assert(resumed.count() == 2)
+
+    // a committed stage whose manifest never left its .tmp name (a crash
+    // before the publish rename): data present, manifest content complete
+    Resumable.stage(spark, root, "stage2", "fp2")(df)
+    val fs = StateFs.fs(new HPath(root))
+    val snap2 = new HPath(root, "stage2/snap=0")
+    assert(fs.rename(new HPath(snap2, "manifest.json"), new HPath(snap2, "manifest.json.tmp")))
+    assert(fs.exists(new HPath(snap2, "data")))
+    assert(Snapshots.committedSnaps(root, "stage2").isEmpty)
+
+    assert(Snapshots.metrics(spark, root).count() == 0)
+    assert(Snapshots.lineage(spark, root).count() == 0)
   }
 
   test("StateFs primitives: publish is tmp+rename, move + recursive delete work on URIs") {

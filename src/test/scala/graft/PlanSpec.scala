@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Blocking, Dedup, Linkage}
@@ -111,6 +112,24 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = new AdaptiveSparkPlanHelper {}
       .collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 1, s"${exchanges.size} shuffle exchanges:\n${qe.executedPlan}")
+  }
+
+  test("single evaluation: score_pair once per pair, canon_sig_native once per record") {
+    // both kernels are non-cheap and deterministic, so the optimizer may
+    // inline a reference to them; a refactor that collapses the two-step
+    // scoring projection or re-derives canon would evaluate them again
+    def calls(plan: LogicalPlan, name: String): Int = plan.flatMap(_.expressions)
+      .map(_.collect { case e if e.prettyName == name => e }.size).sum
+    val prepared = Linkage.prepare(Pages.synthesize(spark, 300).toDF())
+    val prepPlan = prepared.queryExecution.optimizedPlan
+    assert(calls(prepPlan, "canon_sig_native") == 1, prepPlan.toString)
+    val scored = Linkage.scored(prepared).queryExecution.optimizedPlan
+    assert(calls(scored, "score_pair") == 1, scored.toString)
+    // on a lazy input the pair self-join prepares the pages on each of its
+    // sides (a persisted or committed input holds none): one canon per scan
+    // of the pages
+    val scans = scored.collectLeaves().size
+    assert(scans == 2 && calls(scored, "canon_sig_native") == scans, scored.toString)
   }
 
   test("no quadratic join strategy anywhere in the linkage pair plan") {

@@ -2,11 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Linkage, StaticParser}
-import graft.plans.{ResumableLinkage, Snapshots}
+import graft.plans.{Resumable, ResumableLinkage, Snapshots, StateFs}
 import graft.sources.Pages
 import graft.streaming.StreamingIngest
 
@@ -103,6 +106,71 @@ class SnapshotStreamingSpec extends AnyFunSuite {
       assert(rowsOut == linRows, st)
       assert(partitions > 0 && partitions.toLong == linFiles, s"$st: $partitions vs $linFiles")
     }
+  }
+
+  test("manifest file list equals an input_file_name() read-back of the committed data") {
+    val root = tmpDir("snap-files")
+    // 5 rows over 8 partitions: some partitions are empty
+    val spread = spark.sparkContext.parallelize(1 to 5, 8).toDF("id")
+    val df = Resumable.stage(spark, root, "spread", "fp")(spread)
+    assert(df.count() == 5)
+    val snap = Snapshots.latest(root, "spread", "fp").get
+    // the reference: per-file counts from a Spark read of the data directory
+    def qualified(f: String): String = {
+      val p = new HPath(f)
+      StateFs.fs(p).makeQualified(p).toString
+    }
+    val readBack = spark.read.parquet(Snapshots.dataPath(root, "spread", snap))
+      .groupBy(input_file_name().as("file")).count()
+      .collect().map(r => qualified(r.getString(0)) -> r.getLong(1)).toMap
+    val lineage = Snapshots.lineage(spark, root).filter(col("snap") === snap)
+      .select("file", "rows").collect().map(r => qualified(r.getString(0)) -> r.getLong(1))
+    assert(lineage.toMap == readBack && lineage.length == readBack.size)
+    assert(lineage.forall(_._2 > 0), s"zero-row file in lineage: ${lineage.toSeq}")
+    // partition 0 is empty and Spark still writes its file (to keep the
+    // schema); the manifest leaves that zero-row file out
+    val onDisk = StateFs.listNames(Snapshots.dataPath(root, "spread", snap))
+      .count(_.startsWith("part-"))
+    assert(onDisk > lineage.length, s"$onDisk data files, ${lineage.length} in lineage")
+    val partitions = Snapshots.metrics(spark, root).filter(col("snap") === snap)
+      .select("partitions").as[Int].collect().toSeq
+    assert(partitions == Seq(readBack.size))
+    // views keep the column names and types of the tables they replace
+    assert(Snapshots.metrics(spark, root).dtypes.toSeq == Seq("stage" -> "StringType",
+      "snap" -> "IntegerType", "rows_out" -> "LongType", "seconds" -> "DoubleType",
+      "partitions" -> "IntegerType"))
+    assert(Snapshots.lineage(spark, root).dtypes.toSeq == Seq("stage" -> "StringType",
+      "snap" -> "IntegerType", "file" -> "StringType", "rows" -> "LongType"))
+    // the commit wrote its data and manifest, and no bookkeeping table
+    assert(StateFs.listNames(root) == Seq("spread"))
+  }
+
+  test("job-count guard: a commit submits only its data write; a committed stage none") {
+    val root = tmpDir("snap-jobs")
+    val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    val sc = spark.sparkContext
+    val group = "snapshot-job-count-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(action: => Any): Int = {
+      TestListenerBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "job-count guard")
+      try action finally sc.clearJobGroup()
+      TestListenerBus.drain(sc)
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(Snapshots.commit(df, root, "stage1", "fp1")) == 1)
+      assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 1)
+      assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 0)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("streaming ingest: micro-batch parity with batch prepare") {
