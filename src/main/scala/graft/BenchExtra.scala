@@ -116,7 +116,7 @@ object BenchExtra {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
         .select(col("shingle"), col("id"), col("nsh"), col("rk")))
-      noop(graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000, keepSizes = true))
+      noop(graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000))
     }
 
     t("ngram.counts") {
@@ -132,7 +132,7 @@ object BenchExtra {
         .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
         .select(col("shingle"), col("id"), col("nsh"), col("rk")))
       val cand = graft.operators.Dedup.trackPersist(
-        graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000, keepSizes = true))
+        graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000))
       val nSets = sets.count(); val nExpl = exploded.count()
       val nPrefix = prefix.count(); val nCand = cand.count()
       val nCandIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("id"))

@@ -86,7 +86,8 @@ object Queries {
     operators.Dedup.trackPersist(df).orderBy(cols.map(col): _*)
 
   /** One-time bucketed-layout write for q_bucketed_join, memoized per
-    * (session, dir): returns the (orders, lineitem) catalog table names.
+    * (session, dir) and re-written when either table has been dropped:
+    * returns the (orders, lineitem) catalog table names.
     * Names and paths derive from the sanitized dir string, so distinct data
     * dirs can never collide (the former `math.abs(dir.hashCode)` could). */
   private val bucketedCache =
@@ -94,6 +95,12 @@ object Queries {
 
   private def bucketedFor(s: SparkSession, dir: String): (String, String) = {
     bucketedCache.keys.filter(_._1.sparkContext.isStopped).foreach(bucketedCache.remove)
+    // a memoized pair is served only while both tables still exist: a caller
+    // (or a catalog reset) may drop them mid-session, and a dangling name
+    // would fail the query instead of re-writing the layout
+    bucketedCache.get((s, dir)).foreach { case (ot, lt) =>
+      if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) bucketedCache.remove((s, dir))
+    }
     bucketedCache.getOrElseUpdate((s, dir), {
       implicit val sp: SparkSession = s
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

@@ -100,8 +100,9 @@ object Blocking {
     * affected frame embeds the live delta paths), so without a bound the
     * memos grow one LogicalPlan tree per batch per join forever (r6 ADVICE).
     * On overflow the memo is simply cleared — re-probing a relation costs
-    * two small aggregate jobs, unbounded driver heap costs the stream. */
-  private val MaxProbeMemoEntries = 512
+    * two small aggregate jobs, unbounded driver heap costs the stream. The
+    * gazetteer index memos ([[StaticParser.broadcastIndex]]) share the bound. */
+  private[graft] val MaxProbeMemoEntries = 512
 
   private def evictStoppedProbes(): Unit = {
     bytesMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bytesMemo.remove)

@@ -15,13 +15,19 @@ import graft.functions.TextFunctions
   * key. Every candidate self-join routes through
   * [[Blocking.saltedSelfJoin]], so a hot bucket's quadratic fan-out is capped
   * at O(maxBucket²) per task and the join partitioning is pinned against
-  * AQE's amplification-blind coalescing. Candidate JOINS carry only (id, band, bucket) — never the shingle
-  * sets or embedding vectors themselves (payload through the banded shuffle
-  * is what kills these at 100 TB); verification re-attaches per-id state via
-  * skinny equi-joins, and set overlap is counted from the EXPLODED shingle
-  * relation (`groupBy(id_a,id_b).count()`), not `array_intersect` on carried
-  * arrays. Signatures are pure Catalyst columns (codegen'd); nothing collects
-  * to the driver.
+  * AQE's amplification-blind coalescing. Candidate JOINS carry only scalar
+  * columns (id, band, bucket, and set sizes as pruning payload) — never the
+  * shingle sets or embedding vectors themselves (payload through the banded
+  * shuffle is what kills these at 100 TB). Verification attaches per-id
+  * state to candidates that are already DEDUPLICATED AND PRUNED, via two
+  * skinny equi-joins, and counts set overlap in-row with `array_intersect`
+  * ([[verifiedJaccard]]). By volume: the former exploded-relation form
+  * moved |cand| × |sh_a| shingles into its second join, plus the exploded
+  * (id, shingle) relation twice, plus an aggregate exchange keyed by the
+  * pair; the attach form moves the same |cand| × |sh_a| shingles (as
+  * arrays) and the sets twice, with no aggregate and no explode.
+  * Signatures are pure Catalyst columns (codegen'd); nothing collects to the
+  * driver.
   */
 object Dedup {
 
@@ -120,67 +126,46 @@ object Dedup {
 
   // --------------------- shared Jaccard verification -----------------------
 
-  /** [[verifiedJaccard]] for candidates that ALREADY carry (nsh_a, nsh_b) and
-    * a threshold known to be > 0: the intersection count groups by the pair
-    * WITH its sizes, so jaccard falls out of the aggregate directly — no
-    * size re-joins and no LeftOuter attach of the intersection back onto the
-    * candidates (three joins fewer than [[verifiedJaccard]]; at corpus scale
-    * the LeftOuter was a second candidate-set-sized sort-merge). Zero-overlap
-    * pairs simply don't reach the aggregate — under `threshold > 0` they
-    * could never pass the filter, EXCEPT the both-empty pair (jaccard 1.0 by
-    * the both-empty rule), which is re-added from the size columns alone.
-    * Callers must filter `jaccard >= threshold` with threshold > 0 (the pair
-    * operators' contract; a 0 threshold would need every candidate row).
+  /** Exact Jaccard for deduplicated candidate pairs: each side's (sh, nsh)
+    * attaches by id with one equi-join, and |a∩b| is
+    * `size(array_intersect(sh_a, sh_b))` — exact because `sh` is
+    * `array_distinct` ([[shingleSets]]). Jaccard = inter / (nsh_a + nsh_b −
+    * inter); two empty sets are identical (1.0). No explode, no aggregate, no
+    * union: every candidate row is verified in place (a zero-overlap pair
+    * gets 0), so the result is correct under any threshold filter. The one
+    * verification of all four Jaccard paths (the full MinHash and n-gram
+    * operators and their incremental deltas).
     *
-    * `includeBothEmpty = false` additionally asserts the caller feeds only
-    * non-empty sets (the PPJoin path filters `nsh > 0` upstream): the
-    * both-empty union branch would re-execute the candidate subtree just to
-    * produce zero rows. When true, the two branches reference the candidate
-    * frame twice — their common exchange subtrees are deduplicated by
-    * ReuseExchange (same two-reference shape as the join formulation). */
-  private[graft] def verifiedJaccardSized(candWithSizes: DataFrame, sets: DataFrame,
-                                          includeBothEmpty: Boolean): DataFrame = {
-    val expl = sets.select(col("id"), explode(col("sh")).as("shingle"))
-    val base = candWithSizes.select("id_a", "id_b", "nsh_a", "nsh_b")
-    val inter = base
-      .join(expl.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
-      .join(expl.select(col("id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b", "nsh_a", "nsh_b").agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter") * lit(1.0) / (col("nsh_a") + col("nsh_b") - col("inter")))
-    if (!includeBothEmpty) inter
-    else inter.unionByName(
-      base.filter(col("nsh_a") + col("nsh_b") === 0)
-        .withColumn("inter", lit(0L)).withColumn("jaccard", lit(1.0)))
+    * @param cand candidate pairs (id_a, id_b), already deduplicated; other
+    *             columns are ignored
+    * @param sets per-id state (id, sh: array<string>, nsh: int)
+    * @return (id_a, id_b, jaccard) — one row per candidate */
+  private[graft] def verifiedJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(s: String): DataFrame = sets.select(col("id").as(s"id_$s"),
+      col("sh").as(s"sh_$s"), col("nsh").as(s"nsh_$s"))
+    val union = col("nsh_a") + col("nsh_b") - col("inter")
+    cand.select("id_a", "id_b")
+      .join(side("a"), "id_a")
+      .join(side("b"), "id_b")
+      // two projections, so the ratio reads `inter` as an attribute: one
+      // projection would intersect twice per output row (CollapseProject
+      // keeps the split — `inter` is non-cheap and referenced twice)
+      .select(col("id_a"), col("id_b"), col("nsh_a"), col("nsh_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"))
+      .select(col("id_a"), col("id_b"),
+        when(col("nsh_a") + col("nsh_b") === 0, 1.0) // both empty ⇒ identical
+          .otherwise(col("inter") * lit(1.0) / union).as("jaccard"))
   }
 
-  /** Exact Jaccard for candidate pairs WITHOUT carrying shingle arrays:
-    * |a∩b| is counted from the exploded (id, shingle) relation — candidates
-    * fan out to their left-side shingles, an equi-join on (id_b, shingle)
-    * keeps the shared ones, and `groupBy(id_a,id_b).count()` is the exact
-    * intersection size (arrays are distinct). Jaccard follows from scalars:
-    * inter / (nsh_a + nsh_b − inter). Used by the incremental steps (their
-    * candidate frames are id-only); the full pair operators use
-    * [[verifiedJaccardSized]].
-    *
-    * @param cand candidate pairs (id_a, id_b), already deduplicated
-    * @param sets per-id state (id, sh: array<string>, nsh: int) */
-  private[graft] def verifiedJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
-    val expl = sets.select(col("id"), explode(col("sh")).as("shingle"))
-    val inter = cand.select("id_a", "id_b")
-      .join(expl.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
-      .join(expl.select(col("id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    val sizes = sets.select(col("id"), col("nsh"))
-    cand
-      .join(sizes.select(col("id").as("id_a"), col("nsh").as("nsh_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("nsh").as("nsh_b")), "id_b")
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .withColumn("jaccard",
-        when(col("nsh_a") + col("nsh_b") === 0, 1.0) // both empty ⇒ identical
-          .otherwise(col("inter") * lit(1.0)
-            / (col("nsh_a") + col("nsh_b") - col("inter"))))
+  /** The size prune of every Jaccard join: |a∩b|/|a∪b| ≤ min/max of the
+    * set sizes, so a pair whose size ratio is below `threshold` can never
+    * verify (the rounded divisions are monotone, so the prune is sound on
+    * doubles too). Two empty sets pass (their Jaccard is 1.0); the `when`
+    * keeps the division away from a zero maximum. */
+  private def sizeRatioAtLeast(threshold: Double): Column = {
+    val hi = greatest(col("nsh_a"), col("nsh_b"))
+    when(hi === 0, lit(true))
+      .otherwise(least(col("nsh_a"), col("nsh_b")) * lit(1.0) / hi >= threshold)
   }
 
   // ------------------------------ MinHash ----------------------------------
@@ -211,69 +196,66 @@ object Dedup {
   }
 
   /** Per-id shingle state (id, sh: array<string>, nsh: int) — the shared
-    * input of the MinHash signature branch, the size branch, and the exploded
-    * verification branch. Exposed package-private so the incremental dedup
-    * operator builds byte-identical state for its equality guarantee. */
+    * input of the MinHash signature branch and of [[verifiedJaccard]].
+    * Exposed package-private so the incremental dedup operator builds
+    * byte-identical state for its equality guarantee. */
   private[graft] def shingleSets(df: DataFrame, idCol: String, textCol: String,
                                  shingleN: Int): DataFrame =
     spread(df.select(col(idCol).as("id"), col(textCol).as("text")))
       .select(col("id"), array_distinct(TextFunctions.shingles(col("text"), shingleN)).as("sh"))
       .withColumn("nsh", size(col("sh")))
 
-  /** LSH band relation (id, band, bucket) from shingle state: bucket = hash
-    * of the band's signature slice. ONLY these three scalar columns ever
-    * enter a self-join — no array payload. Shared with the incremental
-    * operator (same expressions ⇒ same buckets ⇒ equality by construction). */
-  private[graft] def minhashBanded(sets: DataFrame, numHashes: Int,
-                                   bands: Int): DataFrame = {
+  /** LSH band relation (id, [carry…], band, bucket) from shingle state:
+    * bucket = hash of the band's signature slice. Only scalar columns ever
+    * enter a self-join — `carry` names scalar columns of `sets` that ride
+    * along as pruning payload ([[minhashPairs]] carries `nsh`), never the
+    * array. Shared with the incremental operator, whose persisted state keeps
+    * the plain (id, band, bucket) layout (same expressions ⇒ same buckets ⇒
+    * equality by construction). */
+  private[graft] def minhashBanded(sets: DataFrame, numHashes: Int, bands: Int,
+                                   carry: Seq[String] = Seq.empty): DataFrame = {
     val rowsPerBand = numHashes / bands
     sets
       .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .select(col("id"),
+      .select((col("id") +: carry.map(col)) :+
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
+          b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
   /** MinHash + LSH banding: signatures split into `bands` bands of
     * `numHashes/bands` rows; docs sharing any band bucket become candidate
     * pairs; candidates are verified with exact shingle-set Jaccard
-    * (co-occurrence counted, arrays never shuffled) and kept at `threshold`.
+    * ([[verifiedJaccard]]) and kept at `threshold`.
     * Returns verified near-duplicate pairs (id_a < id_b, jaccard).
     *
     * The banded self-join runs through [[Blocking.saltedSelfJoin]]: a hot
     * band bucket (a boilerplate duplicate family sharing one signature slice)
     * otherwise concentrates its quadratic candidate fan-out in ONE task —
-    * `maxBucket` bounds every task at O(maxBucket²) pairs. */
+    * `maxBucket` bounds every task at O(maxBucket²) pairs. The 4-byte `nsh`
+    * rides the band rows as payload, so the size prune (min/max ≥ threshold,
+    * sound because Jaccard ≤ min/max) filters the band collisions BEFORE the
+    * pair dropDuplicates — the SimHash pattern: the dedup exchange shuffles
+    * only pairs that can still verify, and verification needs no size
+    * re-join. The shingle arrays attach only to the surviving pairs. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
                    threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    // per-id shingle state, computed once and reused by three branches
+    // per-id shingle state: the signature input and the verification state
     val sets = trackPersist(shingleSets(df, idCol, textCol, shingleN))
 
-    // PERSISTED (skinny: 16 × (id, int, int) rows/doc) because the salted
-    // self-join's driver-side hot-key probe plus its two join sides would
-    // otherwise re-run the signature computation per consumer.
-    val banded = trackPersist(minhashBanded(sets, numHashes, bands))
+    // PERSISTED (skinny: 16 × (id, nsh, band, bucket) rows/doc) because the
+    // salted self-join's driver-side hot-key probe plus its two join sides
+    // would otherwise re-run the signature computation per consumer.
+    val banded = trackPersist(minhashBanded(sets, numHashes, bands, carry = Seq("nsh")))
 
     val cand = Blocking.saltedSelfJoin(banded, Seq("band", "bucket"), "id",
-        Seq.empty, maxBucket)
+        Seq("nsh"), maxBucket)
+      .filter(sizeRatioAtLeast(threshold))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b") // same pair may collide in several bands
 
-    // sizes attach once here; the verification aggregate then carries them
-    // (verifiedJaccardSized needs threshold > 0 — see its scaladoc)
-    require(threshold > 0, "minhashPairs: threshold must be > 0")
-    val sizes = sets.select(col("id"), col("nsh"))
-    // NOT persisted: the intersection and both-empty branches reference this
-    // frame twice, but their common exchange subtrees are deduplicated by
-    // ReuseExchange (the old join formulation had the same two-reference
-    // shape), and a persist here would hide the banded join behind an
-    // InMemoryRelation (breaking the PlanSpec payload audit) for no win
-    val candSized = cand
-      .join(sizes.select(col("id").as("id_a"), col("nsh").as("nsh_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("nsh").as("nsh_b")), "id_b")
-    verifiedJaccardSized(candSized, sets, includeBothEmpty = true)
+    verifiedJaccard(cand, sets)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -383,12 +365,15 @@ object Dedup {
     * α = ⌈t/(1+t)·(nsh_a+nsh_b)⌉ (the overlap equivalent of Jaccard ≥ t);
     * ranks follow one global order, so the globally-first shared shingle
     * minimizes BOTH ranks — min(ra)/min(rb) come from the same row and the
-    * bound is sound. Verification then counts the exact intersection from
-    * the exploded relation (no arrays through any shuffle — round-1's
-    * carry-both-arrays + array_intersect plan was 35% of the whole bench). */
+    * bound is sound. Verification then intersects each surviving pair's two
+    * sets in-row ([[verifiedJaccard]]); the prefix self-join itself carries
+    * only (shingle, id, nsh, rk), no arrays. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
                         maxBucket: Int = 1000): DataFrame = {
+    // prefix filtering is complete only for threshold > 0: a pair sharing
+    // no shingle has Jaccard 0 and never meets in a prefix bucket
+    require(threshold > 0, "ngramJaccardPairs: threshold must be > 0")
     val sets = trackPersist(
       shingleSets(df, idCol, textCol, n).filter(col("nsh") > 0))
 
@@ -407,13 +392,7 @@ object Dedup {
       .filter(col("rk") <= col("nsh") - ceil(col("nsh") * threshold) + 1)
       .select(col("shingle"), col("id"), col("nsh"), col("rk")))
 
-    // candidates keep (nsh_a, nsh_b) — already grouped by them for the size/
-    // positional prunes — so verification needs no size re-join at all
-    require(threshold > 0, "ngramJaccardPairs: threshold must be > 0")
-    val cand = ppjoinCandidates(prefix, threshold, maxBucket, keepSizes = true)
-
-    // includeBothEmpty = false: sets is filtered to nsh > 0 above
-    verifiedJaccardSized(cand, sets, includeBothEmpty = false)
+    verifiedJaccard(ppjoinCandidates(prefix, threshold, maxBucket), sets)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -435,22 +414,18 @@ object Dedup {
     * 207-s-on-1-task failure mode).
     *
     * @param prefix prefix rows (shingle, id, nsh, rk) ranked under ONE fixed
-    *               global shingle order */
+    *               global shingle order
+    * @return deduplicated candidate pairs (id_a, id_b), the input of
+    *         [[verifiedJaccard]] */
   private[graft] def ppjoinCandidates(prefix: DataFrame, threshold: Double,
-                                      maxBucket: Int,
-                                      keepSizes: Boolean = false): DataFrame = {
+                                      maxBucket: Int): DataFrame = {
     val alpha = ceil(lit(threshold) / (1 + threshold) * (col("nsh_a") + col("nsh_b")))
-    val pruned = Blocking.saltedSelfJoin(prefix, Seq("shingle"), "id",
-        Seq("nsh", "rk"), maxBucket)
+    Blocking.saltedSelfJoin(prefix, Seq("shingle"), "id", Seq("nsh", "rk"), maxBucket)
       .groupBy(col("id_a"), col("id_b"), col("nsh_a"), col("nsh_b"))
       .agg(min(col("rk_a")).as("ra"), min(col("rk_b")).as("rb"))
-      .filter(least(col("nsh_a"), col("nsh_b")) * lit(1.0)
-        / greatest(col("nsh_a"), col("nsh_b")) >= threshold)
+      .filter(sizeRatioAtLeast(threshold))
       .filter(lit(1) + least(col("nsh_a") - col("ra"), col("nsh_b") - col("rb")) >= alpha)
-    // keepSizes feeds [[verifiedJaccardSized]] (no size re-join); the
-    // id-only shape stays the incremental operator's interface
-    if (keepSizes) pruned.select("id_a", "id_b", "nsh_a", "nsh_b")
-    else pruned.select("id_a", "id_b")
+      .select("id_a", "id_b")
   }
 
   /** Prefix rows under the CONTENT-HASH total order (xxhash64 asc, shingle

@@ -143,8 +143,13 @@ object StaticParser {
   // OPTIMIZATION_r07.md). Index builds are memoized by rows-sequence IDENTITY
   // (call sites pass the stable `Gazetteer.rows`/`rowsFull` lazy vals;
   // structural equality over 73k rows would itself cost more than the build),
-  // broadcasts per (session, rows) — the Queries.prepCache pattern, with the
-  // same stopped-session eviction so a JVM cycling sessions can't accumulate.
+  // broadcasts per (session, rows). Both memos follow Blocking's probe-memo
+  // rule: entries of a stopped session are dropped on every call, and a memo
+  // that reaches [[Blocking.MaxProbeMemoEntries]] is cleared — the index memo
+  // holds a strong reference to each rows sequence it was handed, so a
+  // caller passing a fresh sequence per call would otherwise pin every one of
+  // them (and its index) for the life of the JVM. Re-building after a clear
+  // costs one index build; the stable call sites never come near the bound.
   private final class IdKey(val r: AnyRef) {
     override def hashCode: Int = System.identityHashCode(r)
     override def equals(o: Any): Boolean = o match {
@@ -157,6 +162,17 @@ object StaticParser {
   private val bcastMemo =
     scala.collection.concurrent.TrieMap[(SparkSession, IdKey), Broadcast[Gazetteer.Index]]()
 
+  private def evictIndexMemos(): Unit = {
+    bcastMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bcastMemo.remove)
+    if (idxMemo.size >= Blocking.MaxProbeMemoEntries) idxMemo.clear()
+    if (bcastMemo.size >= Blocking.MaxProbeMemoEntries) bcastMemo.clear()
+  }
+
+  /** (index, broadcast) memo entry counts, and whether a broadcast of
+    * `spark` is memoized (test hook for the bounds above). */
+  private[graft] def indexMemoState(spark: SparkSession): (Int, Int, Boolean) =
+    (idxMemo.size, bcastMemo.size, bcastMemo.keys.exists(_._1 eq spark))
+
   /** Convenience: broadcast the default synthesized gazetteer index. */
   def broadcastIndex(spark: SparkSession): Broadcast[Gazetteer.Index] =
     broadcastIndex(spark, Gazetteer.rows)
@@ -165,7 +181,7 @@ object StaticParser {
     * reference-scale table, [[Gazetteer.rowsFull]]); build and broadcast are
     * memoized — see the memo note above. */
   def broadcastIndex(spark: SparkSession, rows: Seq[graft.sources.GazRow]): Broadcast[Gazetteer.Index] = {
-    bcastMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bcastMemo.remove)
+    evictIndexMemos()
     val k = new IdKey(rows)
     bcastMemo.getOrElseUpdate((spark, k),
       spark.sparkContext.broadcast(idxMemo.getOrElseUpdate(k, Gazetteer.buildIndex(rows))))

@@ -17,7 +17,7 @@ import graft.plans.StateFs
   * — via [[Blocking.saltedSelfJoin]] each task further capped at
   * O(maxBucket²) — independent of the accumulated corpus size; untouched
   * buckets cost one left-semi key probe, no payload ever re-shuffles, and
-  * verification explodes only the CANDIDATES' own per-doc state (a second
+  * verification attaches only the CANDIDATES' own per-doc state (a second
   * left-semi, build side = candidate ids) — never the accumulated corpus.
   * Unlike linkage blocks (re-SCORED on every touch, needing a last-touch
   * merge), dedup state is APPEND-ONLY: documents are immutable, so a pair's
@@ -111,19 +111,21 @@ object IncrementalDedup {
       Dedup.minhashBanded(newSets, numHashes, bands))
 
     val (touched, rawCand) = minhashCandidates(prev, newSets, newBanded, maxBucket)
-    // localCheckpoint (EAGER), not a mere persist: verification references
-    // the candidate set four times and the restricted state five times, and
-    // each restricted-state copy nests the candidate tree again — persist
-    // caches EXECUTION but the ANALYZED plan still multiplies the salted
-    // join tree ~14x and Catalyst re-optimizes all of it (measured 1.2 s ->
-    // 8.9 s per step before truncation). Both frames are O(candidates).
+    // localCheckpoint (EAGER), not a mere persist: verification reads the
+    // candidate set once and the restricted state twice (one attach join per
+    // side), and each restricted-state copy nests the candidate-id union —
+    // two more candidate references — so the analyzed plan would hold the
+    // salted join tree five times. Persist caches EXECUTION but Catalyst
+    // would still re-optimize every copy (the former exploded verification
+    // multiplied it ~14x: 1.2 s -> 8.9 s per step before truncation). Both
+    // frames are O(candidates).
     val cand = rawCand.localCheckpoint()
 
     // verification state restricted to the candidates' OWN documents (one
     // streamed left-semi over the accumulated sets, build side = candidate
-    // ids): without it every batch would explode the whole corpus's shingle
-    // arrays, making per-batch verification O(corpus) instead of
-    // O(candidates)
+    // ids): without it both attach joins would read — and in the shuffle
+    // regime move — the whole corpus's shingle arrays, making per-batch
+    // verification O(corpus) instead of O(candidates)
     val verifySets = prev.sets.unionByName(newSets)
       .join(candidateIds(cand), Seq("id"), "left_semi").localCheckpoint()
     val fresh = Dedup.trackPersist(
@@ -187,8 +189,8 @@ object IncrementalDedup {
   }
 
   /** The candidates' own document ids — the build side of the left-semi
-    * that keeps per-batch verification O(candidates) instead of exploding
-    * the whole accumulated per-doc state. */
+    * that keeps per-batch verification O(candidates) instead of attaching
+    * from the whole accumulated per-doc state. */
   private def candidateIds(cand: DataFrame): DataFrame =
     cand.select(col("id_a").as("id"))
       .union(cand.select(col("id_b").as("id"))).distinct()
@@ -385,7 +387,7 @@ object IncrementalDedup {
       threshold, maxBucket)
     // checkpointed (plan truncation) + verification state restricted to the
     // candidates' own ids (see the MinHash delta): per-batch verification
-    // explodes O(candidates) shingle sets, never the accumulated corpus
+    // attaches O(candidates) shingle sets, never the accumulated corpus
     val cand = rawCand.localCheckpoint()
     val verifySets = prev.sets.unionByName(newSets)
       .join(candidateIds(cand), Seq("id"), "left_semi").localCheckpoint()

@@ -65,44 +65,85 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(bow.filter(col("doc_id") =!= col("rep_id")).count() >= 3)
   }
 
-  test("sized verification == join verification under the threshold filter") {
-    // r7: the pair operators verify with verifiedJaccardSized (sizes carried
-    // through candidates, zero-overlap pairs never materialized). Must match
-    // the join formulation row-for-row after any threshold > 0 filter,
-    // including the both-empty rule and zero-overlap drops.
-    val sets = Seq(
-      (1L, Seq("a b c", "b c d", "c d e")), (2L, Seq("a b c", "b c d", "x y z")),
-      (3L, Seq("p q r")), (4L, Seq.empty[String]), (5L, Seq.empty[String]))
-      .toDF("id", "sh").withColumn("nsh", size(col("sh")))
-    val cand = Seq((1L, 2L), (1L, 3L), (4L, 5L), (1L, 4L), (2L, 3L))
-      .toDF("id_a", "id_b")
-    val sizes = sets.select(col("id"), col("nsh"))
-    val candSized = cand
-      .join(sizes.select(col("id").as("id_a"), col("nsh").as("nsh_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("nsh").as("nsh_b")), "id_b")
+  /** Plain-Scala Jaccard of two distinct shingle sets, the independent
+    * reference for [[Dedup.verifiedJaccard]]: two empty sets are identical
+    * (1.0), and the ratio is the same double division Spark runs. */
+  private def jaccardRef(a: Set[String], b: Set[String]): Double =
+    if (a.isEmpty && b.isEmpty) 1.0
+    else {
+      val inter = (a intersect b).size
+      inter * 1.0 / (a.size + b.size - inter)
+    }
+
+  /** Spark's `round(x, 6)` on a double (HALF_UP on its decimal form). */
+  private def round6(d: Double): Double =
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("verifiedJaccard == plain-Scala Jaccard under the threshold filter") {
+    // the one verification of every Jaccard path, against an independent
+    // reference: overlap, zero overlap, one side empty, both empty, and
+    // identical sets (a pair on the 1.0 boundary besides the empty rule)
+    val fixture = Seq(
+      1L -> Seq("a b c", "b c d", "c d e"), 2L -> Seq("a b c", "b c d", "x y z"),
+      3L -> Seq("p q r"), 4L -> Seq.empty[String], 5L -> Seq.empty[String],
+      6L -> Seq("c d e", "b c d", "a b c"))
+    val sets = fixture.toDF("id", "sh").withColumn("nsh", size(col("sh")))
+    val pairs = Seq((1L, 2L), (1L, 3L), (4L, 5L), (1L, 4L), (2L, 3L), (1L, 6L))
+    val cand = pairs.toDF("id_a", "id_b")
+    val bySet = fixture.map { case (id, sh) => id -> sh.toSet }.toMap
+    val ref = pairs.map { case (a, b) => (a, b, jaccardRef(bySet(a), bySet(b))) }
+    // one row per candidate, before any filter
+    val all = Dedup.verifiedJaccard(cand, sets)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(all == ref.toSet)
     for (t <- Seq(0.1, 0.5, 1.0)) {
-      val viaJoin = Dedup.verifiedJaccard(cand, sets)
+      val got = Dedup.verifiedJaccard(cand, sets)
         .filter(col("jaccard") >= t)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .orderBy("id_a", "id_b").collect().toSeq
-      val viaSized = Dedup.verifiedJaccardSized(candSized, sets, includeBothEmpty = true)
-        .filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .orderBy("id_a", "id_b").collect().toSeq
-      assert(viaSized == viaJoin, s"threshold $t")
-      // the PPJoin path: both-empty branch elided under the nsh > 0 contract
-      val neSets = sets.filter(col("nsh") > 0)
-      val neCand = cand.filter(col("id_a") <= 3 && col("id_b") <= 3)
-      val neSized = candSized.filter(col("id_a") <= 3 && col("id_b") <= 3)
-      val neJoin = Dedup.verifiedJaccard(neCand, neSets)
-        .filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .orderBy("id_a", "id_b").collect().toSeq
-      val neNew = Dedup.verifiedJaccardSized(neSized, neSets, includeBothEmpty = false)
-        .filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .orderBy("id_a", "id_b").collect().toSeq
-      assert(neNew == neJoin, s"non-empty path, threshold $t")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val want = ref.filter(_._3 >= t).map { case (a, b, j) => (a, b, round6(j)) }.toSet
+      assert(got == want, s"threshold $t")
+    }
+  }
+
+  test("Jaccard families: minhash pairs exact, n-gram pairs == brute force") {
+    // the shingle sets are collected from Dedup.shingleSets itself, so only
+    // candidate generation and verification are under test here
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    assert(sets.size == 500)
+
+    // MinHash is approximate in RECALL only: every emitted pair must carry
+    // its exact Jaccard and pass the threshold
+    val mh = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    Dedup.releaseCaches(spark)
+    mh.foreach { case (a, b, j) =>
+      val exact = jaccardRef(sets(a), sets(b))
+      assert(a < b && j == round6(exact) && exact >= 0.5, s"minhash pair ($a, $b, $j) vs $exact")
+    }
+
+    // brute force over all 124,750 unordered pairs; documents without a
+    // shingle are outside the n-gram operator's domain (it pairs only
+    // nsh > 0, so two empty documents are not reported as duplicates)
+    val ids = sets.keys.toArray.sorted
+    val allPairs = for {
+      i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
+    } yield (ids(i), ids(j))
+    val scored = allPairs.filter { case (a, b) => sets(a).nonEmpty && sets(b).nonEmpty }
+      .map { case (a, b) => (a, b, jaccardRef(sets(a), sets(b))) }.toVector
+    assert(ids.length.toLong * (ids.length - 1) / 2 == 124750L)
+    for (t <- Seq(0.8, 0.5)) {
+      val want = scored.filter(_._3 >= t).map { case (a, b, j) => (a, b, round6(j)) }.sorted
+      val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toVector.sorted
+      Dedup.releaseCaches(spark)
+      assert(got == want, s"threshold $t: ${got.size} pairs vs ${want.size} brute force")
+      if (t == 0.5) {
+        val found = mh.map(p => (p._1, p._2)).toSet
+        val hit = want.count { case (a, b, _) => found((a, b)) }
+        info(s"minhash recall at 0.5 vs brute force: $hit/${want.size}")
+      }
     }
   }
 

@@ -222,6 +222,45 @@ class PlanSpec extends AnyFunSuite {
     Dedup.releaseCaches(spark)
   }
 
+  test("Jaccard verification: minhash size prune below the pair dedup; no explode, no union") {
+    import org.apache.spark.sql.catalyst.expressions.Explode
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, Join, Union}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    // optimized plans read while the operators' persisted state is
+    // registered — the shipped shape (sets/banded/prefix are cache leaves)
+    val mh = Dedup.minhashPairs(docs, "doc_id", "text").queryExecution.optimizedPlan
+    val ng = Dedup.ngramJaccardPairs(docs, "doc_id", "text").queryExecution.optimizedPlan
+    Dedup.releaseCaches(spark)
+
+    // the pair dedup is the Aggregate grouping by exactly (id_a, id_b); the
+    // optimizer may fold the prune's Filter into the self-join's condition,
+    // where the two sides' sizes are still named __nsh_l/__nsh_r
+    val pairDedup = mh.collect {
+      case a: Aggregate if a.groupingExpressions.map(_.references.map(_.name).mkString)
+          == Seq("id_a", "id_b") => a
+    }
+    assert(pairDedup.size == 1, s"no single pair-dedup aggregate:\n$mh")
+    def bothSizes(c: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
+      val refs = c.references.map(_.name).toSet
+      (refs("nsh_a") || refs("__nsh_l")) && (refs("nsh_b") || refs("__nsh_r"))
+    }
+    val pruned = pairDedup.head.child.exists {
+      case f: Filter => bothSizes(f.condition)
+      case j: Join => j.condition.exists(bothSizes)
+      case _ => false
+    }
+    assert(pruned, s"no size prune over both sides' nsh below the pair dedup:\n$mh")
+
+    for ((name, p) <- Seq("minhashPairs" -> mh, "ngramJaccardPairs" -> ng)) {
+      val explodes = p.collect {
+        case g: Generate if g.generator.isInstanceOf[Explode] &&
+          g.generator.references.exists(_.name == "sh") => g
+      }
+      assert(explodes.isEmpty, s"$name explodes the shingle sets:\n$p")
+      assert(p.collect { case u: Union => u }.isEmpty, s"$name plan has a Union:\n$p")
+    }
+  }
+
   test("incremental dedup deltas inherit the banded-join plan properties") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     import graft.streaming.IncrementalDedup
@@ -282,6 +321,20 @@ class PlanSpec extends AnyFunSuite {
     check(emd, "vec")
     // the PPJoin family's bucket identity is the prefix shingle itself
     check(ngd, "sh", key = "shingle")
+  }
+
+  test("q_bucketed_join rebuilds its layout when the memoized tables are dropped") {
+    val q = SparkEntry.queries("q_bucketed_join")
+    val first = q(spark, sfDir).collect().toSeq
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("g_orders_b_") || n.startsWith("g_lineitem_b_"))
+    assert(tables.length >= 2, s"bucketed tables not in the catalog: ${tables.toSeq}")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    // served from the memo without revalidation, this would name tables
+    // that no longer exist and fail analysis
+    val again = q(spark, sfDir)
+    assert(again.collect().toSeq == first)
+    tables.foreach(t => assert(spark.catalog.tableExists(t), s"$t was not rebuilt"))
   }
 
   test("IVF cell assignment is a shuffle-free projection (no Exchange/Window)") {

@@ -114,4 +114,54 @@ class StaticParserSpec extends AnyFunSuite {
     assert(one.linesIterator.count(_.startsWith("    - ")) ==
       Gazetteer.rows.count(_.province == "ankara"))
   }
+
+  test("gazetteer index memos stay bounded; a stopped session's broadcast is dropped") {
+    import graft.operators.Blocking
+    import graft.sources.GazRow
+    val bound = Blocking.MaxProbeMemoEntries
+    // a fresh rows sequence per call (identity-keyed) must not pin every
+    // index it was handed: the memos are cleared when they reach the bound
+    for (i <- 0 until bound + 20) {
+      StaticParser.broadcastIndex(spark, Seq(GazRow("il", s"ilce$i", "mah", "35000")))
+      val (nIdx, nBcast, _) = StaticParser.indexMemoState(spark)
+      assert(nIdx <= bound && nBcast <= bound, s"call $i: memos at $nIdx / $nBcast")
+    }
+    // the stable call sites still memoize after a clear
+    assert(StaticParser.broadcastIndex(spark) eq StaticParser.broadcastIndex(spark))
+
+    // a stopped session needs its own SparkContext, which this JVM's shared
+    // one rules out: the eviction is observed in a child JVM (local[1])
+    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val jvmArgs = scala.jdk.CollectionConverters.ListHasAsScala(rt.getInputArguments)
+      .asScala.filterNot(a => a.startsWith("-Xmx") || a.startsWith("-agentlib")).toSeq
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.StaticParserMemoProbe")
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    val line = out.toString.linesIterator.find(_.startsWith("MEMO "))
+    assert(code == 0 && line.contains("MEMO held_before=true held_after=false bcast=1"),
+      s"exit $code, probe said: $line")
+  }
+}
+
+/** Child-JVM half of the memo test: memoize a broadcast under one session,
+  * stop it, broadcast under a new session, and report whether the stopped
+  * session still holds a memo entry. */
+object StaticParserMemoProbe {
+  def main(args: Array[String]): Unit = {
+    def session(name: String) = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").appName(name)
+      .config("spark.ui.enabled", "false").getOrCreate()
+    val first = session("memo-probe-1")
+    StaticParser.broadcastIndex(first)
+    val heldBefore = StaticParser.indexMemoState(first)._3
+    first.stop()
+    val second = session("memo-probe-2")
+    StaticParser.broadcastIndex(second)
+    val (_, nBcast, heldAfter) = StaticParser.indexMemoState(first)
+    println(s"MEMO held_before=$heldBefore held_after=$heldAfter bcast=$nBcast")
+    second.stop()
+  }
 }
