@@ -23,7 +23,11 @@ import org.apache.spark.sql.SparkSession
   */
 object RunLinkage {
 
-  /** Testable core: run against a provided session, return committed rows. */
+  /** Testable core: run against a provided session, return the committed
+    * entity rows. The count is the entities manifest's `rows` (the sum of
+    * its files' footer row counts), so no Spark job runs after the last
+    * stage's write; a re-submit on a fully committed root runs only the
+    * input's schema read. */
   def runFromArgs(spark: SparkSession, args: Array[String]): Long = {
     require(args.length >= 2,
       "usage: RunLinkage <pagesParquetDir> <snapshotRoot> [threshold] [maxBlock]")
@@ -34,8 +38,7 @@ object RunLinkage {
       maxBlock = args.lift(3).map(_.toInt).getOrElse(1000))
     val pages = spark.read.parquet(inDir)
     val bIdx = operators.StaticParser.broadcastIndex(spark)
-    val out = plans.ResumableLinkage.run(spark, pages, pagesId = inDir, root, bIdx, cfg)
-    out.count()
+    plans.ResumableLinkage.runCommitted(spark, pages, pagesId = inDir, root, bIdx, cfg).rows
   }
 
   def main(args: Array[String]): Unit = {

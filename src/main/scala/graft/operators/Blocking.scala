@@ -100,7 +100,7 @@ object Blocking {
     * affected frame embeds the live delta paths), so without a bound the
     * memos grow one LogicalPlan tree per batch per join forever (r6 ADVICE).
     * On overflow the memo is simply cleared — re-probing a relation costs
-    * two small aggregate jobs, unbounded driver heap costs the stream. The
+    * two small jobs, unbounded driver heap costs the stream. The
     * gazetteer index memos ([[StaticParser.broadcastIndex]]) share the bound. */
   private[graft] val MaxProbeMemoEntries = 512
 
@@ -309,10 +309,12 @@ object Blocking {
     // Two driver actions, each one pass, the second only when needed (and
     // both memoized per (session, plan) — a catalog re-invocation on the
     // same persisted relation skips them entirely):
-    //  1. measured bytes — a SHUFFLE-FREE global aggregate (partial sums to
-    //     one row per partition); actual widths for strings/binary, fixed
-    //     8 B for numeric/temporal scalars, complex types skipped (no
-    //     engine call site passes them), no per-row cast or concat;
+    //  1. measured bytes — ONE SHUFFLE-FREE job: each partition sums its
+    //     row widths and the driver folds the per-partition sums (a global
+    //     `agg` would plan partial sums → single-partition exchange → final
+    //     sum, two jobs); actual widths for strings/binary, fixed 8 B for
+    //     numeric/temporal scalars, complex types rejected above, no per-row
+    //     cast or concat;
     //  2. the per-key hot aggregate — run ONLY in the shuffle regime (in
     //     the broadcast regime skew needs no treatment, so the probe would
     //     buy nothing but its aggregate job).
@@ -331,7 +333,9 @@ object Blocking {
     evictStoppedProbes()
     val planKey = rows.queryExecution.analyzed.canonicalized
     val measuredBytes = bytesMemo.getOrElseUpdate((spark, planKey, probedCols),
-      rows.agg(coalesce(sum(rowBytes.cast("long")), lit(0L))).head.getLong(0))
+      rows.select(rowBytes.cast("long")).queryExecution.toRdd
+        .mapPartitions(it => Iterator(it.foldLeft(0L)(_ + _.getLong(0))))
+        .collect().sum)
     val shuffleRegime = bcThreshold <= 0 || measuredBytes > bcThreshold
 
     lazy val hotRows = hotMemo.getOrElseUpdate(

@@ -33,7 +33,15 @@ object ResumableLinkage {
 
   def run(spark: SparkSession, pages: DataFrame, pagesId: String, root: String,
           bIdx: Broadcast[Gazetteer.Index],
-          cfg: Linkage.Config = Linkage.Config()): DataFrame = {
+          cfg: Linkage.Config = Linkage.Config()): DataFrame =
+    Snapshots.read(spark, root, runCommitted(spark, pages, pagesId, root, bIdx, cfg))
+
+  /** [[run]], returning the committed entities stage's manifest instead of
+    * its data: its `rows` is the entity row count, so a caller that needs
+    * only the count reads it without a Spark job. */
+  private[graft] def runCommitted(spark: SparkSession, pages: DataFrame, pagesId: String,
+                                  root: String, bIdx: Broadcast[Gazetteer.Index],
+                                  cfg: Linkage.Config = Linkage.Config()): Snapshots.Manifest = {
     val fp = fingerprint(pagesId, cfg)
 
     val prepared = Resumable.stage(spark, root, "prepared", fp) {
@@ -45,7 +53,7 @@ object ResumableLinkage {
     val comps = Resumable.stage(spark, root, "components", fp) {
       Linkage.components(scored)
     }
-    Resumable.stage(spark, root, "entities", fp) {
+    Resumable.committed(root, "entities", fp) {
       Linkage.attachEntities(prepared, comps, bIdx)
     }
   }

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -18,7 +19,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * | table snapshot         | `root/<stage>/snap=<k>/data/` parquet dir     |
   * | snapshot metadata      | `root/<stage>/snap=<k>/manifest.json`         |
   * | commit atomicity       | data written first, manifest PUBLISHED LAST   |
-  * |                        | via atomic same-dir rename (tmp → manifest)   |
+  * |                        | via atomic same-dir rename (tmp → manifest);  |
+  * |                        | the manifest is the only commit marker (the   |
+  * |                        | data write leaves no `_SUCCESS` file)         |
   * | snapshot lineage       | `parent` + `input_fingerprint` in manifest    |
   * | table schema           | `schema` in manifest (read without inference) |
   * | manifest file entries  | `files` in manifest: path + footer row count  |
@@ -127,14 +130,20 @@ object Snapshots {
     * its footer on the driver, so the commit runs no Spark job besides the
     * write, and what the manifest declares is what a reader sees. Files with
     * no rows are left out. With `startNanos`, the manifest also records the
-    * seconds from that instant to just before the publish. */
+    * seconds from that instant to just before the publish.
+    *
+    * The manifest is the only commit marker: the data write is told not to
+    * leave Hadoop's `_SUCCESS` file, which would duplicate it (the option
+    * reaches only this write's Hadoop conf). */
   def commitFiles(df: DataFrame, root: String, stage: String, fingerprint: String,
                   startNanos: Option[Long] = None): Manifest = {
     val parent = committedSnaps(root, stage).lastOption.getOrElse(-1)
     val snapDir = new HPath(stageDir(root, stage), s"snap=${parent + 1}").toString
     StateFs.mkdirs(snapDir)
     val dataDir = new HPath(snapDir, "data").toString
-    df.write.mode("overwrite").parquet(dataDir)
+    df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dataDir)
     val files = footerRows(dataDir)
     val m = Manifest(stage, parent + 1, fingerprint, files.map(_._2).sum, CodeVersion,
       parent, startNanos.map(t0 => (System.nanoTime() - t0) / 1e9), files, Some(df.schema))
@@ -143,16 +152,20 @@ object Snapshots {
   }
 
   /** (qualified path, row count) of each parquet file in `dataDir` holding
-    * rows, sorted by path. Names starting with `_` or `.` (`_SUCCESS`,
-    * checksums) are skipped, as Spark's reader skips them. */
+    * rows, sorted by path. Names starting with `_` or `.` (a `_SUCCESS`
+    * left by another writer, checksums) are skipped, as Spark's reader skips
+    * them. Every footer is read with one set of read options built from the
+    * file system's conf: without them each open parses a fresh Hadoop
+    * `Configuration`. */
   private def footerRows(dataDir: String): Seq[(String, Long)] = {
     val dir = new HPath(dataDir)
     val fs = StateFs.fs(dir)
+    val opts = HadoopReadOptions.builder(fs.getConf).build()
     fs.listStatus(dir).toSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf), opts)
         try st.getPath.toString -> r.getRecordCount finally r.close()
       }
       .filter(_._2 > 0).sortBy(_._1)
@@ -200,11 +213,16 @@ object Resumable {
     * stage submits no Spark job here; a computed one submits only its data
     * write. */
   def stage(spark: SparkSession, root: String, stageName: String,
-            fingerprint: String)(compute: => DataFrame): DataFrame = {
-    val m = Snapshots.latestManifest(root, stageName, fingerprint).getOrElse {
+            fingerprint: String)(compute: => DataFrame): DataFrame =
+    Snapshots.read(spark, root, committed(root, stageName, fingerprint)(compute))
+
+  /** [[stage]]'s commit-or-resume step alone: the stage's committed
+    * manifest, computing and committing `compute` only when there is none
+    * for `fingerprint`. */
+  private[plans] def committed(root: String, stageName: String,
+                               fingerprint: String)(compute: => DataFrame): Snapshots.Manifest =
+    Snapshots.latestManifest(root, stageName, fingerprint).getOrElse {
       val t0 = System.nanoTime()
       Snapshots.commitFiles(compute, root, stageName, fingerprint, Some(t0))
     }
-    Snapshots.read(spark, root, m)
-  }
 }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * publish, recursive delete) onto the same abstraction, so a state root of
   * `hdfs://…`, `s3a://…`, or a bare local path all behave identically.
   *
-  * Commit protocol note: `publish` = write to a `.tmp` sibling + rename.
+  * Commit protocol note: `publish` = write to a `.tmp` sibling + rename
+  * (a plain rename to a fresh name, an overwriting one to replace a file).
   * On HDFS and local file systems rename is atomic; on S3A it is a
   * copy+delete, where the marker-file convention still holds (a reader sees
   * either no marker or a complete one — the content is written before the
@@ -104,21 +105,33 @@ object StateFs {
     } finally in.close()
   }
 
-  /** Publish a small file: write `<name>.tmp`, then rename over `name` with
-    * OVERWRITE semantics (FileContext — atomic on HDFS/local, so a
-    * re-publish of an existing marker, e.g. a retried foreachBatch
-    * compaction, never passes through a window where NEITHER version
-    * exists). A crash before the rename leaves only an ignorable `.tmp`.
-    * On file systems without a FileContext binding the fallback is
-    * delete-then-rename, whose non-atomic window is a re-publish-only path
-    * and re-converges on the next retry. */
+  /** Publish a small file: write `<name>.tmp`, then rename it to `name`.
+    *
+    * Fresh name (every snapshot manifest, which always lands in a new
+    * `snap=N` dir): a plain `FileSystem.rename`. It is atomic on HDFS and
+    * local file systems and, unlike the replace path below, starts no child
+    * process on a local file system without native Hadoop. On HDFS it fails
+    * rather than overwrite a file a racer published first, and that failure
+    * is thrown.
+    *
+    * Existing name (a marker re-published by a retried foreachBatch
+    * compaction): rename over it with OVERWRITE semantics (FileContext —
+    * atomic on HDFS/local, so the re-publish never passes through a window
+    * where NEITHER version exists). On file systems without a FileContext
+    * binding the fallback is delete-then-rename, whose non-atomic window is
+    * a re-publish-only path and re-converges on the next retry.
+    *
+    * Either way a crash before the rename leaves only an ignorable `.tmp`. */
   def publish(dir: String, name: String, bytes: Array[Byte]): Unit = {
     val tmp = new Path(dir, name + ".tmp")
     val dst = new Path(dir, name)
     val f = fs(dst)
     val out = f.create(tmp, true)
     try out.write(bytes) finally out.close()
-    try {
+    if (!f.exists(dst)) {
+      if (!f.rename(tmp, dst))
+        throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    } else try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         f.makeQualified(dst).toUri, conf)
       fc.rename(f.makeQualified(tmp), f.makeQualified(dst),

@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -122,6 +124,21 @@ class FsStateSpec extends AnyFunSuite {
     assert(!StateFs.exists(dir, "c"))
     // listing a non-existent dir is empty, not an error
     assert(StateFs.listNames(s"$dir/nope").isEmpty)
+  }
+
+  test("StateFs.publish to a fresh name: exact bytes, no .tmp or checksum of it, URI and plain path") {
+    val bytes = "{\"rows\": 3}\n".getBytes(StandardCharsets.UTF_8)
+    Seq(fileUri("fs-fresh-uri"), tmpDir("fs-fresh-path")).foreach { dir =>
+      assert(!StateFs.exists(dir, "manifest.json"))
+      StateFs.publish(dir, "manifest.json", bytes)
+      assert(StateFs.readBytes(dir, "manifest.json").sameElements(bytes), dir)
+      // the Hadoop listing hides checksum files; list the local dir itself
+      val local = java.nio.file.Paths.get(new HPath(dir).toUri.getPath)
+      val names = scala.util.Using.resource(Files.list(local))(
+        _.iterator().asScala.map(_.getFileName.toString).toList)
+      assert(names.contains("manifest.json"), s"$dir: $names")
+      assert(!names.exists(_.contains(".tmp")), s"$dir: tmp left after publish: $names")
+    }
   }
 
   test("incremental linkage: deltas, compaction, GC and state load over file: URIs") {

@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Linkage, StaticParser}
+import graft.operators.{Blocking, Linkage, StaticParser}
 import graft.plans.{Resumable, ResumableLinkage, Snapshots, StateFs}
 import graft.sources.Pages
 import graft.streaming.StreamingIngest
@@ -145,9 +145,8 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     assert(StateFs.listNames(root) == Seq("spread"))
   }
 
-  test("job-count guard: a commit submits only its data write; a committed stage none") {
-    val root = tmpDir("snap-jobs")
-    val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
+  /** Jobs `action` submits, counted by a listener on its own job group. */
+  private def jobsOf(action: => Any): Int = {
     val sc = spark.sparkContext
     val group = "snapshot-job-count-guard"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -157,20 +156,57 @@ class SnapshotStreamingSpec extends AnyFunSuite {
             e.properties.getProperty("spark.jobGroup.id") == group)
           jobs.incrementAndGet()
     }
-    def jobsOf(action: => Any): Int = {
-      TestListenerBus.drain(sc)
-      jobs.set(0)
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
       sc.setJobGroup(group, "job-count guard")
       try action finally sc.clearJobGroup()
       TestListenerBus.drain(sc)
       jobs.get()
-    }
-    sc.addSparkListener(listener)
-    try {
-      assert(jobsOf(Snapshots.commit(df, root, "stage1", "fp1")) == 1)
-      assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 1)
-      assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 0)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("job-count guard: a commit submits only its data write; a committed stage none") {
+    val root = tmpDir("snap-jobs")
+    val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    assert(jobsOf(Snapshots.commit(df, root, "stage1", "fp1")) == 1)
+    assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 1)
+    assert(jobsOf(Resumable.stage(spark, root, "stage2", "fp1")(df)) == 0)
+  }
+
+  test("job-count guard: a RunLinkage re-submit runs only the schema read; the bytes probe is one job; no _SUCCESS") {
+    val inDir = tmpDir("runlink-jobs-in")
+    val root = tmpDir("runlink-jobs-snap")
+    Pages.synthesize(spark, 200).toDF().write.mode("overwrite").parquet(inDir)
+    val n1 = graft.RunLinkage.runFromArgs(spark, Array(inDir, root))
+    // on a fully committed root, the only job is the input's parquet schema
+    // read; the count comes from the entities manifest
+    var n2 = -1L
+    assert(jobsOf { n2 = graft.RunLinkage.runFromArgs(spark, Array(inDir, root)) } == 1)
+    val stages = Seq("prepared", "scored", "components", "entities")
+    val manifests = stages.map(st =>
+      Snapshots.readManifest(root, st, Snapshots.committedSnaps(root, st).last))
+    assert(n1 == 200 && n2 == n1 && manifests.last.rows == n1)
+    // the manifest is the only commit marker: no data dir holds _SUCCESS
+    manifests.foreach { m =>
+      val names = StateFs.listNames(Snapshots.dataPath(root, m.stage, m.snap))
+      assert(names.exists(_.startsWith("part-")) && !names.contains("_SUCCESS"),
+        s"${m.stage}: $names")
+    }
+
+    // measured-bytes probe on a relation with no memo entry: one job, no
+    // exchange (the broadcast regime runs no hot-key probe)
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, 10L * 1024 * 1024)
+    try {
+      val rel = spark.range(0, 200, 1, 4)
+        .select((col("id") % 10).cast("string").as("k"), col("id"))
+      Blocking.clearProbeMemo(spark)
+      assert(jobsOf(Blocking.saltedSelfJoin(rel, Seq("k"), "id", Nil)) == 1)
+      // memoized: the same relation probes no more
+      assert(jobsOf(Blocking.saltedSelfJoin(rel, Seq("k"), "id", Nil)) == 0)
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
 
   test("streaming ingest: micro-batch parity with batch prepare") {
