@@ -139,7 +139,6 @@ object Snapshots {
                   startNanos: Option[Long] = None): Manifest = {
     val parent = committedSnaps(root, stage).lastOption.getOrElse(-1)
     val snapDir = new HPath(stageDir(root, stage), s"snap=${parent + 1}").toString
-    StateFs.mkdirs(snapDir)
     val dataDir = new HPath(snapDir, "data").toString
     df.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")

@@ -144,14 +144,6 @@ object StateFs {
     }
   }
 
-  /** Directory-to-directory move (used by the legacy-state migration). */
-  def move(dir: String, from: String, to: String): Unit = {
-    val src = new Path(dir, from)
-    val dst = new Path(dir, to)
-    if (!fs(src).rename(src, dst))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
-  }
-
   def deleteRecursive(dir: String, name: String): Unit = {
     val p = new Path(dir, name)
     val f = fs(p)

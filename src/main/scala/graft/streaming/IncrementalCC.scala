@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{ConnectedComponents, Dedup}
 
@@ -198,118 +200,70 @@ object IncrementalCC {
   }
 
   // ------------------------- persisted state layout -------------------------
-  // Per-batch deltas `remap_delta_N` / `fresh_delta_N` (committed = both
-  // carry _SUCCESS). UNLIKE the dedup families, CC state does not rebuild by
-  // plain union: remaps are label SUBSTITUTIONS that compose in batch order,
-  // so the reader folds live deltas ascending over the last compacted
-  // assignment. Compaction every `compactEvery` batches writes the fully
-  // folded assignment as `assign_N` and publishes the `compacted_N` marker
-  // LAST (a crash before the marker leaves an unreferenced assign dir and a
-  // correct delta chain — the persistStep crash argument). Superseded
-  // deltas/assigns are GC'd at the start of the NEXT batch, never in the
-  // batch that wrote the marker (foreachBatch re-delivers a crashed commit;
-  // the step is deterministic, so a re-delivered batch overwrites its own
-  // deltas byte-compatibly).
+  // The streaming drivers persist the assignment on the shared
+  // [[PersistedDeltas]] layout with roles `remap` and `fresh` (one batch's
+  // [[Delta]]). UNLIKE the dedup families it does not fold by union: remaps
+  // are label SUBSTITUTIONS that compose in batch order, so the fold applies
+  // the parts ascending. A compaction base is the delta that takes the empty
+  // assignment to the folded one: no remap rows, `fresh` = the assignment.
 
-  private val RemapP = "remap_delta_"; private val FreshP = "fresh_delta_"
-  private val AssignP = "assign_"; private val CompactP = "compacted_"
+  private val Log = new PersistedDeltas(Seq("remap", "fresh"), { parts =>
+    Seq(parts.head.head.limit(0), parts.tail.foldLeft(parts.head(1)) { (assign, p) =>
+      applyDelta(assign, Delta(p.head, p(1), 0L, 0L))
+    })
+  })
 
-  def ccCommittedBatches(stateDir: String): Seq[Long] =
-    graft.plans.StateFs.listNames(stateDir)
-      .flatMap(n => graft.plans.StateFs.numericSuffix(n, RemapP))
-      .filter(b => graft.plans.StateFs.exists(stateDir, s"$RemapP$b/_SUCCESS") &&
-        graft.plans.StateFs.exists(stateDir, s"$FreshP$b/_SUCCESS"))
-      .distinct.sorted
+  def ccCommittedBatches(stateDir: String): Seq[Long] = Log.committedBatches(stateDir)
 
-  def ccCompactions(stateDir: String): Seq[Long] =
-    graft.plans.StateFs.listNames(stateDir)
-      .flatMap(n => graft.plans.StateFs.numericSuffix(n, CompactP)).sorted
+  def ccCompactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
   /** Assignment state before `beforeBatch`: the last compacted assignment
     * (empty when none) with every later committed delta folded in ascending
     * batch order — ≤ compactEvery−1 chained substitutions per read. */
-  def loadAssign(spark: org.apache.spark.sql.SparkSession, stateDir: String,
-                 beforeBatch: Long, stringIds: Boolean = false): DataFrame = {
-    val base = ccCompactions(stateDir).filter(_ < beforeBatch).lastOption
-    val live = ccCommittedBatches(stateDir)
-      .filter(b => b < beforeBatch && base.forall(b > _))
-    val start = base match {
-      case Some(c) => spark.read.parquet(s"$stateDir/$AssignP$c")
-      case None => emptyAssign(spark, stringIds)
-    }
-    live.foldLeft(start) { (assign, b) =>
-      applyDelta(assign, Delta(
-        spark.read.parquet(s"$stateDir/$RemapP$b"),
-        spark.read.parquet(s"$stateDir/$FreshP$b"), 0L, 0L))
-    }
+  def loadAssign(spark: SparkSession, stateDir: String,
+                 beforeBatch: Long, stringIds: Boolean = false): DataFrame =
+    Log.load(spark, stateDir, beforeBatch).map(_(1))
+      .getOrElse(emptyAssign(spark, stringIds))
+
+  private def emptyAssign(spark: SparkSession, stringIds: Boolean): DataFrame = {
+    val t = if (stringIds) StringType else LongType
+    spark.createDataFrame(new java.util.ArrayList[Row](),
+      StructType(Seq(StructField("id", t), StructField("component", t))))
   }
 
-  private def emptyAssign(spark: org.apache.spark.sql.SparkSession,
-                          stringIds: Boolean): DataFrame = {
-    val t = if (stringIds) org.apache.spark.sql.types.StringType
-            else org.apache.spark.sql.types.LongType
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", t),
-        org.apache.spark.sql.types.StructField("component", t))))
+  /** The empty (remap, fresh) prior state of a first batch. */
+  private def empties(spark: SparkSession, stringIds: Boolean): Seq[DataFrame] = {
+    val assign = emptyAssign(spark, stringIds)
+    Seq(assign.select(col("id").as("component"), col("component").as("newComp")), assign)
   }
 
-  private def gcSuperseded(stateDir: String, currentBatch: Long): Unit =
-    ccCompactions(stateDir).filter(_ < currentBatch).lastOption.foreach { base =>
-      ccCommittedBatches(stateDir).filter(_ <= base).foreach { b =>
-        graft.plans.StateFs.deleteRecursive(stateDir, s"$RemapP$b")
-        graft.plans.StateFs.deleteRecursive(stateDir, s"$FreshP$b")
-      }
-      ccCompactions(stateDir).filter(_ < base).foreach { c =>
-        graft.plans.StateFs.deleteRecursive(stateDir, s"$AssignP$c")
-        graft.plans.StateFs.deleteRecursive(stateDir, s"$CompactP$c")
-      }
-    }
-
-  /** The per-batch persisted-state body (shared by [[run]] and composed
-    * drivers — [[IncrementalLinkage.run]]'s `entityStateDir`): GC superseded
-    * state, load the assignment, fold the batch's edges, write the O(delta)
-    * remap/fresh deltas, compact on cadence. Deterministic given the same
-    * prior state, so a re-delivered batch (caller's checkpoint crashed
-    * mid-commit) overwrites its own dirs byte-compatibly. */
-  private[streaming] def persistCcStep(sp: org.apache.spark.sql.SparkSession,
-      stateDir: String, batchId: Long, edges: DataFrame,
-      stringIds: Boolean, compactEvery: Int): Unit = {
-    gcSuperseded(stateDir, batchId)
-    // pinned: the delta's endpoint lookup AND a compaction batch's folded
-    // write both read the assignment fold (base parquet + up to
-    // compactEvery-1 substitution joins) — unpersisted it would execute twice
-    val prev = Dedup.trackPersist(loadAssign(sp, stateDir, batchId, stringIds))
-    val d = delta(prev, edges)
-    d.remap.write.mode("overwrite").parquet(s"$stateDir/$RemapP$batchId")
-    d.fresh.write.mode("overwrite").parquet(s"$stateDir/$FreshP$batchId")
-    val base = ccCompactions(stateDir).filter(_ < batchId).lastOption
-    val liveN = ccCommittedBatches(stateDir)
-      .count(b => b <= batchId && base.forall(b > _))
-    if (compactEvery > 0 && liveN >= compactEvery) {
-      applyDelta(prev, d).write.mode("overwrite")
-        .parquet(s"$stateDir/$AssignP$batchId")
-      graft.plans.StateFs.publish(stateDir, s"$CompactP$batchId",
-        Array.empty[Byte])
-    }
+  /** The batch's (remap, fresh) against the prior state. The prior
+    * assignment is pinned: the delta's endpoint lookup and a compaction
+    * batch's folded write (the same plan, so it hits the cache) both read
+    * the fold of the base and up to compactEvery−1 substitutions. */
+  private def deltaFrames(prev: Seq[DataFrame], edges: DataFrame): Seq[DataFrame] = {
+    val d = delta(Dedup.trackPersist(prev(1)), edges)
+    Seq(d.remap, d.fresh)
   }
+
+  /** The per-batch persisted-state body of a composed driver
+    * ([[IncrementalLinkage.run]]'s `entityStateDir`): fold the batch's edges
+    * and commit the O(delta) remap/fresh deltas, compacting on cadence.
+    * Deterministic given the same prior state, so a re-delivered batch
+    * (caller's checkpoint crashed mid-commit) overwrites its own dirs
+    * byte-compatibly. */
+  private[streaming] def persistCcStep(sp: SparkSession, stateDir: String, batchId: Long,
+      edges: DataFrame, stringIds: Boolean, compactEvery: Int): Unit =
+    Log.persistStep(sp, stateDir, batchId, compactEvery, empties(sp, stringIds))(
+      deltaFrames(_, edges))
 
   /** Streaming driver: file-source edge stream → foreachBatch incremental
     * delta (the [[IncrementalDedup.run]] shape with the CC fold). Per-batch
     * state I/O is O(delta); a compaction batch additionally writes the
     * folded O(state) assignment. Restart resumes from the checkpoint's
     * consumed-file ledger — exactly-once per batch. */
-  def run(spark: org.apache.spark.sql.SparkSession, inDir: String,
-          stateDir: String, checkpoint: String, stringIds: Boolean = false,
-          compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingIngest.readEdges(spark, inDir, stringIds).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        persistCcStep(sp, stateDir, batchId, batch.toDF(), stringIds, compactEvery)
-        Dedup.releaseCaches(sp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  def run(spark: SparkSession, inDir: String, stateDir: String, checkpoint: String,
+          stringIds: Boolean = false, compactEvery: Int = 8): StreamingQuery =
+    Log.run(StreamingIngest.readEdges(spark, inDir, stringIds), stateDir, checkpoint,
+      compactEvery, empties(_, stringIds))((batch, prev) => deltaFrames(prev, batch))
 }

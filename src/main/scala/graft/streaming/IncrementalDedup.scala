@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Blocking, Dedup}
-import graft.plans.StateFs
 
 /** Incremental MinHash near-duplicate detection over batches of documents:
   * each batch computes band signatures for the NEW documents only and forms
@@ -22,10 +22,10 @@ import graft.plans.StateFs
   * Unlike linkage blocks (re-SCORED on every touch, needing a last-touch
   * merge), dedup state is APPEND-ONLY: documents are immutable, so a pair's
   * jaccard never changes and each unordered pair is emitted exactly once —
-  * by the batch that brings the LATER of its two documents. Persisting this
-  * state with the IncrementalLinkage delta layout is therefore strictly
-  * simpler: per batch write only (new sets, new banded, fresh pairs) deltas
-  * and reconstruct by plain union — no supersede logic needed.
+  * by the batch that brings the LATER of its two documents. The streaming
+  * drivers persist it on the shared [[PersistedDeltas]] layout: per batch
+  * only the (new sets, new banded, fresh pairs) deltas, and the state is
+  * their plain union over the latest compaction base — no supersede logic.
   *
   * Equality guarantee (IncrementalDedupSpec): after any batch split of a
   * corpus, `state.pairs` is row-identical to [[Dedup.minhashPairs]] on the
@@ -440,133 +440,26 @@ object IncrementalDedup {
       .select(pairs.columns.map(col).toIndexedSeq: _*)
 
   // ------------------------- persisted state layout -------------------------
-  // Per-batch APPEND-ONLY deltas: `sets_delta_N` / `banded_delta_N` /
-  // `pairs_delta_N` parquet dirs (committed = all three carry _SUCCESS);
-  // state before batch B = plain union of live deltas < B. Compaction every
-  // `compactEvery` batches folds all live deltas into batch B's own delta
-  // and then publishes the `compacted_B` marker (marker LAST — a crash
-  // before it leaves an oversized but CORRECT state, the IncrementalLinkage
-  // argument without its supersede logic: pairs never change, so no
-  // last-touch merge exists to get wrong). Superseded deltas are GC'd at
-  // the start of the next batch, never in the batch that wrote the marker
-  // (foreachBatch re-delivers a batch whose commit crashed).
+  // Each family's state is append-only, so it persists on the shared
+  // [[PersistedDeltas]] engine with a plain-union fold, one role per frame.
 
-  /** The MinHash layout's delta prefixes (the other families reuse the same
-    * engine with their own frame roles — see [[SimhashPrefixes]]/
-    * [[EmbedPrefixes]]). */
-  private val MinhashPrefixes = Seq("sets_delta_", "banded_delta_", "pairs_delta_")
-  private val SimhashPrefixes = Seq("banded_delta_", "pairs_delta_")
-  private val EmbedPrefixes = Seq("vecs_delta_", "banded_delta_", "pairs_delta_")
-  private val NgramPrefixes = Seq("sets_delta_", "prefix_delta_", "pairs_delta_")
+  private val Minhash = new PersistedDeltas(Seq("sets", "banded", "pairs"), PersistedDeltas.union)
+  private val Simhash = new PersistedDeltas(Seq("banded", "pairs"), PersistedDeltas.union)
+  private val Embed = new PersistedDeltas(Seq("vecs", "banded", "pairs"), PersistedDeltas.union)
+  private val Ngram = new PersistedDeltas(Seq("sets", "prefix", "pairs"), PersistedDeltas.union)
 
-  /** Committed MinHash-layout batches. The other families have their own
-    * role sets — use [[simhashCommittedBatches]]/[[embedCommittedBatches]]
-    * for state dirs written by [[simhashRun]]/[[embedRun]] (this one scans
-    * for the sets role and reads a healthy SimHash/embed dir as empty). */
-  def committedBatches(stateDir: String): Seq[Long] =
-    committedBatches(stateDir, MinhashPrefixes)
+  /** Committed batches of a MinHash state dir (one written by [[run]]). */
+  def committedBatches(stateDir: String): Seq[Long] = Minhash.committedBatches(stateDir)
 
-  def simhashCommittedBatches(stateDir: String): Seq[Long] =
-    committedBatches(stateDir, SimhashPrefixes)
+  def compactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
-  def embedCommittedBatches(stateDir: String): Seq[Long] =
-    committedBatches(stateDir, EmbedPrefixes)
-
-  def ngramCommittedBatches(stateDir: String): Seq[Long] =
-    committedBatches(stateDir, NgramPrefixes)
-
-  private def committedBatches(stateDir: String, prefixes: Seq[String]): Seq[Long] =
-    StateFs.listNames(stateDir)
-      .flatMap(n => StateFs.numericSuffix(n, prefixes.head))
-      .filter(b => prefixes.forall(p => StateFs.exists(stateDir, s"$p$b/_SUCCESS")))
-      .distinct.sorted
-
-  def compactions(stateDir: String): Seq[Long] =
-    StateFs.listNames(stateDir)
-      .flatMap(n => StateFs.numericSuffix(n, "compacted_")).sorted
-
-  /** Live plain-delta batches: everything committed after the latest
-    * compaction base (STRICTLY after — the base batch's own delta is folded
-    * into its marker-gated `cbase_` dirs, see [[persistStep]]). */
-  private def liveBatches(stateDir: String, beforeBatch: Long,
-                          prefixes: Seq[String]): Seq[Long] = {
-    val committed = committedBatches(stateDir, prefixes).filter(_ < beforeBatch)
-    compactions(stateDir).filter(_ < beforeBatch).lastOption match {
-      case Some(base) => committed.filter(_ > base)
-      case None       => committed
-    }
-  }
-
-  private def gcSuperseded(stateDir: String, currentBatch: Long,
-                           prefixes: Seq[String]): Unit = {
-    val marks = compactions(stateDir).filter(_ < currentBatch)
-    marks.lastOption.foreach { base =>
-      // delta dirs up to AND INCLUDING the base batch are folded into the
-      // base's cbase_ dirs; older cbase generations are superseded too
-      committedBatches(stateDir, prefixes).filter(_ <= base).foreach { b =>
-        prefixes.foreach(p => StateFs.deleteRecursive(stateDir, s"$p$b"))
-      }
-      marks.dropRight(1).foreach { old =>
-        prefixes.foreach(p => StateFs.deleteRecursive(stateDir, s"cbase_$p$old"))
-      }
-    }
-  }
-
-  /** One persisted-delta foreachBatch body, generic over the family's frame
-    * roles: GC superseded deltas, rebuild prior state by union of live
-    * deltas, compute this batch's delta frames, write the PLAIN deltas, and
-    * on a compaction batch write the fold (prev ∪ delta, read BACK from the
-    * just-written delta parquet — plan-truncating and recompute-free) into
-    * separate `cbase_<role>_N` dirs, publishing the `compacted_N` marker
-    * LAST. The plain delta always landing in the batch delta dirs is the
-    * crash-correctness invariant (r6 ADVICE): any reader between the delta
-    * `_SUCCESS` and the marker sees old-base + plain deltas — the correct
-    * state — where the old write-the-fold-into-the-delta-dir layout made
-    * the plain-union rebuild double every pre-batch row in that window. */
-  private def persistStep(spark: SparkSession, stateDir: String, batchId: Long,
-                          prefixes: Seq[String], compactEvery: Int,
-                          empties: => Seq[DataFrame],
-                          deltaOf: Seq[DataFrame] => Seq[DataFrame]): Unit = {
-    gcSuperseded(stateDir, batchId, prefixes)
-    val live = liveBatches(stateDir, batchId, prefixes)
-    val prev: Seq[DataFrame] =
-      loadFrames(spark, stateDir, batchId, prefixes).getOrElse(empties)
-    val d = deltaOf(prev)
-    val doCompact = compactEvery > 0 && live.size + 1 >= compactEvery
-    prefixes.zip(d).foreach { case (p, df) =>
-      df.write.mode("overwrite").parquet(s"$stateDir/$p$batchId")
-    }
-    if (doCompact) {
-      prefixes.zip(prev).foreach { case (p, pv) =>
-        pv.unionByName(spark.read.parquet(s"$stateDir/$p$batchId"))
-          .write.mode("overwrite").parquet(s"$stateDir/cbase_$p$batchId")
-      }
-      StateFs.publish(stateDir, s"compacted_$batchId", Array.empty[Byte])
-    }
-  }
-
-  /** Accumulated state before `beforeBatch`: the latest marker-gated
-    * compaction base (if any) unioned with the live plain deltas after it —
-    * None when nothing has committed yet. The ONE reader every loader and
-    * [[persistStep]] share, so the delta layout has a single read path. */
-  private def loadFrames(spark: SparkSession, stateDir: String, beforeBatch: Long,
-                         prefixes: Seq[String]): Option[Seq[DataFrame]] = {
-    val base = compactions(stateDir).filter(_ < beforeBatch).lastOption
-    val live = liveBatches(stateDir, beforeBatch, prefixes)
-    if (base.isEmpty && live.isEmpty) None
-    else Some(prefixes.map { p =>
-      (base.map(b => spark.read.parquet(s"$stateDir/cbase_$p$b")).toSeq ++
-        live.map(b => spark.read.parquet(s"$stateDir/$p$b")))
-        .reduce(_ unionByName _)
-    })
-  }
-
-  /** Accumulated state before `beforeBatch`, reconstructed by plain union of
-    * the live committed deltas (empty-state schemas when none exist). */
+  /** Accumulated state before `beforeBatch`: the latest compaction base
+    * unioned with the live committed deltas (empty-state schemas when none
+    * exist). */
   def loadState(spark: SparkSession, stateDir: String, beforeBatch: Long,
                 idCol: String, textCol: String,
                 shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): State =
-    loadFrames(spark, stateDir, beforeBatch, MinhashPrefixes) match {
+    Minhash.load(spark, stateDir, beforeBatch) match {
       case Some(Seq(sets, banded, pairs)) => State(sets, banded, pairs)
       case _ => empty(emptyDocs(spark, idCol, textCol), idCol, textCol,
         shingleN, numHashes, bands)
@@ -575,7 +468,7 @@ object IncrementalDedup {
   /** SimHash twin of [[loadState]] (banded + pairs roles only). */
   def loadSimhashState(spark: SparkSession, stateDir: String, beforeBatch: Long,
                        idCol: String, textCol: String): SimhashState =
-    loadFrames(spark, stateDir, beforeBatch, SimhashPrefixes) match {
+    Simhash.load(spark, stateDir, beforeBatch) match {
       case Some(Seq(banded, pairs)) => SimhashState(banded, pairs)
       case _ => simhashEmpty(emptyDocs(spark, idCol, textCol), idCol, textCol)
     }
@@ -584,7 +477,7 @@ object IncrementalDedup {
   def loadEmbedState(spark: SparkSession, stateDir: String, beforeBatch: Long,
                      idCol: String, vecCol: String,
                      planes: Int = 24, bands: Int = 4): EmbedState =
-    loadFrames(spark, stateDir, beforeBatch, EmbedPrefixes) match {
+    Embed.load(spark, stateDir, beforeBatch) match {
       case Some(Seq(vecs, banded, pairs)) => EmbedState(vecs, banded, pairs)
       case _ => embedEmpty(emptyVecs(spark, idCol, vecCol), idCol, vecCol,
         planes, bands)
@@ -594,7 +487,7 @@ object IncrementalDedup {
   def loadNgramState(spark: SparkSession, stateDir: String, beforeBatch: Long,
                      idCol: String, textCol: String,
                      n: Int = 3, threshold: Double = 0.5): NgramState =
-    loadFrames(spark, stateDir, beforeBatch, NgramPrefixes) match {
+    Ngram.load(spark, stateDir, beforeBatch) match {
       case Some(Seq(sets, prefix, pairs)) => NgramState(sets, prefix, pairs)
       case _ => ngramEmpty(emptyDocs(spark, idCol, textCol), idCol, textCol,
         n, threshold)
@@ -614,64 +507,39 @@ object IncrementalDedup {
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
 
   /** Streaming driver: file-source document stream → foreachBatch
-    * incremental delta (the [[IncrementalLinkage.run]] shape for dedup
-    * state). Per-batch state I/O is O(delta) + one O(state) union read;
-    * restart resumes from the checkpoint's consumed-file ledger —
-    * exactly-once per batch. */
+    * incremental delta, persisted by [[PersistedDeltas.run]]. Per-batch
+    * state I/O is O(delta) + one O(state) union read; restart resumes from
+    * the checkpoint's consumed-file ledger — exactly-once per batch. */
   def run(spark: SparkSession, inDir: String, stateDir: String,
           checkpoint: String, idCol: String = "doc_id", textCol: String = "text",
           shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
           threshold: Double = 0.7, maxBucket: Int = 1000,
-          compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingIngest.readDocs(spark, inDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        persistStep(sp, stateDir, batchId, MinhashPrefixes, compactEvery,
-          empties = {
-            val e = empty(emptyDocs(sp, idCol, textCol), idCol, textCol,
-              shingleN, numHashes, bands)
-            Seq(e.sets, e.banded, e.pairs)
-          },
-          deltaOf = { case Seq(sets, banded, pairs) =>
-            val d = delta(State(sets, banded, pairs),
-              batch.toDF().select(idCol, textCol), idCol, textCol,
-              shingleN, numHashes, bands, threshold, maxBucket)
-            Seq(d.sets, d.banded, d.pairs)
-          })
-        graft.operators.Dedup.releaseCaches(sp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+          compactEvery: Int = 8): StreamingQuery =
+    Minhash.run(StreamingIngest.readDocs(spark, inDir), stateDir, checkpoint, compactEvery,
+      sp => {
+        val e = empty(emptyDocs(sp, idCol, textCol), idCol, textCol, shingleN, numHashes, bands)
+        Seq(e.sets, e.banded, e.pairs)
+      }) { case (batch, Seq(sets, banded, pairs)) =>
+      val d = delta(State(sets, banded, pairs), batch.select(idCol, textCol), idCol, textCol,
+        shingleN, numHashes, bands, threshold, maxBucket)
+      Seq(d.sets, d.banded, d.pairs)
+    }
 
   /** SimHash streaming driver — the [[run]] shape over the two-role SimHash
     * state (signatures ride the band rows, so there is no sets frame). */
   def simhashRun(spark: SparkSession, inDir: String, stateDir: String,
                  checkpoint: String, idCol: String = "doc_id",
                  textCol: String = "text", maxHamming: Int = 3,
-                 maxBucket: Int = 1000,
-                 compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingIngest.readDocs(spark, inDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        persistStep(sp, stateDir, batchId, SimhashPrefixes, compactEvery,
-          empties = {
-            val e = simhashEmpty(emptyDocs(sp, idCol, textCol), idCol, textCol)
-            Seq(e.banded, e.pairs)
-          },
-          deltaOf = { case Seq(banded, pairs) =>
-            val d = simhashDelta(SimhashState(banded, pairs),
-              batch.toDF().select(idCol, textCol), idCol, textCol,
-              maxHamming, maxBucket)
-            Seq(d.banded, d.pairs)
-          })
-        graft.operators.Dedup.releaseCaches(sp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                 maxBucket: Int = 1000, compactEvery: Int = 8): StreamingQuery =
+    Simhash.run(StreamingIngest.readDocs(spark, inDir), stateDir, checkpoint, compactEvery,
+      sp => {
+        val e = simhashEmpty(emptyDocs(sp, idCol, textCol), idCol, textCol)
+        Seq(e.banded, e.pairs)
+      }) { case (batch, Seq(banded, pairs)) =>
+      val d = simhashDelta(SimhashState(banded, pairs), batch.select(idCol, textCol),
+        idCol, textCol, maxHamming, maxBucket)
+      Seq(d.banded, d.pairs)
+    }
 
   /** Embedding streaming driver — the [[run]] shape over (id, vector)
     * streams (vecs + banded + pairs roles). */
@@ -679,55 +547,30 @@ object IncrementalDedup {
                checkpoint: String, idCol: String = "vec_id",
                vecCol: String = "embedding", planes: Int = 24, bands: Int = 4,
                threshold: Double = 0.95, maxBucket: Int = 1000,
-               compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingIngest.readVecs(spark, inDir, idCol, vecCol).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        persistStep(sp, stateDir, batchId, EmbedPrefixes, compactEvery,
-          empties = {
-            val e = embedEmpty(emptyVecs(sp, idCol, vecCol), idCol, vecCol,
-              planes, bands)
-            Seq(e.vecs, e.banded, e.pairs)
-          },
-          deltaOf = { case Seq(vecs, banded, pairs) =>
-            val d = embedDelta(EmbedState(vecs, banded, pairs),
-              batch.toDF().select(idCol, vecCol), idCol, vecCol,
-              planes, bands, threshold, maxBucket)
-            Seq(d.vecs, d.banded, d.pairs)
-          })
-        graft.operators.Dedup.releaseCaches(sp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+               compactEvery: Int = 8): StreamingQuery =
+    Embed.run(StreamingIngest.readVecs(spark, inDir, idCol, vecCol), stateDir, checkpoint,
+      compactEvery, sp => {
+        val e = embedEmpty(emptyVecs(sp, idCol, vecCol), idCol, vecCol, planes, bands)
+        Seq(e.vecs, e.banded, e.pairs)
+      }) { case (batch, Seq(vecs, banded, pairs)) =>
+      val d = embedDelta(EmbedState(vecs, banded, pairs), batch.select(idCol, vecCol),
+        idCol, vecCol, planes, bands, threshold, maxBucket)
+      Seq(d.vecs, d.banded, d.pairs)
+    }
 
   /** PPJoin streaming driver — the [[run]] shape over the three-role n-gram
     * state (shingle sets + hash-ordered prefix rows + pairs). */
   def ngramRun(spark: SparkSession, inDir: String, stateDir: String,
                checkpoint: String, idCol: String = "doc_id",
                textCol: String = "text", n: Int = 3, threshold: Double = 0.5,
-               maxBucket: Int = 1000,
-               compactEvery: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingIngest.readDocs(spark, inDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        persistStep(sp, stateDir, batchId, NgramPrefixes, compactEvery,
-          empties = {
-            val e = ngramEmpty(emptyDocs(sp, idCol, textCol), idCol, textCol,
-              n, threshold)
-            Seq(e.sets, e.prefix, e.pairs)
-          },
-          deltaOf = { case Seq(sets, prefix, pairs) =>
-            val d = ngramDelta(NgramState(sets, prefix, pairs),
-              batch.toDF().select(idCol, textCol), idCol, textCol,
-              n, threshold, maxBucket)
-            Seq(d.sets, d.prefix, d.pairs)
-          })
-        graft.operators.Dedup.releaseCaches(sp)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+               maxBucket: Int = 1000, compactEvery: Int = 8): StreamingQuery =
+    Ngram.run(StreamingIngest.readDocs(spark, inDir), stateDir, checkpoint, compactEvery,
+      sp => {
+        val e = ngramEmpty(emptyDocs(sp, idCol, textCol), idCol, textCol, n, threshold)
+        Seq(e.sets, e.prefix, e.pairs)
+      }) { case (batch, Seq(sets, prefix, pairs)) =>
+      val d = ngramDelta(NgramState(sets, prefix, pairs), batch.select(idCol, textCol),
+        idCol, textCol, n, threshold, maxBucket)
+      Seq(d.sets, d.prefix, d.pairs)
+    }
 }

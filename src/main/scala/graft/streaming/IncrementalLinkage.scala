@@ -1,12 +1,10 @@
 package graft.streaming
 
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Linkage, Scoring}
-import graft.plans.StateFs
+import graft.operators.{Dedup, Linkage, Scoring}
 
 /** Incremental linkage over a stream of page micro-batches: each batch
   * re-pairs and re-scores ONLY the blocks it touches, carrying every other
@@ -20,24 +18,14 @@ import graft.plans.StateFs
   * redundant but bounded (the scorer is linear in pairs) and it keeps the
   * state model trivial: "every block scored as of its last touch".
   *
-  * State I/O is LSM-shaped so the per-batch WRITE is bounded too (round-2
-  * rewrote the full accumulated state every batch — O(corpus) I/O, and old
-  * versions were never deleted):
-  *  - per batch N the driver writes only the DELTAS: `prepared_delta_N`
-  *    (the batch's prepared rows), `scored_delta_N` (pairs of touched
-  *    blocks), `changed_N` (touched block keys — tiny);
-  *  - state reconstruction is a last-touch merge: a block's pairs come from
-  *    the latest delta that touched it ([[loadScoredState]]);
-  *  - every `compactEvery` batches the full merged state is written AS that
-  *    batch's delta (with `changed` = every known block) and a `compacted_N`
-  *    marker commits it (tmp + atomic rename, the Snapshots convention);
-  *  - superseded deltas are garbage-collected at the START of a later batch,
-  *    never in the batch that wrote the compaction: foreachBatch re-delivers
-  *    a crashed batch N, and recomputing N's delta needs the pre-N state —
-  *    GC only touches batches older than a compaction that some COMMITTED
-  *    later batch has already observed, so a re-run always finds its inputs.
-  * Storage is ≤ 2× state between compactions; read-side merge spans at most
-  * `compactEvery` deltas.
+  * The streaming driver persists the state on the shared
+  * [[PersistedDeltas]] layout, so the per-batch WRITE is O(delta) too. Its
+  * roles are `prepared` (the batch's prepared rows), `scored` (the touched
+  * blocks' re-scored pairs) and `changed` (the touched block keys — tiny).
+  * Prepared rows are append-only and fold by union; scored state folds by
+  * last touch: a block's pairs come from the latest part whose `changed`
+  * holds it ([[loadScoredState]]). A compaction base is that fold written
+  * out, with `changed` = every known block.
   */
 object IncrementalLinkage {
 
@@ -96,126 +84,38 @@ object IncrementalLinkage {
 
   // ----------------------------- state layout ------------------------------
 
-  /** `name` minus `prefix` iff the remainder is a well-formed batch id.
-    * Anything else — in particular a `compacted_N.tmp` leftover from a crash
-    * between the marker write and the atomic rename — is NOT state and must be
-    * ignored, never parsed (a `.toLong` crash here would permanently block
-    * every restart, defeating the tmp+rename crash-safety it implements). */
-  private def numericSuffix(name: String, prefix: String): Option[Long] =
-    StateFs.numericSuffix(name, prefix) // shared canonical parse (StateFs)
+  private val Log = new PersistedDeltas(Seq("prepared", "scored", "changed"), { parts =>
+    def tagged(role: Int) = parts.zipWithIndex
+      .map { case (p, i) => p(role).withColumn("part", lit(i)) }.reduce(_ unionByName _)
+    val lastTouch = tagged(2).groupBy("block_key").agg(max(col("part")).as("part"))
+    Seq(parts.map(_.head).reduce(_ unionByName _),
+      tagged(1).join(lastTouch, Seq("block_key", "part")).drop("part"),
+      parts.map(_(2)).reduce(_ unionByName _).distinct())
+  })
 
-  /** Batch ids with a fully committed delta (all three dirs have _SUCCESS),
-    * ascending. */
-  def committedBatches(stateDir: String): Seq[Long] = {
-    StateFs.listNames(stateDir)
-      .flatMap(n => numericSuffix(n, "changed_"))
-      .filter { b =>
-        Seq(s"changed_$b", s"prepared_delta_$b", s"scored_delta_$b")
-          .forall(n => StateFs.exists(stateDir, s"$n/_SUCCESS"))
-      }.sorted
-  }
+  /** Batch ids with a fully committed delta, ascending. */
+  def committedBatches(stateDir: String): Seq[Long] = Log.committedBatches(stateDir)
 
   /** Committed compaction markers, ascending. */
-  def compactions(stateDir: String): Seq[Long] =
-    StateFs.listNames(stateDir)
-      .flatMap(n => numericSuffix(n, "compacted_")).sorted
-
-  /** The delta batches that constitute the state before `beforeBatch`:
-    * everything from the latest compaction point forward. */
-  private def liveBatches(stateDir: String, beforeBatch: Long): Seq[Long] = {
-    val committed = committedBatches(stateDir).filter(_ < beforeBatch)
-    compactions(stateDir).filter(_ < beforeBatch).lastOption match {
-      case Some(c) => committed.filter(_ >= c)
-      case None    => committed
-    }
-  }
+  def compactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
   /** Accumulated prepared state before `beforeBatch`: prepared rows are
     * append-only (a page belongs to exactly one batch), so the state is the
-    * plain union of live deltas. */
+    * plain union of the base and the live deltas. */
   def loadPreparedState(spark: SparkSession, stateDir: String,
                         beforeBatch: Long = Long.MaxValue,
-                        cfg: Linkage.Config = Linkage.Config()): DataFrame = {
-    val bs = liveBatches(stateDir, beforeBatch)
-    if (bs.isEmpty) Linkage.prepare(emptyPages(spark), cfg)
-    else bs.map(b => spark.read.parquet(s"$stateDir/prepared_delta_$b"))
-      .reduce(_ unionByName _)
-  }
+                        cfg: Linkage.Config = Linkage.Config()): DataFrame =
+    Log.load(spark, stateDir, beforeBatch).map(_.head)
+      .getOrElse(Linkage.prepare(emptyPages(spark), cfg))
 
   /** Accumulated scored state before `beforeBatch`: last-touch merge — a
-    * block's pairs come from the latest delta whose `changed` set contains
+    * block's pairs come from the latest part whose `changed` set contains
     * the block (later touches fully re-score a block, superseding earlier
-    * pairs). One small join against the per-block max-batch map; no
+    * pairs). One small join against the per-block max-part map; no
     * full-state rewrite ever happened to produce it. */
   def loadScoredState(spark: SparkSession, stateDir: String,
-                      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val bs = liveBatches(stateDir, beforeBatch)
-    if (bs.isEmpty) return emptyScored(spark)
-    val pairs = bs.map(b => spark.read.parquet(s"$stateDir/scored_delta_$b")
-      .withColumn("batch", lit(b))).reduce(_ unionByName _)
-    val changed = bs.map(b => spark.read.parquet(s"$stateDir/changed_$b")
-      .withColumn("batch", lit(b))).reduce(_ unionByName _)
-    val lastTouch = changed.groupBy("block_key").agg(max(col("batch")).as("batch"))
-    pairs.join(lastTouch, Seq("block_key", "batch")).drop("batch")
-  }
-
-  /** GC deltas made redundant by a compaction that a COMMITTED later batch
-    * has observed (only call at the start of batch N: batches < N are
-    * checkpoint-committed and will never re-run, so nothing deleted here can
-    * be needed to recompute a redelivered batch). */
-  private def gcSuperseded(stateDir: String, currentBatch: Long): Unit = {
-    compactions(stateDir).filter(_ < currentBatch).lastOption.foreach { c =>
-      committedBatches(stateDir).filter(_ < c).foreach { b =>
-        Seq(s"changed_$b", s"prepared_delta_$b", s"scored_delta_$b")
-          .foreach(n => StateFs.deleteRecursive(stateDir, n))
-      }
-    }
-  }
-
-  /** One-time migration of round-2-layout state (full-rewrite `prepared_N` /
-    * `scored_N` dirs, latest complete pair = the state) into the delta
-    * layout: that pair becomes a compaction base at its batch id, `changed`
-    * covering every block it knows, so `loadScoredState`'s last-touch merge
-    * resolves to it exactly as round 2's `loadLatest` did. Older legacy
-    * versions were superseded full rewrites — deleted. No-op when delta
-    * state already exists (a migrated dir has no legacy names left). Without
-    * this, a round-2 deployment restarting on current code would silently
-    * load EMPTY state while its checkpoint blocks re-ingesting the pages
-    * that produced the old state. */
-  private[streaming] def migrateLegacyState(spark: SparkSession, stateDir: String): Unit = {
-    val names = StateFs.listNames(stateDir)
-    def complete(prefix: String) = names
-      .flatMap(n => numericSuffix(n, prefix)) // "prepared_delta_7" has a
-      .filter(b => StateFs.exists(stateDir, s"$prefix$b/_SUCCESS"))
-      .toSet                                  // non-numeric "prepared_" suffix
-    val legacyP = complete("prepared_")
-    val legacyS = complete("scored_")
-    val deltaP  = complete("prepared_delta_")
-    val deltaS  = complete("scored_delta_")
-    // needs migration: some half is still in the legacy layout, both halves
-    // exist in SOME layout (resumes a crash mid-migration), not yet marked
-    val marked = compactions(stateDir).toSet
-    val candidates = (legacyP ++ legacyS).filter(b =>
-      (legacyP(b) || deltaP(b)) && (legacyS(b) || deltaS(b)) && !marked(b))
-    if (candidates.isEmpty) return
-    val base = candidates.max
-    // step order is crash-resumable: each step is idempotent (overwrite) or
-    // skipped when its source already moved; a crash at any point leaves a
-    // state this function re-enters and finishes on the next run
-    val prepSrc = if (deltaP(base)) s"prepared_delta_$base" else s"prepared_$base"
-    spark.read.parquet(s"$stateDir/$prepSrc").select("block_key").distinct()
-      .write.mode("overwrite").parquet(s"$stateDir/changed_$base")
-    if (!deltaS(base))
-      StateFs.move(stateDir, s"scored_$base", s"scored_delta_$base")
-    if (!deltaP(base))
-      StateFs.move(stateDir, s"prepared_$base", s"prepared_delta_$base")
-    StateFs.publish(stateDir, s"compacted_$base", Array.empty[Byte])
-    // older legacy versions were superseded full rewrites
-    ((legacyP ++ legacyS) - base).foreach { b =>
-      StateFs.deleteRecursive(stateDir, s"prepared_$b")
-      StateFs.deleteRecursive(stateDir, s"scored_$b")
-    }
-  }
+                      beforeBatch: Long = Long.MaxValue): DataFrame =
+    Log.load(spark, stateDir, beforeBatch).map(_(1)).getOrElse(emptyScored(spark))
 
   /** Streaming driver: file-source pages stream → foreachBatch incremental
     * delta; state is per-batch delta parquet + periodic compaction (see
@@ -234,67 +134,29 @@ object IncrementalLinkage {
   def run(spark: SparkSession, inDir: String, stateDir: String,
           checkpoint: String, cfg: Linkage.Config = Linkage.Config(),
           compactEvery: Int = 8,
-          entityStateDir: Option[String] = None): StreamingQuery = {
-    migrateLegacyState(spark, stateDir)
-    StreamingIngest.readPages(spark, inDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        gcSuperseded(stateDir, batchId)
-        val prevP = loadPreparedState(sp, stateDir, batchId, cfg)
-        val d = delta(prevP, batch.toDF(), cfg)
-        // the batch's prepared rows feed all three writes — cache for the
-        // scope of this micro-batch (cache matching is by analyzed plan, so
-        // the changed/rescored subtrees hit it too)
-        d.bPrep.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-        val live = liveBatches(stateDir, batchId)
-        // count deltas SINCE the last compaction base (the base itself is a
-        // live batch but not a delta — counting it would compact every batch)
-        val base = compactions(stateDir).filter(_ < batchId).lastOption
-        val doCompact = compactEvery > 0 &&
-          live.count(b => !base.contains(b)) + 1 >= compactEvery
-        if (!doCompact) {
-          d.bPrep.write.mode("overwrite").parquet(s"$stateDir/prepared_delta_$batchId")
-          d.rescored.write.mode("overwrite").parquet(s"$stateDir/scored_delta_$batchId")
-          d.changed.write.mode("overwrite").parquet(s"$stateDir/changed_$batchId")
-        } else {
-          // compaction batch: this delta IS the full state; `changed` covers
-          // every known block so the last-touch merge resolves to it alone
-          val prevS = loadScoredState(sp, stateDir, batchId)
-          val kept = prevS.join(d.changed, Seq("block_key"), "left_anti")
-          prevP.unionByName(d.bPrep).write.mode("overwrite")
-            .parquet(s"$stateDir/prepared_delta_$batchId")
-          kept.unionByName(d.rescored).write.mode("overwrite")
-            .parquet(s"$stateDir/scored_delta_$batchId")
-          val allChanged = live.map(b => sp.read.parquet(s"$stateDir/changed_$b"))
-            .foldLeft(d.changed)(_ unionByName _).distinct()
-          allChanged.write.mode("overwrite").parquet(s"$stateDir/changed_$batchId")
-          // marker LAST, atomically — a crash before this line leaves an
-          // oversized but correct delta; after it, older deltas are redundant
-          StateFs.publish(stateDir, s"compacted_$batchId", Array.empty[Byte])
-        }
-        entityStateDir.foreach { ccDir =>
-          // the CC fold sees only this batch's re-scored matches: old
-          // matches of untouched blocks are already in the assignment, and
-          // a touched block's re-emitted matches are idempotent no-ops.
-          // Read the edges back from the scored delta JUST written — the
-          // fold evaluates its edge input several times, and re-running the
-          // touched-block re-scoring per evaluation would multiply the hot
-          // path. (On a compaction batch the dir holds the merged state, so
-          // the fold sees already-folded old matches too — idempotent
-          // no-ops, costing one larger contraction on those batches only.)
-          IncrementalCC.persistCcStep(sp, ccDir, batchId,
-            sp.read.parquet(s"$stateDir/scored_delta_$batchId")
-              .filter(col("is_match"))
-              .select(col("url_a").as("src"), col("url_b").as("dst")),
-            stringIds = true, compactEvery)
-          graft.operators.Dedup.releaseCaches(sp)
-        }
-        d.bPrep.unpersist(false)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+          entityStateDir: Option[String] = None): StreamingQuery =
+    Log.run(StreamingIngest.readPages(spark, inDir), stateDir, checkpoint, compactEvery,
+      sp => {
+        val prepared = Linkage.prepare(emptyPages(sp), cfg)
+        Seq(prepared, emptyScored(sp), prepared.select("block_key"))
+      },
+      andThen = (sp, batchId) => entityStateDir.foreach { ccDir =>
+        // the CC fold sees only this batch's re-scored matches: old matches
+        // of untouched blocks are already in the assignment, and a touched
+        // block's re-emitted matches are idempotent no-ops. The edges are
+        // read back from the plain scored delta JUST written — the fold
+        // evaluates its edge input several times, and re-running the
+        // touched-block re-scoring per evaluation would multiply the hot path.
+        IncrementalCC.persistCcStep(sp, ccDir, batchId,
+          Log.readDelta(sp, stateDir, batchId)(1)
+            .filter(col("is_match"))
+            .select(col("url_a").as("src"), col("url_b").as("dst")),
+          stringIds = true, compactEvery)
+      }) { case (batch, Seq(prevPrepared, _, _)) =>
+      val d = delta(prevPrepared, batch, cfg)
+      // the batch's prepared rows feed all three writes — cached for the
+      // micro-batch (cache matching is by analyzed plan, so the
+      // changed/rescored subtrees hit it too)
+      Seq(Dedup.trackPersist(d.bPrep), d.rescored, d.changed)
+    }
 }

@@ -250,7 +250,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(nState2.sets.count() ==
       Dedup.shingleSets(all, "doc_id", "text", 3).filter(col("nsh") > 0).count(),
       "ngram sets state incomplete")
-    assert(IncrementalDedup.ngramCommittedBatches(nState).nonEmpty)
     assert(IncrementalDedup.compactions(nState).nonEmpty, "no ngram compaction")
     nInc.unpersist(); nFull.unpersist()
     Dedup.releaseCaches(spark)

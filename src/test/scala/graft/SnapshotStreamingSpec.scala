@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -456,10 +457,10 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     }
     assert(IncrementalLinkage.compactions(stateDir) == Seq(1L),
       s"expected one compaction: ${IncrementalLinkage.compactions(stateDir)}")
-    // batch 0's deltas were superseded by compaction 1 and GC'd by batch 2
+    // batches 0 and 1 were folded into compaction base 1 and GC'd by batch 2
     assert(!new java.io.File(s"$stateDir/scored_delta_0").exists(),
       "superseded delta not garbage-collected")
-    assert(IncrementalLinkage.committedBatches(stateDir) == Seq(1L, 2L))
+    assert(IncrementalLinkage.committedBatches(stateDir) == Seq(2L))
 
     // state after compaction + GC still equals the full recompute
     val inc = IncrementalLinkage.loadScoredState(spark, stateDir)
@@ -471,43 +472,148 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     all.unpersist()
   }
 
-  test("incremental linkage: round-2 legacy state migrates; crash-leftover .tmp markers ignored") {
+  test("commit boundaries: linkage, CC and MinHash dedup state at every crash point == full recompute") {
+    import graft.operators.{ConnectedComponents, Dedup}
+    import graft.streaming.{IncrementalCC, IncrementalDedup, IncrementalLinkage}
+    /** A streaming driver over three input batches: `run` consumes what the
+      * input dir holds, `load` reads its state frames, `full` recomputes
+      * them over some inputs, `partial` names a role dir of batch 2. */
+    case class Driver(name: String, inputs: Seq[DataFrame],
+                      run: (String, String, String) => Unit,
+                      compactions: String => Seq[Long],
+                      load: String => Seq[DataFrame],
+                      full: DataFrame => Seq[DataFrame], partial: String)
+    val scoredCols = Seq("url_a", "url_b", "score", "is_match").map(col)
+    val pages = Pages.synthesize(spark, 400).toDF().persist()
+    val rng = new scala.util.Random(7)
+    val edges = Seq.fill(180)((rng.nextLong(120), rng.nextLong(120))).grouped(60)
+      .map(_.toDF("src", "dst")).toSeq
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").persist()
+    val drivers = Seq(
+      Driver("linkage",
+        (0 to 2).map(r => pages.filter(pmod(xxhash64(col("url")), lit(3)) === r)),
+        (in, st, ck) => IncrementalLinkage.run(spark, in, st, ck, compactEvery = 2)
+          .awaitTermination(),
+        IncrementalLinkage.compactions,
+        st => Seq(IncrementalLinkage.loadPreparedState(spark, st).select("url", "block_key"),
+          IncrementalLinkage.loadScoredState(spark, st).select(scoredCols: _*)),
+        all => {
+          val p = Linkage.prepare(all)
+          Seq(p.select("url", "block_key"), Linkage.scored(p).select(scoredCols: _*))
+        },
+        "scored_delta_2"),
+      Driver("cc", edges,
+        (in, st, ck) => IncrementalCC.run(spark, in, st, ck, compactEvery = 2)
+          .awaitTermination(),
+        IncrementalCC.ccCompactions,
+        st => Seq(IncrementalCC.loadAssign(spark, st, Long.MaxValue).select("id", "component")),
+        all => Seq(ConnectedComponents.run(all).select("id", "component")),
+        "fresh_delta_2"),
+      Driver("minhash",
+        (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r)),
+        (in, st, ck) => IncrementalDedup.run(spark, in, st, ck, threshold = 0.5,
+          compactEvery = 2).awaitTermination(),
+        IncrementalDedup.compactions,
+        st => {
+          val s = IncrementalDedup.loadState(spark, st, Long.MaxValue, "doc_id", "text")
+          Seq(s.sets.select("id"), s.pairs)
+        },
+        all => Seq(Dedup.shingleSets(all, "doc_id", "text", 3).select("id"),
+          Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5)),
+        "pairs_delta_2"))
+
+    drivers.foreach { d =>
+      val root = tmpDir(s"boundary-${d.name}")
+      val (in, state, ckpt) = (s"$root/in", s"$root/state", s"$root/ckpt")
+      def batch(k: Int): Unit = {
+        d.inputs(k).write.mode("append").parquet(in)
+        d.run(in, state, ckpt)
+      }
+      // the state loaded now equals the full recompute over the first k
+      // inputs: same rows, none twice
+      def equalsFirst(k: Int, at: String): Unit =
+        d.load(state).zip(d.full(d.inputs.take(k).reduce(_ unionByName _))).foreach {
+          case (got, want) =>
+            val (g, w) = (got.count(), want.count())
+            assert(g == w && got.except(want).isEmpty && want.except(got).isEmpty,
+              s"${d.name} $at: $g rows, the full recompute has $w")
+        }
+
+      batch(0); batch(1) // compactEvery = 2: batch 1 writes base 1
+      assert(d.compactions(state) == Seq(1L), d.name)
+      equalsFirst(2, "after the marker, before GC")
+      val marker = Paths.get(state, "compacted_1")
+      Files.delete(marker)
+      equalsFirst(2, "after the data writes, before the marker")
+      Files.write(marker, Array.empty[Byte])
+      // a crash between a marker's write and its rename leaves a .tmp that
+      // is never parsed as a batch
+      Files.write(Paths.get(state, "compacted_99.tmp"), Array.empty[Byte])
+      assert(d.compactions(state) == Seq(1L), d.name)
+
+      batch(2) // GCs the deltas folded into base 1
+      equalsFirst(3, "after GC")
+      Files.delete(Paths.get(state, d.partial, "_SUCCESS"))
+      equalsFirst(2, s"with ${d.partial} lacking _SUCCESS")
+    }
+    pages.unpersist(); docs.unpersist()
+    graft.operators.Dedup.releaseCaches(spark)
+  }
+
+  test("incremental linkage: round-2 full-rewrite state dirs fail at run, naming the state dir") {
     import graft.streaming.IncrementalLinkage
-    val inDir = tmpDir("inc-in-m")
-    val stateDir = tmpDir("inc-state-m")
-    val ckpt = tmpDir("inc-ckpt-m")
-    val all = Pages.synthesize(spark, 400).toDF().persist()
-    val a = all.filter(Pages.goldEntityId(col("url")) < 80)
-    val b = all.filter(Pages.goldEntityId(col("url")) >= 80)
+    val stateDir = tmpDir("inc-state-r2")
+    Seq((1, "a")).toDF("x", "y").write.parquet(s"$stateDir/prepared_0")
+    Seq((1, "a")).toDF("x", "y").write.parquet(s"$stateDir/scored_0")
+    val e = intercept[IllegalStateException](
+      IncrementalLinkage.run(spark, tmpDir("inc-in-r2"), stateDir, tmpDir("inc-ckpt-r2")))
+    assert(e.getMessage.contains(stateDir) && e.getMessage.contains("prepared_0"),
+      e.getMessage)
+  }
 
-    // batch 0 under the CURRENT layout, then hand-convert its state to the
-    // round-2 layout (full-rewrite prepared_N/scored_N, no changed/marker) —
-    // exactly what a round-2 deployment's stateDir looks like mid-upgrade
-    a.write.mode("append").parquet(inDir)
-    IncrementalLinkage.run(spark, inDir, stateDir, ckpt).awaitTermination()
-    Files.move(Paths.get(stateDir, "prepared_delta_0"), Paths.get(stateDir, "prepared_0"))
-    Files.move(Paths.get(stateDir, "scored_delta_0"), Paths.get(stateDir, "scored_0"))
-    val changed0 = Paths.get(stateDir, "changed_0")
-    Files.walk(changed0).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
-    // crash leftover between Files.write and the atomic rename: must be
-    // ignored by compactions(), never parsed as a batch id
-    Files.write(Paths.get(stateDir, "compacted_99.tmp"), Array.empty[Byte])
-    assert(IncrementalLinkage.compactions(stateDir).isEmpty)
-
-    // batch 1 on current code: migration adopts the legacy state as a
-    // compaction base, then the delta merge carries it forward
-    b.write.mode("append").parquet(inDir)
-    IncrementalLinkage.run(spark, inDir, stateDir, ckpt).awaitTermination()
-    assert(IncrementalLinkage.compactions(stateDir) == Seq(0L),
-      s"legacy base not adopted: ${IncrementalLinkage.compactions(stateDir)}")
-    assert(IncrementalLinkage.committedBatches(stateDir) == Seq(0L, 1L))
-    val inc = IncrementalLinkage.loadScoredState(spark, stateDir)
-      .select("url_a", "url_b", "score", "is_match")
-    val full = Linkage.scored(Linkage.prepare(all))
-      .select("url_a", "url_b", "score", "is_match")
-    assert(inc.except(full).count() == 0 && full.except(inc).count() == 0,
-      "state after legacy migration diverged from full recompute")
+  test("a compaction marker without its cbase_ dirs fails to load; a later batch neither loads nor GCs") {
+    import graft.streaming.{IncrementalCC, IncrementalLinkage}
+    val inDir = tmpDir("old-in")
+    val stateDir = tmpDir("old-state")
+    val ccDir = tmpDir("old-cc")
+    val ckpt = tmpDir("old-ckpt")
+    val all = Pages.synthesize(spark, 300).toDF().persist()
+    val parts = (0 to 2).map(r => all.filter(pmod(xxhash64(col("url")), lit(3)) === r))
+    def batch(k: Int): Unit = {
+      parts(k).write.mode("append").parquet(inDir)
+      IncrementalLinkage.run(spark, inDir, stateDir, ckpt, compactEvery = 2,
+        entityStateDir = Some(ccDir)).awaitTermination()
+    }
+    batch(0); batch(1)
+    // the earlier linkage and CC layouts published compacted_1 over state
+    // kept elsewhere (the linkage delta dirs, an assign_1 dir): no cbase_ dirs
+    Seq(stateDir, ccDir).foreach { dir =>
+      val bases = new java.io.File(dir).listFiles().filter(_.getName.startsWith("cbase_"))
+      assert(bases.nonEmpty, dir)
+      bases.foreach(b => Files.walk(b.toPath).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p)))
+    }
+    Seq[() => Any](() => IncrementalLinkage.loadPreparedState(spark, stateDir),
+        () => IncrementalLinkage.loadScoredState(spark, stateDir),
+        () => IncrementalCC.loadAssign(spark, ccDir, Long.MaxValue, stringIds = true))
+      .foreach { load =>
+        val e = intercept[IllegalStateException](load())
+        assert(e.getMessage.contains("compacted_1"), e.getMessage)
+      }
+    intercept[Exception](batch(2))
+    assert(IncrementalLinkage.committedBatches(stateDir) == Seq(0L, 1L),
+      "a batch ran GC over a layout it cannot read")
     all.unpersist()
+  }
+
+  test("snapshot commit of a zero-row frame: manifest rows = 0, schema kept, resumes empty") {
+    val root = tmpDir("snap-empty")
+    val df = Seq((1L, "a")).toDF("id", "v").limit(0)
+    val snap = Snapshots.commit(df, root, "empty", "fp")
+    val m = Snapshots.readManifest(root, "empty", snap)
+    assert(m.rows == 0 && m.files.isEmpty && m.schema.contains(df.schema), m.toString)
+    val back = Resumable.stage(spark, root, "empty", "fp")(fail("recomputed a committed stage"))
+    assert(back.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
+    assert(back.count() == 0)
   }
 }
