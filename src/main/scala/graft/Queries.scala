@@ -479,9 +479,10 @@ object Queries {
       val docs = t(dir, "documents")
       val a = docs.filter(col("doc_id") % 3 =!= 0)
       val b = docs.filter(col("doc_id") % 3 === 0)
-      val st0 = graft.streaming.IncrementalDedup.empty(docs, "doc_id", "text")
-      val s1 = graft.streaming.IncrementalDedup.step(st0, a, "doc_id", "text", threshold = 0.5)
-      val s2 = graft.streaming.IncrementalDedup.step(s1.state, b, "doc_id", "text", threshold = 0.5)
+      val fam = graft.streaming.IncrementalDedup.MinHash(threshold = 0.5)
+      val st0 = graft.streaming.IncrementalDedup.empty(fam, docs)
+      val s1 = graft.streaming.IncrementalDedup.step(fam, st0, a)
+      val s2 = graft.streaming.IncrementalDedup.step(fam, s1.state, b)
       s2.state.pairs.orderBy("id_a", "id_b")
     }),
     "q_incremental_simhash" -> ((s, dir) => {
@@ -492,9 +493,10 @@ object Queries {
       val docs = t(dir, "documents")
       val a = docs.filter(col("doc_id") % 3 =!= 0)
       val b = docs.filter(col("doc_id") % 3 === 0)
-      val st0 = graft.streaming.IncrementalDedup.simhashEmpty(docs, "doc_id", "text")
-      val s1 = graft.streaming.IncrementalDedup.simhashStep(st0, a, "doc_id", "text")
-      val s2 = graft.streaming.IncrementalDedup.simhashStep(s1.state, b, "doc_id", "text")
+      val fam = graft.streaming.IncrementalDedup.SimHash()
+      val st0 = graft.streaming.IncrementalDedup.empty(fam, docs)
+      val s1 = graft.streaming.IncrementalDedup.step(fam, st0, a)
+      val s2 = graft.streaming.IncrementalDedup.step(fam, s1.state, b)
       s2.state.pairs.orderBy("id_a", "id_b")
     }),
     "q_incremental_cc" -> ((s, dir) => {
@@ -531,9 +533,10 @@ object Queries {
       val docs = t(dir, "documents")
       val a = docs.filter(col("doc_id") % 3 =!= 0)
       val b = docs.filter(col("doc_id") % 3 === 0)
-      val st0 = graft.streaming.IncrementalDedup.ngramEmpty(docs, "doc_id", "text", threshold = 0.8)
-      val s1 = graft.streaming.IncrementalDedup.ngramStep(st0, a, "doc_id", "text", threshold = 0.8)
-      val s2 = graft.streaming.IncrementalDedup.ngramStep(s1.state, b, "doc_id", "text", threshold = 0.8)
+      val fam = graft.streaming.IncrementalDedup.Ngram(threshold = 0.8)
+      val st0 = graft.streaming.IncrementalDedup.empty(fam, docs)
+      val s1 = graft.streaming.IncrementalDedup.step(fam, st0, a)
+      val s2 = graft.streaming.IncrementalDedup.step(fam, s1.state, b)
       s2.state.pairs.orderBy("id_a", "id_b")
     }),
     "q_incremental_embed" -> ((s, dir) => {
@@ -547,9 +550,10 @@ object Queries {
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
       val a = vecs.filter(col("vec_id") % 3 =!= 0)
       val b = vecs.filter(col("vec_id") % 3 === 0)
-      val st0 = graft.streaming.IncrementalDedup.embedEmpty(vecs, "vec_id", "embedding")
-      val s1 = graft.streaming.IncrementalDedup.embedStep(st0, a, "vec_id", "embedding", threshold = 0.99)
-      val s2 = graft.streaming.IncrementalDedup.embedStep(s1.state, b, "vec_id", "embedding", threshold = 0.99)
+      val fam = graft.streaming.IncrementalDedup.Embed(threshold = 0.99)
+      val st0 = graft.streaming.IncrementalDedup.empty(fam, vecs)
+      val s1 = graft.streaming.IncrementalDedup.step(fam, st0, a)
+      val s2 = graft.streaming.IncrementalDedup.step(fam, s1.state, b)
       s2.state.pairs.withColumn("cos", round(col("cos"), 2))
         .orderBy("id_a", "id_b")
     }),

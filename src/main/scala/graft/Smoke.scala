@@ -148,21 +148,19 @@ object Smoke {
       .select(col("doc_id"), col("text"))
     val dA = dDocs.filter(col("doc_id") % 2 === 0)
     val dB = dDocs.filter(col("doc_id") % 2 === 1)
-    val ds1 = IncrementalDedup.step(
-      IncrementalDedup.empty(dDocs, "doc_id", "text"), dA, "doc_id", "text",
-      threshold = 0.5)
-    val ds2 = IncrementalDedup.step(ds1.state, dB, "doc_id", "text", threshold = 0.5)
+    val mh = IncrementalDedup.MinHash(threshold = 0.5)
+    val ds1 = IncrementalDedup.step(mh, IncrementalDedup.empty(mh, dDocs), dA)
+    val ds2 = IncrementalDedup.step(mh, ds1.state, dB)
     println(s"[smoke] incremental_dedup: batch2 touched_buckets=${ds2.touchedBuckets} " +
       s"pairs_added=${ds2.pairsAdded} total_pairs=${ds2.state.pairs.count()}")
-    val ss1 = IncrementalDedup.simhashStep(
-      IncrementalDedup.simhashEmpty(dDocs, "doc_id", "text"), dA, "doc_id", "text")
-    val ss2 = IncrementalDedup.simhashStep(ss1.state, dB, "doc_id", "text")
+    val sh = IncrementalDedup.SimHash()
+    val ss1 = IncrementalDedup.step(sh, IncrementalDedup.empty(sh, dDocs), dA)
+    val ss2 = IncrementalDedup.step(sh, ss1.state, dB)
     println(s"[smoke] incremental_simhash: batch2 pairs_added=${ss2.pairsAdded} " +
       s"total_pairs=${ss2.state.pairs.count()}")
-    val ns1 = IncrementalDedup.ngramStep(
-      IncrementalDedup.ngramEmpty(dDocs, "doc_id", "text"), dA, "doc_id", "text",
-      threshold = 0.5)
-    val ns2 = IncrementalDedup.ngramStep(ns1.state, dB, "doc_id", "text", threshold = 0.5)
+    val ng = IncrementalDedup.Ngram(threshold = 0.5)
+    val ns1 = IncrementalDedup.step(ng, IncrementalDedup.empty(ng, dDocs), dA)
+    val ns2 = IncrementalDedup.step(ng, ns1.state, dB)
     println(s"[smoke] incremental_ngram: batch2 touched_shingles=${ns2.touchedBuckets} " +
       s"pairs_added=${ns2.pairsAdded} total_pairs=${ns2.state.pairs.count()}")
     // Incremental CC maintains the cluster assignment from the pair deltas:
@@ -195,11 +193,10 @@ object Smoke {
       .select(col("vec_id"), col("embedding"))
     val eAll = eVecs.union(eVecs.filter(col("vec_id") < 20)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-    val es1 = IncrementalDedup.embedStep(
-      IncrementalDedup.embedEmpty(eAll, "vec_id", "embedding"),
-      eAll.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", threshold = 0.99)
-    val es2 = IncrementalDedup.embedStep(es1.state,
-      eAll.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", threshold = 0.99)
+    val em = IncrementalDedup.Embed(threshold = 0.99)
+    val es1 = IncrementalDedup.step(em, IncrementalDedup.empty(em, eAll),
+      eAll.filter(col("vec_id") % 3 =!= 0))
+    val es2 = IncrementalDedup.step(em, es1.state, eAll.filter(col("vec_id") % 3 === 0))
     println(s"[smoke] incremental_embed: batch2 pairs_added=${es2.pairsAdded} " +
       s"total_pairs=${es2.state.pairs.count()} (expect planted 20 found)")
     graft.operators.Dedup.releaseCaches(spark)

@@ -304,7 +304,7 @@ object Dedup {
   /** SimHash band rows (id, sim, band, bucket) — 4×16-bit bands of the 64-bit
     * signature; the 8-byte `sim` rides along so verification needs no re-join.
     * Shared by [[simhashPairs]] and the incremental form
-    * ([[graft.streaming.IncrementalDedup.simhashStep]]) so the two can never
+    * ([[graft.streaming.IncrementalDedup.SimHash]]) so the two can never
     * band differently. */
   private[graft] def simhashBanded(df: DataFrame, idCol: String,
                                    textCol: String): DataFrame = {
@@ -432,7 +432,7 @@ object Dedup {
     * asc as the collision tie-break): each document's ranked shingle list —
     * hence its prefix — is a pure function of the document alone, never of
     * the corpus. That order stability is what makes an EXACT incremental
-    * PPJoin possible ([[graft.streaming.IncrementalDedup.ngramStep]]): the
+    * PPJoin possible ([[graft.streaming.IncrementalDedup.Ngram]]): the
     * prefix-filter completeness lemma holds for ANY fixed total order;
     * frequency ordering is only the pruning heuristic that makes prefixes
     * the rarest shingles. The price is pruning quality — hash order scatters
@@ -540,7 +540,9 @@ object Dedup {
   /** Skew-salted banded self-join → deduplicated candidate id pairs: an
     * embedding duplicate family shares all band buckets, so without salting
     * one bucket would hold the family's entire quadratic candidate fan-out
-    * in a single task. */
+    * in a single task. Also the candidate generator of the incremental
+    * MinHash family, whose band rows carry no payload
+    * ([[graft.streaming.IncrementalDedup.MinHash]]). */
   private[graft] def embedCandidates(banded: DataFrame, maxBucket: Int): DataFrame =
     Blocking.saltedSelfJoin(banded, Seq("band", "bucket"), "id", Seq.empty, maxBucket)
       .select(col("id_a"), col("id_b"))

@@ -44,7 +44,7 @@ object StreamingIngest {
     spark.readStream.schema(docSchema).parquet(dir)
 
   /** File-source stream of (id, float-vector) rows — the embedding-dedup
-    * ingest shape ([[IncrementalDedup.embedRun]]). */
+    * ingest shape ([[IncrementalDedup.Embed]]). */
   def readVecs(spark: SparkSession, dir: String,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     spark.readStream.schema(StructType(Seq(

@@ -232,14 +232,15 @@ class IncrementalCcSpec extends AnyFunSuite {
     val docs = base.union(base.filter(col("doc_id") < 12)
       .select((col("doc_id") + 100000L).as("doc_id"), col("text"))).persist()
 
-    var dst = IncrementalDedup.empty(docs, "doc_id", "text")
+    val fam = IncrementalDedup.MinHash(threshold = 0.5)
+    var dst = IncrementalDedup.empty(fam, docs)
     var assign = IncrementalCC.empty(
       docs.select(col("doc_id").as("src"), col("doc_id").as("dst")))
     (0 to 2).foreach { r =>
       val batch = docs.filter(col("doc_id") % 3 === r)
-      val d = IncrementalDedup.delta(dst, batch, "doc_id", "text", threshold = 0.5)
-      dst = IncrementalDedup.State(dst.sets.unionByName(d.sets),
-        dst.banded.unionByName(d.banded), dst.pairs.unionByName(d.pairs))
+      val d = IncrementalDedup.delta(fam, dst, batch)
+      dst = IncrementalDedup.State(dst.frames.zip(d.frames).map {
+        case (prev, inc) => prev.unionByName(inc) })
       // truncate the dedup-delta lineage before the fold, as the production
       // composition does by reading the persisted pair delta back from
       // parquet — folding the raw plan multiplies it through the CC step

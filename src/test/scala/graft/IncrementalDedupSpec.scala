@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,10 +25,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("3-batch incremental state == full-corpus minhashPairs (row-identical)") {
     val batches = (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r))
-    var st = IncrementalDedup.empty(docs, "doc_id", "text")
+    val fam = IncrementalDedup.MinHash(threshold = 0.5)
+    var st = IncrementalDedup.empty(fam, docs)
     var added = 0L
     batches.foreach { b =>
-      val s = IncrementalDedup.step(st, b, "doc_id", "text", threshold = 0.5)
+      val s = IncrementalDedup.step(fam, st, b)
       st = s.state
       added += s.pairsAdded
       assert(s.touchedBuckets > 0)
@@ -62,25 +64,24 @@ class IncrementalDedupSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$inDir/docs_$r.parquet"))
     }
     // run 1: two input files (one micro-batch under AvailableNow)
+    val fam = IncrementalDedup.MinHash(threshold = 0.5)
     writeBatch(0); writeBatch(1)
-    IncrementalDedup.run(spark, inDir, stateDir, ckpt,
-      threshold = 0.5, compactEvery = 2).awaitTermination()
-    val afterRun1 = IncrementalDedup.committedBatches(stateDir)
+    IncrementalDedup.run(spark, fam, inDir, stateDir, ckpt, compactEvery = 2).awaitTermination()
+    val afterRun1 = IncrementalDedup.committedBatches(fam, stateDir)
     assert(afterRun1.nonEmpty, "no committed deltas after run 1")
     // restart with one NEW file: the checkpoint's ledger skips the consumed
     // ones; this batch crosses the compactEvery threshold and compacts
     writeBatch(2)
-    IncrementalDedup.run(spark, inDir, stateDir, ckpt,
-      threshold = 0.5, compactEvery = 2).awaitTermination()
-    val st = IncrementalDedup.loadState(spark, stateDir, Long.MaxValue,
-      "doc_id", "text")
+    IncrementalDedup.run(spark, fam, inDir, stateDir, ckpt, compactEvery = 2).awaitTermination()
+    // frames: sets, banded, pairs
+    val st = IncrementalDedup.load(spark, fam, stateDir, Long.MaxValue)
     val all = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val full = Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5).persist()
     val inc = st.pairs.persist()
     assert(inc.except(full).count() == 0 && full.except(inc).count() == 0,
       "persisted streaming state diverged from full recompute")
-    assert(st.sets.count() == all.count(), "sets state incomplete after resume")
+    assert(st.frames.head.count() == all.count(), "sets state incomplete after resume")
     assert(IncrementalDedup.compactions(stateDir).nonEmpty, "no compaction marker")
     // crash-window correctness (r7: marker-gated compaction base): the
     // compaction batch writes its PLAIN delta into the delta dirs and the
@@ -90,12 +91,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val marker = IncrementalDedup.compactions(stateDir).last
     val markerPath = java.nio.file.Paths.get(stateDir, s"compacted_$marker")
     java.nio.file.Files.delete(markerPath)
-    val stNoMarker = IncrementalDedup.loadState(spark, stateDir, Long.MaxValue,
-      "doc_id", "text")
+    val stNoMarker = IncrementalDedup.load(spark, fam, stateDir, Long.MaxValue)
     assert(stNoMarker.pairs.except(full).count() == 0 &&
       full.except(stNoMarker.pairs).count() == 0,
       "pre-marker crash window state diverged (plain-union duplication?)")
-    assert(stNoMarker.sets.count() == all.count(),
+    assert(stNoMarker.frames.head.count() == all.count(),
       "pre-marker crash window sets state duplicated or incomplete")
     java.nio.file.Files.write(markerPath, Array.empty[Byte])
     inc.unpersist(); full.unpersist()
@@ -104,10 +104,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("3-batch incremental simhash state == full-corpus simhashPairs") {
     val batches = (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r))
-    var st = IncrementalDedup.simhashEmpty(docs, "doc_id", "text")
+    val fam = IncrementalDedup.SimHash()
+    var st = IncrementalDedup.empty(fam, docs)
     var added = 0L
     batches.foreach { b =>
-      val s = IncrementalDedup.simhashStep(st, b, "doc_id", "text")
+      val s = IncrementalDedup.step(fam, st, b)
       st = s.state
       added += s.pairsAdded
     }
@@ -132,11 +133,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val vecs = base.union(base.filter(col("vec_id") < 20)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))).persist()
     val batches = (0 to 2).map(r => vecs.filter(col("vec_id") % 3 === r))
-    var st = IncrementalDedup.embedEmpty(vecs, "vec_id", "embedding")
+    val fam = IncrementalDedup.Embed(threshold = 0.99)
+    var st = IncrementalDedup.empty(fam, vecs)
     var added = 0L
     batches.foreach { b =>
-      val s = IncrementalDedup.embedStep(st, b, "vec_id", "embedding",
-        threshold = 0.99)
+      val s = IncrementalDedup.step(fam, st, b)
       st = s.state
       added += s.pairsAdded
     }
@@ -158,10 +159,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // complete under any fixed total order and verification is exact, so
     // the outputs must be row-identical despite different candidate sets
     val batches = (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r))
-    var st = IncrementalDedup.ngramEmpty(docs, "doc_id", "text")
+    val fam = IncrementalDedup.Ngram(threshold = 0.5)
+    var st = IncrementalDedup.empty(fam, docs)
     var added = 0L
     batches.foreach { b =>
-      val s = IncrementalDedup.ngramStep(st, b, "doc_id", "text", threshold = 0.5)
+      val s = IncrementalDedup.step(fam, st, b)
       st = s.state
       added += s.pairsAdded
       assert(s.touchedBuckets > 0)
@@ -194,18 +196,19 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // --- simhash driver: run 1 (two files), restart with a third (compacts)
     val sIn = s"$root/s_in"; val sState = s"$root/s_state"; val sCkpt = s"$root/s_ckpt"
     (0 to 1).foreach(r => writeBatch(sIn, all.filter(col("doc_id") % 3 === r), s"d$r"))
-    IncrementalDedup.simhashRun(spark, sIn, sState, sCkpt, compactEvery = 2)
+    val sFam = IncrementalDedup.SimHash()
+    IncrementalDedup.run(spark, sFam, sIn, sState, sCkpt, compactEvery = 2)
       .awaitTermination()
     writeBatch(sIn, all.filter(col("doc_id") % 3 === 2), "d2")
-    IncrementalDedup.simhashRun(spark, sIn, sState, sCkpt, compactEvery = 2)
+    IncrementalDedup.run(spark, sFam, sIn, sState, sCkpt, compactEvery = 2)
       .awaitTermination()
-    val sState2 = IncrementalDedup.loadSimhashState(spark, sState, Long.MaxValue,
-      "doc_id", "text")
+    // frames: banded, pairs
+    val sState2 = IncrementalDedup.load(spark, sFam, sState, Long.MaxValue)
     val sFull = Dedup.simhashPairs(all, "doc_id", "text").persist()
     val sInc = sState2.pairs.persist()
     assert(sInc.except(sFull).count() == 0 && sFull.except(sInc).count() == 0,
       "persisted simhash streaming state diverged from full recompute")
-    assert(sState2.banded.select("id").distinct().count() == all.count())
+    assert(sState2.frames.head.select("id").distinct().count() == all.count())
     assert(IncrementalDedup.compactions(sState).nonEmpty, "no simhash compaction")
     sInc.unpersist(); sFull.unpersist()
 
@@ -216,13 +219,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))).persist()
     val eIn = s"$root/e_in"; val eState = s"$root/e_state"; val eCkpt = s"$root/e_ckpt"
     (0 to 1).foreach(r => writeBatch(eIn, vecs.filter(col("vec_id") % 3 === r), s"v$r"))
-    IncrementalDedup.embedRun(spark, eIn, eState, eCkpt, threshold = 0.99)
-      .awaitTermination()
+    val eFam = IncrementalDedup.Embed(threshold = 0.99)
+    IncrementalDedup.run(spark, eFam, eIn, eState, eCkpt).awaitTermination()
     writeBatch(eIn, vecs.filter(col("vec_id") % 3 === 2), "v2")
-    IncrementalDedup.embedRun(spark, eIn, eState, eCkpt, threshold = 0.99)
-      .awaitTermination()
-    val eState2 = IncrementalDedup.loadEmbedState(spark, eState, Long.MaxValue,
-      "vec_id", "embedding")
+    IncrementalDedup.run(spark, eFam, eIn, eState, eCkpt).awaitTermination()
+    val eState2 = IncrementalDedup.load(spark, eFam, eState, Long.MaxValue)
     val eFull = Dedup.embeddingPairs(vecs, "vec_id", "embedding",
       threshold = 0.99).persist()
     val eInc = eState2.pairs.persist()
@@ -234,20 +235,21 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // --- ngram driver: run 1 (two files), restart with a third (compacts)
     val nIn = s"$root/n_in"; val nState = s"$root/n_state"; val nCkpt = s"$root/n_ckpt"
     (0 to 1).foreach(r => writeBatch(nIn, all.filter(col("doc_id") % 3 === r), s"n$r"))
-    IncrementalDedup.ngramRun(spark, nIn, nState, nCkpt, threshold = 0.5,
-      compactEvery = 2).awaitTermination()
+    val nFam = IncrementalDedup.Ngram(threshold = 0.5)
+    IncrementalDedup.run(spark, nFam, nIn, nState, nCkpt, compactEvery = 2)
+      .awaitTermination()
     writeBatch(nIn, all.filter(col("doc_id") % 3 === 2), "n2")
-    IncrementalDedup.ngramRun(spark, nIn, nState, nCkpt, threshold = 0.5,
-      compactEvery = 2).awaitTermination()
-    val nState2 = IncrementalDedup.loadNgramState(spark, nState, Long.MaxValue,
-      "doc_id", "text")
+    IncrementalDedup.run(spark, nFam, nIn, nState, nCkpt, compactEvery = 2)
+      .awaitTermination()
+    // frames: sets, prefix, pairs
+    val nState2 = IncrementalDedup.load(spark, nFam, nState, Long.MaxValue)
     val nFull = Dedup.ngramJaccardPairs(all, "doc_id", "text", threshold = 0.5).persist()
     val nInc = nState2.pairs.persist()
     assert(nInc.except(nFull).count() == 0 && nFull.except(nInc).count() == 0,
       "persisted ngram streaming state diverged from full recompute")
     // sets state carries every doc with a non-empty shingle set (the same
     // nsh > 0 domain the full operator works over)
-    assert(nState2.sets.count() ==
+    assert(nState2.frames.head.count() ==
       Dedup.shingleSets(all, "doc_id", "text", 3).filter(col("nsh") > 0).count(),
       "ngram sets state incomplete")
     assert(IncrementalDedup.compactions(nState).nonEmpty, "no ngram compaction")
@@ -266,10 +268,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val bulk = docs.filter(col("doc_id") < 100000L && col("doc_id") % 2 === 0)
     val rest = docs.filter(col("doc_id") < 100000L && col("doc_id") % 2 =!= 0)
 
-    var st = IncrementalDedup.empty(docs, "doc_id", "text")
+    val fam = IncrementalDedup.MinHash(threshold = 0.5)
+    var st = IncrementalDedup.empty(fam, docs)
     var added = 0L
     Seq(bulk, empty, rest, dupsOnly).foreach { b =>
-      val s = IncrementalDedup.step(st, b, "doc_id", "text", threshold = 0.5)
+      val s = IncrementalDedup.step(fam, st, b)
       st = s.state
       added += s.pairsAdded
     }
@@ -281,10 +284,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     inc.unpersist(); full.unpersist()
 
     // same shapes through the simhash family (signature-in-band state)
-    var sst = IncrementalDedup.simhashEmpty(docs, "doc_id", "text")
+    val sFam = IncrementalDedup.SimHash()
+    var sst = IncrementalDedup.empty(sFam, docs)
     var sAdded = 0L
     Seq(dupsOnly, empty, bulk, rest).foreach { b =>
-      val s = IncrementalDedup.simhashStep(sst, b, "doc_id", "text")
+      val s = IncrementalDedup.step(sFam, sst, b)
       sst = s.state
       sAdded += s.pairsAdded
     }
@@ -296,10 +300,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     sInc.unpersist(); sFull.unpersist()
 
     // same shapes through the PPJoin family (prefix-shingle buckets)
-    var nst = IncrementalDedup.ngramEmpty(docs, "doc_id", "text")
+    val nFam = IncrementalDedup.Ngram(threshold = 0.5)
+    var nst = IncrementalDedup.empty(nFam, docs)
     var nAdded = 0L
     Seq(empty, rest, dupsOnly, bulk).foreach { b =>
-      val s = IncrementalDedup.ngramStep(nst, b, "doc_id", "text", threshold = 0.5)
+      val s = IncrementalDedup.step(nFam, nst, b)
       nst = s.state
       nAdded += s.pairsAdded
     }
@@ -312,50 +317,98 @@ class IncrementalDedupSpec extends AnyFunSuite {
     Dedup.releaseCaches(spark)
   }
 
+  /** One family's table row: its ingest frame (planted duplicates of the
+    * first documents at ids ≥ `planted`), and its full batch operator at the
+    * family's tuning values. */
+  case class Case(fam: IncrementalDedup.Family, input: DataFrame, idCol: String,
+                  planted: Long, full: DataFrame => DataFrame)
+
+  lazy val vecs = {
+    val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    base.union(base.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))).persist()
+  }
+
+  lazy val cases = Seq(
+    Case(IncrementalDedup.MinHash(threshold = 0.5), docs, "doc_id", 100000L,
+      Dedup.minhashPairs(_, "doc_id", "text", threshold = 0.5)),
+    Case(IncrementalDedup.SimHash(), docs, "doc_id", 100000L,
+      Dedup.simhashPairs(_, "doc_id", "text")),
+    Case(IncrementalDedup.Embed(threshold = 0.99), vecs, "vec_id", 1000000L,
+      Dedup.embeddingPairs(_, "vec_id", "embedding", threshold = 0.99)),
+    Case(IncrementalDedup.Ngram(threshold = 0.5), docs, "doc_id", 100000L,
+      Dedup.ngramJaccardPairs(_, "doc_id", "text", threshold = 0.5)))
+
+  def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val g = got.select(want.columns.map(col).toIndexedSeq: _*).persist()
+    val w = want.persist()
+    assert(g.count() == w.count() && g.except(w).isEmpty && w.except(g).isEmpty,
+      s"$what: ${g.count()} rows, expected ${w.count()}")
+    g.unpersist(); w.unpersist()
+  }
+
   test("retraction: filtered state == accumulation without the retracted docs") {
-    // accumulate everything, retract the planted duplicates — state must be
-    // row-identical to the full operator over the surviving corpus, and a
-    // LATER step against the retracted state must stay exact
-    val survivors = docs.filter(col("doc_id") < 100000L)
-    val planted = docs.filter(col("doc_id") >= 100000L)
-      .select(col("doc_id").as("id"))
-
-    var st = IncrementalDedup.empty(docs, "doc_id", "text")
-    (0 to 1).foreach { r =>
-      st = IncrementalDedup.step(st, docs.filter(col("doc_id") % 2 === r),
-        "doc_id", "text", threshold = 0.5).state
+    // per family: accumulate everything, retract the planted duplicates —
+    // state must be row-identical to the full operator over the surviving
+    // corpus, and a LATER step against the retracted state must stay exact
+    cases.foreach { c =>
+      val name = c.fam.productPrefix
+      val isPlanted = col(c.idCol) >= c.planted
+      val planted = c.input.filter(isPlanted).select(col(c.idCol).as("id"))
+      var st = IncrementalDedup.empty(c.fam, c.input)
+      (0 to 1).foreach { r =>
+        st = IncrementalDedup.step(c.fam, st, c.input.filter(col(c.idCol) % 2 === r)).state
+      }
+      // the planted ids are in the state before retraction (non-vacuous)
+      assert(st.pairs.filter(col("id_b") >= c.planted).count() > 0,
+        s"$name: no planted pair accumulated")
+      val cut = IncrementalDedup.retract(st, planted)
+      assertSameRows(cut.pairs, c.full(c.input.filter(!isPlanted)),
+        s"$name retracted pairs vs the full operator on the survivors")
+      cut.frames.init.foreach { f =>
+        assert(f.join(planted, Seq("id"), "left_semi").isEmpty,
+          s"$name: a per-doc frame keeps a retracted id")
+      }
+      // re-ingest the SAME ids after retraction (the precondition is
+      // restored): accumulated pairs equal the full run on the whole corpus
+      val again = IncrementalDedup.step(c.fam, cut, c.input.filter(isPlanted)).state
+      assertSameRows(again.pairs, c.full(c.input),
+        s"$name post-retraction re-ingest vs the full operator")
+      Dedup.releaseCaches(spark)
     }
-    val cut = IncrementalDedup.retract(st, planted)
-    val inc = cut.pairs.persist()
-    val full = Dedup.minhashPairs(survivors, "doc_id", "text", threshold = 0.5).persist()
-    assert(inc.except(full).count() == 0 && full.except(inc).count() == 0,
-      "retracted minhash state diverged from full recompute on survivors")
-    assert(cut.sets.join(planted, Seq("id"), "left_semi").count() == 0)
-    inc.unpersist(); full.unpersist()
+  }
 
-    // re-ingest the SAME ids after retraction (the precondition is restored):
-    // accumulated pairs equal the full run on the original planted corpus
-    val s2 = IncrementalDedup.step(cut,
-      docs.filter(col("doc_id") >= 100000L), "doc_id", "text", threshold = 0.5)
-    val inc2 = s2.state.pairs.persist()
-    val full2 = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5).persist()
-    assert(inc2.except(full2).count() == 0 && full2.except(inc2).count() == 0,
-      "post-retraction step diverged")
-    inc2.unpersist(); full2.unpersist()
-
-    // the ngram twin: same filter argument over per-doc-pure prefixes
-    var nst = IncrementalDedup.ngramEmpty(docs, "doc_id", "text")
-    (0 to 1).foreach { r =>
-      nst = IncrementalDedup.ngramStep(nst, docs.filter(col("doc_id") % 2 === r),
-        "doc_id", "text", threshold = 0.5).state
+  test("persisted layout: each family's role dirs are pinned and load == in-memory steps") {
+    // a two-batch run per family leaves exactly these dirs; a renamed role
+    // would make an existing state dir list no committed batch and load as
+    // empty, which drives that write and read with the same code never see
+    val roles = Map("MinHash" -> Seq("sets", "banded", "pairs"),
+      "SimHash" -> Seq("banded", "pairs"), "Embed" -> Seq("vecs", "banded", "pairs"),
+      "Ngram" -> Seq("sets", "prefix", "pairs"))
+    cases.foreach { c =>
+      val name = c.fam.productPrefix
+      val root = java.nio.file.Files.createTempDirectory(s"inc_layout_$name").toString
+      val (in, state, ckpt) = (s"$root/in", s"$root/state", s"$root/ckpt")
+      val batches = (0 to 1).map(r => c.input.filter(col(c.idCol) % 2 === r))
+      batches.foreach { b =>
+        b.write.mode("append").parquet(in)
+        IncrementalDedup.run(spark, c.fam, in, state, ckpt).awaitTermination()
+      }
+      val dirs = new java.io.File(state).list().toSet
+      assert(dirs == roles(name).flatMap(r => Seq(s"${r}_delta_0", s"${r}_delta_1")).toSet,
+        s"$name state dir holds ${dirs.toSeq.sorted}")
+      assert(IncrementalDedup.committedBatches(c.fam, state) == Seq(0L, 1L))
+      val inMemory = batches.foldLeft(IncrementalDedup.empty(c.fam, c.input)) {
+        (st, b) => IncrementalDedup.step(c.fam, st, b).state
+      }
+      val loaded = IncrementalDedup.load(spark, c.fam, state, Long.MaxValue)
+      assert(loaded.frames.size == roles(name).size)
+      roles(name).zip(loaded.frames.zip(inMemory.frames)).foreach { case (r, (got, want)) =>
+        assertSameRows(got, want, s"$name loaded $r vs two in-memory steps")
+      }
+      Dedup.releaseCaches(spark)
     }
-    val nInc = IncrementalDedup.ngramRetract(nst, planted).pairs.persist()
-    val nFull = Dedup.ngramJaccardPairs(survivors, "doc_id", "text",
-      threshold = 0.5).persist()
-    assert(nInc.except(nFull).count() == 0 && nFull.except(nInc).count() == 0,
-      "retracted ngram state diverged from full recompute on survivors")
-    nInc.unpersist(); nFull.unpersist()
-    Dedup.releaseCaches(spark)
   }
 
   test("a small batch touches few buckets and re-pairs only those") {
@@ -363,11 +416,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val first = docs.filter(col("doc_id") < 100000L)
     val tiny = docs.filter(col("doc_id") < 4)
       .select((col("doc_id") + 200000L).as("doc_id"), col("text"))
-    val s1 = IncrementalDedup.step(
-      IncrementalDedup.empty(docs, "doc_id", "text"), first, "doc_id", "text",
-      threshold = 0.5)
-    val totalBuckets = s1.state.banded.select("band", "bucket").distinct().count()
-    val s2 = IncrementalDedup.step(s1.state, tiny, "doc_id", "text", threshold = 0.5)
+    val fam = IncrementalDedup.MinHash(threshold = 0.5)
+    val s1 = IncrementalDedup.step(fam, IncrementalDedup.empty(fam, docs), first)
+    // frames: sets, banded, pairs
+    val totalBuckets = s1.state.frames(1).select("band", "bucket").distinct().count()
+    val s2 = IncrementalDedup.step(fam, s1.state, tiny)
     // per-batch work is bounded by the batch's bucket footprint (≤ docs ×
     // bands), independent of the accumulated corpus's bucket count
     assert(s2.touchedBuckets <= 4 * 16,

@@ -290,27 +290,19 @@ class PlanSpec extends AnyFunSuite {
     // banded join's tree with a LogicalRDD leaf in the delta's outputs; the
     // assertions therefore inspect the UN-truncated candidate seams the
     // deltas checkpoint (same plan, pre-truncation)
-    val mh = IncrementalDedup.step(
-      IncrementalDedup.empty(docs, "doc_id", "text"), a, "doc_id", "text")
-    val mhSets = Dedup.shingleSets(b, "doc_id", "text", 3)
-    val mhd = IncrementalDedup.minhashCandidates(mh.state, mhSets,
-      Dedup.minhashBanded(mhSets, 64, 16), 1000)._2
-    val sh = IncrementalDedup.simhashStep(
-      IncrementalDedup.simhashEmpty(docs, "doc_id", "text"), a, "doc_id", "text")
-    val shd = IncrementalDedup.simhashDelta(sh.state, b, "doc_id", "text").pairs
+    // the second batch's candidates against the first batch's state
+    def cand(fam: IncrementalDedup.Family, all: DataFrame, a: DataFrame,
+             b: DataFrame): DataFrame = {
+      val st = IncrementalDedup.step(fam, IncrementalDedup.empty(fam, all), a).state
+      IncrementalDedup.candidates(fam, st, b)._3
+    }
+    val mhd = cand(IncrementalDedup.MinHash(), docs, a, b)
+    // SimHash verifies inside its candidate join: its candidates are its pairs
+    val shd = cand(IncrementalDedup.SimHash(), docs, a, b)
     val ea = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0)
     val eb = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 =!= 0)
-    val em = IncrementalDedup.embedStep(
-      IncrementalDedup.embedEmpty(emb, "vec_id", "embedding"), ea, "vec_id", "embedding")
-    val emSigs = Dedup.embedSigs(eb, "vec_id", "embedding", 24)
-    val emd = IncrementalDedup.embedCandidatesOf(em.state, emSigs,
-      Dedup.embedBanded(emSigs, 24, 4), 1000)._2
-    val ng = IncrementalDedup.ngramStep(
-      IncrementalDedup.ngramEmpty(docs, "doc_id", "text"), a, "doc_id", "text")
-    val ngSets = Dedup.shingleSets(b, "doc_id", "text", 3)
-      .filter(org.apache.spark.sql.functions.col("nsh") > 0)
-    val ngd = IncrementalDedup.ngramCandidates(ng.state, ngSets,
-      Dedup.hashOrderedPrefix(ngSets, 0.5), 0.5, 1000)._2
+    val emd = cand(IncrementalDedup.Embed(), emb, ea, eb)
+    val ngd = cand(IncrementalDedup.Ngram(), docs, a, b)
     // the delta frames are persisted by the operator, which would make the
     // optimizer substitute InMemoryRelation and HIDE the join tree from the
     // assertion — release the caches first (queryExecution is lazy; nothing

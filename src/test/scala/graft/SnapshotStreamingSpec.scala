@@ -511,12 +511,13 @@ class SnapshotStreamingSpec extends AnyFunSuite {
         "fresh_delta_2"),
       Driver("minhash",
         (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r)),
-        (in, st, ck) => IncrementalDedup.run(spark, in, st, ck, threshold = 0.5,
-          compactEvery = 2).awaitTermination(),
+        (in, st, ck) => IncrementalDedup.run(spark, IncrementalDedup.MinHash(threshold = 0.5),
+          in, st, ck, compactEvery = 2).awaitTermination(),
         IncrementalDedup.compactions,
         st => {
-          val s = IncrementalDedup.loadState(spark, st, Long.MaxValue, "doc_id", "text")
-          Seq(s.sets.select("id"), s.pairs)
+          // frames: sets, banded, pairs
+          val s = IncrementalDedup.load(spark, IncrementalDedup.MinHash(), st, Long.MaxValue)
+          Seq(s.frames.head.select("id"), s.pairs)
         },
         all => Seq(Dedup.shingleSets(all, "doc_id", "text", 3).select("id"),
           Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5)),
