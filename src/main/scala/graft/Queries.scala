@@ -29,37 +29,20 @@ object Queries {
   def pagesFor(dir: String): Long =
     if (dir.contains("sf0.1")) 60000L else if (dir.contains("sf0.01")) 6000L else 1800L
 
-  // Shared linkage pipeline, memoized per (session, scale): six catalog
-  // queries read the prepared pages and three read the scored pairs — one
-  // persisted copy each instead of six/three recomputations of
-  // synthesize→extract→normalize→block(→pair→score). Deterministic plans,
-  // so memoization is purely a cost optimization.
-  private val prepCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Long), DataFrame]()
-  private val scoredCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, Long), DataFrame]()
+  // Shared linkage pipeline, one persisted copy per (session, scale): six
+  // catalog queries read the prepared pages and three the scored pairs.
+  private val prepCache = new SessionMemo[Long, DataFrame](_.unpersist(false))
+  private val scoredCache = new SessionMemo[Long, DataFrame](_.unpersist(false))
 
-  /** Entries keyed by a stopped session pin nothing (the context is gone)
-    * but would keep the session object reachable forever — drop them on
-    * every access so a long-lived JVM cycling sessions can't accumulate. */
-  private def evictStopped(): Unit =
-    Seq(prepCache, scoredCache).foreach { c =>
-      c.keys.filter(_._1.sparkContext.isStopped).foreach(c.remove)
-    }
-
-  def preparedFor(s: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    prepCache.getOrElseUpdate((s, pagesFor(dir)),
+  def preparedFor(s: SparkSession, dir: String): DataFrame =
+    prepCache.getOrElseUpdate(s, pagesFor(dir))(
       Linkage.prepare(Pages.synthesize(s, pagesFor(dir)).toDF())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
-  def scoredFor(s: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    scoredCache.getOrElseUpdate((s, pagesFor(dir)),
+  def scoredFor(s: SparkSession, dir: String): DataFrame =
+    scoredCache.getOrElseUpdate(s, pagesFor(dir))(
       Linkage.scored(preparedFor(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
   /** Drop the memoized prepared/scored pipeline for `s` and unpersist its
     * cache blocks. Bench's cold-throughput pass calls this before each
@@ -67,10 +50,8 @@ object Queries {
     * pair→score path (the memo would otherwise turn samples 2+ into
     * cache-read measurements). */
   def resetPipelineCache(s: SparkSession): Unit = {
-    evictStopped()
-    Seq(prepCache, scoredCache).foreach { c =>
-      c.keys.filter(_._1 eq s).foreach(k => c.remove(k).foreach(_.unpersist(false)))
-    }
+    prepCache.drop(s)
+    scoredCache.drop(s)
   }
 
   /** Presentation sort over an expensive subtree: materialize the rows once
@@ -90,23 +71,18 @@ object Queries {
     * returns the (orders, lineitem) catalog table names.
     * Names and paths derive from the sanitized dir string, so distinct data
     * dirs can never collide (the former `math.abs(dir.hashCode)` could). */
-  private val bucketedCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (String, String)]()
+  private val bucketedCache = new SessionMemo[String, (String, String)]()
 
   private def bucketedFor(s: SparkSession, dir: String): (String, String) = {
-    bucketedCache.keys.filter(_._1.sparkContext.isStopped).foreach(bucketedCache.remove)
-    // a memoized pair is served only while both tables still exist: a caller
-    // (or a catalog reset) may drop them mid-session, and a dangling name
-    // would fail the query instead of re-writing the layout
-    bucketedCache.get((s, dir)).foreach { case (ot, lt) =>
-      if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) bucketedCache.remove((s, dir))
-    }
-    bucketedCache.getOrElseUpdate((s, dir), {
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val (ot, lt) = (s"g_orders_b_$tag", s"g_lineitem_b_$tag")
+    // a memoized layout is served only while both tables still exist: a
+    // caller (or a catalog reset) may drop them mid-session, and a dangling
+    // name would fail the query instead of re-writing the layout
+    if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) bucketedCache.remove(s, dir)
+    bucketedCache.getOrElseUpdate(s, dir) {
       implicit val sp: SparkSession = s
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$tag"
-      val ot = s"g_orders_b_$tag"
-      val lt = s"g_lineitem_b_$tag"
       graft.plans.Bucketed.writeBucketed(
         t(dir, "orders").select("o_orderkey", "o_custkey"),
         ot, s"$tmp/orders", 8, Seq("o_orderkey"))
@@ -114,7 +90,7 @@ object Queries {
         t(dir, "lineitem").select("l_orderkey", "l_quantity", "l_extendedprice"),
         lt, s"$tmp/lineitem", 8, Seq("l_orderkey"))
       (ot, lt)
-    })
+    }
   }
 
   /** Fixed classifier fixture: one address per class A–J (all single-spaced,

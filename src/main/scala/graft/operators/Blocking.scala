@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -77,45 +75,17 @@ object Blocking {
     * triangle (no driver materialization). 10^5 keys ≈ a few MB. */
   val MaxCollectedHotKeys = 100000
 
-  // Probe memoization (round-5 verdict item 4): the catalog's repeated dedup
-  // queries re-ran the measured-bytes pass + hot-key probe on the SAME
-  // persisted relation every invocation (~0.5 s per dedup query at sf0.1).
   // Both probe results are pure functions of (relation contents, probed
-  // columns, maxBlock), so they are memoized per session, keyed by the
-  // relation's CANONICALIZED logical plan — the same plan identity Spark's
-  // own CacheManager matches cached relations with, so two DataFrames that
-  // would read the same cache entry share one probe. Entries keyed by a
-  // stopped session are dropped on every access (the Queries.prepCache
-  // eviction pattern) so a long-lived JVM cycling sessions can't accumulate
-  // plans. Correctness burden is unchanged: the probes already required a
-  // deterministic-or-persisted input (see saltedSelfJoin's scaladoc) — the
-  // memo only removes the repeat cost.
-  private val bytesMemo =
-    TrieMap[(SparkSession, LogicalPlan, Seq[String]), Long]()
-  private val hotMemo =
-    TrieMap[(SparkSession, LogicalPlan, Seq[String], Int, Int), Array[Row]]()
+  // columns, maxBlock), so they are memoized per session and canonicalized
+  // plan (see [[graft.SessionMemo]]): the catalog's repeated dedup queries
+  // re-probe the same persisted relation on every invocation otherwise.
+  private val bytesMemo = new graft.SessionMemo[(LogicalPlan, Seq[String]), Long]()
+  private val hotMemo = new graft.SessionMemo[(LogicalPlan, Seq[String], Int, Int), Array[Row]]()
 
-  /** Bound on memoized probe entries. A long-running stream routes every
-    * batch through [[saltedSelfJoin]] with a NEW canonicalized plan (the
-    * affected frame embeds the live delta paths), so without a bound the
-    * memos grow one LogicalPlan tree per batch per join forever (r6 ADVICE).
-    * On overflow the memo is simply cleared — re-probing a relation costs
-    * two small jobs, unbounded driver heap costs the stream. The
-    * gazetteer index memos ([[StaticParser.broadcastIndex]]) share the bound. */
-  private[graft] val MaxProbeMemoEntries = 512
-
-  private def evictStoppedProbes(): Unit = {
-    bytesMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bytesMemo.remove)
-    hotMemo.keys.filter(_._1.sparkContext.isStopped).foreach(hotMemo.remove)
-    if (bytesMemo.size > MaxProbeMemoEntries) bytesMemo.clear()
-    if (hotMemo.size > MaxProbeMemoEntries) hotMemo.clear()
-  }
-
-  /** Drop every memoized probe result for `spark` (test hook; production
-    * sessions only need the stopped-session eviction above). */
+  /** Drop every memoized probe result for `spark` (test hook). */
   private[graft] def clearProbeMemo(spark: SparkSession): Unit = {
-    bytesMemo.keys.filter(_._1 eq spark).foreach(bytesMemo.remove)
-    hotMemo.keys.filter(_._1 eq spark).foreach(hotMemo.remove)
+    bytesMemo.drop(spark)
+    hotMemo.drop(spark)
   }
 
   /** Generic skew-salted self-join: every candidate-pair generator in the
@@ -328,18 +298,15 @@ object Blocking {
         case _ => lit(8L)
       }
     }.reduce(_ + _)
-    // both probes memoized per (session, canonicalized plan, probe inputs) —
-    // see the memo comment at the top of the object
-    evictStoppedProbes()
+    // both probes memoized per (session, canonicalized plan, probe inputs)
     val planKey = rows.queryExecution.analyzed.canonicalized
-    val measuredBytes = bytesMemo.getOrElseUpdate((spark, planKey, probedCols),
+    val measuredBytes = bytesMemo.getOrElseUpdate(spark, (planKey, probedCols))(
       rows.select(rowBytes.cast("long")).queryExecution.toRdd
         .mapPartitions(it => Iterator(it.foldLeft(0L)(_ + _.getLong(0))))
         .collect().sum)
     val shuffleRegime = bcThreshold <= 0 || measuredBytes > bcThreshold
 
-    lazy val hotRows = hotMemo.getOrElseUpdate(
-      (spark, planKey, keyCols, maxBlock, hotKeyCap),
+    lazy val hotRows = hotMemo.getOrElseUpdate(spark, (planKey, keyCols, maxBlock, hotKeyCap))(
       rows.groupBy(kc: _*)
         .agg(count(lit(1)).as("__hot_n"))
         .filter(col("__hot_n") > maxBlock)

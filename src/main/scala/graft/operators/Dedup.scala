@@ -33,39 +33,24 @@ object Dedup {
 
   // Per-id state (shingle sets, signatures) is persisted inside the pair
   // operators because three plan branches read it; the operators return lazy
-  // DataFrames, so they cannot know when the caller is done. Persists are
-  // therefore TRACKED per session and released by [[releaseCaches]] — the
-  // caller-driven cleanup hook (Bench calls it between queries; Verify after
-  // each write). Without it, repeated invocations in one long-lived session
-  // accumulate cache blocks until LRU eviction. Weak keys would NOT work
-  // here: the tracked DataFrames strongly reference their own SparkSession,
-  // so a WeakHashMap entry would pin its key forever. Instead, entries whose
-  // context has stopped are purged on every touch (a stopped context has
-  // already dropped its cache blocks — only the bookkeeping needs freeing).
-  private val tracked =
-    new java.util.HashMap[org.apache.spark.sql.SparkSession,
-      java.util.ArrayDeque[DataFrame]]()
-
-  private def purgeStopped(): Unit =
-    tracked.keySet().removeIf(s => s.sparkContext.isStopped)
+  // DataFrames, so the caller releases them with [[releaseCaches]] (Bench
+  // between queries, Verify after each write). One entry per session and
+  // canonicalized plan, the identity Spark's CacheManager caches by, so
+  // persisting an already-cached plan again adds nothing to release.
+  private val persisted =
+    new graft.SessionMemo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
+      _.unpersist(false))
 
   private[graft] def trackPersist(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    tracked.synchronized {
-      purgeStopped()
-      tracked.computeIfAbsent(df.sparkSession,
-        _ => new java.util.ArrayDeque[DataFrame]()).add(p)
-    }
+    persisted.getOrElseUpdate(p.sparkSession, p.queryExecution.analyzed.canonicalized)(p)
     p
   }
 
   /** Unpersist every intermediate this session's dedup calls pinned. Safe to
     * call once the returned DataFrames have been materialized (a later action
     * would recompute, not fail). */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val q = tracked.synchronized { purgeStopped(); Option(tracked.remove(spark)) }
-    q.foreach(_.forEach(df => df.unpersist(false)))
-  }
+  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit = persisted.drop(spark)
 
   /** Heavy per-row signature work must not inherit a single-file scan's
     * partitioning (one parquet file = one partition = one core). Spread to

@@ -137,19 +137,15 @@ object StaticParser {
     }(enc)
   }
 
-  // The gazetteer is a STATIC resource (bundled table, not testdata-derived),
-  // but q_parse_full_gaz paid ~0.9 s of single-threaded driver time PER
-  // INVOCATION rebuilding + re-broadcasting the 73k-row index (measured,
-  // OPTIMIZATION_r07.md). Index builds are memoized by rows-sequence IDENTITY
-  // (call sites pass the stable `Gazetteer.rows`/`rowsFull` lazy vals;
-  // structural equality over 73k rows would itself cost more than the build),
-  // broadcasts per (session, rows). Both memos follow Blocking's probe-memo
-  // rule: entries of a stopped session are dropped on every call, and a memo
-  // that reaches [[Blocking.MaxProbeMemoEntries]] is cleared — the index memo
-  // holds a strong reference to each rows sequence it was handed, so a
-  // caller passing a fresh sequence per call would otherwise pin every one of
-  // them (and its index) for the life of the JVM. Re-building after a clear
-  // costs one index build; the stable call sites never come near the bound.
+  // q_parse_full_gaz paid ~0.9 s of driver time per invocation rebuilding
+  // and re-broadcasting the 73k-row index (OPTIMIZATION_r07.md). Index builds
+  // are memoized JVM-wide by rows-sequence IDENTITY (the call sites pass the
+  // stable `Gazetteer.rows`/`rowsFull` lazy vals; structural equality over
+  // 73k rows would cost more than the build), so a fresh session reuses the
+  // index; broadcasts are memoized per session (see [[graft.SessionMemo]]).
+  // The index memo shares the memo bound: it holds each rows sequence it was
+  // handed, so a caller passing a fresh sequence per call would otherwise pin
+  // every one of them for the life of the JVM.
   private final class IdKey(val r: AnyRef) {
     override def hashCode: Int = System.identityHashCode(r)
     override def equals(o: Any): Boolean = o match {
@@ -159,19 +155,12 @@ object StaticParser {
   }
   private val idxMemo =
     scala.collection.concurrent.TrieMap[IdKey, Gazetteer.Index]()
-  private val bcastMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, IdKey), Broadcast[Gazetteer.Index]]()
-
-  private def evictIndexMemos(): Unit = {
-    bcastMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bcastMemo.remove)
-    if (idxMemo.size >= Blocking.MaxProbeMemoEntries) idxMemo.clear()
-    if (bcastMemo.size >= Blocking.MaxProbeMemoEntries) bcastMemo.clear()
-  }
+  private val bcastMemo = new graft.SessionMemo[IdKey, Broadcast[Gazetteer.Index]]()
 
   /** (index, broadcast) memo entry counts, and whether a broadcast of
     * `spark` is memoized (test hook for the bounds above). */
   private[graft] def indexMemoState(spark: SparkSession): (Int, Int, Boolean) =
-    (idxMemo.size, bcastMemo.size, bcastMemo.keys.exists(_._1 eq spark))
+    (idxMemo.size, bcastMemo.size, bcastMemo.holds(spark))
 
   /** Convenience: broadcast the default synthesized gazetteer index. */
   def broadcastIndex(spark: SparkSession): Broadcast[Gazetteer.Index] =
@@ -181,10 +170,11 @@ object StaticParser {
     * reference-scale table, [[Gazetteer.rowsFull]]); build and broadcast are
     * memoized — see the memo note above. */
   def broadcastIndex(spark: SparkSession, rows: Seq[graft.sources.GazRow]): Broadcast[Gazetteer.Index] = {
-    evictIndexMemos()
     val k = new IdKey(rows)
-    bcastMemo.getOrElseUpdate((spark, k),
-      spark.sparkContext.broadcast(idxMemo.getOrElseUpdate(k, Gazetteer.buildIndex(rows))))
+    bcastMemo.getOrElseUpdate(spark, k) {
+      if (idxMemo.size >= graft.SessionMemo.Bound) idxMemo.clear()
+      spark.sparkContext.broadcast(idxMemo.getOrElseUpdate(k, Gazetteer.buildIndex(rows)))
+    }
   }
 
   /** Top-`limit` closest gazetteer keys for a target string, ranked by the

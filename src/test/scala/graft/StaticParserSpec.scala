@@ -116,9 +116,8 @@ class StaticParserSpec extends AnyFunSuite {
   }
 
   test("gazetteer index memos stay bounded; a stopped session's broadcast is dropped") {
-    import graft.operators.Blocking
     import graft.sources.GazRow
-    val bound = Blocking.MaxProbeMemoEntries
+    val bound = SessionMemo.Bound
     // a fresh rows sequence per call (identity-keyed) must not pin every
     // index it was handed: the memos are cleared when they reach the bound
     for (i <- 0 until bound + 20) {
