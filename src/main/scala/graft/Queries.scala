@@ -542,14 +542,6 @@ object Queries {
       val sc = scoredFor(s, dir)
       Eval.pairwiseMetricsLabeled(sc.select(col("is_match"),
         (Pages.goldEntityId(col("url_a")) === Pages.goldEntityId(col("url_b"))).as("is_pos")))
-    }),
-
-    // --- multimodal (rows-only) ---
-    "q_media_features" -> ((s, dir) => {
-      val n = math.min(pagesFor(dir), 10000L)
-      Multimodal.extractFeatures(Multimodal.synthesize(s, n)).toDF()
-        .select(col("media_id"), col("kind"), col("n_bytes"), col("width"),
-          col("height"), col("frames")).orderBy("media_id")
     })
   )
 

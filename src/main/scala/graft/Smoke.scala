@@ -75,17 +75,6 @@ object Smoke {
     NerOutputs.process(nerIn, "url", "norm", StaticParser.broadcastIndex(spark))
       .show(3, 80)
 
-    // Multimodal: real PNG/BMP/GIF89a/WAV assets, batched decode kernel,
-    // real video frame boundaries.
-    import graft.operators.Multimodal
-    val media = Multimodal.synthesize(spark, 200)
-    val mf = Multimodal.extractFeatures(media)
-    println(s"[smoke] media assets=200 decoded=${mf.count()} " +
-      s"image_ok=${mf.toDF().alias("f").join(media.toDF().alias("a"), col("f.media_id") === col("a.media_id"))
-        .filter(col("a.kind") === "image" && col("f.width") === col("a.width")).count()} " +
-      s"video_frames=${Multimodal.sampleFrames(media).count()} " +
-      s"multi_frame_videos=${mf.filter(col("kind") === "video" && col("frames") >= 2).count()}")
-
     // Block-local union-find CC vs the star iteration (provably equal).
     // validate=true: outside Linkage.components (where the partition
     // property holds by construction) every human-driveable entry runs the

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
-import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature (`numHashes` permutations) of a shingle array as a
   * native codegen'd Catalyst expression.
@@ -83,11 +82,4 @@ object MinHashUtil {
 
   def minhashSig(c: Column, numHashes: Int): Column =
     Bridge.column(MinHashSig(Bridge.expression(c), numHashes))
-
-  /** Kept for the equality property test: hash of a single UTF8String the
-    * way `hash(s, lit(i))` computes it. */
-  def refHash(s: UTF8String, i: Int): Long = {
-    val base = Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42)
-    Murmur3_x86_32.hashInt(i, base).toLong
-  }
 }

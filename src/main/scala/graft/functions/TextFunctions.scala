@@ -42,17 +42,10 @@ object TextFunctions {
     * ([[TokenCountExpr]]; the `size(filter(split))` twin runs interpreted). */
   def tokenCount(c: Column): Column = TextNativeUtil.tokenCountCol(c)
 
-  /** The HOF formulation [[tokenCount]] replaced — equality witness only. */
-  private[graft] def tokenCountColumns(c: Column): Column = size(tokens(c))
-
   /** BPE-ish subword-unit count: alpha runs + digit runs + single other
     * non-space chars (a cheap, deterministic proxy for tokenizer load) —
     * native scan ([[SubwordCountExpr]]), same count as the regex twin. */
   def subwordCount(c: Column): Column = TextNativeUtil.subwordCountCol(c)
-
-  /** The regexp formulation [[subwordCount]] replaced — equality witness only. */
-  private[graft] def subwordCountColumns(c: Column): Column =
-    regexp_count(c, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
 
   /** Tiny English stopword list for the language-ID heuristic. */
   val EnStopwords: Seq[String] = Seq(
@@ -63,16 +56,6 @@ object TextFunctions {
   val TrStopwords: Seq[String] = Seq(
     "ve", "bir", "bu", "da", "de", "ile", "mah", "mahallesi", "cadde", "sokak",
     "no", "kat", "daire", "adres", "icin", "gibi")
-
-  /** Interpreted-HOF stopword ratio — equality witness for the native
-    * [[StopTokenStats]] path ([[langIdColumns]]/[[enStopwordRatioColumns]]);
-    * never call it in a pipeline. */
-  private[graft] def stopRatioColumns(c: Column, words: Seq[String]): Column = {
-    val toks = tokens(lower(c))
-    val stopList = array(words.map(lit): _*)
-    when(size(toks) === 0, 0.0)
-      .otherwise(size(filter(toks, t => array_contains(stopList, t))) * lit(1.0) / size(toks))
-  }
 
   /** (n_tokens, n_en_stopwords, n_tr_stopwords) of the lowered text in ONE
     * native scan — the shared kernel of [[langId]]/[[enStopwordRatio]].
@@ -94,30 +77,14 @@ object TextFunctions {
     when(en >= tr && en > 0.03, "en").when(tr > en && tr > 0.03, "tr").otherwise("und")
   }
 
-  /** The HOF formulation [[langId]] replaced — equality witness only. */
-  private[graft] def langIdColumns(c: Column): Column = {
-    val en = stopRatioColumns(c, EnStopwords)
-    val tr = stopRatioColumns(c, TrStopwords)
-    when(en >= tr && en > 0.03, "en").when(tr > en && tr > 0.03, "tr").otherwise("und")
-  }
-
   /** English stopword ratio (exposed for quality scoring). */
   def enStopwordRatio(c: Column): Column = ratioOf(stopStats(c), "en")
-
-  /** The HOF formulation [[enStopwordRatio]] replaced — equality witness only. */
-  private[graft] def enStopwordRatioColumns(c: Column): Column =
-    stopRatioColumns(c, EnStopwords)
 
   /** Punctuation character ratio — native `\p{P}` code-point scan
     * ([[PunctCountExpr]]). */
   def punctRatio(c: Column): Column =
     when(length(c) === 0, 0.0)
       .otherwise(TextNativeUtil.punctCountCol(c) * lit(1.0) / length(c))
-
-  /** The regexp formulation [[punctRatio]] replaced — equality witness only. */
-  private[graft] def punctRatioColumns(c: Column): Column =
-    when(length(c) === 0, 0.0)
-      .otherwise(regexp_count(c, lit("\\p{P}")) * lit(1.0) / length(c))
 
   /** Mean token length. */
   def meanTokenLen(c: Column): Column = {
@@ -149,14 +116,4 @@ object TextFunctions {
     * [[WordShingles]]. */
   def shingles(c: Column, n: Int): Column =
     WordShinglesUtil.wordShingles(c, n)
-
-  /** The HOF formulation [[shingles]] replaced — kept ONLY as the
-    * independent witness for the native expression's equality property test
-    * (PipelineOpsSpec); never call it in a pipeline. */
-  private[graft] def shinglesColumns(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
 }

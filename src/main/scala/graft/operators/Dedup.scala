@@ -100,15 +100,6 @@ object Dedup {
       .select(col(idCol), col("bow_hash"), min(col(idCol)).over(w).as("rep_id"))
   }
 
-  /** The join formulation [[bagOfWords]] replaced — equality witness only
-    * (also witnesses the HOF bow key against [[graft.functions.BowKeyExpr]]). */
-  private[graft] def bagOfWordsColumns(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val key = md5(array_join(array_sort(array_distinct(TextFunctions.tokens(col(textCol)))), " "))
-    val withH = df.select(col(idCol), key.as("bow_hash"))
-    val reps = withH.groupBy("bow_hash").agg(min(col(idCol)).as("rep_id"))
-    withH.join(reps, "bow_hash").select(col(idCol), col("bow_hash"), col("rep_id"))
-  }
-
   // --------------------- shared Jaccard verification -----------------------
 
   /** Exact Jaccard for deduplicated candidate pairs: each side's (sh, nsh)
@@ -166,18 +157,6 @@ object Dedup {
   def minhashSignature(shingleCol: Column, numHashes: Int = 64): Column = {
     val safe = when(size(shingleCol) === 0, array(lit(""))).otherwise(shingleCol)
     graft.functions.MinHashUtil.minhashSig(safe, numHashes)
-  }
-
-  /** The pure-Column formulation [[minhashSignature]] replaced: 64 interpreted
-    * higher-order `transform` traversals per row, each re-hashing every
-    * shingle's bytes. Kept ONLY as the independent witness for the native
-    * expression's equality property test (DedupSpec) — never call it in a
-    * pipeline. */
-  private[graft] def minhashSignatureColumns(shingleCol: Column, numHashes: Int): Column = {
-    val safe = when(size(shingleCol) === 0, array(lit(""))).otherwise(shingleCol)
-    array((0 until numHashes).map { i =>
-      array_min(transform(safe, s => hash(s, lit(i)).cast("long")))
-    }: _*)
   }
 
   /** Per-id shingle state (id, sh: array<string>, nsh: int) — the shared
@@ -448,35 +427,12 @@ object Dedup {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim.cosineSim(a, b)
 
-  /** The HOF formulation [[cosine]] replaced — kept ONLY as the independent
-    * witness for the native expression's equality property test
-    * (PipelineOpsSpec); never call it in a pipeline. */
-  private[graft] def cosineColumns(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (u, v) => u * v), lit(0.0d), (acc, p) => acc + p)
-    dot(a, b) / sqrt(dot(a, a)) / sqrt(dot(b, b))
-  }
-
   /** Random-hyperplane signature: bit p of the result is the sign of the
     * projection of `v` onto deterministic hyperplane p (plane weights are
     * ±1 from a hash of (plane, dim) — no RNG state, reproducible anywhere).
     * Native codegen'd expression; see [[graft.functions.HyperplaneSig]]. */
   def hyperplaneSignature(v: Column, planes: Int): Column =
     graft.functions.HyperplaneUtil.hyperplaneSig(v, planes)
-
-  /** The nested-HOF formulation [[hyperplaneSignature]] replaced — kept ONLY
-    * as the independent witness for the native expression's equality property
-    * test (PipelineOpsSpec); never call it in a pipeline. */
-  private[graft] def hyperplaneSignatureColumns(v: Column, planes: Int): Column =
-    aggregate(
-      sequence(lit(0), lit(planes - 1)), lit(0L),
-      (acc, p) => {
-        val proj = aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1),
-            (x, d) => x * when(hash(p, d).bitwiseAND(1) === 1, 1.0).otherwise(-1.0)),
-          lit(0.0d), (a2, x) => a2 + x)
-        acc.bitwiseOR(when(proj > 0, call_function("shiftleft", lit(1L), p)).otherwise(0L))
-      })
 
   /** Embedding near-dup pairs via BANDED random-hyperplane LSH + exact cosine
     * verification.

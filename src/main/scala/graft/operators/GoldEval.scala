@@ -246,10 +246,6 @@ object GoldEval {
       .orderBy("corpus")
   }
 
-  /** The leave-one-corpus-out mining bundle for predicting `path`:
-    * (gazetteer rows, TARIF anchors) harvested from every OTHER corpus in
-    * `byCorpus` — the ONE place the held-out protocol is implemented, shared
-    * by [[evaluate]]/[[confusion]] and the `GoldDump miss` diagnostic. */
   /** Auxiliary closed-class index over the REAL PTT gazetteer
     * ([[graft.sources.Gazetteer.realRows]]) when the bundled extract is
     * present. The reference's own parser loads this exact table before
@@ -264,6 +260,11 @@ object GoldEval {
     if (Gazetteer.realRows.isEmpty) None
     else Some(Gazetteer.buildIndex(Gazetteer.realRows))
 
+  /** The leave-one-corpus-out mining bundle for predicting `path`:
+    * (gazetteer rows, TARIF anchors) harvested from every OTHER corpus in
+    * `byCorpus` — the ONE place the held-out protocol is implemented, shared
+    * by [[evaluate]]/[[confusion]] and the `GoldDump` diagnostics
+    * (`miss`, `sent`, `spans`). */
   def minedFor(byCorpus: Seq[(String, Seq[(Long, Array[String], Array[String])])],
                path: String, mineCross: Boolean = true): (Seq[graft.sources.GazRow], Set[String]) = {
     val otherSents = byCorpus.collect { case (p, ss) if p != path => ss }.flatten

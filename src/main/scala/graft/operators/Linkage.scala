@@ -51,11 +51,6 @@ object Linkage {
       // the cold-pipeline hot path; value-identical — TextNativeSpec)
       .withColumn("canon", graft.functions.TextNativeUtil.canonSigCol(col("norm")))
 
-  /** The HOF canon formulation [[prepare]] replaced — equality witness only. */
-  private[graft] def canonColumns(norm: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    array_join(array_sort(
-      filter(split(norm, " "), t => t.rlike("[\\p{L}\\p{N}]"))), " ")
-
   /** Candidate pairs at shared blocking keys (skew-salted self-join). */
   def candidates(prepared: DataFrame, cfg: Config = Config()): DataFrame =
     Blocking.candidatePairs(prepared, "block_key", "url",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -11,11 +11,6 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One candidate pair entering the scorer. `canon_*` is the per-ROW
-  * pre-sorted signature-token string (see [[Linkage.prepare]]) — sorting and
-  * punctuation-stripping happen once per record, not once per pair. */
-case class CandPair(block_key: String, url_a: String, url_b: String, canon_a: String, canon_b: String)
-
 /** A scored pair; `is_match` is the thresholded decision. */
 case class ScoredPair(block_key: String, url_a: String, url_b: String,
                       jw: Double, lev_sim: Double, jaccard: Double, num_sim: Double,
@@ -25,8 +20,8 @@ case class ScoredPair(block_key: String, url_a: String, url_b: String,
   * closest analogue is the batched `process_batch` kernel shape of its NER CLI,
   * ner_address_parser.py:115-128, per SURVEY.md §3.2).
   *
-  * Runs as one `mapPartitions` pass over the candidate-pair Dataset: for each
-  * pair it computes Jaro-Winkler + Levenshtein similarity on the
+  * Runs as one native projection ([[ScorePairExpr]]) over the candidate
+  * pairs: for each pair it computes Jaro-Winkler + Levenshtein similarity on the
   * token-sorted canonical string (sorting makes the metrics order-invariant —
   * surface realizations reorder admin segments freely) and token-set Jaccard
   * on the raw token sets, then a convex combination. Pure CPU per row, no
@@ -129,17 +124,6 @@ object Scoring {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  /** Alphanumeric tokens only (punctuation tokens like `:` `/` carry no
-    * identity signal and differ freely across surface forms). */
-  def sigTokens(norm: String): Array[String] =
-    norm.split(" ").filter(t => t.nonEmpty && t.exists(_.isLetterOrDigit))
-
-  /** Per-row canonical form: sorted signature tokens, space-joined. Sorting
-    * makes the character metrics order-invariant (surface realizations
-    * reorder admin segments freely) and is done ONCE per record here rather
-    * than once per candidate pair in the kernel. */
-  def canonical(norm: String): String = sigTokens(norm).sorted.mkString(" ")
-
   /** Score a pair of pre-canonicalized strings (null-safe: external inputs
     * may carry null text through extraction). */
   def scoreCanon(canonA0: String, canonB0: String): (Double, Double, Double, Double, Double) = {
@@ -159,25 +143,11 @@ object Scoring {
     (jw, lv, jc, ns, score)
   }
 
-  /** Convenience: score two raw normalized strings (tests, ad-hoc use). */
-  def scorePair(normA: String, normB: String): (Double, Double, Double, Double, Double) =
-    scoreCanon(canonical(normA), canonical(normB))
-
   /** Kernel adapter for the native expression: one InternalRow of the five
     * metric doubles, null canons mapped to "" exactly as [[scoreCanon]]. */
   def scoreRow(a: String, b: String): InternalRow = {
     val (jw, lv, jc, ns, s) = scoreCanon(a, b)
     new GenericInternalRow(Array[Any](jw, lv, jc, ns, s))
-  }
-
-  /** The scoring operator: candidate pairs → scored pairs (typed form; kept
-    * as the equality witness of the expression path — ScoringExprSpec). */
-  def score(pairs: Dataset[CandPair], threshold: Double = 0.85): Dataset[ScoredPair] = {
-    import pairs.sparkSession.implicits._
-    pairs.mapPartitions(_.map { p =>
-      val (jw, lv, jc, ns, s) = scoreCanon(p.canon_a, p.canon_b)
-      ScoredPair(p.block_key, p.url_a, p.url_b, jw, lv, jc, ns, s, s >= threshold)
-    })
   }
 
   /** Scoring as a PROJECTION: the same [[scoreCanon]] kernel wrapped in a
@@ -186,8 +156,9 @@ object Scoring {
     * case-class allocation → SerializeFromObject per pair — ~half the
     * measured scoring stage at sf0.1 (OPTIMIZATION_r07.md); the projection
     * keeps the stage codegen'd end to end and column-prunable. Output
-    * schema and every value are identical to [[score]] (the expression
-    * calls scoreCanon itself; ScoringExprSpec pins row identity). */
+    * schema and every value are identical to the typed form (the
+    * expression calls scoreCanon itself; ScoringExprSpec pins row identity
+    * against the typed form kept as its test-side witness). */
   def scoreDF(pairs: DataFrame, threshold: Double = 0.85): DataFrame = {
     // two-step projection: the struct is materialized ONCE and fields are
     // extracted from the attribute — CollapseProject keeps the split (the
@@ -208,7 +179,7 @@ object Scoring {
 /** The pairwise scoring kernel as a native codegen'd expression:
   * struct<jw,lev_sim,jaccard,num_sim,score> of two canon strings, via the
   * SAME [[Scoring.scoreCanon]] Scala kernel (so values can never diverge
-  * from the typed witness). Null handling is the kernel's (null → ""), so
+  * from the typed test-side witness). Null handling is the kernel's (null → ""), so
   * evaluation must NOT null-short-circuit — eval/codegen are written
   * manually instead of via nullSafeEval. */
 case class ScorePairExpr(left: Expression, right: Expression) extends BinaryExpression {

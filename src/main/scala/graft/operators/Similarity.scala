@@ -112,31 +112,6 @@ object Similarity {
         graft.functions.NearestCentroid.nearestCentroid(col("vec"), centsD))
   }
 
-  /** The literal-array HOF fold [[assignCells]] replaced — kept ONLY as the
-    * independent witness for the native expression's equality property test
-    * (PlanSpec); never call it in a pipeline. The fold itself was already
-    * shuffle-free (it replaced the round-3 crossJoin+Window shape); the
-    * native expression removes its nCells×dim interpreted lambda entries. */
-  private[graft] def assignCellsColumns(corpus: DataFrame, idCol: String, vecCol: String,
-                  cents: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.graftbridge.Bridge
-    val vecType = corpus.schema(corpus.schema.fieldIndex(vecCol)).dataType
-    val centArr = array(cents.zipWithIndex.map { case (r, i) =>
-      struct(lit(i).as("cell"),
-        Bridge.column(Literal.create(r.get(0), vecType)).as("cvec"))
-    }: _*)
-    val base = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"))
-    val scoredArr = transform(centArr,
-      c => struct(cosine(col("vec"), c.getField("cvec")).as("d"),
-        c.getField("cell").as("cell")))
-    // init d = -2.0 < any cosine, so the first real cell always wins once
-    val best = aggregate(scoredArr,
-      struct(lit(-2.0).as("d"), lit(-1).as("cell")),
-      (acc, s) => when(s.getField("d") > acc.getField("d"), s).otherwise(acc))
-    base.withColumn("cell", best.getField("cell"))
-  }
-
   /** IVF-style ANN: assign corpus to nearest centroid cell, probe `nprobe`
     * cells per query. Output schema matches [[bruteForceTopK]]. */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Similarity}
 
 /** Training-data pipeline operators over the driver testdata tables. */
 class PipelineOpsSpec extends AnyFunSuite {
@@ -162,13 +162,13 @@ class PipelineOpsSpec extends AnyFunSuite {
         array_distinct(TextFunctions.shingles(col("text"), 3)).as("sh"))
       .select(
         Dedup.minhashSignature(col("sh"), 64).as("native"),
-        Dedup.minhashSignatureColumns(col("sh"), 64).as("column"))
+        Witnesses.minhashSignatureColumns(col("sh"), 64).as("column"))
     assert(both.filter(not(col("native") === col("column"))).count() == 0)
     // and the non-default width used nowhere else (guards the loop bounds)
     val w8 = docs.select("text").limit(50)
       .select(array_distinct(TextFunctions.shingles(col("text"), 2)).as("sh"))
       .select(Dedup.minhashSignature(col("sh"), 8).as("n"),
-        Dedup.minhashSignatureColumns(col("sh"), 8).as("c"))
+        Witnesses.minhashSignatureColumns(col("sh"), 8).as("c"))
     assert(w8.filter(not(col("n") === col("c"))).count() == 0)
   }
 
@@ -189,12 +189,12 @@ class PipelineOpsSpec extends AnyFunSuite {
       .union(edge)
       .select(
         Dedup.hyperplaneSignature(col("embedding"), 24).as("native"),
-        Dedup.hyperplaneSignatureColumns(col("embedding"), 24).as("column"))
+        Witnesses.hyperplaneSignatureColumns(col("embedding"), 24).as("column"))
     assert(both.filter(not(col("native") <=> col("column"))).count() == 0)
     // non-default plane count (guards shift/loop bounds up to bit 47)
     val w48 = emb.select("embedding").limit(50)
       .select(Dedup.hyperplaneSignature(col("embedding"), 48).as("n"),
-        Dedup.hyperplaneSignatureColumns(col("embedding"), 48).as("c"))
+        Witnesses.hyperplaneSignatureColumns(col("embedding"), 48).as("c"))
     assert(w48.filter(not(col("n") <=> col("c"))).count() == 0)
   }
 
@@ -209,9 +209,9 @@ class PipelineOpsSpec extends AnyFunSuite {
       .repartition(3) // codegen path, not ConvertToLocalRelation pre-eval
       .select(
         TextFunctions.shingles(col("text"), 3).as("n3"),
-        TextFunctions.shinglesColumns(col("text"), 3).as("c3"),
+        Witnesses.shinglesColumns(col("text"), 3).as("c3"),
         TextFunctions.shingles(col("text"), 2).as("n2"),
-        TextFunctions.shinglesColumns(col("text"), 2).as("c2"))
+        Witnesses.shinglesColumns(col("text"), 2).as("c2"))
     assert(both.filter(not(col("n3") <=> col("c3"))).count() == 0)
     assert(both.filter(not(col("n2") <=> col("c2"))).count() == 0)
   }
@@ -226,7 +226,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       .crossJoin(emb.select(col("embedding").as("b")).limit(15))
     val real = pairs.select(
       Dedup.cosine(col("embedding"), col("b")).as("n"),
-      Dedup.cosineColumns(col("embedding"), col("b")).as("c"))
+      Witnesses.cosineColumns(col("embedding"), col("b")).as("c"))
     assert(real.filter(not(col("n") <=> col("c"))).count() == 0)
     // non-zero-norm edges: both formulations are defined — must agree exactly
     val edge = Seq(
@@ -235,7 +235,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (Array(1.0f), Array(1.0f, 1.0f)))            // length mismatch → null
       .toDF("a", "b").repartition(2)
       .select(Dedup.cosine(col("a"), col("b")).as("n"),
-        Dedup.cosineColumns(col("a"), col("b")).as("c"))
+        Witnesses.cosineColumns(col("a"), col("b")).as("c"))
     assert(edge.filter(not(col("n") <=> col("c"))).count() == 0,
       edge.collect().mkString(";"))
 
@@ -255,7 +255,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // and null genuinely matches nothing through the operators' own shapes
     assert(zeros.filter(Dedup.cosine(col("a"), col("b")) >= 0.0).count() == 0)
     val thrown = intercept[Exception] {
-      zeros.select(Dedup.cosineColumns(col("a"), col("b")).as("c")).collect()
+      zeros.select(Witnesses.cosineColumns(col("a"), col("b")).as("c")).collect()
     }
     assert(thrown.getMessage.contains("DIVIDE_BY_ZERO"),
       s"expected ANSI divide-by-zero from the HOF shape, got: ${thrown.getMessage.take(120)}")
@@ -278,9 +278,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val sf = fuzzStrings.toDF("text").repartition(4)
       .select(
         TextFunctions.shingles(col("text"), 3).as("sh_n"),
-        TextFunctions.shinglesColumns(col("text"), 3).as("sh_c"))
+        Witnesses.shinglesColumns(col("text"), 3).as("sh_c"))
       .withColumn("sig_n", Dedup.minhashSignature(col("sh_n"), 32))
-      .withColumn("sig_c", Dedup.minhashSignatureColumns(col("sh_c"), 32))
+      .withColumn("sig_c", Witnesses.minhashSignatureColumns(col("sh_c"), 32))
     assert(sf.filter(not(col("sh_n") <=> col("sh_c"))).count() == 0, "shingle fuzz")
     assert(sf.filter(not(col("sig_n") <=> col("sig_c"))).count() == 0, "minhash fuzz")
 
@@ -292,9 +292,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val vf = fuzzVecs.toDF("id", "v").repartition(4)
       .select(
         Dedup.hyperplaneSignature(col("v"), 24).as("hp_n"),
-        Dedup.hyperplaneSignatureColumns(col("v"), 24).as("hp_c"),
+        Witnesses.hyperplaneSignatureColumns(col("v"), 24).as("hp_c"),
         Dedup.cosine(col("v"), reverse(col("v"))).as("cos_n"),
-        Dedup.cosineColumns(col("v"), reverse(col("v"))).as("cos_c"))
+        Witnesses.cosineColumns(col("v"), reverse(col("v"))).as("cos_c"))
     assert(vf.filter(not(col("hp_n") <=> col("hp_c"))).count() == 0, "hyperplane fuzz")
     assert(vf.filter(not(col("cos_n") <=> col("cos_c"))).count() == 0, "cosine fuzz")
   }
@@ -483,168 +483,5 @@ class PipelineOpsSpec extends AnyFunSuite {
     val recall = (bf & ivf).size.toDouble / bf.size
     info(f"IVF recall@5 vs brute force: $recall%.2f")
     assert(recall >= 0.5, f"IVF recall $recall%.2f too low")
-  }
-
-  test("image codec: real PNG/BMP round-trip; real-world PNG header parses") {
-    import graft.functions.ImageCodec
-    def px(x: Int, y: Int): Int = ((x * 31 + y) & 0xff) << 16 | 0x3040
-    val png = ImageCodec.encodePng(7, 5, px)
-    assert(ImageCodec.decodeDims(png).contains(("png", 7, 5)))
-    val bmp = ImageCodec.encodeBmp(9, 4, px)
-    assert(ImageCodec.decodeDims(bmp).contains(("bmp", 9, 4)))
-    // structural validity: IDAT inflates back to exactly h*(1+3w) filter+RGB bytes
-    val idatLen = {
-      // walk chunks: sig(8) then [len type data crc]...
-      var i = 8; var found: Array[Byte] = null
-      while (found == null) {
-        val len = java.nio.ByteBuffer.wrap(png, i, 4).getInt
-        val tpe = new String(png, i + 4, 4, "US-ASCII")
-        if (tpe == "IDAT") found = java.util.Arrays.copyOfRange(png, i + 8, i + 8 + len)
-        i += 12 + len
-      }
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(found)
-      val out = new Array[Byte](5 * (1 + 7 * 3) + 16)
-      val n = inf.inflate(out); inf.end(); n
-    }
-    assert(idatLen == 5 * (1 + 7 * 3), s"IDAT inflated to $idatLen")
-    // a REAL 1x1 PNG produced by an external encoder (well-known fixture)
-    val real = java.util.Base64.getDecoder.decode(
-      "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR42mP8z8BQDwAEhQGAhKmMIQAAAABJRU5ErkJggg==")
-    assert(ImageCodec.decodeDims(real).contains(("png", 1, 1)))
-    // GIF + JPEG header paths (spec-shaped fixtures)
-    val gif = "GIF89a".getBytes("US-ASCII") ++ Array[Byte](10, 0, 20, 0, 0, 0, 0)
-    assert(ImageCodec.decodeDims(gif).contains(("gif", 10, 20)))
-    val jpeg = Array[Byte](0xff.toByte, 0xd8.toByte,
-      0xff.toByte, 0xe0.toByte, 0, 4, 0, 0, // APP0, len 4
-      0xff.toByte, 0xc0.toByte, 0, 11, 8, 0, 30, 0, 40, 1, 0, 0, 0) // SOF0 h=30 w=40
-    assert(ImageCodec.decodeDims(jpeg).contains(("jpeg", 40, 30)))
-    assert(ImageCodec.decodeDims("not an image".getBytes).isEmpty)
-  }
-
-  test("wav codec: real PCM WAV round-trip; asset decode recovers the rate") {
-    import graft.functions.WavCodec
-    import graft.operators.Multimodal
-    val samples = Array.tabulate(100)(i => (i * 321).toShort)
-    val wav = WavCodec.encodeWav(16000, samples)
-    assert(WavCodec.decodeHeader(wav).contains((16000, 1, 16, 100)))
-    assert(WavCodec.decodeHeader("RIFFnope".getBytes).isEmpty)
-    val (w, h, rate, frames, feat) = Multimodal.decode(wav)
-    assert(w == 0 && h == 0 && rate == 16000 && frames == 1 && feat.length == 8)
-
-    // corrupt fmt chunk declaring sub-byte samples: ch*bits/8 would be 0 —
-    // must reject, not divide by zero (bits lives at offset 34)
-    val subByte = wav.clone(); subByte(34) = 4
-    assert(WavCodec.decodeHeader(subByte).isEmpty)
-  }
-
-  test("codecs: truncated blobs decode gracefully, never index out of bounds") {
-    import graft.functions.{GifCodec, ImageCodec, WavCodec}
-    import graft.operators.Multimodal
-    def pix(f: Int, x: Int, y: Int): Int = (f + x * 3 + y * 5) & 0x0f
-    val gif = GifCodec.encodeGif(21, 17, 3, 6, pix)
-    val wav = WavCodec.encodeWav(8000, Array.tabulate(64)(i => (i * 7).toShort))
-    // every prefix of a real blob is a plausible corrupt record (a partial
-    // file, a truncated parquet binary cell) — the codecs must degrade to
-    // None/Nil/partial frames, because one AIOOBE fails the whole task
-    (0 until gif.length).foreach { n =>
-      val t = gif.take(n)
-      GifCodec.decodeMeta(t)               // must not throw
-      GifCodec.frameOffsets(t).indices.foreach(f => GifCodec.decodeFrameIndices(t, f))
-      ImageCodec.decodeDims(t)
-      Multimodal.decode(t)
-    }
-    (0 until wav.length).foreach { n =>
-      WavCodec.decodeHeader(wav.take(n))
-      Multimodal.decode(wav.take(n))
-    }
-    // full blobs still decode after the bounds hardening
-    assert(GifCodec.decodeMeta(gif).contains((21, 17, 3)))
-    assert(WavCodec.decodeHeader(wav).contains((8000, 1, 16, 64)))
-  }
-
-  test("gif codec: animated GIF89a round-trips through the independent LZW decoder") {
-    import graft.functions.GifCodec
-    def pix(f: Int, x: Int, y: Int): Int = (f * 5 + x * 3 + y * 7) & 0x0f
-    val gif = GifCodec.encodeGif(13, 9, 4, 10, pix)
-    // spec structure: header, trailer, logical screen dims readable by the
-    // generic image-header parser
-    assert(new String(gif.take(6), "US-ASCII") == "GIF89a")
-    assert((gif.last & 0xff) == 0x3b)
-    assert(graft.functions.ImageCodec.decodeDims(gif).contains(("gif", 13, 9)))
-    assert(GifCodec.decodeMeta(gif).contains((13, 9, 4)))
-    // every frame offset points at a real image descriptor
-    GifCodec.frameOffsets(gif).foreach(o => assert((gif(o) & 0xff) == 0x2c))
-    // pixel-exact LZW round-trip for every frame
-    (0 until 4).foreach { f =>
-      val got = GifCodec.decodeFrameIndices(gif, f).get
-      val want = Array.tabulate(13 * 9)(i => pix(f, i % 13, i / 13).toByte)
-      assert(got.sameElements(want), s"frame $f corrupt")
-    }
-    // high-entropy large frame: forces code-width growth to 12 bits AND a
-    // mid-stream dictionary clear/reset — the hard paths of the bitstream
-    def noisy(f: Int, x: Int, y: Int): Int = ((x * 2654435761L + y * 40503L + f) >>> 7).toInt & 0x0f
-    val big = GifCodec.encodeGif(128, 96, 2, 5, noisy)
-    (0 until 2).foreach { f =>
-      val got = GifCodec.decodeFrameIndices(big, f).get
-      val want = Array.tabulate(128 * 96)(i => noisy(f, i % 128, i / 128).toByte)
-      assert(got.sameElements(want), s"big frame $f corrupt")
-    }
-    // single-color frame (degenerate hit-streak path)
-    val flat = GifCodec.encodeGif(6, 6, 1, 0, (_, _, _) => 7)
-    assert(GifCodec.decodeFrameIndices(flat, 0).get.forall(_ == 7.toByte))
-  }
-
-  test("gif codec: seeded random sweep round-trips (dims, frame counts, patterns)") {
-    import graft.functions.GifCodec
-    val rnd = new scala.util.Random(4242)
-    (1 to 25).foreach { case_ =>
-      val w = 1 + rnd.nextInt(40)
-      val h = 1 + rnd.nextInt(40)
-      val nf = 1 + rnd.nextInt(6)
-      val mode = rnd.nextInt(3)
-      val base = rnd.nextInt(1 << 20)
-      def pix(f: Int, x: Int, y: Int): Int = mode match {
-        case 0 => (base + f + x + y) & 0x0f                     // smooth ramp
-        case 1 => ((x * 2654435761L + y * 40503L + f * 97 + base) >>> 9).toInt & 0x0f // noise
-        case _ => if (((x + y + f) & 1) == 0) base & 0x0f else (base >> 4) & 0x0f // checker
-      }
-      val gif = GifCodec.encodeGif(w, h, nf, 4, pix)
-      assert(GifCodec.decodeMeta(gif).contains((w, h, nf)), s"case $case_ meta")
-      (0 until nf).foreach { f =>
-        val got = GifCodec.decodeFrameIndices(gif, f).get
-        val want = Array.tabulate(w * h)(i => pix(f, i % w, i / w).toByte)
-        assert(got.sameElements(want), s"case $case_ ($w x $h mode $mode) frame $f")
-      }
-    }
-  }
-
-  test("multimodal: synthesis, batched decode, frame sampling") {
-    val assets = Multimodal.synthesize(spark, 200, seed = 42L).persist()
-    assert(assets.count() == 200)
-    val feats = Multimodal.extractFeatures(assets).persist()
-    assert(feats.count() == 200)
-    // decoded metadata round-trips the header
-    val joined = assets.toDF().alias("a")
-      .join(feats.toDF().alias("f"), col("a.media_id") === col("f.media_id"))
-    assert(joined.filter(col("a.width") =!= col("f.width") ||
-      col("a.height") =!= col("f.height")).count() == 0)
-    assert(feats.filter(size(col("feature")) =!= 8).count() == 0)
-    // video assets are REAL animated GIFs: decode reports the true frame
-    // count (≥2) parsed from the block structure
-    assert(feats.filter(col("kind") === "video").count() > 0)
-    assert(feats.filter(col("kind") === "video" && col("frames") < 2).count() == 0)
-    val frames = Multimodal.sampleFrames(assets)
-    assert(frames.count() > 0)
-    assert(frames.groupBy("media_id").count().filter(col("count") < 1).count() == 0)
-    // sampled frame boundaries are real: each byte_offset points at the 0x2C
-    // image-descriptor byte of its asset
-    val offRows = frames.join(assets.toDF().select(col("media_id"), col("media")), "media_id")
-      .select("media", "byte_offset").collect()
-    offRows.foreach { r =>
-      val m = r.getAs[Array[Byte]](0)
-      assert((m(r.getAs[Int](1)) & 0xff) == 0x2c)
-    }
-    feats.unpersist(); assets.unpersist()
   }
 }

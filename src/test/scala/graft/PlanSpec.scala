@@ -368,7 +368,7 @@ class PlanSpec extends AnyFunSuite {
     val both = emb.select("vec_id", "embedding").limit(300).union(edge)
     val nat = graft.operators.Similarity.assignCells(both, "vec_id", "embedding", sample)
       .select(col("neighbor_id"), col("cell"))
-    val fold = graft.operators.Similarity
+    val fold = Witnesses
       .assignCellsColumns(both, "vec_id", "embedding", sample)
       .select(col("neighbor_id"), col("cell").as("cell_f"))
     val d2 = nat.join(fold, "neighbor_id").filter(col("cell") =!= col("cell_f")).count()

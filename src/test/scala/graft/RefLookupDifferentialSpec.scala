@@ -16,7 +16,7 @@ import graft.sources.Gazetteer
   * head/tail digests). The engine ingests the same raw rows through its own
   * [[Gazetteer.etl]] and must reproduce each answer exactly: all four
   * neighbourhoods_of restriction modes, the per-province district and
-  * neighbourhood counts for all 81 provinces, the full
+  * neighbourhood counts and districts_of lists for all 81 provinces, the full
   * duplicate-districts-across-provinces map, and the province list.
   */
 class RefLookupDifferentialSpec extends AnyFunSuite {
@@ -75,6 +75,13 @@ class RefLookupDifferentialSpec extends AnyFunSuite {
       assert(n == nc.get(p).asLong(), s"neighbourhood_count($p)")
     }
     assert(counts.size == dc.size(), "province set differs")
+
+    // districts_of: each province's list has district_count distinct rows, sorted
+    dc.fieldNames().forEachRemaining { p =>
+      val ds = Gazetteer.districtsOf(gaz, p).as[String].collect().toSeq
+      assert(ds.length == dc.get(p).asLong(), s"districts_of($p): count")
+      assert(ds.distinct == ds && ds.sorted == ds, s"districts_of($p): distinct, sorted")
+    }
 
     // duplicate districts across provinces: full map equality
     val dups = Gazetteer.duplicateDistrictsAcrossProvinces(gaz)

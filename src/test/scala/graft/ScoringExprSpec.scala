@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CandPair, Linkage, Scoring}
+import graft.Witnesses.CandPair
+import graft.operators.{Linkage, Scoring}
 import graft.sources.Pages
 
 /** Pins the scoring-expression path ([[graft.operators.ScorePairExpr]]) to
@@ -18,14 +19,14 @@ class ScoringExprSpec extends AnyFunSuite {
     val prep = Linkage.prepare(Pages.synthesize(spark, 1800L).toDF()).persist()
     val cand = Linkage.candidates(prep).persist()
     val viaExpr = Scoring.scoreDF(cand, 0.85).orderBy("url_a", "url_b").collect().toSeq
-    val viaTyped = Scoring.score(
+    val viaTyped = Witnesses.score(
       cand.select("block_key", "url_a", "url_b", "canon_a", "canon_b").as[CandPair], 0.85)
       .toDF().orderBy("url_a", "url_b").collect().toSeq
     assert(viaExpr.nonEmpty)
     assert(viaExpr == viaTyped)
     // schema parity: names, types, order
     val se = Scoring.scoreDF(cand, 0.85).schema
-    val st = Scoring.score(
+    val st = Witnesses.score(
       cand.select("block_key", "url_a", "url_b", "canon_a", "canon_b").as[CandPair], 0.85)
       .toDF().schema
     assert(se.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -41,7 +42,7 @@ class ScoringExprSpec extends AnyFunSuite {
       ("k", "g", "h", "ankara cad 12", "ankara cad 12"))
       .toDF("block_key", "url_a", "url_b", "canon_a", "canon_b")
     val viaExpr = Scoring.scoreDF(edge, 0.85).orderBy("url_a").collect().toSeq
-    val viaTyped = Scoring.score(edge.as[CandPair], 0.85)
+    val viaTyped = Witnesses.score(edge.as[CandPair], 0.85)
       .toDF().orderBy("url_a").collect().toSeq
     assert(viaExpr == viaTyped)
   }

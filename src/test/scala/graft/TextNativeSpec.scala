@@ -45,27 +45,27 @@ class TextNativeSpec extends AnyFunSuite {
 
   test("native tokenCount == HOF twin (corpus + fuzz)") {
     val c = col("t")
-    assertCols(fuzz, TextFunctions.tokenCount(c), TextFunctions.tokenCountColumns(c), "tokenCount")
+    assertCols(fuzz, TextFunctions.tokenCount(c), Witnesses.tokenCountColumns(c), "tokenCount")
     val bad = docs.select(TextFunctions.tokenCount(col("text")).as("x"),
-      TextFunctions.tokenCountColumns(col("text")).as("y"))
+      Witnesses.tokenCountColumns(col("text")).as("y"))
       .filter(!(col("x") <=> col("y"))).count()
     assert(bad == 0)
   }
 
   test("native subwordCount == regexp twin (corpus + fuzz)") {
     val c = col("t")
-    assertCols(fuzz, TextFunctions.subwordCount(c), TextFunctions.subwordCountColumns(c), "subwordCount")
+    assertCols(fuzz, TextFunctions.subwordCount(c), Witnesses.subwordCountColumns(c), "subwordCount")
     val bad = docs.select(TextFunctions.subwordCount(col("text")).as("x"),
-      TextFunctions.subwordCountColumns(col("text")).as("y"))
+      Witnesses.subwordCountColumns(col("text")).as("y"))
       .filter(!(col("x") <=> col("y"))).count()
     assert(bad == 0)
   }
 
   test("native langId == HOF twin (corpus + fuzz)") {
     val c = col("t")
-    assertCols(fuzz, TextFunctions.langId(c), TextFunctions.langIdColumns(c), "langId")
+    assertCols(fuzz, TextFunctions.langId(c), Witnesses.langIdColumns(c), "langId")
     val bad = docs.select(TextFunctions.langId(col("text")).as("x"),
-      TextFunctions.langIdColumns(col("text")).as("y"))
+      Witnesses.langIdColumns(col("text")).as("y"))
       .filter(!(col("x") <=> col("y"))).count()
     assert(bad == 0)
   }
@@ -73,14 +73,14 @@ class TextNativeSpec extends AnyFunSuite {
   test("native stopword/punct ratios == twins (corpus + fuzz)") {
     val c = col("t")
     assertCols(fuzz, TextFunctions.enStopwordRatio(c),
-      TextFunctions.enStopwordRatioColumns(c), "enStopwordRatio")
+      Witnesses.enStopwordRatioColumns(c), "enStopwordRatio")
     assertCols(fuzz, TextFunctions.punctRatio(c),
-      TextFunctions.punctRatioColumns(c), "punctRatio")
+      Witnesses.punctRatioColumns(c), "punctRatio")
     val bad = docs.select(
       TextFunctions.enStopwordRatio(col("text")).as("x1"),
-      TextFunctions.enStopwordRatioColumns(col("text")).as("y1"),
+      Witnesses.enStopwordRatioColumns(col("text")).as("y1"),
       TextFunctions.punctRatio(col("text")).as("x2"),
-      TextFunctions.punctRatioColumns(col("text")).as("y2"))
+      Witnesses.punctRatioColumns(col("text")).as("y2"))
       .filter(!(col("x1") <=> col("y1")) || !(col("x2") <=> col("y2"))).count()
     assert(bad == 0)
   }
@@ -98,13 +98,13 @@ class TextNativeSpec extends AnyFunSuite {
   test("native canon signature == filter/rlike twin (pages corpus + fuzz)") {
     val c = col("t")
     assertCols(fuzz, TextNativeUtil.canonSigCol(c),
-      graft.operators.Linkage.canonColumns(c), "canonSig")
+      Witnesses.canonColumns(c), "canonSig")
     // the real hot path: block-normalized page extracts
     val pages = graft.operators.Linkage.extract(
       graft.sources.Pages.synthesize(spark, 1800L).toDF())
       .withColumn("norm", graft.operators.Blocking.blockNorm(col("extracted")))
     val bad = pages.select(TextNativeUtil.canonSigCol(col("norm")).as("x"),
-      graft.operators.Linkage.canonColumns(col("norm")).as("y"))
+      Witnesses.canonColumns(col("norm")).as("y"))
       .filter(!(col("x") <=> col("y"))).count()
     assert(bad == 0)
   }
@@ -115,7 +115,7 @@ class TextNativeSpec extends AnyFunSuite {
         .select(col("doc_id") + 100000L, col("text")))
     // bow: new single-window native-key operator vs the old join witness
     val a = Dedup.bagOfWords(planted, "doc_id", "text").orderBy("doc_id")
-    val b = Dedup.bagOfWordsColumns(planted, "doc_id", "text").orderBy("doc_id")
+    val b = Witnesses.bagOfWordsColumns(planted, "doc_id", "text").orderBy("doc_id")
     assert(a.collect().toSeq == b.collect().toSeq)
     // exact: window form vs the join form it replaced (inlined here)
     val withH = planted.select(col("doc_id"), md5(col("text")).as("content_hash"))
