@@ -41,11 +41,15 @@ object Dedup {
     new graft.SessionMemo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
       _.unpersist(false))
 
-  private[graft] def trackPersist(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.getOrElseUpdate(p.sparkSession, p.queryExecution.analyzed.canonicalized)(p)
-    p
-  }
+  /** Persist `df` and track it for [[releaseCaches]]. A frame already
+    * cached is returned as it is: its cache is someone's to release. */
+  private[graft] def trackPersist(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      persisted.getOrElseUpdate(p.sparkSession, p.queryExecution.analyzed.canonicalized)(p)
+      p
+    }
 
   /** Unpersist every intermediate this session's dedup calls pinned. Safe to
     * call once the returned DataFrames have been materialized (a later action

@@ -3,6 +3,7 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -33,7 +34,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * As in Iceberg, the metrics and files tables are metadata tables derived
   * from the manifests, not tables a commit appends to, so a commit writes
-  * its data and one manifest and nothing else.
+  * its data and one manifest and nothing else. A manifest is published to a
+  * fresh name and never rewritten. The streaming state
+  * (`streaming.PersistedDeltas`) commits each micro-batch by the same
+  * protocol, through the same writer ([[writeData]]) and codec
+  * ([[putTable]], [[schemaOf]]): one manifest per batch, one table per role.
   *
   * Resume contract (north rule): a failed run leaves at most an uncommitted
   * `data` directory (no manifest) which the next run ignores and overwrites;
@@ -58,7 +63,7 @@ object Snapshots {
                       seconds: Option[Double], files: Seq[(String, Long)],
                       schema: Option[StructType])
 
-  private val Json = new ObjectMapper()
+  private[graft] val Json = new ObjectMapper()
 
   // All metadata I/O goes through [[StateFs]] (Hadoop FileSystem API) so a
   // state root of hdfs://, s3a://, file://, or a bare local path behaves
@@ -79,24 +84,60 @@ object Snapshots {
   }
 
   def readManifest(root: String, stage: String, snap: Int): Manifest = {
-    val j = Json.readTree(
-      StateFs.readBytes(stageDir(root, stage), s"snap=$snap/manifest.json"))
+    val j = readJson(new HPath(stageDir(root, stage), s"snap=$snap").toString)
     Manifest(j.get("stage").asText, j.get("snap").asInt, j.get("fingerprint").asText,
       j.get("rows").asLong, j.get("codeVersion").asText, j.get("parent").asInt,
       Option(j.get("seconds")).map(_.asDouble),
       j.path("files").asScala.toSeq.map(f => f.get("file").asText -> f.get("rows").asLong),
-      Option(j.get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType]))
+      schemaOf(j))
   }
 
-  private def manifestJson(m: Manifest): Array[Byte] = {
+  private def manifestJson(m: Manifest): ObjectNode = {
     val o = Json.createObjectNode()
       .put("stage", m.stage).put("snap", m.snap).put("fingerprint", m.fingerprint)
-      .put("rows", m.rows).put("codeVersion", m.codeVersion).put("parent", m.parent)
+      .put("codeVersion", m.codeVersion).put("parent", m.parent)
     m.seconds.foreach(s => o.put("seconds", s))
-    m.schema.foreach(s => o.set[JsonNode]("schema", Json.readTree(s.json)))
-    val files = o.putArray("files")
-    m.files.foreach { case (f, n) => files.addObject().put("file", f).put("rows", n) }
-    Json.writerWithDefaultPrettyPrinter().writeValueAsBytes(o)
+    putTable(o, m.rows, m.schema, m.files)
+  }
+
+  /** A written table's manifest fields: `rows`, `schema` (so a reader runs no
+    * inference job) and, when there are any, `files`: each data file with
+    * its row count. */
+  private[graft] def putTable(o: ObjectNode, rows: Long, schema: Option[StructType],
+                              files: Seq[(String, Long)] = Nil): ObjectNode = {
+    o.put("rows", rows)
+    schema.foreach(s => o.set[JsonNode]("schema", Json.readTree(s.json)))
+    if (files.nonEmpty) {
+      val fs = o.putArray("files")
+      files.foreach { case (f, n) => fs.addObject().put("file", f).put("rows", n) }
+    }
+    o
+  }
+
+  /** The schema a manifest table records, absent from earlier manifests. */
+  private[graft] def schemaOf(table: JsonNode): Option[StructType] =
+    Option(table.get("schema")).map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+
+  /** Publish `dir/manifest.json`, the commit, as compact JSON. It always
+    * lands on a fresh name: a committed manifest is never rewritten. */
+  private[graft] def publishManifest(dir: String, o: ObjectNode): Unit =
+    StateFs.publish(dir, "manifest.json", Json.writeValueAsBytes(o))
+
+  private[graft] def readJson(dir: String): JsonNode =
+    Json.readTree(StateFs.readBytes(dir, "manifest.json"))
+
+  /** The data half of every commit: write `df` to `dataDir`, then list it
+    * and read each parquet file's row count from its footer on the driver,
+    * so the commit runs no Spark job besides the write, and what the
+    * manifest declares is what a reader sees. Files with no rows are left
+    * out. The manifest is the only commit marker: the write is told not to
+    * leave Hadoop's `_SUCCESS` file, which would duplicate it (the option
+    * reaches only this write's Hadoop conf). */
+  private[graft] def writeData(df: DataFrame, dataDir: String): Seq[(String, Long)] = {
+    df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dataDir)
+    footerRows(dataDir)
   }
 
   /** Latest committed snapshot whose fingerprint matches, if any. */
@@ -125,28 +166,17 @@ object Snapshots {
   def commit(df: DataFrame, root: String, stage: String, fingerprint: String): Int =
     commitFiles(df, root, stage, fingerprint).snap
 
-  /** [[commit]], returning the published manifest. After the data write the
-    * data directory is listed and each parquet file's row count is read from
-    * its footer on the driver, so the commit runs no Spark job besides the
-    * write, and what the manifest declares is what a reader sees. Files with
-    * no rows are left out. With `startNanos`, the manifest also records the
-    * seconds from that instant to just before the publish.
-    *
-    * The manifest is the only commit marker: the data write is told not to
-    * leave Hadoop's `_SUCCESS` file, which would duplicate it (the option
-    * reaches only this write's Hadoop conf). */
+  /** [[commit]], returning the published manifest, which records the rows,
+    * schema and files [[writeData]] wrote. With `startNanos`, the manifest
+    * also records the seconds from that instant to just before the publish. */
   def commitFiles(df: DataFrame, root: String, stage: String, fingerprint: String,
                   startNanos: Option[Long] = None): Manifest = {
     val parent = committedSnaps(root, stage).lastOption.getOrElse(-1)
     val snapDir = new HPath(stageDir(root, stage), s"snap=${parent + 1}").toString
-    val dataDir = new HPath(snapDir, "data").toString
-    df.write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(dataDir)
-    val files = footerRows(dataDir)
+    val files = writeData(df, new HPath(snapDir, "data").toString)
     val m = Manifest(stage, parent + 1, fingerprint, files.map(_._2).sum, CodeVersion,
       parent, startNanos.map(t0 => (System.nanoTime() - t0) / 1e9), files, Some(df.schema))
-    StateFs.publish(snapDir, "manifest.json", manifestJson(m))
+    publishManifest(snapDir, manifestJson(m))
     m
   }
 

@@ -11,15 +11,16 @@ import org.apache.spark.sql.SparkSession
   * `local[32]`, dead on the multi-executor cluster the north rule targets
   * (spark-submit at N and 4N executors), where state lives on HDFS/S3. The
   * parquet payloads were always FS-agnostic (Spark readers/writers); this
-  * moves the remaining metadata layer (listing, marker files, atomic
-  * publish, recursive delete) onto the same abstraction, so a state root of
+  * moves the remaining metadata layer (listing, atomic manifest publish,
+  * recursive delete) onto the same abstraction, so a state root of
   * `hdfs://…`, `s3a://…`, or a bare local path all behave identically.
   *
-  * Commit protocol note: `publish` = write to a `.tmp` sibling + rename
-  * (a plain rename to a fresh name, an overwriting one to replace a file).
-  * On HDFS and local file systems rename is atomic; on S3A it is a
-  * copy+delete, where the marker-file convention still holds (a reader sees
-  * either no marker or a complete one — the content is written before the
+  * Commit protocol note: the one commit protocol of both state layers
+  * ([[Snapshots]] and `streaming.PersistedDeltas`) is data first, then a
+  * manifest published LAST by `publish` = write to a `.tmp` sibling + rename
+  * to a fresh name. On HDFS and local file systems rename is atomic; on S3A
+  * it is a copy+delete, where the convention still holds (a reader sees
+  * either no manifest or a complete one — the content is written before the
   * rename starts, and readers never parse `.tmp` names). That is exactly
   * Iceberg's own commit seam, which swaps in a metastore/catalog swap for
   * object stores.
@@ -105,43 +106,25 @@ object StateFs {
     } finally in.close()
   }
 
-  /** Publish a small file: write `<name>.tmp`, then rename it to `name`.
-    *
-    * Fresh name (every snapshot manifest, which always lands in a new
-    * `snap=N` dir): a plain `FileSystem.rename`. It is atomic on HDFS and
-    * local file systems and, unlike the replace path below, starts no child
-    * process on a local file system without native Hadoop. On HDFS it fails
-    * rather than overwrite a file a racer published first, and that failure
-    * is thrown.
-    *
-    * Existing name (a marker re-published by a retried foreachBatch
-    * compaction): rename over it with OVERWRITE semantics (FileContext —
-    * atomic on HDFS/local, so the re-publish never passes through a window
-    * where NEITHER version exists). On file systems without a FileContext
-    * binding the fallback is delete-then-rename, whose non-atomic window is
-    * a re-publish-only path and re-converges on the next retry.
-    *
-    * Either way a crash before the rename leaves only an ignorable `.tmp`. */
+  /** Publish a small file under a fresh name: write `<name>.tmp`, then
+    * rename it to `name` with a plain `FileSystem.rename`. That is atomic on
+    * HDFS and local file systems, and starts no child process on a local
+    * file system without native Hadoop. Every commit publishes a manifest
+    * into a dir no commit has published into before, and a committed file is
+    * never rewritten: publishing over an existing name throws an
+    * `IOException` naming it (as HDFS's rename refuses to overwrite a file a
+    * racer published first). A crash before the rename leaves only an
+    * ignorable `.tmp`. */
   def publish(dir: String, name: String, bytes: Array[Byte]): Unit = {
     val tmp = new Path(dir, name + ".tmp")
     val dst = new Path(dir, name)
     val f = fs(dst)
+    if (f.exists(dst))
+      throw new java.io.IOException(s"publish: $dst exists, and a published file is never rewritten")
     val out = f.create(tmp, true)
     try out.write(bytes) finally out.close()
-    if (!f.exists(dst)) {
-      if (!f.rename(tmp, dst))
-        throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    } else try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        f.makeQualified(dst).toUri, conf)
-      fc.rename(f.makeQualified(tmp), f.makeQualified(dst),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (f.exists(dst)) f.delete(dst, false)
-        if (!f.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    }
+    if (!f.rename(tmp, dst))
+      throw new java.io.IOException(s"rename $tmp -> $dst failed")
   }
 
   def deleteRecursive(dir: String, name: String): Unit = {

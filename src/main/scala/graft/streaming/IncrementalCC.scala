@@ -213,7 +213,7 @@ object IncrementalCC {
     })
   })
 
-  def ccCommittedBatches(stateDir: String): Seq[Long] = Log.committedBatches(stateDir)
+  def ccCommittedBatches(stateDir: String): Seq[Long] = PersistedDeltas.committedBatches(stateDir)
 
   def ccCompactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
@@ -248,10 +248,9 @@ object IncrementalCC {
 
   /** The per-batch persisted-state body of a composed driver
     * ([[IncrementalLinkage.run]]'s `entityStateDir`): fold the batch's edges
-    * and commit the O(delta) remap/fresh deltas, compacting on cadence.
-    * Deterministic given the same prior state, so a re-delivered batch
-    * (caller's checkpoint crashed mid-commit) overwrites its own dirs
-    * byte-compatibly. */
+    * and commit the O(delta) remap/fresh deltas, compacting on cadence. A
+    * re-delivered batch (the caller's checkpoint crashed mid-commit) writes
+    * only if its manifest is missing, from the same prior state. */
   private[streaming] def persistCcStep(sp: SparkSession, stateDir: String, batchId: Long,
       edges: DataFrame, stringIds: Boolean, compactEvery: Int): Unit =
     Log.persistStep(sp, stateDir, batchId, compactEvery, empties(sp, stringIds))(

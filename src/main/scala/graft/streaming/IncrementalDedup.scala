@@ -297,10 +297,10 @@ object IncrementalDedup {
   private def emptyInput(spark: SparkSession, family: Family): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](), family.input)
 
-  /** Committed batches of a state dir written by [[run]] for `family`. */
-  def committedBatches(family: Family, stateDir: String): Seq[Long] =
-    store(family).committedBatches(stateDir)
+  /** Committed plain-delta batches of a state dir written by [[run]]. */
+  def committedBatches(stateDir: String): Seq[Long] = PersistedDeltas.committedBatches(stateDir)
 
+  /** Committed compaction base batches of a state dir written by [[run]]. */
   def compactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
   /** Accumulated state before `beforeBatch`: the latest compaction base

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Dedup, Linkage, Scoring}
+import graft.operators.{Linkage, Scoring}
 
 /** Incremental linkage over a stream of page micro-batches: each batch
   * re-pairs and re-scores ONLY the blocks it touches, carrying every other
@@ -93,10 +93,10 @@ object IncrementalLinkage {
       parts.map(_(2)).reduce(_ unionByName _).distinct())
   })
 
-  /** Batch ids with a fully committed delta, ascending. */
-  def committedBatches(stateDir: String): Seq[Long] = Log.committedBatches(stateDir)
+  /** Committed plain-delta batches still present, ascending. */
+  def committedBatches(stateDir: String): Seq[Long] = PersistedDeltas.committedBatches(stateDir)
 
-  /** Committed compaction markers, ascending. */
+  /** Committed compaction base batches, ascending. */
   def compactions(stateDir: String): Seq[Long] = PersistedDeltas.compactions(stateDir)
 
   /** Accumulated prepared state before `beforeBatch`: prepared rows are
@@ -134,29 +134,28 @@ object IncrementalLinkage {
   def run(spark: SparkSession, inDir: String, stateDir: String,
           checkpoint: String, cfg: Linkage.Config = Linkage.Config(),
           compactEvery: Int = 8,
-          entityStateDir: Option[String] = None): StreamingQuery =
+          entityStateDir: Option[String] = None): StreamingQuery = {
+    entityStateDir.foreach(PersistedDeltas.checkLayout)
     Log.run(StreamingIngest.readPages(spark, inDir), stateDir, checkpoint, compactEvery,
       sp => {
         val prepared = Linkage.prepare(emptyPages(sp), cfg)
         Seq(prepared, emptyScored(sp), prepared.select("block_key"))
       },
-      andThen = (sp, batchId) => entityStateDir.foreach { ccDir =>
+      andThen = (sp, batchId, frames) => entityStateDir.foreach { ccDir =>
         // the CC fold sees only this batch's re-scored matches: old matches
         // of untouched blocks are already in the assignment, and a touched
-        // block's re-emitted matches are idempotent no-ops. The edges are
-        // read back from the plain scored delta JUST written — the fold
-        // evaluates its edge input several times, and re-running the
-        // touched-block re-scoring per evaluation would multiply the hot path.
+        // block's re-emitted matches are idempotent no-ops. The edges come
+        // from the batch's persisted scored delta, so the fold's several
+        // evaluations of its edge input re-run no touched-block re-scoring.
         IncrementalCC.persistCcStep(sp, ccDir, batchId,
-          Log.readDelta(sp, stateDir, batchId)(1)
-            .filter(col("is_match"))
+          frames(1).filter(col("is_match"))
             .select(col("url_a").as("src"), col("url_b").as("dst")),
           stringIds = true, compactEvery)
       }) { case (batch, Seq(prevPrepared, _, _)) =>
+      // persisted in role order, so the batch's prepared rows are cached
+      // before the re-scored and changed frames that read them
       val d = delta(prevPrepared, batch, cfg)
-      // the batch's prepared rows feed all three writes — cached for the
-      // micro-batch (cache matching is by analyzed plan, so the
-      // changed/rescored subtrees hit it too)
-      Seq(Dedup.trackPersist(d.bPrep), d.rescored, d.changed)
+      Seq(d.bPrep, d.rescored, d.changed)
     }
+  }
 }

@@ -1,38 +1,51 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.plans.StateFs
+import graft.plans.{Snapshots, StateFs}
 
-/** The persisted-delta state layout every streaming state shares
+/** The persisted-delta state every streaming state shares
   * ([[IncrementalDedup]]'s four families, [[IncrementalLinkage]],
   * [[IncrementalCC]]): per-batch deltas, a periodic compaction base, and GC.
-  * A module supplies its role names and how its state folds; this owns the
-  * directory names, the commit order and the crash argument.
+  * A batch commits by a manifest written last, with the codec and writer of
+  * [[graft.plans.Snapshots]]. A module supplies its role names and how its
+  * state folds; this owns the layout, the commit order and the crash
+  * argument.
   *
-  * Layout of a state dir, for each role `r`:
-  *  - `r_delta_N`: batch N's plain delta. Batch N is committed once every
-  *    role dir has `_SUCCESS`; a batch missing one is ignored.
-  *  - every `compactEvery` live batches, batch N also writes the fold of the
-  *    prior state with its own delta (read back from the just-written delta
-  *    parquet, which truncates the plan) into `cbase_r_delta_N`, then
-  *    publishes the empty `compacted_N` marker LAST (tmp + rename).
-  *  - the state before batch B is `fold([latest base < B] ++ committed
-  *    deltas after it and before B)`, ascending. The base's own delta is not
-  *    live once its marker exists; before that, the older base plus the
-  *    plain deltas is the same state. So a reader between any two writes
-  *    sees the correct state, never the pre-batch rows twice.
+  * Layout: a state dir holds one `batch=N` dir per batch. Batch N writes its
+  * frame for each role `r` into `batch=N/r`, then publishes
+  * `batch=N/manifest.json` LAST (tmp + rename to a fresh name). The manifest
+  * records each role's rows and schema, and whether the batch is a
+  * compaction base. It lists no files: a stream batch is small, and its
+  * manifest's bytes count against the batch's write amplification.
+  *  - A batch is committed iff its manifest exists. Role dirs without one (a
+  *    crash mid-batch) are read by no one; the re-delivered batch overwrites
+  *    them.
+  *  - A committed batch is never rewritten. foreachBatch re-delivers a batch
+  *    whose checkpoint commit crashed: if its manifest exists it writes
+  *    nothing, but still computes its delta frames for `andThen`.
+  *  - A plain batch holds its delta. Every `compactEvery` live batches, the
+  *    batch holds the base instead: the fold of the prior state with its own
+  *    delta, and no plain delta.
+  *  - The state before batch B is `fold([latest base < B] ++ plain deltas
+  *    after it and before B)`, ascending, read with the recorded schemas (no
+  *    inference job). One rename moves a reader from the state before a
+  *    batch to the state after it, so a reader between any two writes sees a
+  *    committed state, never a batch's rows twice or half of them.
   *  - GC runs at the start of a later batch, never in the batch that wrote
-  *    the marker: foreachBatch re-delivers a batch whose commit crashed, and
-  *    re-running it needs its pre-batch inputs. It deletes the deltas up to
-  *    and including the base, then older bases, then their markers.
+  *    the base: a re-delivered base batch recomputes its delta from the
+  *    pre-batch state. It deletes each batch dir below the latest base
+  *    before the current batch, manifest first, so a half-deleted dir is
+  *    uncommitted, and it lies below the base every reader starts from.
   *
-  * An older layout fails loudly instead of loading as partial or empty
-  * state: a `r_N` full-rewrite dir (round-2 linkage), or a marker whose base
-  * dirs are incomplete (the earlier linkage and CC layouts compacted into
-  * other dirs). There is no migration.
+  * Any other non-hidden entry of a state dir fails loudly, naming the dir:
+  * the round-2 `r_N` dirs, the per-role delta, base and marker dirs of the
+  * previous engine, or anything else. There is no migration.
   *
   * @param fold the state of ascending parts, each one frame per role: a base
   *             (itself a folded state) or a delta. A single part is the state.
@@ -41,104 +54,56 @@ private[streaming] final class PersistedDeltas(roles: Seq[String],
     fold: Seq[Seq[DataFrame]] => Seq[DataFrame]) {
   import PersistedDeltas._
 
-  private def delta(role: String) = s"${role}_delta_"
-  private def base(role: String) = s"cbase_${delta(role)}"
-
-  /** Batch ids whose every role dir has `_SUCCESS`, ascending. */
-  def committedBatches(dir: String): Seq[Long] =
-    StateFs.listNames(dir).flatMap(StateFs.numericSuffix(_, delta(roles.head)))
-      .filter(b => roles.forall(r => StateFs.exists(dir, s"${delta(r)}$b/_SUCCESS")))
-      .sorted
-
-  /** The latest compaction base before `beforeBatch`, its dirs checked. */
-  private def latestBase(dir: String, beforeBatch: Long): Option[Long] = {
-    val b = compactions(dir).filter(_ < beforeBatch).lastOption
-    b.foreach { n =>
-      val missing = roles.map(r => s"${base(r)}$n")
-        .filterNot(d => StateFs.exists(dir, s"$d/_SUCCESS"))
-      if (missing.nonEmpty) throw new IllegalStateException(
-        s"state dir $dir: marker $Marker$n lacks ${missing.mkString(", ")} " +
-          "(an older state layout); refusing to load partial state")
-    }
-    b
-  }
-
-  private def read(spark: SparkSession, dir: String, prefix: String => String,
-                   b: Long): Seq[DataFrame] =
-    roles.map(r => spark.read.parquet(s"$dir/${prefix(r)}$b"))
-
-  /** Batch `b`'s plain delta frames, in role order. */
-  def readDelta(spark: SparkSession, dir: String, b: Long): Seq[DataFrame] =
-    read(spark, dir, delta, b)
-
-  /** The parts the state before `beforeBatch` folds, and how many of them
-    * are live deltas. */
-  private def parts(spark: SparkSession, dir: String,
-                    beforeBatch: Long): (Seq[Seq[DataFrame]], Int) = {
-    val b = latestBase(dir, beforeBatch)
-    val live = committedBatches(dir).filter(n => n < beforeBatch && b.forall(n > _))
-    (b.map(read(spark, dir, base, _)).toSeq ++ live.map(readDelta(spark, dir, _)),
-      live.size)
-  }
+  private def read(spark: SparkSession, dir: String, b: Batch): Seq[DataFrame] =
+    roles.map(r => spark.read.schema(b.schemas(r)).parquet(s"${batchDir(dir, b.id)}/$r"))
 
   private def folded(ps: Seq[Seq[DataFrame]]): Seq[DataFrame] =
     if (ps.size == 1) ps.head else fold(ps)
 
   /** The state before `beforeBatch`; None when nothing has committed. */
   def load(spark: SparkSession, dir: String, beforeBatch: Long): Option[Seq[DataFrame]] =
-    Some(parts(spark, dir, beforeBatch)._1).filter(_.nonEmpty).map(folded)
+    Some(live(dir, beforeBatch).map(read(spark, dir, _))).filter(_.nonEmpty).map(folded)
 
-  /** Fail on dirs of the round-2 full-rewrite layout (`r_N`). */
-  private def checkLayout(dir: String): Unit = {
-    val older = StateFs.listNames(dir)
-      .filter(n => roles.exists(r => StateFs.numericSuffix(n, s"${r}_").isDefined))
-    if (older.nonEmpty) throw new IllegalStateException(
-      s"state dir $dir holds ${older.sorted.mkString(", ")} from an older " +
-        "state layout, which this version does not read")
-  }
-
-  private def gc(dir: String, currentBatch: Long): Unit =
-    latestBase(dir, currentBatch).foreach { n =>
-      val names = StateFs.listNames(dir)
-      def below(prefixes: Seq[String], limit: Long) = names.filter(name =>
-        prefixes.exists(p => StateFs.numericSuffix(name, p).exists(_ < limit)))
-      (below(roles.map(delta), n + 1) ++ below(roles.map(base), n) ++
-        below(Seq(Marker), n)).foreach(StateFs.deleteRecursive(dir, _))
-    }
-
-  /** One batch's commit: GC, load the prior state (or `empties`), write the
-    * plain delta `deltaOf(prev)`, and on the cadence the base and marker. */
+  /** One batch: GC, load the prior state (or `empties`) and compute the
+    * delta frames `deltaOf(prev)`, each persisted once. Unless the batch is
+    * committed already, write them (or, on the cadence, the base folded from
+    * them) and publish the manifest. Returns the delta frames. */
   def persistStep(spark: SparkSession, dir: String, batchId: Long, compactEvery: Int,
-                  empties: => Seq[DataFrame])(deltaOf: Seq[DataFrame] => Seq[DataFrame]): Unit = {
-    gc(dir, batchId)
-    val (ps, live) = parts(spark, dir, batchId)
-    val prev = if (ps.isEmpty) empties else folded(ps)
-    roles.zip(deltaOf(prev)).foreach { case (r, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/${delta(r)}$batchId")
-    }
-    if (compactEvery > 0 && live + 1 >= compactEvery) {
-      roles.zip(fold(Seq(prev, readDelta(spark, dir, batchId)))).foreach { case (r, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/${base(r)}$batchId")
+                  empties: => Seq[DataFrame])(
+                  deltaOf: Seq[DataFrame] => Seq[DataFrame]): Seq[DataFrame] = {
+    val ps = live(dir, batchId)
+    ps.headOption.filter(_.base).foreach(b => gc(dir, b.id))
+    val prev = if (ps.isEmpty) empties else folded(ps.map(read(spark, dir, _)))
+    val delta = deltaOf(prev).map(Dedup.trackPersist)
+    val out = batchDir(dir, batchId)
+    if (!StateFs.exists(out, "manifest.json")) {
+      val base = compactEvery > 0 && ps.count(!_.base) + 1 >= compactEvery
+      val m = Snapshots.Json.createObjectNode().put("batch", batchId).put("base", base)
+      val tables = m.putArray("roles")
+      roles.zip(if (base) fold(Seq(prev, delta)) else delta).foreach { case (r, df) =>
+        val rows = Snapshots.writeData(df, s"$out/$r").map(_._2).sum
+        Snapshots.putTable(tables.addObject().put("role", r), rows, Some(df.schema))
       }
-      StateFs.publish(dir, s"$Marker$batchId", Array.empty[Byte])
+      Snapshots.publishManifest(out, m)
     }
+    delta
   }
 
   /** The streaming driver of every module: check `dir`'s layout, then per
-    * micro-batch commit `deltaOf(batch, prev)`, run `andThen` (a composed
-    * second state) and release Dedup's tracked caches. AvailableNow: a run
-    * consumes what is in the input and stops; the checkpoint's file ledger
-    * makes each batch exactly-once across restarts. */
+    * micro-batch commit `deltaOf(batch, prev)`, hand the delta frames to
+    * `andThen` (a composed second state) and release Dedup's tracked caches.
+    * AvailableNow: a run consumes what is in the input and stops; the
+    * checkpoint's file ledger makes each batch exactly-once across restarts. */
   def run(stream: DataFrame, dir: String, checkpoint: String, compactEvery: Int,
           empties: SparkSession => Seq[DataFrame],
-          andThen: (SparkSession, Long) => Unit = (_, _) => ())(
+          andThen: (SparkSession, Long, Seq[DataFrame]) => Unit = (_, _, _) => ())(
           deltaOf: (DataFrame, Seq[DataFrame]) => Seq[DataFrame]): StreamingQuery = {
     checkLayout(dir)
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val sp = batch.sparkSession
-        persistStep(sp, dir, batchId, compactEvery, empties(sp))(deltaOf(batch.toDF(), _))
-        andThen(sp, batchId)
+        andThen(sp, batchId,
+          persistStep(sp, dir, batchId, compactEvery, empties(sp))(deltaOf(batch.toDF(), _)))
         Dedup.releaseCaches(sp)
       }
       .option("checkpointLocation", checkpoint)
@@ -148,12 +113,54 @@ private[streaming] final class PersistedDeltas(roles: Seq[String],
 }
 
 private[streaming] object PersistedDeltas {
-  private val Marker = "compacted_"
+  private val Prefix = "batch="
 
-  /** Committed compaction markers, ascending (a `.tmp` left by a crash
-    * before the publish rename is not a marker). */
-  def compactions(dir: String): Seq[Long] =
-    StateFs.listNames(dir).flatMap(StateFs.numericSuffix(_, Marker)).sorted
+  /** A committed batch: whether it is a base, and each role's schema. */
+  private case class Batch(id: Long, base: Boolean, schemas: Map[String, StructType])
+
+  private def batchDir(dir: String, n: Long) = s"$dir/$Prefix$n"
+
+  /** Ids of `dir`'s batch dirs, committed or not, ascending. Any other
+    * non-hidden entry is of an older layout, and fails. */
+  private def batchIds(dir: String): Seq[Long] = {
+    val names = StateFs.listNames(dir).filterNot(n => n.startsWith(".") || n.startsWith("_"))
+    val other = names.filter(StateFs.numericSuffix(_, Prefix).isEmpty)
+    if (other.nonEmpty) throw new IllegalStateException(
+      s"state dir $dir holds ${other.sorted.mkString(", ")}, which this version's " +
+        s"layout (one $Prefix<N> dir per batch) does not read: an older state layout?")
+    names.flatMap(StateFs.numericSuffix(_, Prefix)).sorted
+  }
+
+  /** Fail on a state dir of an older layout before a stream starts. */
+  def checkLayout(dir: String): Unit = batchIds(dir)
+
+  private def committed(dir: String): Seq[Batch] =
+    batchIds(dir).filter(n => StateFs.exists(batchDir(dir, n), "manifest.json")).map { n =>
+      val m = Snapshots.readJson(batchDir(dir, n))
+      Batch(n, m.get("base").asBoolean, m.get("roles").asScala.map { t =>
+        t.get("role").asText -> Snapshots.schemaOf(t).get
+      }.toMap)
+    }
+
+  /** The committed batches the state before `beforeBatch` folds: the latest
+    * base before it, then the plain deltas after that base. */
+  private def live(dir: String, beforeBatch: Long): Seq[Batch] = {
+    val before = committed(dir).filter(_.id < beforeBatch)
+    before.drop(math.max(before.lastIndexWhere(_.base), 0))
+  }
+
+  /** Delete every batch dir below `base`, each manifest first. */
+  private def gc(dir: String, base: Long): Unit =
+    batchIds(dir).filter(_ < base).foreach { n =>
+      StateFs.deleteRecursive(batchDir(dir, n), "manifest.json")
+      StateFs.deleteRecursive(dir, s"$Prefix$n")
+    }
+
+  /** Committed base batches, ascending. */
+  def compactions(dir: String): Seq[Long] = committed(dir).filter(_.base).map(_.id)
+
+  /** Committed plain-delta batches still present, ascending. */
+  def committedBatches(dir: String): Seq[Long] = committed(dir).filterNot(_.base).map(_.id)
 
   /** The fold of append-only states: per role, the union of every part. */
   def union(parts: Seq[Seq[DataFrame]]): Seq[DataFrame] =

@@ -112,9 +112,11 @@ class FsStateSpec extends AnyFunSuite {
     assert(StateFs.exists(dir, "marker_1"))
     assert(!StateFs.exists(dir, "marker_1.tmp"), "tmp survived the publish rename")
     assert(StateFs.listNames(dir).contains("marker_1"))
-    // publish over an existing file replaces it
-    StateFs.publish(dir, "marker_1", "v2".getBytes)
-    assert(new String(StateFs.readBytes(dir, "marker_1")) == "v2")
+    // a published file is never rewritten: publishing over it throws,
+    // naming the file, and leaves it as it was
+    val e = intercept[java.io.IOException](StateFs.publish(dir, "marker_1", "v2".getBytes))
+    assert(e.getMessage.contains("marker_1"), e.getMessage)
+    assert(StateFs.readBytes(dir, "marker_1").isEmpty)
     // nested dir: delete recursively
     StateFs.mkdirs(s"$dir/a/b")
     StateFs.publish(s"$dir/a/b", "f", "x".getBytes)
@@ -159,7 +161,7 @@ class FsStateSpec extends AnyFunSuite {
     assert(IncrementalLinkage.committedBatches(stateDir) == Seq(2L))
     assert(IncrementalLinkage.compactions(stateDir) == Seq(1L))
     // GC removed batch 0's superseded deltas — via the FileSystem API
-    assert(!StateFs.exists(stateDir, "scored_delta_0"),
+    assert(!StateFs.exists(stateDir, "batch=0"),
       "superseded delta not garbage-collected on the URI root")
 
     val inc = IncrementalLinkage.loadScoredState(spark, stateDir)

@@ -67,7 +67,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val fam = IncrementalDedup.MinHash(threshold = 0.5)
     writeBatch(0); writeBatch(1)
     IncrementalDedup.run(spark, fam, inDir, stateDir, ckpt, compactEvery = 2).awaitTermination()
-    val afterRun1 = IncrementalDedup.committedBatches(fam, stateDir)
+    val afterRun1 = IncrementalDedup.committedBatches(stateDir)
     assert(afterRun1.nonEmpty, "no committed deltas after run 1")
     // restart with one NEW file: the checkpoint's ledger skips the consumed
     // ones; this batch crosses the compactEvery threshold and compacts
@@ -83,21 +83,20 @@ class IncrementalDedupSpec extends AnyFunSuite {
       "persisted streaming state diverged from full recompute")
     assert(st.frames.head.count() == all.count(), "sets state incomplete after resume")
     assert(IncrementalDedup.compactions(stateDir).nonEmpty, "no compaction marker")
-    // crash-window correctness (r7: marker-gated compaction base): the
-    // compaction batch writes its PLAIN delta into the delta dirs and the
-    // fold into cbase_ dirs, marker last. A reader in the window between the
-    // delta _SUCCESS and the marker (simulated by deleting the marker) must
-    // see the identical, duplication-free state from base+plain deltas.
-    val marker = IncrementalDedup.compactions(stateDir).last
-    val markerPath = java.nio.file.Paths.get(stateDir, s"compacted_$marker")
-    java.nio.file.Files.delete(markerPath)
-    val stNoMarker = IncrementalDedup.load(spark, fam, stateDir, Long.MaxValue)
-    assert(stNoMarker.pairs.except(full).count() == 0 &&
-      full.except(stNoMarker.pairs).count() == 0,
-      "pre-marker crash window state diverged (plain-union duplication?)")
-    assert(stNoMarker.frames.head.count() == all.count(),
-      "pre-marker crash window sets state duplicated or incomplete")
-    java.nio.file.Files.write(markerPath, Array.empty[Byte])
+    // crash-window correctness: the compaction batch writes only the base
+    // and commits it by its manifest. A reader before that manifest
+    // (simulated by deleting it) sees the first run's batch alone: the
+    // identical, duplication-free recompute over its two files.
+    val base = IncrementalDedup.compactions(stateDir).last
+    java.nio.file.Files.delete(java.nio.file.Paths.get(stateDir, s"batch=$base", "manifest.json"))
+    val firstRun = all.filter((col("doc_id") % 3).isin(0, 1))
+    val fullFirst = Dedup.minhashPairs(firstRun, "doc_id", "text", threshold = 0.5)
+    val stNoManifest = IncrementalDedup.load(spark, fam, stateDir, Long.MaxValue)
+    assert(stNoManifest.pairs.except(fullFirst).count() == 0 &&
+      fullFirst.except(stNoManifest.pairs).count() == 0,
+      "pre-manifest crash window state diverged from the first run's recompute")
+    assert(stNoManifest.frames.head.count() == firstRun.count(),
+      "pre-manifest crash window sets state duplicated or incomplete")
     inc.unpersist(); full.unpersist()
     Dedup.releaseCaches(spark)
   }
@@ -395,10 +394,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
         b.write.mode("append").parquet(in)
         IncrementalDedup.run(spark, c.fam, in, state, ckpt).awaitTermination()
       }
-      val dirs = new java.io.File(state).list().toSet
-      assert(dirs == roles(name).flatMap(r => Seq(s"${r}_delta_0", s"${r}_delta_1")).toSet,
-        s"$name state dir holds ${dirs.toSeq.sorted}")
-      assert(IncrementalDedup.committedBatches(c.fam, state) == Seq(0L, 1L))
+      def visible(dir: String) = new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
+      assert(visible(state) == Set("batch=0", "batch=1"),
+        s"$name state dir holds ${visible(state).toSeq.sorted}")
+      Seq("batch=0", "batch=1").foreach { b =>
+        assert(visible(s"$state/$b") == roles(name).toSet + "manifest.json",
+          s"$name $b holds ${visible(s"$state/$b").toSeq.sorted}")
+      }
+      assert(IncrementalDedup.committedBatches(state) == Seq(0L, 1L))
       val inMemory = batches.foldLeft(IncrementalDedup.empty(c.fam, c.input)) {
         (st, b) => IncrementalDedup.step(c.fam, st, b).state
       }

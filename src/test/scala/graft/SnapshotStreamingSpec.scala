@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.TestListenerBus
@@ -393,7 +395,7 @@ class SnapshotStreamingSpec extends AnyFunSuite {
 
     // per-batch WRITE is O(delta), not O(corpus): batch 1's scored delta
     // holds only its touched blocks' pairs, strictly fewer than the state
-    val d1 = spark.read.parquet(s"$stateDir/scored_delta_1").count()
+    val d1 = spark.read.parquet(s"$stateDir/batch=1/scored").count()
     val total = inc.count()
     assert(d1 < total, s"batch-1 delta ($d1) not smaller than full state ($total)")
     all.unpersist()
@@ -458,7 +460,7 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     assert(IncrementalLinkage.compactions(stateDir) == Seq(1L),
       s"expected one compaction: ${IncrementalLinkage.compactions(stateDir)}")
     // batches 0 and 1 were folded into compaction base 1 and GC'd by batch 2
-    assert(!new java.io.File(s"$stateDir/scored_delta_0").exists(),
+    assert(!new java.io.File(s"$stateDir/batch=0").exists(),
       "superseded delta not garbage-collected")
     assert(IncrementalLinkage.committedBatches(stateDir) == Seq(2L))
 
@@ -472,92 +474,217 @@ class SnapshotStreamingSpec extends AnyFunSuite {
     all.unpersist()
   }
 
+  private def copyTree(from: Path, to: Path): Unit =
+    Files.walk(from).sorted().forEach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q))
+
   test("commit boundaries: linkage, CC and MinHash dedup state at every crash point == full recompute") {
     import graft.operators.{ConnectedComponents, Dedup}
     import graft.streaming.{IncrementalCC, IncrementalDedup, IncrementalLinkage}
-    /** A streaming driver over three input batches: `run` consumes what the
-      * input dir holds, `load` reads its state frames, `full` recomputes
-      * them over some inputs, `partial` names a role dir of batch 2. */
+    /** One state dir of a driver, `sub` under its root: `load` reads its
+      * frames, `full` recomputes them over some inputs. */
+    case class State(sub: String, load: String => Seq[DataFrame],
+                     full: DataFrame => Seq[DataFrame])
+    /** A streaming driver over three input batches: `run(in, root, ckpt)`
+      * consumes what the input dir holds into its state dirs under `root`. */
     case class Driver(name: String, inputs: Seq[DataFrame],
-                      run: (String, String, String) => Unit,
-                      compactions: String => Seq[Long],
-                      load: String => Seq[DataFrame],
-                      full: DataFrame => Seq[DataFrame], partial: String)
+                      run: (String, String, String) => Unit, states: Seq[State])
     val scoredCols = Seq("url_a", "url_b", "score", "is_match").map(col)
     val pages = Pages.synthesize(spark, 400).toDF().persist()
+    val pageInputs = (0 to 2).map(r => pages.filter(pmod(xxhash64(col("url")), lit(3)) === r))
     val rng = new scala.util.Random(7)
     val edges = Seq.fill(180)((rng.nextLong(120), rng.nextLong(120))).grouped(60)
       .map(_.toDF("src", "dst")).toSeq
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").persist()
+    val linkageState = State("state",
+      st => Seq(IncrementalLinkage.loadPreparedState(spark, st).select("url", "block_key"),
+        IncrementalLinkage.loadScoredState(spark, st).select(scoredCols: _*)),
+      all => {
+        val p = Linkage.prepare(all)
+        Seq(p.select("url", "block_key"), Linkage.scored(p).select(scoredCols: _*))
+      })
     val drivers = Seq(
-      Driver("linkage",
-        (0 to 2).map(r => pages.filter(pmod(xxhash64(col("url")), lit(3)) === r)),
-        (in, st, ck) => IncrementalLinkage.run(spark, in, st, ck, compactEvery = 2)
-          .awaitTermination(),
-        IncrementalLinkage.compactions,
-        st => Seq(IncrementalLinkage.loadPreparedState(spark, st).select("url", "block_key"),
-          IncrementalLinkage.loadScoredState(spark, st).select(scoredCols: _*)),
-        all => {
-          val p = Linkage.prepare(all)
-          Seq(p.select("url", "block_key"), Linkage.scored(p).select(scoredCols: _*))
-        },
-        "scored_delta_2"),
+      Driver("linkage", pageInputs,
+        (in, root, ck) => IncrementalLinkage.run(spark, in, s"$root/state", ck,
+          compactEvery = 2).awaitTermination(),
+        Seq(linkageState)),
+      Driver("composed", pageInputs,
+        (in, root, ck) => IncrementalLinkage.run(spark, in, s"$root/state", ck,
+          compactEvery = 2, entityStateDir = Some(s"$root/cc")).awaitTermination(),
+        Seq(linkageState, State("cc",
+          st => Seq(IncrementalCC.loadAssign(spark, st, Long.MaxValue, stringIds = true)
+            .select("id", "component")),
+          all => Seq(ConnectedComponents.run(Linkage.scored(Linkage.prepare(all))
+            .filter(col("is_match")).select(col("url_a").as("src"), col("url_b").as("dst")))
+            .select("id", "component"))))),
       Driver("cc", edges,
-        (in, st, ck) => IncrementalCC.run(spark, in, st, ck, compactEvery = 2)
+        (in, root, ck) => IncrementalCC.run(spark, in, s"$root/state", ck, compactEvery = 2)
           .awaitTermination(),
-        IncrementalCC.ccCompactions,
-        st => Seq(IncrementalCC.loadAssign(spark, st, Long.MaxValue).select("id", "component")),
-        all => Seq(ConnectedComponents.run(all).select("id", "component")),
-        "fresh_delta_2"),
+        Seq(State("state",
+          st => Seq(IncrementalCC.loadAssign(spark, st, Long.MaxValue).select("id", "component")),
+          all => Seq(ConnectedComponents.run(all).select("id", "component"))))),
       Driver("minhash",
         (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r)),
-        (in, st, ck) => IncrementalDedup.run(spark, IncrementalDedup.MinHash(threshold = 0.5),
-          in, st, ck, compactEvery = 2).awaitTermination(),
-        IncrementalDedup.compactions,
-        st => {
-          // frames: sets, banded, pairs
-          val s = IncrementalDedup.load(spark, IncrementalDedup.MinHash(), st, Long.MaxValue)
-          Seq(s.frames.head.select("id"), s.pairs)
-        },
-        all => Seq(Dedup.shingleSets(all, "doc_id", "text", 3).select("id"),
-          Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5)),
-        "pairs_delta_2"))
+        (in, root, ck) => IncrementalDedup.run(spark, IncrementalDedup.MinHash(threshold = 0.5),
+          in, s"$root/state", ck, compactEvery = 2).awaitTermination(),
+        Seq(State("state",
+          st => {
+            // frames: sets, banded, pairs
+            val s = IncrementalDedup.load(spark, IncrementalDedup.MinHash(), st, Long.MaxValue)
+            Seq(s.frames.head.select("id"), s.pairs)
+          },
+          all => Seq(Dedup.shingleSets(all, "doc_id", "text", 3).select("id"),
+            Dedup.minhashPairs(all, "doc_id", "text", threshold = 0.5))))))
+
+    /** The writes batch `b` made to one state dir, in order, each as a
+      * change to a copy of the dir as it was before the batch: GC (each
+      * batch dir below the base, manifest first), the role dirs in the
+      * manifest's role order, the manifest's `.tmp`, and its publish rename. */
+    def writes(before: Path, after: Path, b: Int): Seq[(String, Path => Unit)] = {
+      def ids(p: Path) = StateFs.listNames(p.toString).flatMap(StateFs.numericSuffix(_, "batch="))
+      val gc = (ids(before).toSet -- ids(after)).toSeq.sorted.flatMap { n =>
+        Seq[(String, Path => Unit)](
+          s"GC of batch=$n/manifest.json" -> { w =>
+            Files.delete(w.resolve(s"batch=$n/manifest.json"))
+            Files.deleteIfExists(w.resolve(s"batch=$n/.manifest.json.crc"))
+          },
+          s"GC of batch=$n" -> (w => deleteTree(w.resolve(s"batch=$n"))))
+      }
+      val dir = s"batch=$b"
+      val roles = Snapshots.readJson(after.resolve(dir).toString).get("roles").asScala
+        .map(_.get("role").asText).toSeq
+      gc ++ roles.map(r => s"$dir/$r" -> ((w: Path) =>
+        copyTree(after.resolve(s"$dir/$r"), w.resolve(s"$dir/$r")))) ++
+        Seq[(String, Path => Unit)](
+          s"$dir/manifest.json.tmp" -> (w =>
+            Files.copy(after.resolve(s"$dir/manifest.json"), w.resolve(s"$dir/manifest.json.tmp"))),
+          s"$dir/manifest.json" -> (w =>
+            Files.move(w.resolve(s"$dir/manifest.json.tmp"), w.resolve(s"$dir/manifest.json"))))
+    }
 
     drivers.foreach { d =>
       val root = tmpDir(s"boundary-${d.name}")
-      val (in, state, ckpt) = (s"$root/in", s"$root/state", s"$root/ckpt")
-      def batch(k: Int): Unit = {
+      val (in, ckpt) = (s"$root/in", s"$root/ckpt")
+      // each state dir as batches 0, 1 and 2 left it
+      val snaps = (0 to 2).map { k =>
         d.inputs(k).write.mode("append").parquet(in)
-        d.run(in, state, ckpt)
-      }
-      // the state loaded now equals the full recompute over the first k
-      // inputs: same rows, none twice
-      def equalsFirst(k: Int, at: String): Unit =
-        d.load(state).zip(d.full(d.inputs.take(k).reduce(_ unionByName _))).foreach {
-          case (got, want) =>
-            val (g, w) = (got.count(), want.count())
-            assert(g == w && got.except(want).isEmpty && want.except(got).isEmpty,
-              s"${d.name} $at: $g rows, the full recompute has $w")
+        d.run(in, root, ckpt)
+        d.states.map { s =>
+          val snap = Paths.get(tmpDir(s"boundary-${d.name}-${s.sub}-$k"))
+          copyTree(Paths.get(root, s.sub), snap)
+          snap
         }
-
-      batch(0); batch(1) // compactEvery = 2: batch 1 writes base 1
-      assert(d.compactions(state) == Seq(1L), d.name)
-      equalsFirst(2, "after the marker, before GC")
-      val marker = Paths.get(state, "compacted_1")
-      Files.delete(marker)
-      equalsFirst(2, "after the data writes, before the marker")
-      Files.write(marker, Array.empty[Byte])
-      // a crash between a marker's write and its rename leaves a .tmp that
-      // is never parsed as a batch
-      Files.write(Paths.get(state, "compacted_99.tmp"), Array.empty[Byte])
-      assert(d.compactions(state) == Seq(1L), d.name)
-
-      batch(2) // GCs the deltas folded into base 1
-      equalsFirst(3, "after GC")
-      Files.delete(Paths.get(state, d.partial, "_SUCCESS"))
-      equalsFirst(2, s"with ${d.partial} lacking _SUCCESS")
+      }
+      // the full recompute over the first k inputs, per state dir
+      val expected = (1 to 3).map { k =>
+        d.states.map(_.full(d.inputs.take(k).reduce(_ unionByName _)).map(_.collect()))
+      }
+      d.states.indices.foreach { i =>
+        val s = d.states(i)
+        assert(Snapshots.readJson(snaps(1)(i).resolve("batch=1").toString).get("base").asBoolean,
+          s"${d.name} ${s.sub}: batch 1 is not the base")
+        Seq(1, 2).foreach { b =>
+          val ws = writes(snaps(b - 1)(i), snaps(b)(i), b)
+          if (b == 2) assert(ws.exists(_._1.startsWith("GC")), s"${d.name} ${s.sub}: no GC")
+          (0 to ws.size).foreach { n =>
+            val work = Paths.get(tmpDir(s"boundary-${d.name}-work"))
+            copyTree(snaps(b - 1)(i), work)
+            ws.take(n).foreach(_._2(work))
+            // batch b is committed once its manifest is published, not before
+            val k = if (n == ws.size) b + 1 else b
+            val at = if (n == 0) s"before batch $b" else s"after ${ws(n - 1)._1}"
+            s.load(work.toString).zip(expected(k - 1)(i)).foreach { case (got, want) =>
+              val g = got.collect()
+              val same = g.length == want.length && g.toSet == want.toSet
+              assert(same, s"${d.name} ${s.sub} $at: ${g.length} rows, the full recompute " +
+                s"over $k inputs has ${want.length}")
+            }
+            deleteTree(work)
+          }
+        }
+      }
+      snaps.flatten.foreach(deleteTree)
     }
     pages.unpersist(); docs.unpersist()
+    graft.operators.Dedup.releaseCaches(spark)
+  }
+
+  test("job-count guard: loading a committed linkage stream state (a base and two live deltas) submits no job") {
+    import graft.streaming.IncrementalLinkage
+    val root = tmpDir("stream-jobs")
+    val (in, state, ckpt) = (s"$root/in", s"$root/state", s"$root/ckpt")
+    val pages = Pages.synthesize(spark, 200).toDF()
+    // compactEvery = 2 makes batch 1 the base; 3 keeps batches 2 and 3 live
+    Seq(2, 2, 3, 3).zipWithIndex.foreach { case (every, k) =>
+      pages.filter(pmod(xxhash64(col("url")), lit(4)) === k).write.mode("append").parquet(in)
+      IncrementalLinkage.run(spark, in, state, ckpt, compactEvery = every).awaitTermination()
+    }
+    assert(IncrementalLinkage.compactions(state) == Seq(1L))
+    assert(IncrementalLinkage.committedBatches(state) == Seq(2L, 3L))
+    // every role dir is read with the schema its batch manifest records, so
+    // no read runs a schema-inference job
+    var prepared: DataFrame = null
+    assert(jobsOf {
+      prepared = IncrementalLinkage.loadPreparedState(spark, state)
+      IncrementalLinkage.loadScoredState(spark, state)
+    } == 0)
+    assert(prepared.count() == 200)
+  }
+
+  test("composed driver: a re-delivered plain or base batch rewrites no linkage file and equals an uninterrupted run") {
+    import graft.streaming.{IncrementalCC, IncrementalLinkage}
+    val scoredCols = Seq("url_a", "url_b", "score", "is_match").map(col)
+    val pages = Pages.synthesize(spark, 300).toDF().persist()
+    val inputs = (0 to 1).map(r => pages.filter(pmod(xxhash64(col("url")), lit(2)) === r))
+    // compactEvery = 2: batch 0 is a plain delta, batch 1 the base
+    def run(root: String): Unit =
+      IncrementalLinkage.run(spark, s"$root/in", s"$root/state", s"$root/ckpt",
+        compactEvery = 2, entityStateDir = Some(s"$root/cc")).awaitTermination()
+    /** The linkage state and CC assignment after `batch`, sorted rows. */
+    def states(root: String, batch: Long): Seq[Seq[String]] = Seq(
+      IncrementalLinkage.loadPreparedState(spark, s"$root/state", batch + 1)
+        .select("url", "block_key"),
+      IncrementalLinkage.loadScoredState(spark, s"$root/state", batch + 1).select(scoredCols: _*),
+      IncrementalCC.loadAssign(spark, s"$root/cc", batch + 1, stringIds = true))
+      .map(_.collect().map(_.toString).toSeq.sorted)
+    /** Every file under `dir`, with its modification time. */
+    def mtimes(dir: Path): Map[String, Long] =
+      Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis).toMap
+
+    val clean = tmpDir("redeliver-clean")
+    inputs.foreach { df => df.write.mode("append").parquet(s"$clean/in"); run(clean) }
+    val root = tmpDir("redeliver")
+    inputs.indices.foreach { b =>
+      inputs(b).write.mode("append").parquet(s"$root/in")
+      run(root)
+      // the checkpoint lost batch b's commit; after the base batch, the
+      // crash also came before CC published its batch-b manifest
+      val commit = Paths.get(root, "ckpt", "commits", b.toString)
+      Files.delete(commit)
+      Files.deleteIfExists(Paths.get(root, "ckpt", "commits", s".$b.crc"))
+      if (b == 1) {
+        Files.delete(Paths.get(root, "cc", "batch=1", "manifest.json"))
+        Files.deleteIfExists(Paths.get(root, "cc", "batch=1", ".manifest.json.crc"))
+      }
+      val linkageBatch = Paths.get(root, "state", s"batch=$b")
+      val before = mtimes(linkageBatch)
+      run(root) // re-delivers batch b
+      assert(Files.exists(commit), s"batch $b was not re-delivered")
+      assert(mtimes(linkageBatch) == before, s"the re-delivered batch $b rewrote linkage files")
+      assert(Files.exists(Paths.get(root, "cc", s"batch=$b", "manifest.json")),
+        s"CC did not commit the re-delivered batch $b")
+      assert(states(root, b) == states(clean, b),
+        s"state after the re-delivered batch $b differs from the uninterrupted run")
+    }
+    assert(IncrementalLinkage.compactions(s"$root/state") == Seq(1L))
+    pages.unpersist()
     graft.operators.Dedup.releaseCaches(spark)
   }
 
@@ -574,37 +701,40 @@ class SnapshotStreamingSpec extends AnyFunSuite {
 
   test("a compaction marker without its cbase_ dirs fails to load; a later batch neither loads nor GCs") {
     import graft.streaming.{IncrementalCC, IncrementalLinkage}
-    val inDir = tmpDir("old-in")
-    val stateDir = tmpDir("old-state")
-    val ccDir = tmpDir("old-cc")
-    val ckpt = tmpDir("old-ckpt")
-    val all = Pages.synthesize(spark, 300).toDF().persist()
-    val parts = (0 to 2).map(r => all.filter(pmod(xxhash64(col("url")), lit(3)) === r))
-    def batch(k: Int): Unit = {
-      parts(k).write.mode("append").parquet(inDir)
-      IncrementalLinkage.run(spark, inDir, stateDir, ckpt, compactEvery = 2,
-        entityStateDir = Some(ccDir)).awaitTermination()
+    val root = tmpDir("old-layout")
+    val (inDir, stateDir, ccDir) = (s"$root/in", s"$root/state", s"$root/cc")
+    // the previous engine's layout, written by hand: per-role delta dirs with
+    // _SUCCESS for batches 0 and 1, and a compacted_1 marker over state kept
+    // elsewhere (as the earlier linkage and CC layouts had it): no cbase_ dirs
+    def previousLayout(dir: String, roles: Seq[String]): Unit = {
+      for (r <- roles; b <- 0 to 1) Seq((b, r)).toDF("b", "r").write.parquet(s"$dir/${r}_delta_$b")
+      Files.write(Paths.get(dir, "compacted_1"), Array.empty[Byte])
     }
-    batch(0); batch(1)
-    // the earlier linkage and CC layouts published compacted_1 over state
-    // kept elsewhere (the linkage delta dirs, an assign_1 dir): no cbase_ dirs
-    Seq(stateDir, ccDir).foreach { dir =>
-      val bases = new java.io.File(dir).listFiles().filter(_.getName.startsWith("cbase_"))
-      assert(bases.nonEmpty, dir)
-      bases.foreach(b => Files.walk(b.toPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p)))
-    }
-    Seq[() => Any](() => IncrementalLinkage.loadPreparedState(spark, stateDir),
-        () => IncrementalLinkage.loadScoredState(spark, stateDir),
-        () => IncrementalCC.loadAssign(spark, ccDir, Long.MaxValue, stringIds = true))
-      .foreach { load =>
+    previousLayout(stateDir, Seq("prepared", "scored", "changed"))
+    previousLayout(ccDir, Seq("remap", "fresh"))
+    def listing(dir: String): Set[String] =
+      Files.walk(Paths.get(dir)).iterator().asScala.map(_.toString).toSet
+    val before = Seq(stateDir, ccDir).map(listing)
+    Seq[(String, () => Any)](
+        stateDir -> (() => IncrementalLinkage.loadPreparedState(spark, stateDir)),
+        stateDir -> (() => IncrementalLinkage.loadScoredState(spark, stateDir)),
+        ccDir -> (() => IncrementalCC.loadAssign(spark, ccDir, Long.MaxValue, stringIds = true)))
+      .foreach { case (dir, load) =>
         val e = intercept[IllegalStateException](load())
-        assert(e.getMessage.contains("compacted_1"), e.getMessage)
+        assert(e.getMessage.contains(dir) && e.getMessage.contains("compacted_1"), e.getMessage)
       }
-    intercept[Exception](batch(2))
-    assert(IncrementalLinkage.committedBatches(stateDir) == Seq(0L, 1L),
+    Pages.synthesize(spark, 100).toDF().write.parquet(inDir)
+    intercept[IllegalStateException](IncrementalLinkage.run(spark, inDir, stateDir,
+      s"$root/ckpt", compactEvery = 2, entityStateDir = Some(ccDir)))
+    // an entity dir of the previous layout fails the composed driver before
+    // its first batch, under a fresh linkage state dir too
+    val fresh = s"$root/fresh-state"
+    val e = intercept[IllegalStateException](IncrementalLinkage.run(spark, inDir, fresh,
+      s"$root/ckpt-fresh", compactEvery = 2, entityStateDir = Some(ccDir)))
+    assert(e.getMessage.contains(ccDir), e.getMessage)
+    assert(!Files.exists(Paths.get(fresh)), "the composed driver wrote linkage state")
+    assert(Seq(stateDir, ccDir).map(listing) == before,
       "a batch ran GC over a layout it cannot read")
-    all.unpersist()
   }
 
   test("snapshot commit of a zero-row frame: manifest rows = 0, schema kept, resumes empty") {
