@@ -64,76 +64,31 @@ object BenchExtra {
     t("dedup_bow.full") { noop(SparkEntry.queries("q_dedup_bow")(spark, sfDir)) }
 
     // ---- ngram jaccard phases ----
+    // the operator's own state: the cached unfiltered sets, nsh > 0 on top
+    def ngramSets = graft.operators.Dedup.trackPersist(
+      graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)).filter(col("nsh") > 0)
     t("ngram.sets") {
       noop(graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
         .filter(col("nsh") > 0))
     }
     t("ngram.full") { noop(SparkEntry.queries("q_ngram_jaccard")(spark, sfDir)) }
-    // finer phase split: freq aggregate / prefix relation / candidates
-    t("ngram.freq") {
-      val sets = graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
-        .filter(col("nsh") > 0)
-      val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      noop(exploded.groupBy("shingle").agg(count(lit(1)).as("f")))
-    }
+    // finer phase split: prefix relation (frequency count + rank) / candidates
     t("ngram.prefix") {
-      val sets = graft.operators.Dedup.trackPersist(
-        graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
-          .filter(col("nsh") > 0))
-      val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("f"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("f"), col("shingle"))
-      noop(exploded.join(freq, "shingle")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
-        .select(col("shingle"), col("id"), col("nsh"), col("rk")))
-    }
-    t("ngram.prefix_windowf") {
-      // A/B: attach f via count() over (partition by shingle) — one exchange
-      // by shingle instead of the freq aggregate + join re-exchange
-      val sets = graft.operators.Dedup.trackPersist(
-        graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
-          .filter(col("nsh") > 0))
-      val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      val wf = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("f"), col("shingle"))
-      noop(exploded.withColumn("f", count(lit(1)).over(wf))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
-        .select(col("shingle"), col("id"), col("nsh"), col("rk")))
+      noop(graft.operators.Dedup.frequencyOrderedPrefix(ngramSets, 0.8))
     }
     t("ngram.cand") {
-      val sets = graft.operators.Dedup.trackPersist(
-        graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
-          .filter(col("nsh") > 0))
-      val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("f"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("f"), col("shingle"))
-      val prefix = graft.operators.Dedup.trackPersist(exploded.join(freq, "shingle")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
-        .select(col("shingle"), col("id"), col("nsh"), col("rk")))
+      val prefix = graft.operators.Dedup.trackPersist(
+        graft.operators.Dedup.frequencyOrderedPrefix(ngramSets, 0.8))
       noop(graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000))
     }
 
     t("ngram.counts") {
-      val sets = graft.operators.Dedup.trackPersist(
-        graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3)
-          .filter(col("nsh") > 0))
-      val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-      val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("f"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("f"), col("shingle"))
-      val prefix = graft.operators.Dedup.trackPersist(exploded.join(freq, "shingle")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= col("nsh") - ceil(col("nsh") * 0.8) + 1)
-        .select(col("shingle"), col("id"), col("nsh"), col("rk")))
+      val sets = ngramSets
+      val prefix = graft.operators.Dedup.trackPersist(
+        graft.operators.Dedup.frequencyOrderedPrefix(sets, 0.8))
       val cand = graft.operators.Dedup.trackPersist(
         graft.operators.Dedup.ppjoinCandidates(prefix, 0.8, 1000))
-      val nSets = sets.count(); val nExpl = exploded.count()
+      val nSets = sets.count(); val nExpl = sets.select(explode(col("sh"))).count()
       val nPrefix = prefix.count(); val nCand = cand.count()
       val nCandIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("id"))
         .distinct().count()

@@ -324,7 +324,7 @@ object Dedup {
     * in a global order. Ordering by ascending corpus frequency makes prefixes
     * the RAREST shingles, so candidate buckets stay tiny even when every
     * document has the same length (a length-bucket scheme degenerates to
-    * all-pairs there).
+    * all-pairs there). The prefix relation is [[frequencyOrderedPrefix]].
     *
     * Beyond the prefix filter this applies the two standard PPJoin prunes
     * BEFORE verification: the size filter (min/max ≥ t) and the POSITIONAL
@@ -335,30 +335,27 @@ object Dedup {
     * minimizes BOTH ranks — min(ra)/min(rb) come from the same row and the
     * bound is sound. Verification then intersects each surviving pair's two
     * sets in-row ([[verifiedJaccard]]); the prefix self-join itself carries
-    * only (shingle, id, nsh, rk), no arrays. */
+    * only (shingle, id, nsh, rk), no arrays.
+    *
+    * The persisted state is the UNFILTERED [[shingleSets]] relation, the same
+    * plan [[minhashPairs]] persists: after a MinHash call on the same input
+    * this operator reads MinHash's cache instead of building a second one,
+    * and the `nsh > 0` domain filter runs over the cached rows (a filter
+    * inside the cached plan would be pushed into the scan, where it builds
+    * every document's shingles a second time). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
                         maxBucket: Int = 1000): DataFrame = {
     // prefix filtering is complete only for threshold > 0: a pair sharing
     // no shingle has Jaccard 0 and never meets in a prefix bucket
     require(threshold > 0, "ngramJaccardPairs: threshold must be > 0")
-    val sets = trackPersist(
-      shingleSets(df, idCol, textCol, n).filter(col("nsh") > 0))
+    val sets = trackPersist(shingleSets(df, idCol, textCol, n)).filter(col("nsh") > 0)
 
-    // global shingle frequency → total order (freq asc, shingle asc)
-    val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
-    val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("f"))
-
-    // rank shingles within each doc by (f, shingle); keep the prefix.
-    // PERSISTED: the prefix relation (freq join + rank window) is the most
-    // expensive subtree here and feeds the salted join's hot probe plus both
-    // join sides — recomputing it per consumer tripled the query.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("f"), col("shingle"))
-    val prefix = trackPersist(exploded.join(freq, "shingle")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= col("nsh") - ceil(col("nsh") * threshold) + 1)
-      .select(col("shingle"), col("id"), col("nsh"), col("rk")))
+    // PERSISTED: the prefix relation (frequency aggregate, join back, rank
+    // window) is the most expensive subtree here and feeds the salted join's
+    // hot probe plus both join sides — recomputing it per consumer tripled
+    // the query.
+    val prefix = trackPersist(frequencyOrderedPrefix(sets, threshold))
 
     verifiedJaccard(ppjoinCandidates(prefix, threshold, maxBucket), sets)
       .filter(col("jaccard") >= threshold)
@@ -394,6 +391,40 @@ object Dedup {
       .filter(sizeRatioAtLeast(threshold))
       .filter(lit(1) + least(col("nsh_a") - col("ra"), col("nsh_b") - col("rb")) >= alpha)
       .select("id_a", "id_b")
+  }
+
+  /** Prefix rows (shingle, id, nsh, rk) under the corpus-FREQUENCY total
+    * order: shingles rank within each document by (f, shingle) ascending,
+    * and each document keeps its first `nsh - ceil(nsh·t) + 1`.
+    *
+    * `f` is counted per 8-byte `xxhash64(shingle)` key, not per shingle
+    * string: the aggregate exchange moves (long, count) rows and the join
+    * back builds a long-keyed relation, instead of shuffling and hashing
+    * every distinct shingle. Without a 64-bit collision `f` is the exact
+    * shingle count and the rows are those of a string-keyed count. A
+    * collision only merges two shingles' counts; (f, shingle) is then still
+    * ONE fixed total order over all shingles — the string breaks every tie —
+    * and prefix filtering plus both prunes of [[ppjoinCandidates]] are
+    * complete and sound under any fixed total order. Frequency only decides
+    * how rare the prefixes are, so the verified pairs cannot change.
+    *
+    * The exploded rows keep `sets`' id partitioning. When AQE broadcasts
+    * the counts (the aggregate's measured size decides), the join back
+    * streams those rows and the rank window needs no exchange by id, so the
+    * count aggregate is the only shuffle. Long keys also shrink that
+    * broadcast relation (4.2 against 18.9 MB on perfbench's `dedup_docs`).
+    *
+    * @param sets per-id state (id, sh, nsh) with nsh > 0 */
+  private[graft] def frequencyOrderedPrefix(sets: DataFrame, threshold: Double): DataFrame = {
+    val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
+      .withColumn("key", xxhash64(col("shingle")))
+    val freq = exploded.groupBy("key").agg(count(lit(1)).as("f"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("f"), col("shingle"))
+    exploded.join(freq, "key")
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= col("nsh") - ceil(col("nsh") * threshold) + 1)
+      .select(col("shingle"), col("id"), col("nsh"), col("rk"))
   }
 
   /** Prefix rows under the CONTENT-HASH total order (xxhash64 asc, shingle

@@ -23,15 +23,13 @@ import graft.streaming.IncrementalLinkage
   * regression back to local-path-only I/O; the pre-existing bare-path suites
   * (SnapshotStreamingSpec) keep covering the local form.
   */
-class FsStateSpec extends AnyFunSuite {
+class FsStateSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   /** A temp dir addressed as a `file:` URI — java.io.File can't list this. */
   def fileUri(prefix: String): String =
-    "file:" + Files.createTempDirectory(prefix).toString
-
-  def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+    "file:" + tmpDir(prefix)
 
   test("snapshots: commit, latest, resume, metrics — all over a file: URI root") {
     val root = fileUri("fs-snap")

@@ -10,7 +10,7 @@ import graft.streaming.{IncrementalCC, IncrementalDedup}
   * stream must accumulate to EXACTLY the full-recompute assignment
   * ([[ConnectedComponents.run]] on all edges), labels included (min member).
   */
-class IncrementalCcSpec extends AnyFunSuite {
+class IncrementalCcSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -98,7 +98,7 @@ class IncrementalCcSpec extends AnyFunSuite {
   }
 
   test("streaming drive: persisted deltas + restart + compaction == full recompute") {
-    val root = java.nio.file.Files.createTempDirectory("inc_cc_stream").toString
+    val root = tmpDir("inc_cc_stream")
     val inDir = s"$root/in"; val stateDir = s"$root/state"; val ckpt = s"$root/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val rng = new scala.util.Random(42)

@@ -10,7 +10,7 @@ import graft.streaming.IncrementalDedup
 /** Incremental MinHash dedup: touched-bucket increments must accumulate to
   * EXACTLY the full-corpus [[Dedup.minhashPairs]] result (the
   * IncrementalLinkage equality pattern applied to banded LSH state). */
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   // sf0.001 documents + planted exact duplicates whose ids land in a
@@ -49,7 +49,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("streaming drive: persisted deltas + restart resume == full recompute") {
-    val root = java.nio.file.Files.createTempDirectory("inc_dedup_stream").toString
+    val root = tmpDir("inc_dedup_stream")
     val inDir = s"$root/in"; val stateDir = s"$root/state"; val ckpt = s"$root/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     def docsFull(r: Int) = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -180,7 +180,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("simhash/embed streaming drives: persisted deltas + restart == full recompute") {
-    val root = java.nio.file.Files.createTempDirectory("inc_fam_stream").toString
+    val root = tmpDir("inc_fam_stream")
     val all = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     def writeBatch(dir: String, df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -387,7 +387,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       "Ngram" -> Seq("sets", "prefix", "pairs"))
     cases.foreach { c =>
       val name = c.fam.productPrefix
-      val root = java.nio.file.Files.createTempDirectory(s"inc_layout_$name").toString
+      val root = tmpDir(s"inc_layout_$name")
       val (in, state, ckpt) = (s"$root/in", s"$root/state", s"$root/ckpt")
       val batches = (0 to 1).map(r => c.input.filter(col(c.idCol) % 2 === r))
       batches.foreach { b =>

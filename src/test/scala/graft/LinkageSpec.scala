@@ -8,7 +8,7 @@ import graft.sources.Pages
 
 /** The north-rule gates: pairwise F1 ≥ 0.99 on labeled pairs at shared
   * blocking keys; byte-identical extracted text per url; cluster sanity. */
-class LinkageSpec extends AnyFunSuite {
+class LinkageSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -203,7 +203,7 @@ class LinkageSpec extends AnyFunSuite {
         .queryExecution.optimizedPlan.collect { case j: Join => j }
       assert(joins.exists(_.condition.exists(_.references.map(_.name).toSet("__i"))),
         "the salted triangle did not run")
-      val root = java.nio.file.Files.createTempDirectory("salted-cc").toString
+      val root = tmpDir("salted-cc")
       ResumableLinkage.run(spark, small, "salted-600", root,
         StaticParser.broadcastIndex(spark), cfg).count()
       def snapshot(stage: String) = spark.read.parquet(Snapshots.dataPath(root, stage, 0))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +7,7 @@ import graft.functions.TrText
 import graft.operators.{Eval, GoldEval, Goldset, Linkage, NerOutputs, StaticParser}
 import graft.sources.{Bio, Gazetteer, Pages}
 
-class NerBioSpec extends AnyFunSuite {
+class NerBioSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -157,8 +155,8 @@ class NerBioSpec extends AnyFunSuite {
     out.unpersist()
 
     // CSV in → CSV out (E7/E8 shape)
-    val inCsv = Files.createTempDirectory("nercsv-in").toString
-    val outCsv = Files.createTempDirectory("nercsv-out").toString + "/out"
+    val inCsv = tmpDir("nercsv-in")
+    val outCsv = tmpDir("nercsv-out") + "/out"
     prep.select(col("url"), col("extracted").as("address"))
       .write.option("header", "true").mode("overwrite").csv(inCsv)
     NerOutputs.runCsv(spark, inCsv, outCsv, "address", bIdx)
@@ -189,8 +187,8 @@ class NerBioSpec extends AnyFunSuite {
     assert(withAux.entities_flat == expected)
 
     // same plumbing through the CSV surface (normalization is a no-op here)
-    val inCsv = Files.createTempDirectory("nercsv-aux-in").toString
-    val outCsv = Files.createTempDirectory("nercsv-aux-out").toString + "/out"
+    val inCsv = tmpDir("nercsv-aux-in")
+    val outCsv = tmpDir("nercsv-aux-out") + "/out"
     df.select(col("url"), col("norm").as("address"))
       .write.option("header", "true").mode("overwrite").csv(inCsv)
     NerOutputs.runCsv(spark, inCsv, outCsv, "address", bIdx, bAux = bAux)
@@ -210,8 +208,8 @@ class NerBioSpec extends AnyFunSuite {
       .select(col("url"), col("extracted").as("address"))
       .repartition(7, col("url"))
       .sortWithinPartitions(desc("address"))
-    val inCsv = Files.createTempDirectory("neralign-in").toString
-    val outCsv = Files.createTempDirectory("neralign-out").toString + "/out"
+    val inCsv = tmpDir("neralign-in")
+    val outCsv = tmpDir("neralign-out") + "/out"
     scrambled.write.option("header", "true").mode("overwrite").csv(inCsv)
     NerOutputs.runCsv(spark, inCsv, outCsv, "address", bIdx)
     val rows = spark.read.option("header", "true").csv(outCsv).collect()
@@ -237,8 +235,8 @@ class NerBioSpec extends AnyFunSuite {
     // clobbered nor positionally mis-dropped
     val pages = Pages.synthesize(spark, 30).toDF()
     val bIdx = StaticParser.broadcastIndex(spark)
-    val inCsv = Files.createTempDirectory("nernorm-in").toString
-    val outCsv = Files.createTempDirectory("nernorm-out").toString + "/out"
+    val inCsv = tmpDir("nernorm-in")
+    val outCsv = tmpDir("nernorm-out") + "/out"
     Linkage.extract(pages)
       .select(col("url"), col("extracted").as("address"),
         concat(lit("user-"), col("url")).as("__norm"))
@@ -271,7 +269,7 @@ class NerBioSpec extends AnyFunSuite {
     val again = Bio.synthesize(spark, 200).collect()
     assert(rows.map(_.raw).sameElements(again.map(_.raw)))
 
-    val dir = Files.createTempDirectory("conll").toString + "/corpus"
+    val dir = tmpDir("conll") + "/corpus"
     Bio.writeConll(ds, dir)
     val back = Bio.readConll(spark, dir).collect().sortBy(_.sample_id)
     assert(back.length == 200)

@@ -147,6 +147,28 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("frequency prefix on 64-bit keys ≡ the string-keyed prefix, row for row") {
+    // the prefix relation, not only the verified pairs: equal prefix rows
+    // give equal candidates. A boilerplate sentence in every document makes
+    // its shingles the most frequent, and the copies tie many counts.
+    val boiler = "all rights reserved terms of use apply to every page of this site"
+    val boilerplate = docs.select(col("doc_id"), concat_ws(" ", col("text"), lit(boiler)).as("text"))
+      .union(docs.limit(20).select((col("doc_id") + 100000).as("doc_id"), col("text")))
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Vector[String] =
+      df.collect().map(_.mkString("|")).toVector.sorted
+    for ((name, corpus) <- Seq("sf0.001" -> docs, "boilerplate" -> boilerplate); t <- Seq(0.8, 0.5)) {
+      val sets = Dedup.shingleSets(corpus, "doc_id", "text", 3).filter(col("nsh") > 0).persist()
+      val got = Dedup.frequencyOrderedPrefix(sets, t)
+      val want = Witnesses.frequencyOrderedPrefixByString(sets, t)
+      val (g, w) = (rowsOf(got), rowsOf(want))
+      assert(g.nonEmpty && g == w, s"$name at $t: ${g.size} prefix rows vs ${w.size} string-keyed")
+      val (gc, wc) = (rowsOf(Dedup.ppjoinCandidates(got, t, 1000)),
+        rowsOf(Dedup.ppjoinCandidates(want, t, 1000)))
+      assert(gc.nonEmpty && gc == wc, s"$name at $t: ${gc.size} candidates vs ${wc.size}")
+      sets.unpersist()
+    }
+  }
+
   test("native minhash signature ≡ Column formulation (value-identical)") {
     // The native MinHashSig expression must produce EXACTLY the signatures
     // the interpreted array/transform/hash construction produced (band

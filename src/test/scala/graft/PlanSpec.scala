@@ -10,7 +10,7 @@ import graft.sources.Pages
 /** Physical-plan shape assertions: the properties that decide whether the
   * operators survive a 100× scale-up — pushdown, broadcast selection, and
   * the absence of any quadratic join strategy. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   val sfDir = "/root/testdata/sf0.001"
@@ -51,7 +51,7 @@ class PlanSpec extends AnyFunSuite {
       // and a static plan so the Exchange assertion reads the real layout
       sqlc.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       sqlc.set("spark.sql.adaptive.enabled", "false")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed_spec").toString
+      val tmp = tmpDir("graft_bucketed_spec")
       val left = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_quantity")
       val right = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -97,7 +97,7 @@ class PlanSpec extends AnyFunSuite {
         case w: InsertIntoHadoopFsRelationCommand
           if w.outputPath.toString.contains("/components/snap=") => (qe, w)
       }).nextOption()
-    val root = java.nio.file.Files.createTempDirectory("graft_components_plan").toString
+    val root = tmpDir("graft_components_plan")
     spark.listenerManager.register(listener)
     try {
       graft.plans.ResumableLinkage.run(spark, Pages.synthesize(spark, 300).toDF(),
@@ -259,6 +259,44 @@ class PlanSpec extends AnyFunSuite {
       assert(explodes.isEmpty, s"$name explodes the shingle sets:\n$p")
       assert(p.collect { case u: Union => u }.isEmpty, s"$name plan has a Union:\n$p")
     }
+  }
+
+  test("n-gram frequency pass counts on a 64-bit key and reads MinHash's shingle-set cache") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cm = session.sharedState.cacheManager
+    Dedup.minhashPairs(docs, "doc_id", "text")
+    val ng = Dedup.ngramJaccardPairs(docs, "doc_id", "text").queryExecution.optimizedPlan
+    def cachedAs(df: DataFrame): Boolean =
+      cm.lookupCachedData(session, df.queryExecution.analyzed).isDefined
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
+    val (setsCached, filteredCached) = (cachedAs(sets), cachedAs(sets.filter(col("nsh") > 0)))
+    // the plans the read cached relations were optimized to (the prefix
+    // relation is one), each relation once
+    val cached = ng.collect { case r: InMemoryRelation => (r.cacheBuilder: AnyRef, r.cacheBuilder.logicalPlan) }
+      .foldLeft(List.empty[(AnyRef, LogicalPlan)])((seen, c) =>
+        if (seen.exists(_._1 eq c._1)) seen else c :: seen)
+    val aggs = (ng +: cached.map(_._2)).flatMap(_.collect { case a: Aggregate => a })
+    Dedup.releaseCaches(spark)
+
+    val freq = aggs.filter(_.aggregateExpressions.exists(_.name == "f"))
+    assert(freq.size == 1, s"${freq.size} frequency aggregates:\n${freq.mkString("\n")}")
+    val keys = freq.head.groupingExpressions
+    assert(keys.size == 1 && keys.head.dataType == LongType,
+      s"frequency aggregate groups by $keys, not one long key")
+    val byShingle = aggs.filter(_.groupingExpressions.exists(e =>
+      e.dataType == StringType && e.references.exists(_.name == "shingle")))
+    assert(byShingle.isEmpty, s"an aggregate groups by the shingle string: $byShingle")
+
+    // after minhashPairs on the same docs, one cached shingle-set relation
+    // serves both operators: n-gram's nsh > 0 filter reads MinHash's cache
+    // instead of caching its own copy on top of it
+    assert(setsCached && !filteredCached,
+      s"shingleSets cached: $setsCached; its nsh > 0 filter cached too: $filteredCached")
   }
 
   test("incremental dedup deltas inherit the banded-join plan properties") {

@@ -16,12 +16,9 @@ import graft.plans.{Resumable, ResumableLinkage, Snapshots, StateFs}
 import graft.sources.Pages
 import graft.streaming.StreamingIngest
 
-class SnapshotStreamingSpec extends AnyFunSuite {
+class SnapshotStreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("snapshot commit/read/latest + atomic manifest") {
     val root = tmpDir("snaps")
@@ -480,10 +477,6 @@ class SnapshotStreamingSpec extends AnyFunSuite {
       if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
     }
 
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q))
-
   test("commit boundaries: linkage, CC and MinHash dedup state at every crash point == full recompute") {
     import graft.operators.{ConnectedComponents, Dedup}
     import graft.streaming.{IncrementalCC, IncrementalDedup, IncrementalLinkage}
@@ -554,7 +547,7 @@ class SnapshotStreamingSpec extends AnyFunSuite {
             Files.delete(w.resolve(s"batch=$n/manifest.json"))
             Files.deleteIfExists(w.resolve(s"batch=$n/.manifest.json.crc"))
           },
-          s"GC of batch=$n" -> (w => deleteTree(w.resolve(s"batch=$n"))))
+          s"GC of batch=$n" -> (w => TempDirs.deleteRecursively(w.resolve(s"batch=$n"))))
       }
       val dir = s"batch=$b"
       val roles = Snapshots.readJson(after.resolve(dir).toString).get("roles").asScala
@@ -605,11 +598,11 @@ class SnapshotStreamingSpec extends AnyFunSuite {
               assert(same, s"${d.name} ${s.sub} $at: ${g.length} rows, the full recompute " +
                 s"over $k inputs has ${want.length}")
             }
-            deleteTree(work)
+            TempDirs.deleteRecursively(work)
           }
         }
       }
-      snaps.flatten.foreach(deleteTree)
+      snaps.flatten.foreach(TempDirs.deleteRecursively)
     }
     pages.unpersist(); docs.unpersist()
     graft.operators.Dedup.releaseCaches(spark)

@@ -12,8 +12,9 @@ import graft.operators.{Scoring, ScoredPair}
   *
   * Most are interpreted higher-order-function (HOF) Column chains that the
   * native one-scan expressions made redundant; `bagOfWordsColumns` is the
-  * join formulation of `Dedup.bagOfWords`, and [[score]] is the typed
-  * `mapPartitions` form of `Scoring.scoreDF`. */
+  * join formulation of `Dedup.bagOfWords`, `frequencyOrderedPrefixByString`
+  * the string-keyed frequency pass of `Dedup.frequencyOrderedPrefix`, and
+  * [[score]] is the typed `mapPartitions` form of `Scoring.scoreDF`. */
 object Witnesses {
 
   // ----------------------------- TextFunctions ------------------------------
@@ -82,6 +83,20 @@ object Witnesses {
     array((0 until numHashes).map { i =>
       array_min(transform(safe, s => hash(s, lit(i)).cast("long")))
     }: _*)
+  }
+
+  /** Twin of `Dedup.frequencyOrderedPrefix`: the string-keyed frequency
+    * pass it replaced, counting `f` per distinct shingle string and joining
+    * the counts back on the string. */
+  def frequencyOrderedPrefixByString(sets: DataFrame, threshold: Double): DataFrame = {
+    val exploded = sets.select(col("id"), col("nsh"), explode(col("sh")).as("shingle"))
+    val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("f"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("f"), col("shingle"))
+    exploded.join(freq, "shingle")
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= col("nsh") - ceil(col("nsh") * threshold) + 1)
+      .select(col("shingle"), col("id"), col("nsh"), col("rk"))
   }
 
   /** Twin of `Dedup.cosine`. */
