@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextFunctions, TrText}
+import graft.functions.{TextFunctions, TrNormalize, TrText}
 import graft.operators._
 import graft.sources.{Gazetteer, Pages}
 
@@ -70,7 +70,9 @@ object Queries {
     * (session, dir) and re-written when either table has been dropped:
     * returns the (orders, lineitem) catalog table names.
     * Names and paths derive from the sanitized dir string, so distinct data
-    * dirs can never collide (the former `math.abs(dir.hashCode)` could). */
+    * dirs can never collide (the former `math.abs(dir.hashCode)` could).
+    * The files live under the context's `SparkFiles` root, which Spark
+    * deletes when the context stops. */
   private val bucketedCache = new SessionMemo[String, (String, String)]()
 
   private def bucketedFor(s: SparkSession, dir: String): (String, String) = {
@@ -82,7 +84,7 @@ object Queries {
     if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) bucketedCache.remove(s, dir)
     bucketedCache.getOrElseUpdate(s, dir) {
       implicit val sp: SparkSession = s
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$tag"
+      val tmp = s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_bucketed_$tag"
       graft.plans.Bucketed.writeBucketed(
         t(dir, "orders").select("o_orderkey", "o_custkey"),
         ot, s"$tmp/orders", 8, Seq("o_orderkey"))
@@ -117,7 +119,7 @@ object Queries {
     "q_norm_punct" -> ((s, dir) => {
       implicit val sp = s
       t(dir, "customer").select(col("c_custkey"),
-        TrText.normalizePunctOnly(col("c_name")).as("norm"))
+        TrNormalize.punct(col("c_name")).as("norm"))
         .orderBy("c_custkey")
     }),
     "q_tr_lower" -> ((s, dir) => {
@@ -130,7 +132,7 @@ object Queries {
       // no DuckDB oracle — lookbehind/lookahead regexes are not RE2-able)
       implicit val sp = s
       sortedOnce(Pages.synthesize(s, math.min(pagesFor(dir), 6000L)).toDF()
-        .select(col("url"), TrText.normalizeFull(col("text")).as("norm")), "url")
+        .select(col("url"), TrNormalize.full(col("text")).as("norm")), "url")
     }),
 
     // --- string similarity (scoring family) ---
@@ -395,7 +397,7 @@ object Queries {
     //     eval (V2) — rows-only ---
     "q_ner_outputs" -> ((s, dir) => {
       val prep = Linkage.extract(Pages.synthesize(s, math.min(pagesFor(dir), 6000L)).toDF())
-        .withColumn("norm", graft.functions.TrText.normalizeStatic(col("extracted")))
+        .withColumn("norm", TrNormalize.static(col("extracted")))
       NerOutputs.process(prep, "url", "norm", StaticParser.broadcastIndex(s)).toDF()
         .select("url", "pred_tags", "entities_flat").orderBy("url")
     }),

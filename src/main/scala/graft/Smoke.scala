@@ -11,13 +11,13 @@ object Smoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = Sessions.local("graft-smoke", "8")
 
-    import graft.functions.TrText
+    import graft.functions.TrNormalize
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val out = docs.select(
       col("doc_id"),
-      TrText.normalizeFull(col("text")).as("norm_full"),
-      TrText.normalizeStatic(col("text")).as("norm_static"))
+      TrNormalize.full(col("text")).as("norm_full"),
+      TrNormalize.static(col("text")).as("norm_static"))
     out.show(5, 60)
     out.explain("formatted")
 
@@ -29,8 +29,8 @@ object Smoke {
       "B3Blok izmir2 3atatürk"))(org.apache.spark.sql.Encoders.STRING)
       .toDF("addr")
     addrs.select(col("addr"),
-        TrText.normalizeFull(col("addr")).as("full"),
-        TrText.normalizeStatic(col("addr")).as("static"))
+        TrNormalize.full(col("addr")).as("full"),
+        TrNormalize.static(col("addr")).as("static"))
       .show(false)
 
     // Gazetteer-constrained hierarchical parse (broadcast index + kernel).

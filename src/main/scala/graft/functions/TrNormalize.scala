@@ -7,18 +7,13 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The full Turkish normalization pipelines as ONE native codegen'd
-  * expression.
+/** The Turkish normalization pipelines as ONE native codegen'd expression:
+  * the Column form of the [[TrText]] kernels, and the only one.
   *
-  * Why this exists alongside the composed-builtins forms in [[TrText]]: the
-  * composed chain is ~25 nested `regexp_replace`/`translate` calls whose
-  * generated Java lands in a single method — inside a fused stage (e.g. page
-  * synthesis → extract → normalize → block-key) that method can exceed the
-  * JVM's 64 KB limit, and Spark silently falls back to INTERPRETED eval for
-  * the whole stage (observed on the linkage hot path). This expression
-  * generates one static call; the implementation is the plain-Scala twin
-  * that the test suite locks to the Column composition on the full golden
-  * corpus and random inputs (TrTextSpec "Scala kernels agree").
+  * It generates a single static call per row, so a fused stage (e.g. page
+  * synthesis → extract → normalize → block-key) stays inside
+  * WholeStageCodegen. Interpreted eval (`nullSafeEval`) and generated code
+  * call the same [[TrNormalize.applyMode]]; null in gives null out.
   *
   * `mode` ∈ full | static | punct (N9 / N10 / N11 in SURVEY.md §2.1). */
 case class TrNormalize(child: Expression, mode: String) extends UnaryExpression {

@@ -1,19 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{lower, translate}
 
-/** Turkish address-text normalization as pure Catalyst Column functions.
+/** Turkish address-text normalization: the reference's `AddressNormalizer`
+  * (src/address_matching/normalization/normalize_address.py) as plain-Scala
+  * kernels over precompiled `java.util.regex` patterns.
   *
-  * Re-expresses the reference's `AddressNormalizer`
-  * (src/address_matching/normalization/normalize_address.py) Spark-first:
-  * everything except NFKC (see [[Nfkc]]) is composed from built-in,
-  * whole-stage-codegen'd functions (`regexp_replace`, `translate`, `lower`),
-  * so Catalyst constant-folds the patterns and fuses the whole chain into one
-  * codegen stage — no UDFs, no per-row interpretation.
+  * The three pipelines `normalizeFullS` / `normalizeStaticS` /
+  * `normalizePunctOnlyS` (N9 / N10 / N11, SURVEY.md §2.1) are the one
+  * implementation: Catalyst callers reach them through the codegen'd
+  * [[TrNormalize]] expression, and `mapPartitions` kernels (parser, NER,
+  * synthesizers) call them directly. Their reference is the executed
+  * reference itself: 40 ported goldens (TrTextSpec) and a 3,000-case fuzz
+  * (ReferenceDifferentialSpec). The reference's user-supplied extra rules
+  * (N8) have no caller here and are not carried.
   *
   * All three pipelines are idempotent by construction (ref
-  * normalize_address.py:9,255,282) — asserted by ScalaCheck properties in the
+  * normalize_address.py:9,255,282) — asserted by a ScalaCheck property in the
   * test suite.
   *
   * Regex-dialect notes (Python `re` → `java.util.regex`):
@@ -30,38 +34,9 @@ object TrText {
   /** Turkish alphabetic class for number-boundary splits (ref normalize_address.py:37). */
   val TrAlpha = "A-Za-zÇĞİÖŞÜçğıöşü"
 
-  private def collapseWs(c: Column): Column = trim(regexp_replace(c, "\\s+", " "))
-
-  /** N1 `pre_normalize`: NFKC + soft spacing around `[,;:/\-._]`
-    * (ref normalize_address.py:117-136). */
-  def preNormalize(c: Column): Column = {
-    val s0 = Nfkc.nfkc(c)
-    val s1 = regexp_replace(s0, "\\s+", " ")
-    val s2 = regexp_replace(s1, "\\s*([,;:/\\-\\._])\\s*", " $1 ")
-    collapseWs(s2)
-  }
-
-  /** N2 `normalize_punctuation`: drop `.` and `,`; isolate every other Unicode
-    * punctuation (category P*) as its own token (ref normalize_address.py:139-173).
-    * Note `№` (So) and `⁄` (Sm) are NOT punctuation and pass through untouched. */
-  def punctNormalize(c: Column): Column = {
-    val s1 = regexp_replace(c, "[.,]", " ")
-    val s2 = regexp_replace(s1, "(\\p{P})", " $1 ")
-    collapseWs(s2)
-  }
-
-  /** N3 `tr_lower`: Turkish-aware lowercase — `İ→i`, `I→ı`, then Unicode lowercase
-    * (ref normalize_address.py:112-115). Never JVM default-locale `toLowerCase`. */
+  /** N3 `tr_lower` from builtins, for the DuckDB-oracled `q_tr_lower`; the
+    * pipelines use the kernel [[trLowerS]]. */
   def trLower(c: Column): Column = lower(translate(c, "İI", "iı"))
-
-  /** N4 `normalize_numbers`: split letter↔digit boundaries, e.g. `B3Blok → B 3 Blok`
-    * (ref normalize_address.py:107-108,176-187). Lookaheads keep the split
-    * non-consuming, exactly as the Python patterns do. */
-  def numberSplit(c: Column): Column = {
-    val s1 = regexp_replace(c, s"([$TrAlpha])(?=\\d)", "$1 ")
-    val s2 = regexp_replace(s1, s"(\\d)(?=[$TrAlpha])", "$1 ")
-    collapseWs(s2)
-  }
 
   /** N5 pattern: every `mahalle/mahallesi/mah./mh/mhl/mahal/…` variant
     * (ref normalize_address.py:55-70, flattened from re.VERBOSE). */
@@ -101,43 +76,6 @@ object TrText {
       "sok(?=\\.|\\b|[:/.\\-_])" +
       ")"
 
-  /** N5 apply: canonicalize neighbourhood indicator → `mah`. */
-  def canonNbhd(c: Column): Column = regexp_replace(c, NbhdPattern, "mah")
-  /** N6 apply: avenue indicator → `cad`. */
-  def canonAvenue(c: Column): Column = regexp_replace(c, AvenuePattern, "cad")
-  /** N7 apply: street indicator → `sk`. */
-  def canonStreet(c: Column): Column = regexp_replace(c, StreetPattern, "sk")
-
-  /** N8: fold user-supplied (pattern, replacement) rules in order
-    * (ref normalize_address.py:49,234-235). */
-  def extraRules(c: Column, rules: Seq[(String, String)]): Column =
-    rules.foldLeft(c) { case (acc, (p, r)) => regexp_replace(acc, p, r) }
-
-  /** N9 full pipeline `normalize` (ref normalize_address.py:212-238):
-    * NFKC → punct → tr_lower → numbers → mah → cad → sk → extra → collapse. */
-  def normalizeFull(c: Column, rules: Seq[(String, String)] = Nil): Column = {
-    val s = canonStreet(canonAvenue(canonNbhd(numberSplit(trLower(punctNormalize(preNormalize(c)))))))
-    collapseWs(extraRules(s, rules))
-  }
-
-  /** N10 `normalize_static_parser` (ref normalize_address.py:241-268):
-    * NFKC → punct → tr_lower → numbers → ASCII fold; *no* mah/cad/sk canon.
-    * Used for gazetteer keys and parser input. */
-  def normalizeStatic(c: Column): Column =
-    collapseWs(translate(numberSplit(trLower(punctNormalize(preNormalize(c)))), "ıöüğşç", "iougsc"))
-
-  /** N11 `normalize_punctuation_only` (ref normalize_address.py:270-288):
-    * NFKC → punct → numbers; case-preserving. */
-  def normalizePunctOnly(c: Column): Column =
-    collapseWs(numberSplit(punctNormalize(preNormalize(c))))
-
-  // --------------------------------------------------------------------------
-  // Plain-Scala twins of the three pipelines, for use inside mapPartitions
-  // kernels (parser, scorer, synthesizers) where a Column is not available.
-  // Kept in lockstep with the Column versions; the test suite asserts
-  // Column-vs-Scala equality on the golden corpus and random inputs.
-  // --------------------------------------------------------------------------
-
   private val ReWs = "\\s+".r
   private def jCollapse(s: String): String = ReWs.replaceAllIn(s, " ").trim
 
@@ -150,17 +88,35 @@ object TrText {
   private val ReAvenue = java.util.regex.Pattern.compile(AvenuePattern)
   private val ReStreet = java.util.regex.Pattern.compile(StreetPattern)
 
-  def preNormalizeS(s: String): String =
-    jCollapse(RePreSoften.matcher(jCollapse(NfkcUtil.normalize(s))).replaceAll(" $1 "))
+  /** `unicodedata.normalize("NFKC", text)`, allocation-free on the common
+    * already-normalized input (ref normalize_address.py:134,284). */
+  private def nfkc(s: String): String =
+    if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFKC)) s
+    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC)
 
+  /** N1 `pre_normalize`: NFKC + soft spacing around `[,;:/\-._]`
+    * (ref normalize_address.py:117-136). */
+  def preNormalizeS(s: String): String =
+    jCollapse(RePreSoften.matcher(jCollapse(nfkc(s))).replaceAll(" $1 "))
+
+  /** N2 `normalize_punctuation`: drop `.` and `,`; isolate every other Unicode
+    * punctuation (category P*) as its own token (ref normalize_address.py:139-173).
+    * Note `№` (So) and `⁄` (Sm) are NOT punctuation and pass through untouched. */
   def punctNormalizeS(s: String): String =
     jCollapse(RePunctSpace.matcher(RePunctDrop.matcher(s).replaceAll(" ")).replaceAll(" $1 "))
 
+  /** N3 `tr_lower`: Turkish-aware lowercase — `İ→i`, `I→ı`, then Unicode lowercase
+    * (ref normalize_address.py:112-115). Never JVM default-locale `toLowerCase`. */
   def trLowerS(s: String): String = s.replace('İ', 'i').replace('I', 'ı').toLowerCase(java.util.Locale.ROOT)
 
+  /** N4 `normalize_numbers`: split letter↔digit boundaries, e.g. `B3Blok → B 3 Blok`
+    * (ref normalize_address.py:107-108,176-187). Lookaheads keep the split
+    * non-consuming, exactly as the Python patterns do. */
   def numberSplitS(s: String): String =
     jCollapse(ReNumDl.matcher(ReNumLd.matcher(s).replaceAll("$1 ")).replaceAll("$1 "))
 
+  /** N9 full pipeline `normalize` (ref normalize_address.py:212-238):
+    * NFKC → punct → tr_lower → numbers → mah (N5) → cad (N6) → sk (N7) → collapse. */
   def normalizeFullS(s: String): String = {
     var x = preNormalizeS(s)
     x = punctNormalizeS(x)
@@ -186,9 +142,14 @@ object TrText {
     sb.toString
   }
 
+  /** N10 `normalize_static_parser` (ref normalize_address.py:241-268):
+    * NFKC → punct → tr_lower → numbers → ASCII fold; no mah/cad/sk canon.
+    * Used for gazetteer keys and parser input. */
   def normalizeStaticS(s: String): String =
     jCollapse(asciiFoldS(numberSplitS(trLowerS(punctNormalizeS(preNormalizeS(s))))))
 
+  /** N11 `normalize_punctuation_only` (ref normalize_address.py:270-288):
+    * NFKC → punct → numbers; case-preserving. */
   def normalizePunctOnlyS(s: String): String =
     jCollapse(numberSplitS(punctNormalizeS(preNormalizeS(s))))
 }

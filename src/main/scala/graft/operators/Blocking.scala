@@ -24,11 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object Blocking {
 
-  /** Canonical scoring/blocking text: full canon pipeline + ASCII fold, so
-    * every keyword-variant surface form collapses to the same tokens. Uses
-    * the compact [[graft.functions.TrNormalize]] expression — the composed
-    * builtin chain overflows the 64 KB method limit inside fused stages and
-    * silently de-optimizes the whole stage to interpreted eval. */
+  /** Canonical scoring/blocking text: full canon pipeline
+    * ([[graft.functions.TrNormalize]]) + ASCII fold, so every keyword-variant
+    * surface form collapses to the same tokens. */
   def blockNorm(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     translate(graft.functions.TrNormalize.full(c), "ıöüğşç", "iougsc")
 

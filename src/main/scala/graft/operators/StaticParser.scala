@@ -106,8 +106,6 @@ object StaticParser {
     * index. */
   def parse(df: DataFrame, textCol: String, bIdx: Broadcast[Gazetteer.Index]): DataFrame = {
     val normCol = "__graft_norm"
-    // compact codegen'd normalizer (the composed chain can overflow the 64 KB
-    // generated-method limit when fused with surrounding stages)
     val withNorm = df.withColumn(normCol, graft.functions.TrNormalize.static(col(textCol)))
     val inSchema = withNorm.schema
     val outSchema = StructType(df.schema.fields ++ Seq(

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TrText
+import graft.functions.{TrNormalize, TrText}
 
 /** One gazetteer row, keys pre-normalized with the static pipeline
   * (ref data/ptt_data/map.py:129-155: every key runs through
@@ -206,7 +206,7 @@ object Gazetteer {
     * empty keys, strip standalone `mah` from neighbourhoods, dedupe
     * (ref data/ptt_data/map.py:129-155,211-215, all in Catalyst columns). */
   def etl(raw: DataFrame): DataFrame = {
-    def norm(c: String) = TrText.normalizeStatic(col(c))
+    def norm(c: String) = TrNormalize.static(col(c))
     raw.select(
         norm("province").as("province"),
         norm("district").as("district"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.{Blocking, Linkage}
+import graft.operators.Linkage
 
 /** Structured-Streaming ingest for the pages table.
   *
@@ -61,13 +61,11 @@ object StreamingIngest {
       StructField("src", t), StructField("dst", t)))).parquet(dir)
   }
 
-  /** Stateless per-batch transform: extract → normalize → block key
-    * (the streaming twin of [[Linkage.prepare]]). */
+  /** Stateless per-batch transform: extract → normalize → block key, i.e.
+    * [[Linkage.prepare]] without the scorer's `canon` column (column pruning
+    * drops its computation). */
   def prepared(pages: DataFrame, cfg: Linkage.Config = Linkage.Config()): DataFrame =
-    pages.select(col("url"), col("warc_ts"),
-        regexp_extract(col("text"), cfg.extractPattern, 1).as("extracted"))
-      .withColumn("norm", Blocking.blockNorm(col("extracted")))
-      .withColumn("block_key", Blocking.blockKey(col("norm"), cfg.phonetic))
+    Linkage.prepare(pages, cfg).drop("canon")
 
   /** Stateful: per-hour per-block arrival counts with a 2-hour watermark. */
   def blockStats(prepared: DataFrame): DataFrame =

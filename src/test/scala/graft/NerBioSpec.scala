@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TrText
+import graft.functions.{TrNormalize, TrText}
 import graft.operators.{Eval, GoldEval, Goldset, Linkage, NerOutputs, StaticParser}
 import graft.sources.{Bio, Gazetteer, Pages}
 
@@ -87,7 +87,7 @@ class NerBioSpec extends AnyFunSuite with TempDirs {
   }
 
   test("aux real-gazetteer surface: walk stop, restricted probe, admin-tail retype") {
-    assume(GoldEval.realIndex.nonEmpty, "bundled PTT extract absent")
+    assert(GoldEval.realIndex.nonEmpty, "bundled PTT extract src/main/resources/graft/ref_gaz_raw.tsv.gz absent")
     assert(Gazetteer.realRows.size > 70000, s"real rows: ${Gazetteer.realRows.size}")
     def sp(text: String): Seq[(String, String)] = {
       val toks = text.split(" ")
@@ -145,7 +145,7 @@ class NerBioSpec extends AnyFunSuite with TempDirs {
   test("NER batch operator over pages + CSV roundtrip") {
     val pages = Pages.synthesize(spark, 120).toDF()
     val prep = Linkage.extract(pages)
-      .withColumn("norm", TrText.normalizeStatic(col("extracted")))
+      .withColumn("norm", TrNormalize.static(col("extracted")))
     val bIdx = StaticParser.broadcastIndex(spark)
     val out = NerOutputs.process(prep, "url", "norm", bIdx).persist()
     assert(out.count() == 120)
@@ -166,7 +166,7 @@ class NerBioSpec extends AnyFunSuite with TempDirs {
   }
 
   test("process/runCsv thread the aux closed-class index into the kernel") {
-    assume(GoldEval.realIndex.nonEmpty, "bundled PTT extract absent")
+    assert(GoldEval.realIndex.nonEmpty, "bundled PTT extract src/main/resources/graft/ref_gaz_raw.tsv.gz absent")
     val bIdx = StaticParser.broadcastIndex(spark)
     val bAux = GoldEval.realIndex.map(spark.sparkContext.broadcast(_))
     // a district only the real table knows: aux must flow through the

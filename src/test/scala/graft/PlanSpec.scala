@@ -359,6 +359,15 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val tables = spark.catalog.listTables().collect().map(_.name)
       .filter(n => n.startsWith("g_orders_b_") || n.startsWith("g_lineitem_b_"))
     assert(tables.length >= 2, s"bucketed tables not in the catalog: ${tables.toSeq}")
+    // the layout lives under the context's SparkFiles root, which Spark
+    // deletes when the context stops, not in java.io.tmpdir
+    def canon(f: java.io.File) = f.getCanonicalPath
+    val root = canon(new java.io.File(org.apache.spark.SparkFiles.getRootDirectory()))
+    tables.foreach { t =>
+      val files = spark.table(t).inputFiles.map(f => canon(new java.io.File(new java.net.URI(f))))
+      assert(files.nonEmpty && files.forall(_.startsWith(s"$root/graft_bucketed_")),
+        s"$t is not under $root: ${files.take(2).toSeq}")
+    }
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     // served from the memo without revalidation, this would name tables
     // that no longer exist and fail analysis
@@ -433,7 +442,7 @@ class PlanSpec extends AnyFunSuite with TempDirs {
   test("normalizer chain stays in one WholeStageCodegen span") {
     import org.apache.spark.sql.functions._
     val df = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(graft.functions.TrText.normalizeFull(col("text")).as("n"))
+      .select(graft.functions.TrNormalize.full(col("text")).as("n"))
     val p = plan(df)
     // '*(n)' prefixes mark WholeStageCodegen stages in toString form; the
     // whole chain must sit in stage 1 over the scan

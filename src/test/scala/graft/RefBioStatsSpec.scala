@@ -71,7 +71,7 @@ class RefBioStatsSpec extends AnyFunSuite {
   }
 
   test("A2E + F2J rate parity with the executed reference generators") {
-    assume(Files.exists(fixture), "regenerate with tools/gen_ref_bio_stats.py")
+    assert(Files.exists(fixture), "regenerate with tools/gen_ref_bio_stats.py")
     val root = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readAllBytes(fixture))
     val a2e = (0 until N).map(i => Bio.sampleOf(42L, i.toLong))

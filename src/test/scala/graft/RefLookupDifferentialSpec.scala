@@ -54,7 +54,7 @@ class RefLookupDifferentialSpec extends AnyFunSuite {
   }
 
   test("G5-G9 on the real PTT gazetteer equal the executed reference lookup API") {
-    assume(Files.exists(gazFixture) && Files.exists(lookupFixture),
+    assert(Files.exists(gazFixture) && Files.exists(lookupFixture),
       "fixtures not present; regenerate with tools/gen_ref_lookup_fixture.py")
     val gaz = realGaz().persist()
 

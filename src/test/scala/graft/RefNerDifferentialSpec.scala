@@ -63,7 +63,7 @@ class RefNerDifferentialSpec extends AnyFunSuite {
   }
 
   test("E1: tokensWithOffsets column equals the executed reference tokenizer") {
-    assume(Files.exists(fixture), "regenerate with tools/gen_ref_ner_fixture.py")
+    assert(Files.exists(fixture), "regenerate with tools/gen_ref_ner_fixture.py")
     val got = cases.map(_.text).zipWithIndex.toDF("text", "id")
       .select(col("id"), TextFunctions.tokensWithOffsets(col("text")).as("t"))
       .as[(Int, Seq[(String, Int, Int)])].collect().toMap
@@ -74,7 +74,7 @@ class RefNerDifferentialSpec extends AnyFunSuite {
   }
 
   test("E2-E4: BIO projection, entity aggregation, flat join equal the executed reference") {
-    assume(Files.exists(fixture), "regenerate with tools/gen_ref_ner_fixture.py")
+    assert(Files.exists(fixture), "regenerate with tools/gen_ref_ner_fixture.py")
     cases.foreach { c =>
       // char span → token span by the reference's any-overlap rule
       val tokenSpans = c.spans.sortBy(_.start).map { sp =>

@@ -29,7 +29,7 @@ class RefParserDifferentialSpec extends AnyFunSuite {
   val caseFixture = Paths.get("src/test/resources/ref_parse.json")
 
   test("2000-case differential vs the executed reference parser on the real PTT gazetteer") {
-    assume(Files.exists(gazFixture) && Files.exists(caseFixture),
+    assert(Files.exists(gazFixture) && Files.exists(caseFixture),
       "fixtures not present; regenerate with tools/gen_ref_parse_fixture.py")
 
     // the production loader mirrors the reference ETL (map.py:129-155): N10

@@ -18,7 +18,7 @@ class RefSuggestDifferentialSpec extends AnyFunSuite {
   val fixture = Paths.get("src/test/resources/ref_suggest.json.gz")
 
   test("300-case suggest differential vs the executed reference helper") {
-    assume(Files.exists(fixture), "regenerate with tools/gen_ref_suggest_fixture.py")
+    assert(Files.exists(fixture), "regenerate with tools/gen_ref_suggest_fixture.py")
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.readTree(new java.util.zip.GZIPInputStream(Files.newInputStream(fixture)))
     var bad = 0

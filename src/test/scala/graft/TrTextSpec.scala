@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.TrText
+import graft.functions.{TrNormalize, TrText}
 
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -119,27 +122,55 @@ class TrTextSpec extends AnyFunSuite {
     ("B3Blok izmir2 3atatürk", "b 3 blok izmir 2 3 ataturk"),
   )
 
-  private def runColumn(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                        inputs: Seq[String]): Seq[String] = {
+  private def runColumn(f: Column => Column, inputs: Seq[String]): Seq[String] = {
     inputs.toDF("s").select(f(col("s")).as("o")).as[String].collect().toSeq
   }
 
+  private val modes: Seq[(String, String => String, Column => Column)] = Seq(
+    ("full", TrText.normalizeFullS, TrNormalize.full),
+    ("static", TrText.normalizeStaticS, TrNormalize.static),
+    ("punct", TrText.normalizePunctOnlyS, TrNormalize.punct))
+
+  /** Every mode of [[TrNormalize]] on `inputs` plus a null equals its kernel
+    * (null for null), row for row, through BOTH eval paths: a DataFrame over
+    * an RDD (whole-stage codegen; over a local Seq the optimizer's
+    * `ConvertToLocalRelation` would evaluate it interpreted) and
+    * `Expression.eval`. */
+  private def assertTrNormalizeEqualsKernels(inputs: Seq[String]): Unit = {
+    val all = inputs :+ null
+    val df = spark.sparkContext.parallelize(all, 2).toDF("s")
+    for ((mode, kernel, column) <- modes) {
+      val want = all.map(in => if (in == null) null else kernel(in))
+      val out = df.select(column(col("s")))
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1) Project") && plan.contains(s"tr_normalize_$mode"),
+        s"$mode: not codegen'd:\n$plan")
+      val coded = out.as[String].collect().toSeq
+      assert(coded.length == all.length, s"$mode: ${coded.length} rows")
+      all.lazyZip(want).lazyZip(coded).foreach { (in, w, c) =>
+        assert(c == w, s"$mode: codegen != kernel on: $in")
+        val v = TrNormalize(Literal.create(in, StringType), mode).eval(InternalRow.empty)
+        assert(Option(v).map(_.toString).orNull == w, s"$mode: interpreted != kernel on: $in")
+      }
+    }
+  }
+
   test("full pipeline: 20 golden pairs (Column)") {
-    val got = runColumn(TrText.normalizeFull(_), fullGolden.map(_._1))
+    val got = runColumn(TrNormalize.full, fullGolden.map(_._1))
     fullGolden.zip(got).foreach { case ((in, exp), out) =>
       assert(out == exp, s"\n inp: $in\n got: $out\n exp: $exp")
     }
   }
 
   test("punct-only pipeline: 20 golden pairs (Column)") {
-    val got = runColumn(TrText.normalizePunctOnly, punctGolden.map(_._1))
+    val got = runColumn(TrNormalize.punct, punctGolden.map(_._1))
     punctGolden.zip(got).foreach { case ((in, exp), out) =>
       assert(out == exp, s"\n inp: $in\n got: $out\n exp: $exp")
     }
   }
 
   test("static pipeline: probe goldens (Column)") {
-    val got = runColumn(TrText.normalizeStatic, staticGolden.map(_._1))
+    val got = runColumn(TrNormalize.static, staticGolden.map(_._1))
     staticGolden.zip(got).foreach { case ((in, exp), out) =>
       assert(out == exp, s"\n inp: $in\n got: $out\n exp: $exp")
     }
@@ -147,17 +178,12 @@ class TrTextSpec extends AnyFunSuite {
 
   test("NFKC probe: ligature/№/fraction handling matches reference") {
     // Probe-verified: "ﬁne №5 ½" → full "fine no 5 1⁄2" (SURVEY.md §2.1).
-    val got = runColumn(TrText.normalizeFull(_), Seq("ﬁne №5 ½"))
+    val got = runColumn(TrNormalize.full, Seq("ﬁne №5 ½"))
     assert(got.head == "fine no 5 1⁄2")
   }
 
-  test("Scala kernels agree with Column pipelines on all goldens") {
-    val inputs = (fullGolden ++ punctGolden).map(_._1) ++ staticGolden.map(_._1)
-    for (in <- inputs) {
-      assert(TrText.normalizeFullS(in) == runColumn(TrText.normalizeFull(_), Seq(in)).head)
-      assert(TrText.normalizePunctOnlyS(in) == runColumn(TrText.normalizePunctOnly, Seq(in)).head)
-      assert(TrText.normalizeStaticS(in) == runColumn(TrText.normalizeStatic, Seq(in)).head)
-    }
+  test("Scala kernels agree with TrNormalize on all goldens (codegen and interpreted)") {
+    assertTrNormalizeEqualsKernels((fullGolden ++ punctGolden ++ staticGolden).map(_._1))
   }
 
   val addressish: Gen[String] = {
@@ -168,18 +194,9 @@ class TrTextSpec extends AnyFunSuite {
     Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, frag).map(_.mkString(" ")))
   }
 
-  test("TrNormalize expression agrees with the composed Column pipelines") {
-    import graft.functions.TrNormalize
-    val inputs = (fullGolden ++ punctGolden).map(_._1) ++ staticGolden.map(_._1)
-    val df = inputs.toDF("s")
-    def both(expr: org.apache.spark.sql.Column, comp: org.apache.spark.sql.Column) =
-      df.select(expr.as("a"), comp.as("b")).as[(String, String)].collect()
-    both(TrNormalize.full(col("s")), TrText.normalizeFull(col("s")))
-      .foreach { case (a, b) => assert(a == b) }
-    both(TrNormalize.static(col("s")), TrText.normalizeStatic(col("s")))
-      .foreach { case (a, b) => assert(a == b) }
-    both(TrNormalize.punct(col("s")), TrText.normalizePunctOnly(col("s")))
-      .foreach { case (a, b) => assert(a == b) }
+  test("TrNormalize expression agrees with the kernels in every mode and rejects bad modes") {
+    assertTrNormalizeEqualsKernels((fullGolden ++ punctGolden ++ staticGolden).map(_._1))
+    intercept[IllegalArgumentException](TrNormalize(Literal("x"), "upper"))
   }
 
   private def samples(n: Int): Seq[String] =
@@ -193,12 +210,8 @@ class TrTextSpec extends AnyFunSuite {
     }
   }
 
-  test("Scala/Column agreement (property)") {
-    val ss = samples(60)
-    val colOut = runColumn(TrText.normalizeFull(_), ss)
-    ss.zip(colOut).foreach { case (in, out) =>
-      assert(TrText.normalizeFullS(in) == out, s"drift on: $in")
-    }
+  test("Scala kernel / TrNormalize agreement (property)") {
+    assertTrNormalizeEqualsKernels(samples(60))
   }
 
   test("metaphone: published vectors, expression == kernel, codegen plan") {
