@@ -152,7 +152,7 @@ object Queries {
     "q_jaro_winkler" -> ((s, dir) => {
       implicit val sp = s
       t(dir, "part").select(col("p_partkey"),
-        round(graft.functions.JaroWinklerExpr.jaroWinkler(
+        round(graft.operators.ScoringUtil.jaroWinklerCol(
           col("p_name"), col("p_brand")), 4).as("jw")).orderBy("p_partkey")
     }),
     "q_soundex" -> ((s, dir) => {

@@ -86,9 +86,14 @@ object Smoke {
     println(s"[smoke] grouped_cc=${ConnectedComponents.runGrouped(sEdges, "block_key", validate = true).count()} " +
       s"star_cc=${ConnectedComponents.runOnStrings(sEdges.select("src", "dst")).count()} (must be equal)")
 
+    // Scratch dirs live under the context's SparkFiles root, which Spark
+    // deletes when the context stops, so a drive leaves no temp dirs behind.
+    def scratchDir(prefix: String): String = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()), prefix).toString
+
     // Bucketed co-located join: zero-Exchange join+agg on the bucket key.
     {
-      val broot = java.nio.file.Files.createTempDirectory("smoke-bucketed").toString
+      val broot = scratchDir("smoke-bucketed")
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select("l_orderkey", "l_quantity")
       val or = spark.read.parquet(s"$sfDir/orders.parquet").select("o_orderkey", "o_custkey")
       graft.plans.Bucketed.writeBucketed(li, "smoke_li_b", s"$broot/li", 4, Seq("l_orderkey"))
@@ -199,7 +204,7 @@ object Smoke {
     // watermark passes a block's quiet gap (flatMapGroupsWithState).
     {
       import graft.streaming.{BlockSessions, StreamingIngest}
-      val sroot = java.nio.file.Files.createTempDirectory("smoke-sessions").toString
+      val sroot = scratchDir("smoke-sessions")
       incAll.write.parquet(s"$sroot/in/f1")
       // one far-future page advances the watermark past every block's gap
       incAll.limit(1).withColumn("warc_ts",
@@ -220,7 +225,7 @@ object Smoke {
 
     // Resumable snapshot pipeline: run twice, second run must resume.
     import graft.plans.{ResumableLinkage, Snapshots}
-    val root = java.nio.file.Files.createTempDirectory("smoke-snaps").toString
+    val root = scratchDir("smoke-snaps")
     val bIdx2 = StaticParser.broadcastIndex(spark)
     val small = Pages.synthesize(spark, 600).toDF()
     ResumableLinkage.run(spark, small, "smoke-600", root, bIdx2).count()
@@ -231,7 +236,7 @@ object Smoke {
       s"lineage_files=${Snapshots.lineage(spark, root).count()}")
     // state management over an explicit file: FileSystem URI (the Hadoop
     // StateFs path a cluster's hdfs://s3a:// root takes)
-    val uriRoot = "file:" + java.nio.file.Files.createTempDirectory("smoke-uri").toString
+    val uriRoot = "file:" + scratchDir("smoke-uri")
     ResumableLinkage.run(spark, small, "smoke-600", uriRoot, bIdx2).count()
     println(s"[smoke] uri-rooted snapshots: committed=${
       Seq("prepared", "scored", "components", "entities")

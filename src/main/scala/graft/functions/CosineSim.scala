@@ -40,6 +40,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * The HOF shape re-enters the lambda interpreter 3×dim times per pair
   * (dot(a,b), dot(a,a), dot(b,b)); this is one fused loop.
+  *
+  * Hand-written, not a `Bridge.staticCall`: it dispatches on float vs
+  * double elements at analysis, which a static call chosen by argument
+  * class cannot do.
   */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType

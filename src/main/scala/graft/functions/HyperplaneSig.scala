@@ -20,8 +20,12 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * null-element poisoning (any null element nulls every projection, giving
   * signature 0). The HOF shape evaluates interpreted per element per plane,
   * re-entering the lambda machinery 24×dim times per row — the same cliff
-  * SimHash hit before [[SimHash64]] (BENCH.md item 6). Here: one tight
+  * SimHash hit before [[SimHashUtil.simhash]] (BENCH.md item 6). Here: one tight
   * loop, one cached per-plane seed, two int mixes per (plane, dim).
+  *
+  * Hand-written, not a `Bridge.staticCall`: it dispatches on float vs
+  * double elements at analysis, which a static call chosen by argument
+  * class cannot do.
   */
 case class HyperplaneSig(child: Expression, planes: Int) extends UnaryExpression {
   override def dataType: DataType = LongType

@@ -1,39 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Classic Metaphone (Lawrence Philips, Computer Language 7(12), 1990) as a
-  * native codegen'd Catalyst expression — the second phonetic key the north
-  * star names for blocking ("postcode prefix + phonetic street token via
-  * Soundex/Metaphone"); Spark ships only `soundex`. Encoding follows the
+  * static kernel call from Catalyst ([[MetaphoneUtil.metaphoneCol]]) — the
+  * second phonetic key the north star names for blocking ("postcode
+  * prefix + phonetic street token via Soundex/Metaphone"); Spark ships only
+  * `soundex`. Encoding follows the
   * published rule table with the Apache Commons Codec conventions (max code
   * length 4, initial-cluster exceptions, vowels kept only word-initially);
   * verified in tests against the commonly published vector set. */
-case class MetaphoneExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "metaphone"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      MetaphoneUtil.metaphone(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.MetaphoneUtil.metaphone($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): MetaphoneExpr =
-    copy(child = newChild)
-}
-
 object MetaphoneUtil {
 
-  def metaphoneCol(c: Column): Column = Bridge.column(MetaphoneExpr(Bridge.expression(c)))
+  def metaphoneCol(c: Column): Column =
+    Bridge.staticCall(this, "metaphone", StringType, Seq(c -> StringType))
+
+  def metaphone(s: UTF8String): UTF8String = UTF8String.fromString(metaphone(s.toString))
 
   private val MaxLen = 4
   private def isVowel(c: Char): Boolean = "AEIOU".indexOf(c) >= 0

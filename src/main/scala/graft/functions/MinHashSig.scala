@@ -1,15 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** MinHash signature (`numHashes` permutations) of a shingle array as a
-  * native codegen'd Catalyst expression.
+  * static kernel call from Catalyst ([[MinHashUtil.minhashSig]]).
   *
   * Value-identical to the pure-Column construction
   * `array((0 until n).map(i => array_min(transform(sh, s => hash(s, lit(i))
@@ -19,8 +18,8 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * the 64 per-permutation values are cheap int mixes of it. The Column
   * formulation instead runs 64 interpreted higher-order `transform`
   * traversals per row, each re-hashing every shingle's bytes from scratch
-  * (the same interpreted-HOF shape that cost 40× on SimHash before
-  * [[SimHash64]] — BENCH.md item 6). Here: one tight loop per row,
+  * (the same interpreted-HOF shape that cost 40× on SimHash before its
+  * native kernel — BENCH.md item 6). Here: one tight loop per row,
   * one byte-hash per shingle, 64 mins on the stack.
   *
   * A null element contributes `hashInt(i, 42)` (Spark's Murmur3Hash leaves
@@ -28,30 +27,6 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * an all-`Long.MaxValue` signature — callers guard empties the same way the
   * Column path did (substituting `array(lit(""))`).
   */
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig needs array<string>, got $t") // analysis-time, not a
-        // mid-job ClassCastException in getUTF8String
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashUtil.signature(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashUtil.signature($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 object MinHashUtil {
 
   /** One pass over the shingle array; mins for all `n` seeded permutations. */
@@ -81,5 +56,6 @@ object MinHashUtil {
   }
 
   def minhashSig(c: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSig(Bridge.expression(c), numHashes))
+    Bridge.staticCall(this, "signature", ArrayType(LongType, containsNull = false),
+      Seq(c -> ArrayType(StringType), lit(numHashes) -> IntegerType))
 }

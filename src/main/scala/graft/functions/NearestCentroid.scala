@@ -31,6 +31,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * Catalyst folds out of the literal-array shape). The centroid matrix is a
   * constructor value, shipped with the serialized expression exactly like
   * the literal array it replaces.
+  *
+  * Hand-written, not a `Bridge.staticCall`: it dispatches on float vs
+  * double elements at analysis, which a static call chosen by argument
+  * class cannot do.
   */
 case class NearestCentroid(child: Expression, cents: Seq[Seq[Double]])
     extends UnaryExpression {

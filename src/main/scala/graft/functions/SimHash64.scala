@@ -1,36 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of a string's distinct whitespace tokens as a native
-  * codegen'd Catalyst expression.
+/** 64-bit SimHash of a string's distinct whitespace tokens, called from
+  * Catalyst as one static call per row ([[SimHashUtil.simhash64]]).
   *
   * The pure-Column formulation (aggregate over 64 bit positions × aggregate
   * over token hashes) runs in interpreted higher-order functions — measured
-  * ~20 s on the sf0.1 corpus vs well under a second for this expression: one
+  * ~20 s on the sf0.1 corpus vs well under a second for this kernel: one
   * tight Java loop per row, one token-set pass, 64 int votes on the stack.
   *
   * Token hash = Spark's xxhash64 (seed 42) over the token's UTF-8 bytes, so
   * values match what `xxhash64(token)` would produce in a plan. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashUtil.simhash(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.simhash($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 object SimHashUtil {
   /** Same value as Spark's `xxhash64(lit(s))` (XXH64, seed 42, UTF-8 bytes). */
   def tokenHash(s: String): Long = {
@@ -66,5 +50,8 @@ object SimHashUtil {
     out
   }
 
-  def simhash64(c: Column): Column = Bridge.column(SimHash64(Bridge.expression(c)))
+  def simhash(s: UTF8String): Long = simhash(s.toString)
+
+  def simhash64(c: Column): Column =
+    Bridge.staticCall(this, "simhash", LongType, Seq(c -> StringType))
 }

@@ -39,12 +39,14 @@ object TextFunctions {
   }
 
   /** Token count: whitespace tokens — native one-scan expression
-    * ([[TokenCountExpr]]; the `size(filter(split))` twin runs interpreted). */
+    * ([[TextNativeUtil.tokenCount]]; the `size(filter(split))` twin runs
+    * interpreted). */
   def tokenCount(c: Column): Column = TextNativeUtil.tokenCountCol(c)
 
   /** BPE-ish subword-unit count: alpha runs + digit runs + single other
     * non-space chars (a cheap, deterministic proxy for tokenizer load) —
-    * native scan ([[SubwordCountExpr]]), same count as the regex twin. */
+    * native scan ([[TextNativeUtil.subwordCount]]), same count as the regex
+    * twin. */
   def subwordCount(c: Column): Column = TextNativeUtil.subwordCountCol(c)
 
   /** Tiny English stopword list for the language-ID heuristic. */
@@ -81,7 +83,7 @@ object TextFunctions {
   def enStopwordRatio(c: Column): Column = ratioOf(stopStats(c), "en")
 
   /** Punctuation character ratio — native `\p{P}` code-point scan
-    * ([[PunctCountExpr]]). */
+    * ([[TextNativeUtil.punctCount]]). */
   def punctRatio(c: Column): Column =
     when(length(c) === 0, 0.0)
       .otherwise(TextNativeUtil.punctCountCol(c) * lit(1.0) / length(c))
@@ -112,8 +114,8 @@ object TextFunctions {
   def rollingFingerprint(c: Column): Column =
     aggregate(tokens(c), lit(1469598103934665603L), (acc, t) => xxhash64(acc, t))
 
-  /** Word n-gram shingles — native codegen'd expression; see
-    * [[WordShingles]]. */
+  /** Word n-gram shingles — native kernel; see
+    * [[WordShinglesUtil.wordShingles]]. */
   def shingles(c: Column, n: Int): Column =
     WordShinglesUtil.wordShingles(c, n)
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -17,9 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order `filter`/`aggregate` lambdas; HOFs run INTERPRETED (they
   * block whole-stage codegen), and because every Column reference copies its
   * expression subtree, a query like q_lang_id evaluates `split(lower(text))`
-  * ~20× per row (see plans/r07/q_lang_id_before.txt). Each expression here is
-  * one tight Java scan per row, codegen-friendly, and value-identical to its
-  * Column twin (equality property tests in TextNativeSpec pin this):
+  * ~20× per row (see plans/r07/q_lang_id_before.txt). Each kernel here is
+  * one tight Java scan per row, called through [[Bridge.staticCall]] (null in
+  * gives null out), and value-identical to its Column twin (equality property
+  * tests in TextNativeSpec pin this):
   *
   *  - tokenization parity: Java regex `\s` = `[ \t\n\x0B\f\r]` exactly (NOT
   *    `Character.isWhitespace`), empty tokens dropped — the [[WordShinglesUtil]]
@@ -46,7 +44,8 @@ object TextNativeUtil {
   }
 
   /** One pass over an (already-lowercased) string: (n_tokens, n_en, n_tr). */
-  def stopStats(s: String): InternalRow = {
+  def stopStats(u: UTF8String): InternalRow = {
+    val s = u.toString
     val len = s.length
     var n = 0; var en = 0; var tr = 0
     var i = 0
@@ -65,7 +64,8 @@ object TextNativeUtil {
   }
 
   /** Token count: number of maximal non-`\s` runs. */
-  def tokenCount(s: String): Int = {
+  def tokenCount(u: UTF8String): Int = {
+    val s = u.toString
     val len = s.length
     var n = 0; var i = 0
     while (i < len) {
@@ -77,7 +77,8 @@ object TextNativeUtil {
 
   /** Count of code points in Unicode general-category family P — the match
     * count of `regexp_count(c, "\p{P}")` (each match is one code point). */
-  def punctCount(s: String): Int = {
+  def punctCount(u: UTF8String): Int = {
+    val s = u.toString
     val len = s.length
     var n = 0; var i = 0
     while (i < len) {
@@ -97,7 +98,8 @@ object TextNativeUtil {
     * alternation is leftmost-greedy, so runs always win over the 1-char
     * class; `\s` here is the ASCII class — Pattern without
     * UNICODE_CHARACTER_CLASS). */
-  def subwordCount(s: String): Int = {
+  def subwordCount(u: UTF8String): Int = {
+    val s = u.toString
     val len = s.length
     var n = 0; var i = 0
     while (i < len) {
@@ -124,7 +126,8 @@ object TextNativeUtil {
   /** Sorted-distinct-token key: same value as
     * `array_join(array_sort(array_distinct(tokens(c))), " ")` — distinct
     * whitespace tokens in UTF8String (binary) order, single-space joined. */
-  def bowKey(s: String): UTF8String = {
+  def bowKey(u: UTF8String): UTF8String = {
+    val s = u.toString
     val set = new java.util.HashSet[UTF8String]()
     val toks = new java.util.ArrayList[UTF8String]()
     val len = s.length
@@ -165,7 +168,8 @@ object TextNativeUtil {
     * when they contain at least one letter/number code point, sorted in
     * UTF8String (binary) order, space-joined. Duplicates kept (filter ≠
     * distinct). */
-  def canonSig(s: String): UTF8String = {
+  def canonSig(u: UTF8String): UTF8String = {
+    val s = u.toString
     val toks = new java.util.ArrayList[UTF8String]()
     val len = s.length
     var i = 0
@@ -194,90 +198,17 @@ object TextNativeUtil {
     UTF8String.fromString(sb.toString)
   }
 
-  def stopTokenStats(c: Column): Column = Bridge.column(StopTokenStats(Bridge.expression(c)))
-  def tokenCountCol(c: Column): Column = Bridge.column(TokenCountExpr(Bridge.expression(c)))
-  def punctCountCol(c: Column): Column = Bridge.column(PunctCountExpr(Bridge.expression(c)))
-  def subwordCountCol(c: Column): Column = Bridge.column(SubwordCountExpr(Bridge.expression(c)))
-  def bowKeyCol(c: Column): Column = Bridge.column(BowKeyExpr(Bridge.expression(c)))
-  def canonSigCol(c: Column): Column = Bridge.column(CanonSigExpr(Bridge.expression(c)))
-}
+  private def call(method: String, returns: DataType, c: Column): Column =
+    Bridge.staticCall(this, method, returns, Seq(c -> StringType))
 
-sealed trait StringInExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"$prettyName needs string, got $t")
-    }
-}
-
-/** struct<n:int,en:int,tr:int> token/stopword counts of an ALREADY-LOWERED
-  * string — callers pass `lower(c)` (lowercasing stays the builtin, so its
-  * Unicode semantics are Spark's own). */
-case class StopTokenStats(child: Expression) extends StringInExpr {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", IntegerType, nullable = false),
-    StructField("en", IntegerType, nullable = false),
-    StructField("tr", IntegerType, nullable = false)))
-  override def prettyName: String = "stop_token_stats"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.stopStats(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.stopStats($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): StopTokenStats =
-    copy(child = newChild)
-}
-
-case class TokenCountExpr(child: Expression) extends StringInExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "token_count_native"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.tokenCount(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.tokenCount($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): TokenCountExpr =
-    copy(child = newChild)
-}
-
-case class PunctCountExpr(child: Expression) extends StringInExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "punct_count_native"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.punctCount(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.punctCount($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): PunctCountExpr =
-    copy(child = newChild)
-}
-
-case class SubwordCountExpr(child: Expression) extends StringInExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "subword_count_native"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.subwordCount(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.subwordCount($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): SubwordCountExpr =
-    copy(child = newChild)
-}
-
-case class CanonSigExpr(child: Expression) extends StringInExpr {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "canon_sig_native"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.canonSig(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.canonSig($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): CanonSigExpr =
-    copy(child = newChild)
-}
-
-case class BowKeyExpr(child: Expression) extends StringInExpr {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bow_key_native"
-  override def nullSafeEval(input: Any): Any =
-    TextNativeUtil.bowKey(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNativeUtil.bowKey($c.toString())")
-  override protected def withNewChildInternal(newChild: Expression): BowKeyExpr =
-    copy(child = newChild)
+  /** struct<n:int,en:int,tr:int> token/stopword counts of an ALREADY-LOWERED
+    * string — callers pass `lower(c)` (lowercasing stays the builtin, so its
+    * Unicode semantics are Spark's own). */
+  def stopTokenStats(c: Column): Column = call("stopStats", StructType(
+    Seq("n", "en", "tr").map(StructField(_, IntegerType, nullable = false))), c)
+  def tokenCountCol(c: Column): Column = call("tokenCount", IntegerType, c)
+  def punctCountCol(c: Column): Column = call("punctCount", IntegerType, c)
+  def subwordCountCol(c: Column): Column = call("subwordCount", IntegerType, c)
+  def bowKeyCol(c: Column): Column = call("bowKey", StringType, c)
+  def canonSigCol(c: Column): Column = call("canonSig", StringType, c)
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{lower, translate}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Turkish address-text normalization: the reference's `AddressNormalizer`
   * (src/address_matching/normalization/normalize_address.py) as plain-Scala
@@ -9,8 +10,8 @@ import org.apache.spark.sql.functions.{lower, translate}
   *
   * The three pipelines `normalizeFullS` / `normalizeStaticS` /
   * `normalizePunctOnlyS` (N9 / N10 / N11, SURVEY.md §2.1) are the one
-  * implementation: Catalyst callers reach them through the codegen'd
-  * [[TrNormalize]] expression, and `mapPartitions` kernels (parser, NER,
+  * implementation: Catalyst callers reach their `UTF8String` forms through
+  * the [[TrNormalize]] builders, and `mapPartitions` kernels (parser, NER,
   * synthesizers) call them directly. Their reference is the executed
   * reference itself: 40 ported goldens (TrTextSpec) and a 3,000-case fuzz
   * (ReferenceDifferentialSpec). The reference's user-supplied extra rules
@@ -152,4 +153,11 @@ object TrText {
     * NFKC → punct → numbers; case-preserving. */
   def normalizePunctOnlyS(s: String): String =
     jCollapse(numberSplitS(punctNormalizeS(preNormalizeS(s))))
+
+  def normalizeFullS(s: UTF8String): UTF8String =
+    UTF8String.fromString(normalizeFullS(s.toString))
+  def normalizeStaticS(s: UTF8String): UTF8String =
+    UTF8String.fromString(normalizeStaticS(s.toString))
+  def normalizePunctOnlyS(s: UTF8String): UTF8String =
+    UTF8String.fromString(normalizePunctOnlyS(s.toString))
 }

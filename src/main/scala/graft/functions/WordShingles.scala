@@ -1,16 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Word n-gram shingles of a string as a native codegen'd expression: the
-  * same value as `transform(sequence(0, size(toks)-n), i => concat_ws(" ",
+/** Word n-gram shingles of a string as a static kernel call from Catalyst
+  * ([[WordShinglesUtil.wordShingles]]): the same value as
+  * `transform(sequence(0, size(toks)-n), i => concat_ws(" ",
   * slice(toks, i+1, n)))` over `filter(split(c, "\\s+"), length > 0)` —
   * i.e. T−n+1 shingles of n consecutive whitespace tokens joined by single
   * spaces, empty array when the text has fewer than n tokens.
@@ -22,28 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row (plus a slice + concat allocation each); this is one scan for
   * token boundaries and one substring per shingle.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "shingle width must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"word_shingles needs string, got $t")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WordShinglesUtil.shingles(input.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordShinglesUtil.shingles($c.toString(), $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
 object WordShinglesUtil {
 
   /** Exactly the Java-regex `\s` class `split` uses (ASCII, no Unicode
@@ -51,7 +28,8 @@ object WordShinglesUtil {
   @inline private def isRegexSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  def shingles(s: String, n: Int): ArrayData = {
+  def shingles(u: UTF8String, n: Int): ArrayData = {
+    val s = u.toString
     // token boundaries: maximal runs of non-\s chars
     val starts = new java.util.ArrayList[Integer]()
     val ends = new java.util.ArrayList[Integer]()
@@ -84,6 +62,9 @@ object WordShinglesUtil {
     new GenericArrayData(out)
   }
 
-  def wordShingles(c: Column, n: Int): Column =
-    Bridge.column(WordShingles(Bridge.expression(c), n))
+  def wordShingles(c: Column, n: Int): Column = {
+    require(n >= 1, "shingle width must be >= 1")
+    Bridge.staticCall(this, "shingles", ArrayType(StringType, containsNull = false),
+      Seq(c -> StringType, lit(n) -> IntegerType))
+  }
 }

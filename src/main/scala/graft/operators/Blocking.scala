@@ -55,8 +55,9 @@ object Blocking {
   /** Composite block key: postcode prefix (3 digits) + a phonetic key of the
     * street token, falling back to the neighbourhood token when no street
     * exists. `phonetic` selects the key family the north star names:
-    * "soundex" (Spark built-in) or "metaphone" (the native codegen'd
-    * [[graft.functions.MetaphoneExpr]]); both are codegen'd column chains. */
+    * "soundex" (Spark built-in) or "metaphone" (the native kernel behind
+    * [[graft.functions.MetaphoneUtil.metaphoneCol]]); both are codegen'd
+    * column chains. */
   def blockKey(normCol: org.apache.spark.sql.Column,
                phonetic: String = "soundex"): org.apache.spark.sql.Column = {
     def phonOf(c: org.apache.spark.sql.Column) = phonetic match {

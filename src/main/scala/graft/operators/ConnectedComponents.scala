@@ -68,7 +68,8 @@ object ConnectedComponents {
     *               string keys at scale prefer [[runOnStrings]], which runs
     *               the iteration on dense dictionary longs instead.
     * @return DataFrame (id, component) covering every node that appears in
-    *         `edges`; `component` is the minimum node id of the component. */
+    *         `edges`; `component` is the minimum node id of the component.
+    * @throws IllegalStateException when `maxIter` rounds do not converge. */
   def run(edges: DataFrame, maxIter: Int = 50,
           onRound: Int => Unit = _ => ()): DataFrame = {
     var e = edges.select(col("src"), col("dst"))
@@ -87,6 +88,9 @@ object ConnectedComponents {
       it += 1
       onRound(it) // test seam: inject cache invalidation mid-iteration
     }
+    // an unconverged graph is not a star yet: its labels would be wrong
+    if (!converged)
+      throw new IllegalStateException(s"connected components did not converge in $maxIter rounds")
     // Converged state is a star per component: (member, root). Roots appear
     // only on the dst side; add their self-mapping.
     val members = e.select(col("src").as("id"), col("dst").as("component"))

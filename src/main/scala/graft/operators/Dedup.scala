@@ -93,10 +93,11 @@ object Dedup {
 
   /** Bag-of-words dedup: identical sorted-distinct token set ⇒ duplicate
     * (whitespace/ordering-insensitive exact dedup). Key built by the native
-    * one-scan [[graft.functions.BowKeyExpr]] (the array_sort∘array_distinct∘
-    * filter∘split chain ran interpreted, and the join formulation evaluated
-    * it up to four times per row — plans/r07/q_dedup_bow_before.txt); same
-    * single-window shape as [[exact]]. */
+    * one-scan [[graft.functions.TextNativeUtil.bowKey]] (the
+    * array_sort∘array_distinct∘filter∘split chain ran interpreted, and the
+    * join formulation evaluated it up to four times per row —
+    * plans/r07/q_dedup_bow_before.txt); same single-window shape as
+    * [[exact]]. */
   def bagOfWords(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val key = md5(graft.functions.TextNativeUtil.bowKeyCol(col(textCol)))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bow_hash"))
@@ -263,9 +264,9 @@ object Dedup {
   // ------------------------------ SimHash ----------------------------------
 
   /** 64-bit SimHash of the distinct token set: per-bit weighted vote of
-    * token xxhash64 values, as the native codegen'd expression
-    * [[graft.functions.SimHash64]] (the pure-Column HOF formulation runs
-    * interpreted and was ~40× slower). */
+    * token xxhash64 values, as the native kernel
+    * [[graft.functions.SimHashUtil.simhash]] (the pure-Column HOF formulation
+    * runs interpreted and was ~40× slower). */
   def simhash(textCol: Column): Column =
     graft.functions.SimHashUtil.simhash64(textCol)
 

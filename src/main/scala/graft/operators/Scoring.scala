@@ -2,13 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A scored pair; `is_match` is the thresholded decision. */
@@ -20,13 +17,14 @@ case class ScoredPair(block_key: String, url_a: String, url_b: String,
   * closest analogue is the batched `process_batch` kernel shape of its NER CLI,
   * ner_address_parser.py:115-128, per SURVEY.md §3.2).
   *
-  * Runs as one native projection ([[ScorePairExpr]]) over the candidate
-  * pairs: for each pair it computes Jaro-Winkler + Levenshtein similarity on the
-  * token-sorted canonical string (sorting makes the metrics order-invariant —
-  * surface realizations reorder admin segments freely) and token-set Jaccard
-  * on the raw token sets, then a convex combination. Pure CPU per row, no
-  * per-row allocation beyond the token arrays, no shuffle: scoring scales
-  * linearly with candidate pairs and parallelizes perfectly.
+  * Runs as one native projection ([[ScoringUtil.scorePairCol]]) over the
+  * candidate pairs: for each pair it computes Jaro-Winkler + Levenshtein
+  * similarity on the token-sorted canonical string (sorting makes the
+  * metrics order-invariant — surface realizations reorder admin segments
+  * freely) and token-set Jaccard on the raw token sets, then a convex
+  * combination. Pure CPU per row, no per-row allocation beyond the token
+  * arrays, no shuffle: scoring scales linearly with candidate pairs and
+  * parallelizes perfectly.
   *
   * Jaro-Winkler is implemented as a plain Scala function (not a UDF) — it is
   * not a Spark built-in; Levenshtein is in-kernel too so the three metrics
@@ -86,6 +84,8 @@ object Scoring {
     j + p * 0.1 * (1.0 - j)
   }
 
+  def jaroWinkler(s1: UTF8String, s2: UTF8String): Double = jaroWinkler(s1.toString, s2.toString)
+
   /** Levenshtein distance, two-row DP. */
   def levenshtein(s1: String, s2: String): Int = {
     if (s1 == s2) return 0
@@ -143,21 +143,22 @@ object Scoring {
     (jw, lv, jc, ns, score)
   }
 
-  /** Kernel adapter for the native expression: one InternalRow of the five
+  /** Kernel adapter for the Catalyst call: one InternalRow of the five
     * metric doubles, null canons mapped to "" exactly as [[scoreCanon]]. */
-  def scoreRow(a: String, b: String): InternalRow = {
-    val (jw, lv, jc, ns, s) = scoreCanon(a, b)
+  def scoreRow(a: UTF8String, b: UTF8String): InternalRow = {
+    val (jw, lv, jc, ns, s) =
+      scoreCanon(if (a == null) null else a.toString, if (b == null) null else b.toString)
     new GenericInternalRow(Array[Any](jw, lv, jc, ns, s))
   }
 
-  /** Scoring as a PROJECTION: the same [[scoreCanon]] kernel wrapped in a
-    * native expression ([[ScorePairExpr]]) instead of a Dataset
+  /** Scoring as a PROJECTION: the same [[scoreCanon]] kernel called from
+    * Catalyst ([[ScoringUtil.scorePairCol]]) instead of a Dataset
     * mapPartitions. The typed form paid DeserializeToObject →
     * case-class allocation → SerializeFromObject per pair — ~half the
     * measured scoring stage at sf0.1 (OPTIMIZATION_r07.md); the projection
     * keeps the stage codegen'd end to end and column-prunable. Output
     * schema and every value are identical to the typed form (the
-    * expression calls scoreCanon itself; ScoringExprSpec pins row identity
+    * call reaches scoreCanon itself; ScoringExprSpec pins row identity
     * against the typed form kept as its test-side witness). */
   def scoreDF(pairs: DataFrame, threshold: Double = 0.85): DataFrame = {
     // two-step projection: the struct is materialized ONCE and fields are
@@ -176,51 +177,20 @@ object Scoring {
   }
 }
 
-/** The pairwise scoring kernel as a native codegen'd expression:
-  * struct<jw,lev_sim,jaccard,num_sim,score> of two canon strings, via the
-  * SAME [[Scoring.scoreCanon]] Scala kernel (so values can never diverge
-  * from the typed test-side witness). Null handling is the kernel's (null → ""), so
-  * evaluation must NOT null-short-circuit — eval/codegen are written
-  * manually instead of via nullSafeEval. */
-case class ScorePairExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StructType(
-    Seq("jw", "lev_sim", "jaccard", "num_sim", "score")
-      .map(n => StructField(n, DoubleType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "score_pair"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(s"score_pair needs strings, got $l/$r")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    Scoring.scoreRow(
-      if (a == null) null else a.asInstanceOf[UTF8String].toString,
-      if (b == null) null else b.asInstanceOf[UTF8String].toString)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    val out = code"""
-      ${l.code}
-      ${r.code}
-      InternalRow ${ev.value} = graft.operators.Scoring.scoreRow(
-        ${l.isNull} ? null : ${l.value}.toString(),
-        ${r.isNull} ? null : ${r.value}.toString());
-    """
-    ev.copy(code = out, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ScorePairExpr = copy(left = newLeft, right = newRight)
-}
-
 object ScoringUtil {
+  /** struct<jw,lev_sim,jaccard,num_sim,score> of two canon strings through
+    * the SAME [[Scoring.scoreCanon]] kernel, so values can never diverge
+    * from the typed test-side witness. Null canons reach the kernel (which
+    * maps them to ""), and the struct is never null. */
   def scorePairCol(a: Column, b: Column): Column =
-    Bridge.column(ScorePairExpr(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.staticCall(Scoring, "scoreRow", StructType(
+        Seq("jw", "lev_sim", "jaccard", "num_sim", "score")
+          .map(StructField(_, DoubleType, nullable = false))),
+      Seq(a -> StringType, b -> StringType), propagateNull = false)
+
+  /** Jaro-Winkler similarity of two strings (null in gives null out), the
+    * scoring kernel's [[Scoring.jaroWinkler]]: one static call inside the
+    * generated loop, where a ScalaUDF would box rows and block fusion. */
+  def jaroWinklerCol(a: Column, b: Column): Column =
+    Bridge.staticCall(Scoring, "jaroWinkler", DoubleType, Seq(a -> StringType, b -> StringType))
 }

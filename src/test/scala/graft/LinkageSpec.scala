@@ -93,6 +93,10 @@ class LinkageSpec extends AnyFunSuite with TempDirs {
     assert(m(7L) == 7L && m(8L) == 7L)
     assert(m(4L) == 4L && m(5L) == 4L && m(6L) == 4L)
     assert(!m.contains(10L) || m(10L) == 10L) // self-loop dropped
+    // an 8-node chain is not a star after one round: no labels, an error
+    val chain = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](ConnectedComponents.run(chain, maxIter = 1))
+    assert(e.getMessage.contains("1 rounds"), e.getMessage)
   }
 
   test("connected components on STRING node ids (url-scale collision safety)") {

@@ -170,7 +170,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("native minhash signature ≡ Column formulation (value-identical)") {
-    // The native MinHashSig expression must produce EXACTLY the signatures
+    // The native minhash signature kernel must produce EXACTLY the signatures
     // the interpreted array/transform/hash construction produced (band
     // buckets — and therefore candidate pairs — depend on every bit). Run
     // both over real document shingles plus edge shapes: empty text, single

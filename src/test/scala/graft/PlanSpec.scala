@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,19 +118,20 @@ class PlanSpec extends AnyFunSuite with TempDirs {
   test("single evaluation: score_pair once per pair, canon_sig_native once per record") {
     // both kernels are non-cheap and deterministic, so the optimizer may
     // inline a reference to them; a refactor that collapses the two-step
-    // scoring projection or re-derives canon would evaluate them again
+    // scoring projection or re-derives canon would evaluate them again.
+    // Each kernel is a StaticInvoke, counted by its method name.
     def calls(plan: LogicalPlan, name: String): Int = plan.flatMap(_.expressions)
-      .map(_.collect { case e if e.prettyName == name => e }.size).sum
+      .map(_.collect { case e: StaticInvoke if e.functionName == name => e }.size).sum
     val prepared = Linkage.prepare(Pages.synthesize(spark, 300).toDF())
     val prepPlan = prepared.queryExecution.optimizedPlan
-    assert(calls(prepPlan, "canon_sig_native") == 1, prepPlan.toString)
+    assert(calls(prepPlan, "canonSig") == 1, prepPlan.toString)
     val scored = Linkage.scored(prepared).queryExecution.optimizedPlan
-    assert(calls(scored, "score_pair") == 1, scored.toString)
+    assert(calls(scored, "scoreRow") == 1, scored.toString)
     // on a lazy input the pair self-join prepares the pages on each of its
     // sides (a persisted or committed input holds none): one canon per scan
     // of the pages
     val scans = scored.collectLeaves().size
-    assert(scans == 2 && calls(scored, "canon_sig_native") == scans, scored.toString)
+    assert(scans == 2 && calls(scored, "canonSig") == scans, scored.toString)
   }
 
   test("no quadratic join strategy anywhere in the linkage pair plan") {
@@ -433,7 +435,7 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val cases = Seq(("martha", "marhta"), ("dixon", "dicksonx"), ("", ""),
       ("a", ""), ("same", "same"), ("abcdef", "uvwxyz"))
     val got = cases.toDF("a", "b")
-      .select(graft.functions.JaroWinklerExpr.jaroWinkler(col("a"), col("b")))
+      .select(graft.operators.ScoringUtil.jaroWinklerCol(col("a"), col("b")))
       .as[Double].collect()
     val want = cases.map { case (a, b) => graft.operators.Scoring.jaroWinkler(a, b) }
     assert(got.toSeq == want, s"expr != kernel: $got vs $want")
@@ -441,11 +443,38 @@ class PlanSpec extends AnyFunSuite with TempDirs {
 
   test("normalizer chain stays in one WholeStageCodegen span") {
     import org.apache.spark.sql.functions._
+    import graft.functions._
+    val text = col("text")
+    val sh = WordShinglesUtil.wordShingles(text, 3)
     val df = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(graft.functions.TrNormalize.full(col("text")).as("n"))
+      .select(TrNormalize.full(text).as("n"),
+        TextNativeUtil.tokenCountCol(text).as("tok"),
+        TextNativeUtil.punctCountCol(text).as("punct"),
+        TextNativeUtil.subwordCountCol(text).as("sub"),
+        TextNativeUtil.stopTokenStats(lower(text)).as("stop"),
+        TextNativeUtil.bowKeyCol(text).as("bow"),
+        TextNativeUtil.canonSigCol(text).as("canon"),
+        SimHashUtil.simhash64(text).as("sim"),
+        MetaphoneUtil.metaphoneCol(text).as("mph"),
+        sh.as("sh"),
+        MinHashUtil.minhashSig(sh, 64).as("sig"),
+        graft.operators.ScoringUtil.jaroWinklerCol(text, text).as("jw"))
     val p = plan(df)
     // '*(n)' prefixes mark WholeStageCodegen stages in toString form; the
     // whole chain must sit in stage 1 over the scan
     assert(p.contains("*(1) Project"), s"no codegen:\n${p.take(800)}")
+    assert(!p.contains("ScalaUDF"), s"udf in the chain:\n${p.take(1200)}")
+    // every kernel is a static call in that one codegen'd projection
+    val project = df.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec if w.codegenStageId == 1 =>
+        w.child.collect { case pr: org.apache.spark.sql.execution.ProjectExec => pr }
+    }.flatten
+    assert(project.size == 1, s"stage 1 has ${project.size} projections:\n$p")
+    val called = project.head.projectList.flatMap(_.collect {
+      case e: StaticInvoke => e.functionName }).toSet
+    val kernels = Set("normalizeFullS", "tokenCount", "punctCount", "subwordCount", "stopStats",
+      "bowKey", "canonSig", "simhash", "metaphone", "shingles", "signature", "jaroWinkler")
+    assert(kernels.subsetOf(called), s"outside the stage-1 projection: ${kernels -- called}")
+    assert(df.limit(5).collect().length == 5)
   }
 }

@@ -7,10 +7,11 @@ import graft.Witnesses.CandPair
 import graft.operators.{Linkage, Scoring}
 import graft.sources.Pages
 
-/** Pins the scoring-expression path ([[graft.operators.ScorePairExpr]]) to
-  * the typed mapPartitions witness: same rows, same schema, on the real
-  * candidate pairs and on null/empty edge canons (r7 optimization — the
-  * typed form paid object ser/de per pair). */
+/** Pins the scoring-expression path
+  * ([[graft.operators.ScoringUtil.scorePairCol]]) to the typed mapPartitions
+  * witness: same rows, same schema, on the real candidate pairs and on
+  * null/empty edge canons (r7 optimization — the typed form paid object
+  * ser/de per pair). */
 class ScoringExprSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._

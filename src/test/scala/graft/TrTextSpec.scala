@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -126,16 +127,17 @@ class TrTextSpec extends AnyFunSuite {
     inputs.toDF("s").select(f(col("s")).as("o")).as[String].collect().toSeq
   }
 
+  /** (kernel method name, kernel, Column builder) per mode. */
   private val modes: Seq[(String, String => String, Column => Column)] = Seq(
-    ("full", TrText.normalizeFullS, TrNormalize.full),
-    ("static", TrText.normalizeStaticS, TrNormalize.static),
-    ("punct", TrText.normalizePunctOnlyS, TrNormalize.punct))
+    ("normalizeFullS", TrText.normalizeFullS(_: String), TrNormalize.full),
+    ("normalizeStaticS", TrText.normalizeStaticS(_: String), TrNormalize.static),
+    ("normalizePunctOnlyS", TrText.normalizePunctOnlyS(_: String), TrNormalize.punct))
 
   /** Every mode of [[TrNormalize]] on `inputs` plus a null equals its kernel
     * (null for null), row for row, through BOTH eval paths: a DataFrame over
-    * an RDD (whole-stage codegen; over a local Seq the optimizer's
-    * `ConvertToLocalRelation` would evaluate it interpreted) and
-    * `Expression.eval`. */
+    * an RDD (whole-stage codegen, with the kernel's static call in the plan;
+    * over a local Seq the optimizer's `ConvertToLocalRelation` would
+    * evaluate it interpreted) and `Expression.eval`. */
   private def assertTrNormalizeEqualsKernels(inputs: Seq[String]): Unit = {
     val all = inputs :+ null
     val df = spark.sparkContext.parallelize(all, 2).toDF("s")
@@ -143,13 +145,15 @@ class TrTextSpec extends AnyFunSuite {
       val want = all.map(in => if (in == null) null else kernel(in))
       val out = df.select(column(col("s")))
       val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("*(1) Project") && plan.contains(s"tr_normalize_$mode"),
+      assert(plan.contains("*(1) Project") &&
+        plan.contains(s"static_invoke(graft.functions.TrText.$mode("),
         s"$mode: not codegen'd:\n$plan")
       val coded = out.as[String].collect().toSeq
       assert(coded.length == all.length, s"$mode: ${coded.length} rows")
       all.lazyZip(want).lazyZip(coded).foreach { (in, w, c) =>
         assert(c == w, s"$mode: codegen != kernel on: $in")
-        val v = TrNormalize(Literal.create(in, StringType), mode).eval(InternalRow.empty)
+        val v = Bridge.expression(column(Bridge.column(Literal.create(in, StringType))))
+          .eval(InternalRow.empty)
         assert(Option(v).map(_.toString).orNull == w, s"$mode: interpreted != kernel on: $in")
       }
     }
@@ -192,11 +196,6 @@ class TrTextSpec extends AnyFunSuite {
       "Sok.", "sk", "SOKAĞI", "No:5/7", "D:3", "Kat:2", "İstanbul", "Kadıköy",
       "ağaçlı", "IŞIK", "B3Blok", "izmir2", "15_Sok.", "x.y-z", "  ", ",", ";", "(a)", "'q'")
     Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, frag).map(_.mkString(" ")))
-  }
-
-  test("TrNormalize expression agrees with the kernels in every mode and rejects bad modes") {
-    assertTrNormalizeEqualsKernels((fullGolden ++ punctGolden ++ staticGolden).map(_._1))
-    intercept[IllegalArgumentException](TrNormalize(Literal("x"), "upper"))
   }
 
   private def samples(n: Int): Seq[String] =

@@ -68,7 +68,7 @@ object Witnesses {
   // --------------------------------- Dedup ----------------------------------
 
   /** Twin of `Dedup.bagOfWords`: the join formulation, with the HOF bow key
-    * (so it also witnesses `BowKeyExpr`). */
+    * (so it also witnesses the native `TextNativeUtil.bowKey`). */
   def bagOfWordsColumns(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val key = md5(array_join(array_sort(array_distinct(tokens(col(textCol)))), " "))
     val withH = df.select(col(idCol), key.as("bow_hash"))
