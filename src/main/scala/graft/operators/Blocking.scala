@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Blocking-key derivation + skew-salted candidate-pair self-join.
   *
@@ -27,46 +30,39 @@ object Blocking {
   /** Canonical scoring/blocking text: full canon pipeline
     * ([[graft.functions.TrNormalize]]) + ASCII fold, so every keyword-variant
     * surface form collapses to the same tokens. */
-  def blockNorm(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def blockNorm(c: Column): Column =
     translate(graft.functions.TrNormalize.full(c), "ıöüğşç", "iougsc")
 
-  /** 5-digit postcode token (not part of a longer digit run). */
-  def postcode(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_extract(c, "(?<!\\d)(\\d{5})(?!\\d)", 1)
+  /** The phonetic families of [[blockKey]], as the north star names them
+    * (`Linkage.Config` rejects any other). */
+  val Phonetics = Set("soundex", "metaphone")
 
-  /** Street-name token: the token immediately before the canonical `sk`/`cad`
-    * indicator in the canon-normalized text (empty when absent). */
-  def streetToken(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val toks = split(c, " ")
-    val posSk = array_position(toks, "sk")
-    val posCad = array_position(toks, "cad")
-    val pos = when(posSk > 0 && (posCad === 0 || posSk < posCad), posSk)
-      .when(posCad > 0, posCad).otherwise(lit(0))
-    when(pos > 1, element_at(toks, (pos - 1).cast("int"))).otherwise(lit(""))
-  }
+  /** Composite block key of the normalized text, one call of [[soundexKey]]
+    * or [[metaphoneKey]] per row: the postcode prefix (first 3 digits of the
+    * first 5-digit run not part of a longer run), `_`, and the phonetic key
+    * of the token before the first `sk` (or `cad`, when that comes first),
+    * else before `mah`. No postcode and no phonetic key (or a null `norm`)
+    * gives `""`, which [[candidatePairs]] puts in no block. */
+  def blockKey(normCol: Column, phonetic: String = "soundex"): Column =
+    Bridge.staticCall(this, s"${phonetic}Key", StringType, Seq(normCol -> StringType),
+      propagateNull = false)
 
-  /** Neighbourhood-name token: the token immediately before canonical `mah`. */
-  def nbhdToken(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val toks = split(c, " ")
-    val pos = array_position(toks, "mah")
-    when(pos > 1, element_at(toks, (pos - 1).cast("int"))).otherwise(lit(""))
-  }
+  def soundexKey(norm: UTF8String): UTF8String = key(norm, _.soundex())
+  def metaphoneKey(norm: UTF8String): UTF8String = key(norm, graft.functions.MetaphoneUtil.metaphone)
 
-  /** Composite block key: postcode prefix (3 digits) + a phonetic key of the
-    * street token, falling back to the neighbourhood token when no street
-    * exists. `phonetic` selects the key family the north star names:
-    * "soundex" (Spark built-in) or "metaphone" (the native kernel behind
-    * [[graft.functions.MetaphoneUtil.metaphoneCol]]); both are codegen'd
-    * column chains. */
-  def blockKey(normCol: org.apache.spark.sql.Column,
-               phonetic: String = "soundex"): org.apache.spark.sql.Column = {
-    def phonOf(c: org.apache.spark.sql.Column) = phonetic match {
-      case "metaphone" => graft.functions.MetaphoneUtil.metaphoneCol(c)
-      case _           => soundex(c)
-    }
-    val phon = when(streetToken(normCol) =!= "", phonOf(streetToken(normCol)))
-      .otherwise(phonOf(nbhdToken(normCol)))
-    concat_ws("_", substring(postcode(normCol), 1, 3), phon)
+  private val Postcode = java.util.regex.Pattern.compile("(?<!\\d)(\\d{5})(?!\\d)")
+
+  private def key(norm: UTF8String, phon: UTF8String => UTF8String): UTF8String = {
+    val s = if (norm == null) "" else norm.toString
+    val toks = s.split(" ", -1)
+    def before(i: Int): String = if (i > 0) toks(i - 1) else ""
+    val (sk, cad) = (toks.indexOf("sk"), toks.indexOf("cad"))
+    val street = before(if (sk >= 0 && (cad < 0 || sk < cad)) sk else cad)
+    val tok = if (street.nonEmpty) street else before(toks.indexOf("mah"))
+    val ph = phon(UTF8String.fromString(tok)).toString
+    val m = Postcode.matcher(s)
+    val pc = if (m.find()) m.group(1).take(3) else ""
+    UTF8String.fromString(if (pc.isEmpty && ph.isEmpty) "" else s"${pc}_$ph")
   }
 
   /** Cap on the number of hot keys the driver-side probe will collect;
@@ -353,8 +349,8 @@ object Blocking {
 
   /** Skew-salted candidate-pair self-join on a single blocking key — the
     * linkage-pipeline entry point over [[saltedSelfJoin]]. Drops empty-string
-    * keys (records with no postcode/street evidence would otherwise form one
-    * junk mega-block).
+    * keys ([[blockKey]] of a record with no postcode and no street or
+    * neighbourhood token), which would otherwise form one junk mega-block.
     *
     * @param df          input with one row per record
     * @param keyCol      blocking-key column name

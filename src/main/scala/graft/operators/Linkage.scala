@@ -12,8 +12,9 @@ import graft.sources.Gazetteer
   *
   * Stage layout and scale posture:
   *  - extract/normalize/block-key: pure Catalyst projections (codegen'd, no
-  *    shuffle, predicate/column pruning reach the scan);
-  *  - candidate pairs: one key-partitioned self-join, skew-salted ([[Blocking]]);
+  *    shuffle, predicate/column pruning reach the scan; one block-key call);
+  *  - candidate pairs: one key-partitioned self-join, skew-salted
+  *    ([[Blocking]]); a record with an empty key stays a singleton;
   *  - scoring: mapPartitions kernel, linear in pairs ([[Scoring]]);
   *  - clustering: one hash exchange on the block key + per-block union-find
   *    ([[components]], [[ConnectedComponents.runGrouped]]);
@@ -25,7 +26,9 @@ object Linkage {
       threshold: Double = 0.85,
       maxBlock: Int = 1000,
       extractPattern: String = "(?i)adres\\s*:\\s*(.*?)(?=\\s+tel\\s*:|$)",
-      phonetic: String = "soundex") // or "metaphone" (north star names both)
+      phonetic: String = "soundex") { // or "metaphone"; any other value is rejected
+    require(Blocking.Phonetics(phonetic), s"unknown phonetic family: $phonetic")
+  }
 
   /** Deterministic extraction of the address-bearing span from page text.
     * Per-row invariant (BASELINE.json input_hint): byte-identical extracted

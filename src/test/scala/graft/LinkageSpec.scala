@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Blocking, ConnectedComponents, Eval, Linkage, Scoring, Similarity, StaticParser}
-import graft.sources.Pages
+import graft.sources.{Page, Pages}
 
 /** The north-rule gates: pairwise F1 ≥ 0.99 on labeled pairs at shared
   * blocking keys; byte-identical extracted text per url; cluster sanity. */
@@ -151,10 +151,48 @@ class LinkageSpec extends AnyFunSuite with TempDirs {
     sc.unpersist()
   }
 
+  test("pages with no address evidence join no block and stay singleton entities") {
+    // no `Adres:` span, or an address with neither a postcode nor a
+    // sk/cad/mah token: the block key is empty, so such pages form no block
+    // of their own (a crawl's address-less pages would otherwise be one
+    // quadratic block, scored 1.0 and merged into one entity)
+    val ts = new java.sql.Timestamp(1768435200000L)
+    val bare = Seq(
+      "İletişim sayfası: web sitesi hakkında bilgi",
+      "Kampanya ürünler mağaza Tel: 05551112233",
+      "Online satış destek merkezi",
+      "Adres: Merkez Ofis Konak İzmir Tel: 05551112233")
+      .zipWithIndex.map { case (t, i) =>
+        Page(s"https://example.test/bare$i", ts, Array.emptyByteArray, t, "tr") }
+    val urls = bare.map(_.url)
+    val synth = Pages.synthesize(spark, 300).toDF()
+    val prep = Linkage.prepare(synth.union(bare.toDF())).persist()
+    val keys = prep.filter(col("url").isin(urls: _*)).select("block_key").as[String].collect()
+    assert(keys.length == bare.size && keys.forall(_.isEmpty), keys.mkString("|"))
+    val sc = Linkage.scored(prep).persist()
+    val touching = sc.filter(col("url_a").isin(urls: _*) || col("url_b").isin(urls: _*)).count()
+    assert(touching == 0, s"$touching candidate pairs involve an address-less page")
+    val ents = Linkage.entitiesFrom(prep, sc, StaticParser.broadcastIndex(spark))
+      .filter(col("url").isin(urls: _*)).select("url", "entity_id").as[(String, String)].collect()
+    assert(ents.length == bare.size && ents.forall { case (u, e) => u == e }, ents.mkString("|"))
+    // the synthesized pages score exactly as without the extra pages
+    val alone = Linkage.scored(Linkage.prepare(synth)).persist()
+    assert(sc.exceptAll(alone).isEmpty && alone.exceptAll(sc).isEmpty)
+    def f1(pairs: org.apache.spark.sql.DataFrame): Double = Eval.pairwiseMetricsLabeled(
+        pairs.withColumn("is_pos",
+          Pages.goldEntityId(col("url_a")) === Pages.goldEntityId(col("url_b"))))
+      .select("f1").as[Double].head()
+    assert(f1(sc) == f1(alone) && f1(alone) >= 0.99, s"F1 ${f1(sc)} vs ${f1(alone)}")
+    Seq(alone, sc, prep).foreach(_.unpersist())
+  }
+
   test("metaphone blocking: pipeline holds the F1 gate on the alternate phonetic") {
     // the north star names BOTH phonetic families ("via Soundex/Metaphone");
     // the pipeline must hold its quality gate under either
     val cfg = Linkage.Config(phonetic = "metaphone")
+    // a misspelt family is rejected, not silently blocked on soundex
+    val e = intercept[IllegalArgumentException](Linkage.Config(phonetic = "metafone"))
+    assert(e.getMessage.contains("metafone"), e.getMessage)
     val small = Pages.synthesize(spark, 3000).toDF()
     val prep = Linkage.prepare(small, cfg).persist()
     // same-entity pages share a metaphone block key

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
@@ -125,6 +126,12 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val prepared = Linkage.prepare(Pages.synthesize(spark, 300).toDF())
     val prepPlan = prepared.queryExecution.optimizedPlan
     assert(calls(prepPlan, "canonSig") == 1, prepPlan.toString)
+    // the block key is one kernel call over the one normalized text, and
+    // nothing splits that text into a token array in the plan
+    assert(calls(prepPlan, "soundexKey") == 1 && calls(prepPlan, "normalizeFullS") == 1,
+      prepPlan.toString)
+    assert(!prepPlan.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[StringSplit])),
+      prepPlan.toString)
     val scored = Linkage.scored(prepared).queryExecution.optimizedPlan
     assert(calls(scored, "scoreRow") == 1, scored.toString)
     // on a lazy input the pair self-join prepares the pages on each of its
@@ -458,7 +465,9 @@ class PlanSpec extends AnyFunSuite with TempDirs {
         MetaphoneUtil.metaphoneCol(text).as("mph"),
         sh.as("sh"),
         MinHashUtil.minhashSig(sh, 64).as("sig"),
-        graft.operators.ScoringUtil.jaroWinklerCol(text, text).as("jw"))
+        graft.operators.ScoringUtil.jaroWinklerCol(text, text).as("jw"),
+        Blocking.blockKey(text, "soundex").as("bks"),
+        Blocking.blockKey(text, "metaphone").as("bkm"))
     val p = plan(df)
     // '*(n)' prefixes mark WholeStageCodegen stages in toString form; the
     // whole chain must sit in stage 1 over the scan
@@ -473,7 +482,8 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val called = project.head.projectList.flatMap(_.collect {
       case e: StaticInvoke => e.functionName }).toSet
     val kernels = Set("normalizeFullS", "tokenCount", "punctCount", "subwordCount", "stopStats",
-      "bowKey", "canonSig", "simhash", "metaphone", "shingles", "signature", "jaroWinkler")
+      "bowKey", "canonSig", "simhash", "metaphone", "shingles", "signature", "jaroWinkler",
+      "soundexKey", "metaphoneKey")
     assert(kernels.subsetOf(called), s"outside the stage-1 projection: ${kernels -- called}")
     assert(df.limit(5).collect().length == 5)
   }

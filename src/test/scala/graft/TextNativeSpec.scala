@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{TextFunctions, TextNativeUtil}
@@ -107,6 +111,43 @@ class TextNativeSpec extends AnyFunSuite {
       Witnesses.canonColumns(col("norm")).as("y"))
       .filter(!(col("x") <=> col("y"))).count()
     assert(bad == 0)
+  }
+
+  test("block-key kernel == Column-chain twin in both families (pages + edge cases, codegen and interpreted)") {
+    val norms = graft.operators.Linkage.prepare(
+      graft.sources.Pages.synthesize(spark, 600L).toDF()).select("norm").as[String].collect()
+    val edges = Seq(
+      "ataturk mah gazi sk no 5 konak izmir",       // no postcode
+      "gazi sk no 5 355101 izmir",                  // 6-digit run only
+      "gazi sk no 5 355101 izmir 35510",            // 6-digit run, then a postcode
+      "sk 12 konak 35210",                          // sk as the first token
+      "ataturk cad 5 gazi sk 35210",                // cad before sk
+      "gazi sk 3 ataturk cad 35210",                // sk before cad
+      "ataturk mah  sk 35210",                      // empty token before sk
+      "1445 sk no 3 35210", "1445 sk no 3",         // numeric street
+      "3gazi sk 35210", "_x mah 35210", "ğazi sk",  // token not led by an a-z letter
+      "cad", "mah", "35210", "a35210b sk", "gazi sk ", "",
+      null)
+    val all = norms.toSeq ++ edges
+    val df = spark.sparkContext.parallelize(all, 2).toDF("norm")
+    for (ph <- Seq("soundex", "metaphone")) {
+      val out = df.select(graft.operators.Blocking.blockKey(col("norm"), ph).as("k"),
+        Witnesses.blockKeyColumns(col("norm"), ph).as("w"))
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1) Project") &&
+        plan.contains(s"static_invoke(graft.operators.Blocking.${ph}Key("), plan)
+      val rows = out.as[(String, String)].collect().toSeq
+      assert(rows.length == all.length)
+      all.lazyZip(rows).foreach { case (in, (k, w)) =>
+        // the twin's "_" (no postcode, no phonetic key) is the kernel's ""
+        assert(k == w || (w == "_" && k == ""), s"$ph: kernel $k vs twin $w on: $in")
+        val lit = Bridge.column(Literal.create(in, StringType))
+        val v = Bridge.expression(graft.operators.Blocking.blockKey(lit, ph))
+          .eval(InternalRow.empty)
+        assert(v.toString == k, s"$ph: interpreted $v vs codegen $k on: $in")
+      }
+      assert(rows.count(_._2 == "_") >= 2, s"$ph: the empty-key edge is not exercised")
+    }
   }
 
   test("window-min dedup == join formulation (exact + bow, corpus with planted dups)") {

@@ -65,6 +65,41 @@ object Witnesses {
     array_join(array_sort(
       filter(split(norm, " "), t => t.rlike("[\\p{L}\\p{N}]"))), " ")
 
+  /** 5-digit postcode token (not part of a longer digit run). */
+  private def postcode(c: Column): Column =
+    regexp_extract(c, "(?<!\\d)(\\d{5})(?!\\d)", 1)
+
+  /** Street-name token: the token immediately before the canonical `sk`/`cad`
+    * indicator in the canon-normalized text (empty when absent). */
+  private def streetToken(c: Column): Column = {
+    val toks = split(c, " ")
+    val posSk = array_position(toks, "sk")
+    val posCad = array_position(toks, "cad")
+    val pos = when(posSk > 0 && (posCad === 0 || posSk < posCad), posSk)
+      .when(posCad > 0, posCad).otherwise(lit(0))
+    when(pos > 1, element_at(toks, (pos - 1).cast("int"))).otherwise(lit(""))
+  }
+
+  /** Neighbourhood-name token: the token immediately before canonical `mah`. */
+  private def nbhdToken(c: Column): Column = {
+    val toks = split(c, " ")
+    val pos = array_position(toks, "mah")
+    when(pos > 1, element_at(toks, (pos - 1).cast("int"))).otherwise(lit(""))
+  }
+
+  /** Twin of `Blocking.blockKey`: the composed Column chain it replaced, which
+    * splits `norm` once per token reference. It gives `"_"` where the kernel
+    * gives `""` (no postcode and no phonetic key). */
+  def blockKeyColumns(normCol: Column, phonetic: String = "soundex"): Column = {
+    def phonOf(c: Column) = phonetic match {
+      case "metaphone" => graft.functions.MetaphoneUtil.metaphoneCol(c)
+      case _           => soundex(c)
+    }
+    val phon = when(streetToken(normCol) =!= "", phonOf(streetToken(normCol)))
+      .otherwise(phonOf(nbhdToken(normCol)))
+    concat_ws("_", substring(postcode(normCol), 1, 3), phon)
+  }
+
   // --------------------------------- Dedup ----------------------------------
 
   /** Twin of `Dedup.bagOfWords`: the join formulation, with the HOF bow key
